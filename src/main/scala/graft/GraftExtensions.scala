@@ -2,55 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{MinHashSig, RollingMinHash, SimHash64, VecDot, VectorExpressions, WordShingles}
+import graft.functions.VectorExpressions
+import graft.plans.{CosineTopKStrategy, PruneCosineTopKChildren}
 
-/** Session-extension entry point: registers the graft SQL functions on
-  * every session built with
+/** Session-extension entry point: on every session built with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (or
-  * `.withExtensions(new GraftExtensions)`), so plain SQL users get
-  * `vec_dot`, `minhash_sig`, `simhash64`, `rolling_min_hash` without any
-  * imperative registration call.
-  *
-  * (The imperative path, [[graft.functions.VectorExpressions.register]],
-  * remains for sessions the library does not construct.)
+  * `.withExtensions(new GraftExtensions)`) it injects every row of
+  * [[VectorExpressions.functions]], the CosineTopK planner strategy and
+  * its child-pruning rule, so plain SQL users get `vec_dot`,
+  * `minhash_sig`, `cms_merge`, … without any imperative call.
+  * [[VectorExpressions.register]] installs the same on sessions the
+  * library does not construct.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "scala_udf")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - double dot product of float vectors"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("rolling_min_hash"),
-      info("rolling_min_hash",
-        "rolling_min_hash(s) - min 64-bit Karp-Rabin hash over 16-byte windows"),
-      (exprs: Seq[Expression]) => RollingMinHash(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("rolling_hashes"),
-      info("rolling_hashes",
-        "rolling_hashes(s) - every 16-byte-window Karp-Rabin hash, in order"),
-      (exprs: Seq[Expression]) => graft.functions.RollingHashes(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", "minhash_sig(tokens) - 64-slot MinHash signature"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(tokens) - 64-bit SimHash"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("word_shingles3"),
-      info("word_shingles3",
-        "word_shingles3(text) - distinct word 3-gram shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs.head, 3)))
-    ext.injectFunction((FunctionIdentifier("word_shingles2"),
-      info("word_shingles2",
-        "word_shingles2(text) - distinct word 2-gram shingles"),
-      (exprs: Seq[Expression]) => WordShingles(exprs.head, 2)))
-    ext.injectFunction((FunctionIdentifier("count_in_set"),
-      info("count_in_set",
-        "count_in_set(arr, 'a,b,c') - members of the literal set, with multiplicity"),
-      (exprs: Seq[Expression]) => VectorExpressions.mkCountInSet(exprs)))
+    VectorExpressions.functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.build)))
+    ext.injectPlannerStrategy(_ => CosineTopKStrategy)
+    ext.injectOptimizerRule(_ => PruneCosineTopKChildren)
   }
 }

@@ -1,12 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.{CosineTopKStrategy, PruneCosineTopKChildren}
 
 /** Custom Catalyst expressions for the similarity / fingerprint kernels
   * (SURVEY.md §4 "custom needs"). These are the hot inner loops of the
@@ -18,47 +22,82 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object VectorExpressions {
 
-  /** Registers all graft SQL functions on the session (idempotent), so
-    * plans can use them via `expr("vec_dot(a, b)")` etc. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_scale", exprs => VecScale(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_absmax", exprs => VecAbsMax(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_quant", exprs => VecQuant(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_min_hash",
-      exprs => RollingMinHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_hashes",
-      exprs => RollingHashes(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_shingles3", exprs => WordShingles(exprs.head, 3), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_shingles2", exprs => WordShingles(exprs.head, 2), "built-in")
-    reg.createOrReplaceTempFunction(
-      "count_in_set", exprs => VectorExpressions.mkCountInSet(exprs),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "cms_estimate", exprs => CmsEstimate(exprs(0), exprs(1)), "built-in")
-    // the sketch-merge re-aggregator rides the UDF registry (it is an
-    // Aggregator, not an Expression); registration is idempotent
-    spark.udf.register("cms_merge",
-      org.apache.spark.sql.functions.udaf(
-        SketchExpressions.CmsMerge, org.apache.spark.sql.Encoders.BINARY))
+  /** One graft SQL function: its name, its `DESCRIBE FUNCTION` usage
+    * line, and the builder from argument expressions. */
+  final case class SqlFunction(name: String, usage: String,
+      build: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(
+      classOf[graft.GraftExtensions].getName, null, name, usage,
+      "", "", "", "", "", "", "scala_udf")
   }
+
+  /** The one function table: [[graft.GraftExtensions]] injects every row
+    * at session build and [[register]] installs the same rows on a
+    * session built without the extension. */
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("vec_dot",
+      "vec_dot(a, b) - double dot product of float vectors",
+      e => VecDot(e(0), e(1))),
+    SqlFunction("vec_scale",
+      "vec_scale(arr, s) - array<double> of each element divided by s",
+      e => VecScale(e(0), e(1))),
+    SqlFunction("vec_absmax",
+      "vec_absmax(arr) - largest absolute element, as double",
+      e => VecAbsMax(e.head)),
+    SqlFunction("vec_quant",
+      "vec_quant(arr, s) - array<double> of floor(element * s)",
+      e => VecQuant(e(0), e(1))),
+    SqlFunction("rolling_min_hash",
+      "rolling_min_hash(s) - min 64-bit Karp-Rabin hash over 16-byte windows",
+      e => RollingMinHash(e.head)),
+    SqlFunction("rolling_hashes",
+      "rolling_hashes(s) - every 16-byte-window Karp-Rabin hash, in order",
+      e => RollingHashes(e.head)),
+    SqlFunction("minhash_sig",
+      "minhash_sig(tokens) - 64-slot MinHash signature",
+      e => MinHashSig(e.head)),
+    SqlFunction("simhash64", "simhash64(tokens) - 64-bit SimHash",
+      e => SimHash64(e.head)),
+    SqlFunction("word_shingles3",
+      "word_shingles3(text) - distinct word 3-gram shingles",
+      e => WordShingles(e.head, 3)),
+    SqlFunction("word_shingles2",
+      "word_shingles2(text) - distinct word 2-gram shingles",
+      e => WordShingles(e.head, 2)),
+    SqlFunction("count_in_set",
+      "count_in_set(arr, 'a,b,c') - members of the literal set, with multiplicity",
+      mkCountInSet),
+    SqlFunction("cms_estimate",
+      "cms_estimate(sketch, token) - Count-Min frequency estimate of token",
+      e => CmsEstimate(e(0), e(1))),
+    SqlFunction("cms_merge",
+      "cms_merge(sketch) - aggregate: union of serialized Count-Min sketches",
+      e => GraftSqlBridge.aggregate(SketchExpressions.CmsMerge,
+        Encoders.BINARY, e)),
+  )
+
+  /** Installs [[functions]], the CosineTopK planner strategy and its
+    * child-pruning rule on `spark` — what [[graft.GraftExtensions]]
+    * injects at session build. Idempotent: a session whose planner
+    * already has the strategy (added here last, or injected by the
+    * extension) returns at once. */
+  def register(spark: SparkSession): Unit =
+    if (!installed(spark)) synchronized {
+      if (!installed(spark)) {
+        val reg = spark.sessionState.functionRegistry
+        functions.foreach(f =>
+          reg.registerFunction(FunctionIdentifier(f.name), f.info, f.build))
+        spark.experimental.extraOptimizations :+= PruneCosineTopKChildren
+        spark.experimental.extraStrategies :+= CosineTopKStrategy
+      }
+    }
+
+  private def installed(spark: SparkSession): Boolean =
+    spark.sessionState.planner.strategies.contains(CosineTopKStrategy)
 
   /** `count_in_set(arr, 'a,b,c')` — the member set must be a foldable
     * string literal (it becomes a static of the generated operator). */
-  private[graft] def mkCountInSet(
+  private def mkCountInSet(
       exprs: Seq[Expression]): CountInSet = exprs(1) match {
     case org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, StringType) =>
       CountInSet(exprs.head, s.toString)

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Graph-authority scoring for corpus curation — the signal web-scale
   * pipelines use to weight or filter sources before training (link
@@ -532,17 +532,11 @@ object Authority {
          |)
          |${presentSqlFrom("w2")}""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "g01_pagerank" -> (g01PageRank _),
-    "g02_trustrank" -> (g02TrustRank _),
-    "g03_hits" -> (g03Hits _),
-    "g04_warm_pagerank" -> (g04WarmStartPageRank _),
-    "g05_rolling_pagerank" -> (g05RollingPageRank _))
-
-  val oracle: Map[String, String] = Map(
-    "g01_pagerank" -> g01Sql,
-    "g02_trustrank" -> g02Sql,
-    "g03_hits" -> g03Sql,
-    "g04_warm_pagerank" -> g04Sql,
-    "g05_rolling_pagerank" -> g05Sql)
+  val registry: Seq[Query] = Seq(
+    Query("g01_pagerank", g01PageRank, Some(g01Sql)),
+    Query("g02_trustrank", g02TrustRank, Some(g02Sql)),
+    Query("g03_hits", g03Hits, Some(g03Sql)),
+    Query("g04_warm_pagerank", g04WarmStartPageRank, Some(g04Sql)),
+    Query("g05_rolling_pagerank", g05RollingPageRank, Some(g05Sql)),
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.VectorExpressions
 
 /** Deduplication operators for a training-data pipeline, over the
@@ -153,7 +153,6 @@ object Dedup {
   /** [[bandedBuckets]] over a raw (doc_id, text) relation — the entry
     * point the streaming sibling uses (shingling + banding in one). */
   private[graft] def bandedDocs(docs: DataFrame): DataFrame = {
-    VectorExpressions.register(docs.sparkSession)
     bandedBuckets(shingledFrame(docs))
   }
 
@@ -186,7 +185,6 @@ object Dedup {
     require(threshold >= 0.8,
       s"LSH banding (16x4) only has ~full recall for j >= 0.8; " +
         s"got threshold=$threshold — use d04/d08's exact paths below that")
-    VectorExpressions.register(docs.sparkSession)
     // The shingle sets feed both sides of the band self-join and the
     // verification join; localCheckpoint materializes the
     // tokenize+shingle pipeline once (instead of four times) and, unlike
@@ -546,7 +544,6 @@ object Dedup {
     * of the 4 chunks, so it shares an exact chunk); verification is
     * xor + bit_count. */
   def d05SimHash(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val hashed = Tables(spark, dir, "documents")
       .withColumn("ws", split(col("text"), " "))
       .filter(size(col("ws")) >= 1)
@@ -581,7 +578,6 @@ object Dedup {
     * [[graft.functions.VecDot]] kernel; quadratic is fine at fixture
     * n — the 100 TB path is [[Similarity.ivfTopK]]'s cell-pruned join. */
   def d06EmbeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     // parallelism floor — the one-row-group scan otherwise caps the
     // fused O(n²) scoring at one task (Tables.spread scaladoc)
     val v = Tables.spread(Tables(spark, dir, "embeddings"), col("vec_id"))
@@ -1424,26 +1420,6 @@ object Dedup {
       |  CAST(MAX(s1 - s0) AS BIGINT) AS max_span
       |FROM spans GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d19_incremental_index_append" -> (d19IncrementalIndexAppend _),
-    "d20_index_takedown" -> (d20IndexTakedown _),
-    "d18_persisted_dedup_index" -> (d18PersistedDedupIndex _),
-    "d17_decontamination" -> (d17Decontamination _),
-    "d16_shared_span_pairs" -> (d16SharedSpanPairs _),
-    "d01_exact_dedup" -> (d01ExactDedup _),
-    "d02_hash_dedup" -> (d02HashDedup _),
-    "d03_minhash_lsh" -> (d03MinHashLsh _),
-    "d04_ngram_jaccard" -> (d04NgramJaccard _),
-    "d05_simhash" -> (d05SimHash _),
-    "d06_embedding_near_dup" -> (d06EmbeddingNearDup _),
-    "d08_ppjoin" -> (d08PpJoin _),
-    "d10_incremental_dedup" -> (d10IncrementalDedup _),
-    "d12_edit_distance" -> (d12EditDistance _),
-    "d13_containment" -> (d13Containment _),
-    "d14_bloom_prefilter" -> (d14BloomPrefilter _),
-    "d15_dup_spans" -> (d15DupSpans _),
-  )
-
   /** d14: Bloom-style hash-bucket prefilter for incremental exact
     * dedup — the accelerator that keeps d10's vs-standing-corpus exact
     * stage from shuffling the whole new batch at 100 TB. The standing
@@ -1464,7 +1440,6 @@ object Dedup {
     * separate stage — this operator accelerates the vs-standing check
     * only. New/standing split follows d10 (`doc_id % 3`). */
   def d14BloomPrefilter(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val isNew = col("doc_id") % 3 === 0
     val bucketOf = pmod(expr("rolling_min_hash(text)"), lit(65536L))
@@ -1573,27 +1548,28 @@ object Dedup {
       |WHERE list_dot_product(a.v, b.v) / (a.nrm * b.nrm) >= 0.4
       |ORDER BY vec_a, vec_b""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val registry: Seq[Query] = Seq(
     // the index-served incremental dedup provably equals the
-    // from-scratch d10, so the oracle is d10's SQL — for d18 (probe of
-    // the single-shot index) AND d19 (probe of the grown index: build
-    // half, append half, same standing corpus)
-    "d18_persisted_dedup_index" -> d10Sql,
-    "d19_incremental_index_append" -> d10Sql,
-    "d20_index_takedown" -> d20Sql,
-    "d17_decontamination" -> d17Sql,
-    "d01_exact_dedup" -> d01Sql,
-    "d02_hash_dedup" -> d02Sql,
-    "d03_minhash_lsh" -> d03Sql,
-    "d04_ngram_jaccard" -> d04Sql,
-    "d05_simhash" -> d05Sql,
-    "d06_embedding_near_dup" -> d06Sql,
-    "d08_ppjoin" -> d08Sql,
-    "d10_incremental_dedup" -> d10Sql,
-    "d12_edit_distance" -> d12Sql,
-    "d13_containment" -> d13Sql,
-    "d14_bloom_prefilter" -> d14Sql,
-    "d15_dup_spans" -> d15Sql,
-    "d16_shared_span_pairs" -> d16Sql,
+    // from-scratch d10, so the oracle is d10's SQL — for d19 (probe of
+    // the grown index: build half, append half, same standing corpus)
+    // AND d18 (probe of the single-shot index)
+    Query("d19_incremental_index_append", d19IncrementalIndexAppend,
+      Some(d10Sql)),
+    Query("d20_index_takedown", d20IndexTakedown, Some(d20Sql)),
+    Query("d18_persisted_dedup_index", d18PersistedDedupIndex, Some(d10Sql)),
+    Query("d17_decontamination", d17Decontamination, Some(d17Sql)),
+    Query("d16_shared_span_pairs", d16SharedSpanPairs, Some(d16Sql)),
+    Query("d01_exact_dedup", d01ExactDedup, Some(d01Sql)),
+    Query("d02_hash_dedup", d02HashDedup, Some(d02Sql)),
+    Query("d03_minhash_lsh", d03MinHashLsh, Some(d03Sql)),
+    Query("d04_ngram_jaccard", d04NgramJaccard, Some(d04Sql)),
+    Query("d05_simhash", d05SimHash, Some(d05Sql)),
+    Query("d06_embedding_near_dup", d06EmbeddingNearDup, Some(d06Sql)),
+    Query("d08_ppjoin", d08PpJoin, Some(d08Sql)),
+    Query("d10_incremental_dedup", d10IncrementalDedup, Some(d10Sql)),
+    Query("d12_edit_distance", d12EditDistance, Some(d12Sql)),
+    Query("d13_containment", d13Containment, Some(d13Sql)),
+    Query("d14_bloom_prefilter", d14BloomPrefilter, Some(d14Sql)),
+    Query("d15_dup_spans", d15DupSpans, Some(d15Sql)),
   )
 }

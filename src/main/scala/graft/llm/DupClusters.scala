@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Near-duplicate *clustering*: turn pairwise near-dup edges into
   * connected components so a corpus keeps exactly one representative
   * per duplicate cluster — the step after [[Dedup.d03MinHashLsh]] in a
@@ -286,17 +288,10 @@ object DupClusters {
       |  SELECT doc_id FROM labels WHERE doc_id <> cluster)
       |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "d07_dup_clusters" -> (d07DupClusters _),
-    "d09_dedup_corpus" -> (d09DedupCorpus _),
-    "d11_semdedup" -> (d11SemDedup _),
-    "d21_semdedup_provisioned" -> (d21SemDedupProvisioned _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "d07_dup_clusters" -> d07Sql,
-    "d09_dedup_corpus" -> d09Sql,
-    "d11_semdedup" -> d11Sql,
-    "d21_semdedup_provisioned" -> d21Sql,
+  val registry: Seq[Query] = Seq(
+    Query("d07_dup_clusters", d07DupClusters, Some(d07Sql)),
+    Query("d09_dedup_corpus", d09DedupCorpus, Some(d09Sql)),
+    Query("d11_semdedup", d11SemDedup, Some(d11Sql)),
+    Query("d21_semdedup_provisioned", d21SemDedupProvisioned, Some(d21Sql)),
   )
 }

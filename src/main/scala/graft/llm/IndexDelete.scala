@@ -6,6 +6,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import org.apache.spark.sql.expressions.Window
 
+import graft.Query
+
 /** Deletion on the persisted vector index — the lifecycle verb the
   * index families had been missing. Create (`ensure`), append (the
   * streaming sinks), compact, retrain and audit all exist; a real
@@ -355,11 +357,7 @@ object IndexDelete {
       |SELECT query_id, CAST(rn AS INT) AS rn, neighbor_id, cosine
       |FROM r WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s32_tombstone_search" -> (s32TombstoneSearch _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s32_tombstone_search" -> s32Sql,
+  val registry: Seq[Query] = Seq(
+    Query("s32_tombstone_search", s32TombstoneSearch, Some(s32Sql)),
   )
 }

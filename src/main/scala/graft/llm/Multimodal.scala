@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Multimodal-column plumbing: media as opaque `binary` columns with a
   * typed metadata struct, batch decode / feature-extract / frame-sample
@@ -857,7 +857,6 @@ object Multimodal {
     * Enforces m12's ASCII + non-empty precondition (scaladoc above). */
   private def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.register(spark)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("c_end"))
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
@@ -1038,24 +1037,6 @@ object Multimodal {
       |    ELSE strlen(text) END AS INT) AS payload_bytes
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "m14_container_audit" -> (m14ContainerAudit _),
-    "m13_cdc_dedup" -> (m13CdcDedupStats _),
-    "m12_cdc_chunks" -> (m12CdcChunks _),
-    "m11_training_pairs" -> (m11TrainingPairs _),
-    "m09_integrity_audit" -> (m09IntegrityAudit _),
-    "m10_shared_frame_dups" -> (m10SharedFrameDups _),
-    "m01_media_meta" -> (m01MediaMeta _),
-    "m02_media_features" -> (m02MediaFeatures _),
-    "m15_png_features" -> (m15PngFeatures _),
-    "m03_frame_sample" -> (m03FrameSample _),
-    "m04_resize" -> (m04Resize _),
-    "m05_binary_files" -> (m05BinaryFiles _),
-    "m06_dup_frames" -> (m06DupFrames _),
-    "m07_blob_chunks" -> (m07BlobChunks _),
-    "m08_shared_chunks" -> (m08SharedChunks _),
-  )
-
   /** m03's frame set is fully determined by (text, n_chars): nFrames =
     * n_chars % 16 + 1, indices 0,4,8,... and the digest is md5 of the
     * UTF-8 text plus ":idx" — all expressible in SQL (the texts are
@@ -1203,21 +1184,21 @@ object Multimodal {
        |ORDER BY c.doc_id""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
-    "m14_container_audit" -> m14Sql,
-    "m13_cdc_dedup" -> m13Sql,
-    "m12_cdc_chunks" -> m12Sql,
-    "m11_training_pairs" -> m11Sql,
-    "m09_integrity_audit" -> m09Sql,
-    "m10_shared_frame_dups" -> m10Sql,
-    "m01_media_meta" -> m01Sql,
-    "m02_media_features" -> m02Sql,
-    "m15_png_features" -> m15Sql,
-    "m03_frame_sample" -> m03Sql,
-    "m04_resize" -> m04Sql,
-    "m05_binary_files" -> m05Sql,
-    "m06_dup_frames" -> m06Sql,
-    "m07_blob_chunks" -> m07Sql,
-    "m08_shared_chunks" -> m08Sql,
+  val registry: Seq[Query] = Seq(
+    Query("m14_container_audit", m14ContainerAudit, Some(m14Sql)),
+    Query("m13_cdc_dedup", m13CdcDedupStats, Some(m13Sql)),
+    Query("m12_cdc_chunks", m12CdcChunks, Some(m12Sql)),
+    Query("m11_training_pairs", m11TrainingPairs, Some(m11Sql)),
+    Query("m09_integrity_audit", m09IntegrityAudit, Some(m09Sql)),
+    Query("m10_shared_frame_dups", m10SharedFrameDups, Some(m10Sql)),
+    Query("m01_media_meta", m01MediaMeta, Some(m01Sql)),
+    Query("m02_media_features", m02MediaFeatures, Some(m02Sql)),
+    Query("m15_png_features", m15PngFeatures, Some(m15Sql)),
+    Query("m03_frame_sample", m03FrameSample, Some(m03Sql)),
+    Query("m04_resize", m04Resize, Some(m04Sql)),
+    Query("m05_binary_files", m05BinaryFiles, Some(m05Sql)),
+    Query("m06_dup_frames", m06DupFrames, Some(m06Sql)),
+    Query("m07_blob_chunks", m07BlobChunks, Some(m07Sql)),
+    Query("m08_shared_chunks", m08SharedChunks, Some(m08Sql)),
   )
 }

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The end-to-end training-data cleaning pipeline as ONE lazy dataflow —
   * what a user of this library actually runs over a raw corpus:
@@ -84,7 +84,6 @@ object Pipeline {
     * `write.partitionBy(shard)` inherits whatever parallelism the
     * corpus frame has. */
   def p02ShardStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     import org.apache.spark.sql.types.LongType
     Tables(spark, dir, "documents")
       .select(col("doc_id"),
@@ -138,7 +137,6 @@ object Pipeline {
   def p03TokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.LongType
-    graft.functions.VectorExpressions.register(spark)
     val base = TextStats.qualityScored(Tables(spark, dir, "documents"))
       .withColumn("shard",
         pmod(expr("rolling_min_hash(text)"), lit(8L)))
@@ -250,7 +248,6 @@ object Pipeline {
     * is scan-adjacent and narrow. All arithmetic is integer, so the
     * oracle replays membership exactly. */
   def p05MixtureRebalance(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val counts = docs.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_lang"))
@@ -306,7 +303,6 @@ object Pipeline {
     * to fetch the representative's fingerprint bucket — all
     * shuffle-shaped, nothing driver-side. */
   def p06LeakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val labels = DupClusters.connectedComponents(
       Dedup.minHashPairs(docs, threshold = 0.8))
@@ -493,7 +489,6 @@ object Pipeline {
     * arithmetic is integer, so the oracle replays membership exactly. */
   def p09EpochMixing(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables(spark, dir, "documents")
     val counts = docs.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_lang"))
@@ -560,7 +555,6 @@ object Pipeline {
   def p10Curriculum(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.LongType
-    graft.functions.VectorExpressions.register(spark)
     val wLang = Window.partitionBy(col("lang"))
       .orderBy(col("quality"), col("doc_id"))
     val scored = TextStats.qualityScored(Tables(spark, dir, "documents"))
@@ -616,7 +610,6 @@ object Pipeline {
     * (boundary docs overflow by at most one doc's tokens). */
   def p12ShardPacking(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    graft.functions.VectorExpressions.register(spark)
     packByTokens(Tables(spark, dir, "documents")
       .select(col("doc_id"),
         expr("rolling_min_hash(text)").as("fingerprint"),
@@ -686,7 +679,6 @@ object Pipeline {
     * then ONE doc_id-keyed join onto the fingerprint frame and p12's
     * shard-window prefix sum — no new corpus-scale shuffle class. */
   def p22BpePacking(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val enc = Tokenizer.perDocBpeTokens(spark, dir)
       .select(col("doc_id"), col("n_bpe").as("n_tokens"))
     packByTokens(Tables(spark, dir, "documents")
@@ -1152,7 +1144,6 @@ object Pipeline {
     * ROW_NUMBER and checks `rk <= K`: an engine-native cross-check
     * that the threshold form IS top-k. */
   def p18DsirResample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val d = Tables(spark, dir, "documents")
       .filter(size(split(col("text"), " ")) >= 2)
     val tok = d.select(col("doc_id"),
@@ -1369,7 +1360,6 @@ object Pipeline {
 
   def p20JsonlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    graft.functions.VectorExpressions.register(spark)
     val d = Tables(spark, dir, "documents")
     // the read-back is lazy so delete-after-use can't be sequenced
     // here; see scratchDir for the path policy
@@ -1473,52 +1463,28 @@ object Pipeline {
       |  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs
       |FROM documents GROUP BY 1 ORDER BY batch""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p21_schema_evolution" -> (p21SchemaEvolution _),
-    "p20_jsonl_roundtrip" -> (p20JsonlRoundtrip _),
-    "p19_doremi_weights" -> (p19DoremiWeights _),
-    "p18_dsir_resample" -> (p18DsirResample _),
-    "p17_effective_corpus" -> (p17EffectiveCorpus _),
-    "p16_pps_sample" -> (p16PpsSample _),
-    "p15_kanon_release" -> (p15KAnonRelease _),
-    "p14_corpus_card" -> (p14CorpusCard _),
-    "p13_incremental_update" -> (p13IncrementalUpdate _),
-    "p12_shard_packing" -> (p12ShardPacking _),
-    "p22_bpe_packing" -> (p22BpePacking _),
-    "p11_snapshot_diff" -> (p11SnapshotDiff _),
-    "p01_dedup_pipeline" -> (p01DedupPipeline _),
-    "p07_corpus_prep" -> (p07CorpusPrep _),
-    "p08_quality_calibration" -> (p08QualityCalibration _),
-    "p09_epoch_mixing" -> (p09EpochMixing _),
-    "p10_curriculum" -> (p10Curriculum _),
-    "p02_shard_stats" -> (p02ShardStats _),
-    "p03_token_budget" -> (p03TokenBudget _),
-    "p04_stratified_sample" -> (p04StratifiedSample _),
-    "p05_mixture_rebalance" -> (p05MixtureRebalance _),
-    "p06_leakage_safe_split" -> (p06LeakageSafeSplit _),
-  )
-  val oracle: Map[String, String] = Map(
-    "p21_schema_evolution" -> p21Sql,
-    "p20_jsonl_roundtrip" -> p20Sql,
-    "p19_doremi_weights" -> p19Sql,
-    "p18_dsir_resample" -> p18Sql,
-    "p17_effective_corpus" -> p17Sql,
-    "p16_pps_sample" -> p16Sql,
-    "p15_kanon_release" -> p15Sql,
-    "p14_corpus_card" -> p14Sql,
-    "p13_incremental_update" -> p13Sql,
-    "p12_shard_packing" -> p12Sql,
-    "p22_bpe_packing" -> p22Sql,
-    "p11_snapshot_diff" -> p11Sql,
-    "p01_dedup_pipeline" -> p01Sql,
-    "p07_corpus_prep" -> p07Sql,
-    "p08_quality_calibration" -> p08Sql,
-    "p09_epoch_mixing" -> p09Sql,
-    "p10_curriculum" -> p10Sql,
-    "p02_shard_stats" -> p02Sql,
-    "p03_token_budget" -> p03Sql,
-    "p04_stratified_sample" -> p04Sql,
-    "p05_mixture_rebalance" -> p05Sql,
-    "p06_leakage_safe_split" -> p06Sql,
+  val registry: Seq[Query] = Seq(
+    Query("p21_schema_evolution", p21SchemaEvolution, Some(p21Sql)),
+    Query("p20_jsonl_roundtrip", p20JsonlRoundtrip, Some(p20Sql)),
+    Query("p19_doremi_weights", p19DoremiWeights, Some(p19Sql)),
+    Query("p18_dsir_resample", p18DsirResample, Some(p18Sql)),
+    Query("p17_effective_corpus", p17EffectiveCorpus, Some(p17Sql)),
+    Query("p16_pps_sample", p16PpsSample, Some(p16Sql)),
+    Query("p15_kanon_release", p15KAnonRelease, Some(p15Sql)),
+    Query("p14_corpus_card", p14CorpusCard, Some(p14Sql)),
+    Query("p13_incremental_update", p13IncrementalUpdate, Some(p13Sql)),
+    Query("p12_shard_packing", p12ShardPacking, Some(p12Sql)),
+    Query("p22_bpe_packing", p22BpePacking, Some(p22Sql)),
+    Query("p11_snapshot_diff", p11SnapshotDiff, Some(p11Sql)),
+    Query("p01_dedup_pipeline", p01DedupPipeline, Some(p01Sql)),
+    Query("p07_corpus_prep", p07CorpusPrep, Some(p07Sql)),
+    Query("p08_quality_calibration", p08QualityCalibration, Some(p08Sql)),
+    Query("p09_epoch_mixing", p09EpochMixing, Some(p09Sql)),
+    Query("p10_curriculum", p10Curriculum, Some(p10Sql)),
+    Query("p02_shard_stats", p02ShardStats, Some(p02Sql)),
+    Query("p03_token_budget", p03TokenBudget, Some(p03Sql)),
+    Query("p04_stratified_sample", p04StratifiedSample, Some(p04Sql)),
+    Query("p05_mixture_rebalance", p05MixtureRebalance, Some(p05Sql)),
+    Query("p06_leakage_safe_split", p06LeakageSafeSplit, Some(p06Sql)),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Lexical retrieval over the `documents` fixture — the sparse
   * counterpart to [[Similarity]]'s dense s-series (a training-data
@@ -474,7 +474,6 @@ object Retrieval {
     * and broadcast, so the fan-out is q·n work against the flat index —
     * the s01 shape restricted to the query set, not n². */
   private[graft] def denseRanked(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // parallelism floor — the one-row-group scan otherwise caps the
     // fused q·n scoring at one task (Tables.spread scaladoc)
     val v = graft.Tables.spread(
@@ -696,19 +695,12 @@ object Retrieval {
          |ORDER BY query_id, rn""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s10_bm25_topk" -> (s10Bm25TopK _),
-    "s13_hybrid_rrf" -> (s13HybridRrf _),
-    "s17_incremental_bm25" -> (s17IncrementalBm25 _),
-    "s33_bm25_delete" -> (s33Bm25Delete _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "s10_bm25_topk" -> s10Sql,
-    "s13_hybrid_rrf" -> s13Sql,
+  val registry: Seq[Query] = Seq(
+    Query("s10_bm25_topk", s10Bm25TopK, Some(s10Sql)),
+    Query("s13_hybrid_rrf", s13HybridRrf, Some(s13Sql)),
     // the segmented incremental index provably equals the from-scratch
     // index, so the oracle IS the full-corpus derivation
-    "s17_incremental_bm25" -> s10Sql,
-    "s33_bm25_delete" -> s33Sql,
+    Query("s17_incremental_bm25", s17IncrementalBm25, Some(s10Sql)),
+    Query("s33_bm25_delete", s33Bm25Delete, Some(s33Sql)),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.VectorExpressions
 
 /** Approximate-nearest-neighbor search over the `embeddings` fixture
@@ -26,7 +26,6 @@ import graft.functions.VectorExpressions
 object Similarity {
 
   private[graft] def normed(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     // parallelism floor (Tables.spread): the embeddings fixture is one
     // row-group, so every kernel fused onto this scan — including the
     // O(n²) exact baselines — otherwise runs as a single task
@@ -433,7 +432,6 @@ object Similarity {
     * [[graft.functions.VecDot]] kernel, whose left-to-right double
     * accumulation DuckDB's `list_dot_product` matches exactly). */
   def s05QuantizedTopK(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     // parallelism floor — the one-row-group scan otherwise caps the
     // fused O(n²) scoring at one task (Tables.spread scaladoc)
     // codegen'd vec_absmax / vec_quant in place of the interpreted
@@ -489,13 +487,10 @@ object Similarity {
     val child = rewriteSessions.synchronized {
       var s = rewriteSessions.get(spark)
       if (s == null) {
+        // a new session shares no temp functions with its parent
         s = spark.newSession()
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ graft.plans.CosineTopKStrategy
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations ++
-            Seq(graft.plans.CosineTopKRewrite,
-              graft.plans.PruneCosineTopKChildren)
+        VectorExpressions.register(s)
+        s.experimental.extraOptimizations :+= graft.plans.CosineTopKRewrite
         rewriteSessions.put(spark, s)
       }
       s
@@ -601,7 +596,6 @@ object Similarity {
     * any engine that sums left-to-right — the oracle replays them with
     * `list_dot_product`. */
   def s08RandomProjection(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     def planeLit(p: Array[Double]): String =
       p.map(_.toString + "D").mkString("array(", ",", ")")
     // float array straight into vec_dot — see s07: the cast lambda was
@@ -721,7 +715,6 @@ object Similarity {
   /** Unit-normalized corpus vectors `(vec_id, nv)` — the PQ chain's
     * input frame. */
   private def pqNv(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     pqNvFrame(normed(spark, dir))
   }
 
@@ -1182,7 +1175,6 @@ object Similarity {
     * round-trip), which the spec asserts row-for-row; the oracle is
     * [[s20Sql]] verbatim (d18/d19-vs-d10 precedent). */
   def s21PqIndexSearch(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val base = pqIndexBase(spark, dir)
     val cb = spark.read.parquet(s"$base/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
@@ -1215,7 +1207,6 @@ object Similarity {
     * candidates — s14 scores probed cells with full-precision floats,
     * s26 pays 8 bytes per candidate and the pool cut. */
   def s26FilteredIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val pqBase = pqIndexBase(spark, dir)
     val cb = spark.read.parquet(s"$pqBase/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
@@ -1327,7 +1318,6 @@ object Similarity {
     * are ranks WITHIN the label, which is the semantics a filtered
     * query wants. */
   def s27LabelPartitionedSearch(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val base = lblPqIndexBase(spark, dir)
     val cb = spark.read.parquet(s"$base/codebook")
     val stored = spark.read.schema(lblCodesSchema).parquet(s"$base/codes")
@@ -1447,7 +1437,6 @@ object Similarity {
     * panel is exactly the job that adjudicates this per corpus at
     * index-build time. */
   def s28ResidualPqSearch(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val ivfBase = ivfIndexBase(spark, dir)
     val base = pqResIndexBase(spark, dir)
     val cb = spark.read.parquet(s"$base/codebook")
@@ -1597,7 +1586,6 @@ object Similarity {
     * when encode throughput and recall matter more than the last 8×
     * of compression. */
   def s29SqSearch(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val qv = servingQueryNv(spark, dir)
       .select(col("vec_id").as("query_id"), col("nv").as("qnv"))
     val pool = sqPool(servingProbes(spark, dir),
@@ -1653,7 +1641,6 @@ object Similarity {
     * score pool, exact refine from the LIVE stored lists. */
   private[graft] def sqServeFrom(spark: SparkSession, queries: DataFrame,
       ivfBase: String, sqBase: String): DataFrame = {
-    VectorExpressions.register(spark)
     val qnv = pqNvFrame(queries)
     val qv = qnv.select(col("vec_id").as("query_id"), col("nv").as("qnv"))
     val pool = sqPool(storedProbes(spark, queries, ivfBase),
@@ -1756,7 +1743,6 @@ object Similarity {
     * for SQ8's 4× and PQ's training cadence is operationally
     * unaffordable. */
   def s30BqSearch(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val qbits = bqBits(servingQueryNv(spark, dir))
       .select(col("vec_id").as("query_id"),
         col("bits_lo").as("qlo"), col("bits_hi").as("qhi"))
@@ -1804,7 +1790,6 @@ object Similarity {
     * cut. */
   private[graft] def bqServeFrom(spark: SparkSession, queries: DataFrame,
       ivfBase: String, bqBase: String): DataFrame = {
-    VectorExpressions.register(spark)
     val qnv = pqNvFrame(queries)
     val qbits = bqBits(qnv)
       .select(col("vec_id").as("query_id"),
@@ -1845,7 +1830,6 @@ object Similarity {
     * in exactly one cell, so (query, neighbor) pairs are distinct by
     * construction — no dedup stage either. */
   def s31RangeSearch(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val lists = ivfInvertedLists(spark, dir)
       .withColumn("cnv", expr(UnitNvExpr))
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("cnv"))
@@ -1877,7 +1861,6 @@ object Similarity {
     * Integer hits via a truth-left-join-served count — cross-engine
     * exact, no float aggregation anywhere. */
   def s23RecallAudit(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     // serve from the PERSISTED artifacts (s21's chain — proven
     // value-identical to s20's live chain): the audit must pay
     // serving cost only, not a per-audit codebook retrain + corpus
@@ -1989,7 +1972,6 @@ object Similarity {
     * served set is s20's chain exactly, so this row's `hits` must
     * equal the s23 audit's total (spec-pinned). */
   def s25NprobeSweep(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val base = pqIndexBase(spark, dir)
     val cb = spark.read.parquet(s"$base/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
@@ -2154,7 +2136,6 @@ object Similarity {
     * be planned until its artifacts exist). Plan-shaped consumers see
     * a 2-row local relation; that is the honest plan of a report. */
   def s24RecallRetrain(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val auditPred = incBatchPred && col("vec_id") % 4 === 0
     val ivfInc = ivfIncIndexBase(spark, dir)
     val pqInc = pqIncIndexBase(spark, dir)
@@ -2285,7 +2266,6 @@ object Similarity {
     * inverted lists, no corpus table exists). */
   private[graft] def storedIvfPqServeFrom(spark: SparkSession,
       queries: DataFrame, ivfBase: String, pqBase: String): DataFrame = {
-    VectorExpressions.register(spark)
     val cb = spark.read.parquet(s"$pqBase/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
       .parquet(s"$pqBase/codes")
@@ -2332,7 +2312,6 @@ object Similarity {
     * real scale stage 1 composes with the IVF index (s02) instead of
     * the flat centroid scan — the two-stage contract is unchanged. */
   def s11MaxSimTopK(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val nv = normed(spark, dir)
       .withColumn("nv",
         expr(UnitNvExpr))
@@ -2399,7 +2378,6 @@ object Similarity {
     * IVF index (s02) or LSH banding (s07) and the margin math is
     * unchanged — it only ever needs each side's top-k list. */
   def s12BitextMargin(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val nv = normed(spark, dir)
       .withColumn("nv",
         expr(UnitNvExpr))
@@ -2506,7 +2484,6 @@ object Similarity {
     * pairs sharing a probed cell, scored with the quantized dot. */
   private def bucketedScoredPairs(spark: SparkSession, dir: String,
       ranked: DataFrame): DataFrame = {
-    VectorExpressions.register(spark)
     val r3 = ranked.filter(col("cell_rank") <= 3)
       .select(col("cell"), col("vec_id"))
     val srcC = r3.filter(col("vec_id") % 2 === 0)
@@ -2812,40 +2789,6 @@ object Similarity {
           col("neighbor_id").asc)))
       .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "s18_point_lookup" -> (s18PointLookup _),
-    "s16_incremental_index" -> (s16IncrementalIndexUpdate _),
-    "s15_index_probe" -> (s15IndexProbe _),
-    "s14_hard_negatives" -> (s14HardNegatives _),
-    "s01_cosine_topk" -> (s01BruteForceTopK _),
-    "s09_pq_topk" -> (s09PqTopK _),
-    "s20_ivfpq_search" -> (s20IvfPqSearch _),
-    "s21_pq_index_search" -> (s21PqIndexSearch _),
-    "s22_incremental_pq" -> (s22IncrementalPqSearch _),
-    "s23_recall_audit" -> (s23RecallAudit _),
-    "s24_recall_retrain" -> (s24RecallRetrain _),
-    "s25_nprobe_sweep" -> (s25NprobeSweep _),
-    "s26_filtered_ivfpq" -> (s26FilteredIvfPq _),
-    "s27_label_partitioned" -> (s27LabelPartitionedSearch _),
-    "s28_residual_pq" -> (s28ResidualPqSearch _),
-    "s29_sq8_search" -> (s29SqSearch _),
-    "s30_bq_search" -> (s30BqSearch _),
-    "s31_range_search" -> (s31RangeSearch _),
-    "s19_pq_rerank" -> (s19PqRerank _),
-    "s11_maxsim_topk" -> (s11MaxSimTopK _),
-    "s12_bitext_margin" -> (s12BitextMargin _),
-    "s12b_bitext_bucketed" -> (s12bBitextMarginBucketed _),
-    "s12c_bitext_provisioned" -> (s12cBitextMarginProvisioned _),
-    "s02_ivf_topk" -> (s02IvfTopK _),
-    "s34_ivf_provisioned" -> (s34IvfSqrtProvisioned _),
-    "s03_topk_aggregate" -> (s03TopKAggregate _),
-    "s04_custom_plan_topk" -> (s04CustomPlanTopK _),
-    "s05_quantized_topk" -> (s05QuantizedTopK _),
-    "s06_auto_rewrite" -> (s06AutoRewrite _),
-    "s07_lsh_topk" -> (s07LshTopK _),
-    "s08_random_projection" -> (s08RandomProjection _),
-  )
 
   /** Shared CTE: DOUBLE[]-cast vectors + norms. `list_dot_product` over
     * DOUBLE[] is a left-to-right double accumulation — bit-identical to
@@ -3999,40 +3942,42 @@ object Similarity {
       |SELECT query_id, CAST(rn AS INT) AS rn, neighbor_id, cosine
       |FROM r WHERE rn <= 5 ORDER BY rn""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "s18_point_lookup" -> s18Sql,
-    "s16_incremental_index" -> s16Sql,
-    "s15_index_probe" -> s15Sql,
-    "s14_hard_negatives" -> s14Sql,
-    "s09_pq_topk" -> s09Sql,
-    "s20_ivfpq_search" -> s20Sql,
+  val registry: Seq[Query] = Seq(
+    Query("s18_point_lookup", s18PointLookup, Some(s18Sql)),
+    Query("s16_incremental_index", s16IncrementalIndexUpdate, Some(s16Sql)),
+    Query("s15_index_probe", s15IndexProbe, Some(s15Sql)),
+    Query("s14_hard_negatives", s14HardNegatives, Some(s14Sql)),
+    Query("s01_cosine_topk", s01BruteForceTopK, Some(s01Sql)),
+    Query("s09_pq_topk", s09PqTopK, Some(s09Sql)),
+    Query("s20_ivfpq_search", s20IvfPqSearch, Some(s20Sql)),
     // s21 reads the persisted codebook+codes; deterministic training +
     // exact parquet round-trip make it value-identical to the live
     // chain, so the oracle replay IS s20's (d18/d19-vs-d10 precedent)
-    "s21_pq_index_search" -> s20Sql,
-    "s22_incremental_pq" -> s22Sql,
-    "s23_recall_audit" -> s23Sql,
-    "s24_recall_retrain" -> s24Sql,
-    "s25_nprobe_sweep" -> s25Sql,
-    "s26_filtered_ivfpq" -> s26Sql,
-    "s27_label_partitioned" -> s27Sql,
-    "s28_residual_pq" -> s28Sql,
-    "s29_sq8_search" -> s29Sql,
-    "s30_bq_search" -> s30Sql,
-    "s31_range_search" -> s31Sql,
-    "s19_pq_rerank" -> s19Sql,
-    "s11_maxsim_topk" -> s11Sql,
-    "s12_bitext_margin" -> s12Sql,
-    "s12b_bitext_bucketed" -> s12bSql,
-    "s12c_bitext_provisioned" -> s12cSql,
-    "s01_cosine_topk" -> s01Sql,
-    "s02_ivf_topk" -> s02Sql,
-    "s34_ivf_provisioned" -> s34Sql,
-    "s03_topk_aggregate" -> s01Sql,
-    "s04_custom_plan_topk" -> s01Sql,
-    "s05_quantized_topk" -> s05Sql,
-    "s06_auto_rewrite" -> s01Sql, // same contract as the declarative form
-    "s07_lsh_topk" -> s07Sql,
-    "s08_random_projection" -> s08Sql,
+    Query("s21_pq_index_search", s21PqIndexSearch, Some(s20Sql)),
+    Query("s22_incremental_pq", s22IncrementalPqSearch, Some(s22Sql)),
+    Query("s23_recall_audit", s23RecallAudit, Some(s23Sql)),
+    Query("s24_recall_retrain", s24RecallRetrain, Some(s24Sql)),
+    Query("s25_nprobe_sweep", s25NprobeSweep, Some(s25Sql)),
+    Query("s26_filtered_ivfpq", s26FilteredIvfPq, Some(s26Sql)),
+    Query("s27_label_partitioned", s27LabelPartitionedSearch, Some(s27Sql)),
+    Query("s28_residual_pq", s28ResidualPqSearch, Some(s28Sql)),
+    Query("s29_sq8_search", s29SqSearch, Some(s29Sql)),
+    Query("s30_bq_search", s30BqSearch, Some(s30Sql)),
+    Query("s31_range_search", s31RangeSearch, Some(s31Sql)),
+    Query("s19_pq_rerank", s19PqRerank, Some(s19Sql)),
+    Query("s11_maxsim_topk", s11MaxSimTopK, Some(s11Sql)),
+    Query("s12_bitext_margin", s12BitextMargin, Some(s12Sql)),
+    Query("s12b_bitext_bucketed", s12bBitextMarginBucketed, Some(s12bSql)),
+    Query("s12c_bitext_provisioned", s12cBitextMarginProvisioned,
+      Some(s12cSql)),
+    Query("s02_ivf_topk", s02IvfTopK, Some(s02Sql)),
+    Query("s34_ivf_provisioned", s34IvfSqrtProvisioned, Some(s34Sql)),
+    Query("s03_topk_aggregate", s03TopKAggregate, Some(s01Sql)),
+    Query("s04_custom_plan_topk", s04CustomPlanTopK, Some(s01Sql)),
+    Query("s05_quantized_topk", s05QuantizedTopK, Some(s05Sql)),
+    // same contract as the declarative form
+    Query("s06_auto_rewrite", s06AutoRewrite, Some(s01Sql)),
+    Query("s07_lsh_topk", s07LshTopK, Some(s07Sql)),
+    Query("s08_random_projection", s08RandomProjection, Some(s08Sql)),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Corpus-cleaning operators a training-data pipeline runs between
   * ingestion and dedup: interdoc boilerplate removal (t11) and PII
@@ -222,7 +222,6 @@ object TextClean {
     * shuffle, no UDF (`count_in_set` is a custom codegen Expression);
     * the ORDER BY is presentation-only. */
   def t14RuleFilter(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables(spark, dir, "documents")
       .withColumn("ws", split(col("text"), " "))
       .withColumn("n_words", size(col("ws")).cast("long"))
@@ -362,17 +361,10 @@ object TextClean {
        |FROM tot t JOIN kept k USING (doc_id)
        |ORDER BY t.doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t11_boilerplate" -> (t11Boilerplate _),
-    "t12_pii_redact" -> (t12PiiRedact _),
-    "t14_rule_filter" -> (t14RuleFilter _),
-    "t15_repeat_strip" -> (t15RepeatStrip _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "t11_boilerplate" -> t11Sql,
-    "t12_pii_redact" -> t12Sql,
-    "t14_rule_filter" -> t14Sql,
-    "t15_repeat_strip" -> t15Sql,
+  val registry: Seq[Query] = Seq(
+    Query("t11_boilerplate", t11Boilerplate, Some(t11Sql)),
+    Query("t12_pii_redact", t12PiiRedact, Some(t12Sql)),
+    Query("t14_rule_filter", t14RuleFilter, Some(t14Sql)),
+    Query("t15_repeat_strip", t15RepeatStrip, Some(t15Sql)),
   )
 }

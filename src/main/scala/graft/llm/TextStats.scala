@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.functions.VectorExpressions
 
 /** Text-analysis operators over the `documents` fixture: token counting,
@@ -149,7 +149,6 @@ object TextStats {
   /** Per-language marker hit counts (cnt_en..cnt_zh) over a frame with
     * a `ws` token array — the shared scoring core of t03 and t10. */
   private def markerCounts(spark: SparkSession, base: DataFrame): DataFrame = {
-    VectorExpressions.register(spark)
     langMarkers.foldLeft(base) { case (df, (lang, markers)) =>
       df.withColumn(s"cnt_$lang",
         expr(s"count_in_set(ws, '${markers.mkString(",")}')")
@@ -253,7 +252,6 @@ object TextStats {
     * [[graft.functions.RollingMinHash]] expression; grouping on the
     * fingerprint gives near-dup clusters robust to small suffix edits. */
   def t04Fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     Tables(spark, dir, "documents")
       .withColumn("fingerprint", expr("rolling_min_hash(text)"))
       .select(col("doc_id"), col("fingerprint"), col("n_chars"))
@@ -369,7 +367,6 @@ object TextStats {
     * count shuffle with map-side combine; at corpus scale this is the
     * standard inverted df aggregation, no driver state. */
   def t06Bigrams(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     Tables(spark, dir, "documents")
       .select(explode(expr("word_shingles2(text)")).as("bigram"))
       .groupBy(col("bigram"))
@@ -399,7 +396,6 @@ object TextStats {
     * scale-limited only by the token explode, same shape as t05's df
     * side. All ratios rational over exact integers → oracle-exact. */
   def t07Repetition(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val d = docs(spark, dir)
     val perDoc = d.select(col("doc_id"),
       size(col("ws")).cast(LongType).as("n_tokens"),
@@ -816,7 +812,6 @@ object TextStats {
     * labeled slice would be a sampled fraction, which changes only the
     * `labeled` frame's filter. */
   def t18QualityDistill(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val stopCsv = stopwords.mkString(",")
     val labeled = docs(spark, dir).select(col("doc_id"), col("ws"),
       (lit(10) * expr(s"count_in_set(ws, '$stopCsv')") >= size(col("ws")))
@@ -880,37 +875,20 @@ object TextStats {
        |ORDER BY s.doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t18_quality_distill" -> (t18QualityDistill _),
-    "t17_novelty" -> (t17Novelty _),
-    "t16_bigram_lm" -> (t16BigramLm _),
-    "t09_surprisal" -> (t09Surprisal _),
-    "t13_corpus_drift" -> (t13CorpusDrift _),
-    "t10_mixed_lang" -> (t10MixedLang _),
-    "t06_bigrams" -> (t06Bigrams _),
-    "t07_repetition" -> (t07Repetition _),
-    "t01_token_stats" -> (t01TokenStats _),
-    "t02_quality_score" -> (t02QualityScore _),
-    "t03_lang_id" -> (t03LangId _),
-    "t04_fingerprint" -> (t04Fingerprint _),
-    "t05_tfidf" -> (t05TfIdf _),
-    "t08_contamination" -> (t08Contamination _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "t18_quality_distill" -> t18Sql,
-    "t17_novelty" -> t17Sql,
-    "t16_bigram_lm" -> t16Sql,
-    "t01_token_stats" -> t01Sql,
-    "t02_quality_score" -> t02Sql,
-    "t03_lang_id" -> t03Sql,
-    "t04_fingerprint" -> t04Sql,
-    "t05_tfidf" -> t05Sql,
-    "t06_bigrams" -> t06Sql,
-    "t07_repetition" -> t07Sql,
-    "t08_contamination" -> t08Sql,
-    "t09_surprisal" -> t09Sql,
-    "t10_mixed_lang" -> t10Sql,
-    "t13_corpus_drift" -> t13Sql,
+  val registry: Seq[Query] = Seq(
+    Query("t18_quality_distill", t18QualityDistill, Some(t18Sql)),
+    Query("t17_novelty", t17Novelty, Some(t17Sql)),
+    Query("t16_bigram_lm", t16BigramLm, Some(t16Sql)),
+    Query("t09_surprisal", t09Surprisal, Some(t09Sql)),
+    Query("t13_corpus_drift", t13CorpusDrift, Some(t13Sql)),
+    Query("t10_mixed_lang", t10MixedLang, Some(t10Sql)),
+    Query("t06_bigrams", t06Bigrams, Some(t06Sql)),
+    Query("t07_repetition", t07Repetition, Some(t07Sql)),
+    Query("t01_token_stats", t01TokenStats, Some(t01Sql)),
+    Query("t02_quality_score", t02QualityScore, Some(t02Sql)),
+    Query("t03_lang_id", t03LangId, Some(t03Sql)),
+    Query("t04_fingerprint", t04Fingerprint, Some(t04Sql)),
+    Query("t05_tfidf", t05TfIdf, Some(t05Sql)),
+    Query("t08_contamination", t08Contamination, Some(t08Sql)),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Tokenizer induction + application over the `documents` fixture:
   * distributed BPE merge learning (Sennrich et al. 2016, "Neural
@@ -544,15 +544,9 @@ object Tokenizer {
          |  (1000 * n_tokens) // NULLIF(n_words, 0) AS fertility_e3
          |FROM agg ORDER BY lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "t19_bpe_merges" -> (t19BpeMerges _),
-    "t20_bpe_encode" -> (t20BpeEncode _),
-    "t21_bpe_fertility" -> (t21BpeFertility _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "t19_bpe_merges" -> t19Sql,
-    "t20_bpe_encode" -> t20Sql,
-    "t21_bpe_fertility" -> t21Sql,
+  val registry: Seq[Query] = Seq(
+    Query("t19_bpe_merges", t19BpeMerges, Some(t19Sql)),
+    Query("t20_bpe_encode", t20BpeEncode, Some(t20Sql)),
+    Query("t21_bpe_fertility", t21BpeFertility, Some(t21Sql)),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** As-of (point-in-time) join — an operator Spark's built-in join set
   * lacks. Semantics: for every event, attach the user's most recent
@@ -212,14 +212,9 @@ object AsOf {
       |WHERE a.event_type = 'error'
       |ORDER BY a.event_type, event_a, event_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q30_asof_join" -> (q30AsOfJoin _),
-    "q73_asof_forward" -> (q73AsOfForward _),
-    "q45_range_join" -> (q45RangeJoin _),
-  )
-  val oracle: Map[String, String] = Map(
-    "q30_asof_join" -> q30Sql,
-    "q73_asof_forward" -> q73Sql,
-    "q45_range_join" -> q45Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q30_asof_join", q30AsOfJoin, Some(q30Sql)),
+    Query("q73_asof_forward", q73AsOfForward, Some(q73Sql)),
+    Query("q45_range_join", q45RangeJoin, Some(q45Sql)),
   )
 }

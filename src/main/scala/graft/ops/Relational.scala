@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The relational operator surface (SURVEY.md §2.3): select / filter /
   * join (broadcast, sort-merge, semi, anti) / groupBy-agg (incl. rollup,
@@ -619,65 +619,34 @@ object Relational {
   // Registry
   // ---------------------------------------------------------------------
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_top_orders" -> (q02TopOrders _),
-    "q03_ship_priority" -> (q03ShipPriority _),
-    "q05_nation_revenue" -> (q05NationRevenue _),
-    "q06_forecast" -> (q06Forecast _),
-    "q07_brand_revenue" -> (q07BrandRevenue _),
-    "q08_semi_join" -> (q08SemiJoin _),
-    "q09_anti_join" -> (q09AntiJoin _),
-    "q10_supplier_revenue" -> (q10SupplierRevenue _),
-    "q11_window_topk" -> (q11WindowTopK _),
-    "q12_window_running" -> (q12WindowRunning _),
-    "q13_window_lag" -> (q13WindowLag _),
-    "q14_window_rank" -> (q14WindowRank _),
-    "q15_rollup" -> (q15Rollup _),
-    "q16_cube" -> (q16Cube _),
-    "q17_grouping_sets" -> (q17GroupingSets _),
-    "q18_pivot" -> (q18Pivot _),
-    "q19_intersect" -> (q19Intersect _),
-    "q20_except" -> (q20Except _),
-    "q21_union_all" -> (q21UnionAll _),
-    "q22_distinct" -> (q22Distinct _),
-    "q23_scalar_subquery" -> (q23ScalarSubquery _),
-    "q24_filter_project" -> (q24FilterProject _),
-    "q25_latest_per_user" -> (q25LatestPerUser _),
-    "q26_string_funcs" -> (q26StringFuncs _),
-    "q27_date_funcs" -> (q27DateFuncs _),
-    "q28_json_extract" -> (q28JsonExtract _),
-    "q29_case_agg" -> (q29CaseAgg _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_top_orders" -> q02Sql,
-    "q03_ship_priority" -> q03Sql,
-    "q05_nation_revenue" -> q05Sql,
-    "q06_forecast" -> q06Sql,
-    "q07_brand_revenue" -> q07Sql,
-    "q08_semi_join" -> q08Sql,
-    "q09_anti_join" -> q09Sql,
-    "q10_supplier_revenue" -> q10Sql,
-    "q11_window_topk" -> q11Sql,
-    "q12_window_running" -> q12Sql,
-    "q13_window_lag" -> q13Sql,
-    "q14_window_rank" -> q14Sql,
-    "q15_rollup" -> q15Sql,
-    "q16_cube" -> q16Sql,
-    "q17_grouping_sets" -> q17Sql,
-    "q18_pivot" -> q18Sql,
-    "q19_intersect" -> q19Sql,
-    "q20_except" -> q20Sql,
-    "q21_union_all" -> q21Sql,
-    "q22_distinct" -> q22Sql,
-    "q23_scalar_subquery" -> q23Sql,
-    "q24_filter_project" -> q24Sql,
-    "q25_latest_per_user" -> q25Sql,
-    "q26_string_funcs" -> q26Sql,
-    "q27_date_funcs" -> q27Sql,
-    "q28_json_extract" -> q28Sql,
-    "q29_case_agg" -> q29Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q01_pricing_summary", q01PricingSummary, Some(q01Sql)),
+    Query("q02_top_orders", q02TopOrders, Some(q02Sql)),
+    Query("q03_ship_priority", q03ShipPriority, Some(q03Sql)),
+    Query("q05_nation_revenue", q05NationRevenue, Some(q05Sql)),
+    Query("q06_forecast", q06Forecast, Some(q06Sql)),
+    Query("q07_brand_revenue", q07BrandRevenue, Some(q07Sql)),
+    Query("q08_semi_join", q08SemiJoin, Some(q08Sql)),
+    Query("q09_anti_join", q09AntiJoin, Some(q09Sql)),
+    Query("q10_supplier_revenue", q10SupplierRevenue, Some(q10Sql)),
+    Query("q11_window_topk", q11WindowTopK, Some(q11Sql)),
+    Query("q12_window_running", q12WindowRunning, Some(q12Sql)),
+    Query("q13_window_lag", q13WindowLag, Some(q13Sql)),
+    Query("q14_window_rank", q14WindowRank, Some(q14Sql)),
+    Query("q15_rollup", q15Rollup, Some(q15Sql)),
+    Query("q16_cube", q16Cube, Some(q16Sql)),
+    Query("q17_grouping_sets", q17GroupingSets, Some(q17Sql)),
+    Query("q18_pivot", q18Pivot, Some(q18Sql)),
+    Query("q19_intersect", q19Intersect, Some(q19Sql)),
+    Query("q20_except", q20Except, Some(q20Sql)),
+    Query("q21_union_all", q21UnionAll, Some(q21Sql)),
+    Query("q22_distinct", q22Distinct, Some(q22Sql)),
+    Query("q23_scalar_subquery", q23ScalarSubquery, Some(q23Sql)),
+    Query("q24_filter_project", q24FilterProject, Some(q24Sql)),
+    Query("q25_latest_per_user", q25LatestPerUser, Some(q25Sql)),
+    Query("q26_string_funcs", q26StringFuncs, Some(q26Sql)),
+    Query("q27_date_funcs", q27DateFuncs, Some(q27Sql)),
+    Query("q28_json_extract", q28JsonExtract, Some(q28Sql)),
+    Query("q29_case_agg", q29CaseAgg, Some(q29Sql)),
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Second wave of relational coverage: outer joins, HAVING, IN
   * subqueries, full-outer set reconciliation, approximate sketches. */
@@ -104,7 +104,7 @@ object Relational2 {
     *
     * Sketch *internals* are engine-specific, so the raw approx values
     * can never hash-match a DuckDB oracle. Correctness is therefore
-    * gated through [[q35Verified]], registered in [[verifyOverrides]]:
+    * gated through [[q35Verified]], registered as its `verify` shape:
     * the verify dump (and only it) joins the sketch output against a
     * separate exact-companion aggregate and folds the accuracy
     * contracts into booleans hash-compared with the oracle's literal
@@ -160,27 +160,12 @@ object Relational2 {
       |FROM orders GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q31_left_outer" -> (q31LeftOuter _),
-    "q32_having" -> (q32Having _),
-    "q33_in_subquery" -> (q33InSubquery _),
-    "q34_full_outer" -> (q34FullOuter _),
-    "q35_approx_sketches" -> (q35ApproxSketches _),
-  )
-
-  /** Queries whose oracle-compared shape differs from the production
-    * shape. The correctness dump ([[graft.Verify]]) overlays these on
-    * `queries`; the bench never sees them, so it times the production
-    * plan. No global mode flag — the two shapes are just two entries. */
-  val verifyOverrides: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q35_approx_sketches" -> (q35Verified _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q31_left_outer" -> q31Sql,
-    "q32_having" -> q32Sql,
-    "q33_in_subquery" -> q33Sql,
-    "q34_full_outer" -> q34Sql,
-    "q35_approx_sketches" -> q35Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q31_left_outer", q31LeftOuter, Some(q31Sql)),
+    Query("q32_having", q32Having, Some(q32Sql)),
+    Query("q33_in_subquery", q33InSubquery, Some(q33Sql)),
+    Query("q34_full_outer", q34FullOuter, Some(q34Sql)),
+    Query("q35_approx_sketches", q35ApproxSketches,
+      Some(q35Sql), verify = Some(q35Verified)),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Third wave: reshaping (unpivot, explode), distribution window
   * functions, ordered collection aggregates, statistical moments. */
@@ -213,23 +213,13 @@ object Relational3 {
   val q57Sql: String =
     q57Moments("x * x", "yc::HUGEINT * yc")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q36_unpivot" -> (q36Unpivot _),
-    "q37_explode" -> (q37Explode _),
-    "q38_window_dist" -> (q38WindowDist _),
-    "q39_collect_agg" -> (q39CollectAgg _),
-    "q40_stats" -> (q40Stats _),
-    "q41_from_json" -> (q41FromJson _),
-    "q57_regression" -> (q57Regression _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q36_unpivot" -> q36Sql,
-    "q37_explode" -> q37Sql,
-    "q38_window_dist" -> q38Sql,
-    "q39_collect_agg" -> q39Sql,
-    "q40_stats" -> q40Sql,
-    "q41_from_json" -> q41Sql,
-    "q57_regression" -> q57Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q36_unpivot", q36Unpivot, Some(q36Sql)),
+    Query("q37_explode", q37Explode, Some(q37Sql)),
+    Query("q38_window_dist", q38WindowDist, Some(q38Sql)),
+    Query("q39_collect_agg", q39CollectAgg, Some(q39Sql)),
+    Query("q40_stats", q40Stats, Some(q40Sql)),
+    Query("q41_from_json", q41FromJson, Some(q41Sql)),
+    Query("q57_regression", q57Regression, Some(q57Sql)),
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Fourth wave: complex analytic patterns — correlated subqueries in
   * WHERE, CTE + window + HAVING pipelines, argmax aggregates. The SQL
@@ -73,15 +73,9 @@ object Relational4 {
       | MIN(value) AS min_value
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q42_correlated_avg" -> (q42CorrelatedAvg _),
-    "q43_cte_window_having" -> (q43CteWindowHaving _),
-    "q44_arg_max" -> (q44ArgMax _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q42_correlated_avg" -> q42Sql,
-    "q43_cte_window_having" -> q43Sql,
-    "q44_arg_max" -> q44Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q42_correlated_avg", q42CorrelatedAvg, Some(q42Sql)),
+    Query("q43_cte_window_having", q43CteWindowHaving, Some(q43Sql)),
+    Query("q44_arg_max", q44ArgMax, Some(q44Sql)),
   )
 }

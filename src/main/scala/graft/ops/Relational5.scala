@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Fifth wave: value-range window frames, exact interpolated
   * percentiles, and the salted-join skew pattern as a first-class
@@ -123,18 +123,11 @@ object Relational5 {
       |  RANGE BETWEEN INTERVAL '1' HOUR PRECEDING AND CURRENT ROW)
       |ORDER BY user_id, event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q46_range_frame" -> (q46RangeFrame _),
-    "q62_time_range_frame" -> (q62TimeRangeFrame _),
-    "q47_percentiles" -> (q47Percentiles _),
-    "q48_salted_join" -> (q48SaltedJoin _),
-    "q49_array_ops" -> (q49ArrayOps _),
-  )
-  val oracle: Map[String, String] = Map(
-    "q46_range_frame" -> q46Sql,
-    "q62_time_range_frame" -> q62Sql,
-    "q47_percentiles" -> q47Sql,
-    "q48_salted_join" -> q48Sql,
-    "q49_array_ops" -> q49Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q46_range_frame", q46RangeFrame, Some(q46Sql)),
+    Query("q62_time_range_frame", q62TimeRangeFrame, Some(q62Sql)),
+    Query("q47_percentiles", q47Percentiles, Some(q47Sql)),
+    Query("q48_salted_join", q48SaltedJoin, Some(q48Sql)),
+    Query("q49_array_ops", q49ArrayOps, Some(q49Sql)),
   )
 }

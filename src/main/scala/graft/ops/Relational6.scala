@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Sixth wave: classic TPC-H-shaped composites over the fixture schema —
   * the workloads a reference user would bring along. Each runs the
@@ -348,7 +348,7 @@ object Relational6 {
     *
     * Sketch internals are engine-specific, so the raw estimate can never
     * hash-match DuckDB; correctness gates through [[q64Verified]]
-    * (registered in [[verifyOverrides]], same contract as q35): exact
+    * (its registry `verify` shape, same contract as q35): exact
     * companions hash-compared, plus a 3σ accuracy boolean the oracle
     * emits as literal TRUE. */
   def q64SketchReagg(spark: SparkSession, dir: String): DataFrame =
@@ -405,7 +405,7 @@ object Relational6 {
     * the other broadcast-scalar frames).
     *
     * CMS estimates are engine-specific (seeded Murmur rows), so
-    * correctness gates through [[q65Verified]] in [[verifyOverrides]]:
+    * correctness gates through [[q65Verified]], its `verify` shape:
     * exact per-probe counts hash-compared, plus the two CMS contracts —
     * never undercounts; overshoot ≤ ⌈ε·N⌉ — as booleans the oracle
     * emits as literal TRUE. */
@@ -425,7 +425,6 @@ object Relational6 {
   /** The production (benched) shape: build per-source sketches, merge,
     * probe. */
   def q65Production(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val merged = q65Tokens(spark, dir)
       .groupBy(col("source"))
       .agg(expr("count_min_sketch(token, 0.001d, 0.999d, 42)").as("sk"),
@@ -668,58 +667,31 @@ object Relational6 {
       |      FROM events)
       |ORDER BY user_id, ts, event_id""".stripMargin
 
-  /** See [[graft.SparkEntry.verifyOverrides]]. */
-  val verifyOverrides: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q64_sketch_reagg" -> (q64Verified _),
-    "q65_cms_freq" -> (q65Verified _),
-  )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q63_sessionize" -> (q63Sessionize _),
-    "q64_sketch_reagg" -> (q64SketchReagg _),
-    "q65_cms_freq" -> (q65CmsFreq _),
-    "q66_zorder_layout" -> (q66ZorderLayout _),
-    "q67_scd2" -> (q67Scd2 _),
-    "q68_incremental_agg" -> (q68IncrementalAgg _),
-    "q69_merge_upsert" -> (q69MergeUpsert _),
-    "q70_forward_fill" -> (q70ForwardFill _),
-    "q61_top_supplier" -> (q61TopSupplier _),
-    "q54_lateral" -> (q54Lateral _),
+  val registry: Seq[Query] = Seq(
+    Query("q63_sessionize", q63Sessionize, Some(q63Sql)),
+    Query("q64_sketch_reagg", q64SketchReagg,
+      Some(q64Sql), verify = Some(q64Verified)),
+    Query("q65_cms_freq", q65CmsFreq, Some(q65Sql), verify = Some(q65Verified)),
+    Query("q66_zorder_layout", q66ZorderLayout, Some(q66Sql)),
+    Query("q67_scd2", q67Scd2, Some(q67Sql)),
+    Query("q68_incremental_agg", q68IncrementalAgg, Some(q68Sql)),
+    Query("q69_merge_upsert", q69MergeUpsert, Some(q69Sql)),
+    Query("q70_forward_fill", q70ForwardFill, Some(q70Sql)),
+    Query("q61_top_supplier", q61TopSupplier, Some(q61Sql)),
+    Query("q54_lateral", q54Lateral, Some(q54Sql)),
     // q04 is an ALIAS of the q50 builder: the registry's numbering
     // gap (q01–q80 minus q04) tripped every audit, and q50 IS the
     // TPC-H Q4 shape (NOTES.md:439 adjudication) — one builder, two
     // names (the alias re-runs the same sub-second SQL in Bench)
-    "q04_order_priority" -> (q50PriorityCheck _),
-    "q50_priority_check" -> (q50PriorityCheck _),
-    "q51_customer_distribution" -> (q51CustomerDistribution _),
-    "q52_global_sales" -> (q52GlobalSales _),
-    "q53_regexp_extract_all" -> (q53RegexpExtractAll _),
-    "q55_window_ranks" -> (q55WindowRanks _),
-    "q56_multiset_ops" -> (q56MultisetOps _),
-    "q58_nav_windows" -> (q58NavWindows _),
-    "q59_grouping_rollup" -> (q59GroupingRollup _),
-    "q60_last_shippers" -> (q60LastShippers _),
-  )
-  val oracle: Map[String, String] = Map(
-    "q63_sessionize" -> q63Sql,
-    "q64_sketch_reagg" -> q64Sql,
-    "q65_cms_freq" -> q65Sql,
-    "q66_zorder_layout" -> q66Sql,
-    "q67_scd2" -> q67Sql,
-    "q68_incremental_agg" -> q68Sql,
-    "q69_merge_upsert" -> q69Sql,
-    "q70_forward_fill" -> q70Sql,
-    "q61_top_supplier" -> q61Sql,
-    "q54_lateral" -> q54Sql,
-    "q04_order_priority" -> q50Sql,
-    "q50_priority_check" -> q50Sql,
-    "q51_customer_distribution" -> q51Sql,
-    "q52_global_sales" -> q52Sql,
-    "q53_regexp_extract_all" -> q53Sql,
-    "q55_window_ranks" -> q55Sql,
-    "q56_multiset_ops" -> q56Sql,
-    "q58_nav_windows" -> q58Sql,
-    "q59_grouping_rollup" -> q59Sql,
-    "q60_last_shippers" -> q60Sql,
+    Query("q04_order_priority", q50PriorityCheck, Some(q50Sql)),
+    Query("q50_priority_check", q50PriorityCheck, Some(q50Sql)),
+    Query("q51_customer_distribution", q51CustomerDistribution, Some(q51Sql)),
+    Query("q52_global_sales", q52GlobalSales, Some(q52Sql)),
+    Query("q53_regexp_extract_all", q53RegexpExtractAll, Some(q53Sql)),
+    Query("q55_window_ranks", q55WindowRanks, Some(q55Sql)),
+    Query("q56_multiset_ops", q56MultisetOps, Some(q56Sql)),
+    Query("q58_nav_windows", q58NavWindows, Some(q58Sql)),
+    Query("q59_grouping_rollup", q59GroupingRollup, Some(q59Sql)),
+    Query("q60_last_shippers", q60LastShippers, Some(q60Sql)),
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Seventh wave: the two relational shapes a reference user's analytics
   * backlog still lacked — ordered funnel attribution over the event log
@@ -216,17 +216,10 @@ object Relational7 {
       |WHERE rn = CAST(floor((n + 1) / 2.0) AS BIGINT)
       |ORDER BY brand""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q71_funnel" -> (q71Funnel _),
-    "q72_closure" -> (q72Ancestors _),
-    "q74_weighted_median" -> (q74WeightedMedian _),
-    "q75_mad" -> (q75MedianAbsDev _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q71_funnel" -> q71Sql,
-    "q72_closure" -> q72Sql,
-    "q74_weighted_median" -> q74Sql,
-    "q75_mad" -> q75Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q71_funnel", q71Funnel, Some(q71Sql)),
+    Query("q72_closure", q72Ancestors, Some(q72Sql)),
+    Query("q74_weighted_median", q74WeightedMedian, Some(q74Sql)),
+    Query("q75_mad", q75MedianAbsDev, Some(q75Sql)),
   )
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Eighth wave: three relational shapes still missing from the
   * inventory's analytics backlog — the TPC-H Q2 "min-cost supplier"
@@ -314,7 +314,7 @@ object Relational8 {
     (base, tot, est, pick, er)
   }
 
-  /** Verify-mode shape (registered in [[verifyOverrides]], the q35
+  /** Verify-mode shape (registered as `verify`, the q35
     * convention): the production estimates joined against an exact
     * companion computed in one extra corpus pass — the global
     * ROW_NUMBER selection plus the true ranks of the picked estimates
@@ -513,7 +513,7 @@ object Relational8 {
     (base, tot, est, pick, er)
   }
 
-  /** Verify-mode shape ([[verifyOverrides]]): the per-brand estimates
+  /** Verify-mode shape (registered as `verify`): the per-brand estimates
     * joined against the exact per-brand selection and the true ranks
     * of the picks — one extra corpus pass the production plan never
     * pays — reduced to per-brand guarantee booleans the oracle hashes. */
@@ -612,27 +612,13 @@ object Relational8 {
        |JOIN er e ON e.brand = t.brand
        |ORDER BY t.brand""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q80_grouped_quantiles" -> (q80GroupedQuantiles _),
-    "q76_min_cost_supplier" -> (q76MinCostSupplier _),
-    "q77_rolling_distinct" -> (q77RollingDistinct _),
-    "q78_peak_concurrent" -> (q78PeakConcurrent _),
-    "q79_quantile_sketch" -> (q79QuantileSketch _),
-  )
-
-  /** See [[graft.SparkEntry.verifyOverrides]] — the oracle-compared
-    * shapes carry the exact-selection companions; the benched shapes
-    * run the summary algebra alone. */
-  val verifyOverrides: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q79_quantile_sketch" -> (q79Verified _),
-    "q80_grouped_quantiles" -> (q80Verified _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "q80_grouped_quantiles" -> q80Sql,
-    "q76_min_cost_supplier" -> q76Sql,
-    "q77_rolling_distinct" -> q77Sql,
-    "q78_peak_concurrent" -> q78Sql,
-    "q79_quantile_sketch" -> q79Sql,
+  val registry: Seq[Query] = Seq(
+    Query("q80_grouped_quantiles", q80GroupedQuantiles,
+      Some(q80Sql), verify = Some(q80Verified)),
+    Query("q76_min_cost_supplier", q76MinCostSupplier, Some(q76Sql)),
+    Query("q77_rolling_distinct", q77RollingDistinct, Some(q77Sql)),
+    Query("q78_peak_concurrent", q78PeakConcurrent, Some(q78Sql)),
+    Query("q79_quantile_sketch", q79QuantileSketch,
+      Some(q79Sql), verify = Some(q79Verified)),
   )
 }

@@ -180,15 +180,7 @@ object CosineTopK {
     * positional order. */
   def topK(queries: DataFrame, index: DataFrame, k: Int): DataFrame = {
     val spark = queries.sparkSession
-    if (!spark.experimental.extraStrategies.contains(CosineTopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ CosineTopKStrategy
-    }
-    if (!spark.experimental.extraOptimizations
-        .contains(PruneCosineTopKChildren)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PruneCosineTopKChildren
-    }
+    graft.functions.VectorExpressions.register(spark)
     GraftSqlBridge.ofRows(spark,
       CosineTopKPlan(queries.queryExecution.analyzed,
         index.queryExecution.analyzed, k))

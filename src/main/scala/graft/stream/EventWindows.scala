@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Time-windowed analytics over the `events` table (SURVEY.md §2.5 —
   * north-star extension; the reference is batch-only).
@@ -381,27 +381,15 @@ object EventWindows {
       |  FROM counts)
       |WHERE rk <= 2 ORDER BY hour_start, rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st09_top_events_hourly" -> (st09TopEventsHourly _),
-    "st01_tumbling_hourly" -> (st01TumblingHourly _),
-    "st02_sliding_windows" -> (st02SlidingWindows _),
-    "st03_session_windows" -> (st03SessionWindows _),
-    "st04_windowed_distinct" -> (st04WindowedDistinct _),
-    "st05_click_attribution" -> (st05ClickAttribution _),
-    "st06_event_throttle" -> (st06EventThrottle _),
-    "st07_unattributed_buys" -> (st07UnattributedBuys _),
-    "st08_gap_fill" -> (st08GapFill _),
-  )
-
-  val oracle: Map[String, String] = Map(
-    "st01_tumbling_hourly" -> st01Sql,
-    "st02_sliding_windows" -> st02Sql,
-    "st03_session_windows" -> st03Sql,
-    "st04_windowed_distinct" -> st04Sql,
-    "st05_click_attribution" -> st05Sql,
-    "st06_event_throttle" -> st06Sql,
-    "st07_unattributed_buys" -> st07Sql,
-    "st08_gap_fill" -> st08Sql,
-    "st09_top_events_hourly" -> st09Sql,
+  val registry: Seq[Query] = Seq(
+    Query("st09_top_events_hourly", st09TopEventsHourly, Some(st09Sql)),
+    Query("st01_tumbling_hourly", st01TumblingHourly, Some(st01Sql)),
+    Query("st02_sliding_windows", st02SlidingWindows, Some(st02Sql)),
+    Query("st03_session_windows", st03SessionWindows, Some(st03Sql)),
+    Query("st04_windowed_distinct", st04WindowedDistinct, Some(st04Sql)),
+    Query("st05_click_attribution", st05ClickAttribution, Some(st05Sql)),
+    Query("st06_event_throttle", st06EventThrottle, Some(st06Sql)),
+    Query("st07_unattributed_buys", st07UnattributedBuys, Some(st07Sql)),
+    Query("st08_gap_fill", st08GapFill, Some(st08Sql)),
   )
 }

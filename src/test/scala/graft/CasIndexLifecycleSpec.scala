@@ -44,7 +44,6 @@ class CasIndexLifecycleSpec extends AnyFunSuite {
 
   test("bootstrap, append, delete, serve, compact — all through CAS") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(57)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val base = (0L until 120L).map(i => (i, vec()))
@@ -95,7 +94,6 @@ class CasIndexLifecycleSpec extends AnyFunSuite {
 
   test("generation-pointer pair swaps atomically through per-object puts") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(58)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val base = (0L until 60L).map(i => (i, vec()))

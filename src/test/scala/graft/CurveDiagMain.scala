@@ -18,13 +18,8 @@ import org.apache.spark.sql.functions._
 object CurveDiagMain {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus,
+      "spark.sql.extensions" -> "graft.GraftExtensions")
     val multipliers =
       if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 4)
     multipliers.foreach { m =>
@@ -70,7 +65,6 @@ object CurveDiagMain {
   import org.apache.spark.sql.types.LongType
 
   private def normed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     spark.read.parquet(s"$dir/embeddings.parquet")
       .withColumn("norm", sqrt(expr("vec_dot(embedding, embedding)")))
   }

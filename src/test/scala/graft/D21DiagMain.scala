@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-by-stage diagnosis of the d21 ×8 OOM (round-14 session 2):
@@ -12,13 +11,8 @@ import org.apache.spark.sql.functions._
 object D21DiagMain {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus,
+      "spark.sql.extensions" -> "graft.GraftExtensions")
     val dir = args.headOption.getOrElse("/tmp/graft-scalecurve-x8")
 
     def timed[A](label: String)(body: => A): A = {

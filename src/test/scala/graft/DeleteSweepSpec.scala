@@ -74,7 +74,6 @@ class DeleteSweepSpec extends AnyFunSuite {
   test("a >=50%-deleted index still fills the full k on every query " +
       "(PQ/SQ/BQ from-frame serving)") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(77)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val all = (0L until 800L).map(i => (i, vec()))
@@ -137,7 +136,6 @@ class DeleteSweepSpec extends AnyFunSuite {
 
   test("a fully-deleted index serves the empty answer, never a crash") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(78)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val all = (0L until 64L).map(i => (i, vec()))

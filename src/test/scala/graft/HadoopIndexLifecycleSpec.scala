@@ -45,7 +45,6 @@ class HadoopIndexLifecycleSpec extends AnyFunSuite {
 
   test("bootstrap, append, delete, serve, compact — all through the Hadoop scheme") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(55)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val base = (0L until 120L).map(i => (i, vec()))
@@ -105,7 +104,6 @@ class HadoopIndexLifecycleSpec extends AnyFunSuite {
 
   test("generation-pointer pair swaps atomically through the scheme") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(56)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val base = (0L until 60L).map(i => (i, vec()))

@@ -135,6 +135,31 @@ class IoParitySpec extends AnyFunSuite {
       "hello world, hello graft".getBytes("UTF-8")))
     assert(spark.sql("SELECT simhash64(array('a','b')) s")
       .collect().head.getLong(0) !== 0L)
+    // every row of the one function table evaluates on a new session,
+    // which holds no temp function from an earlier register call
+    val fresh = spark.newSession()
+    val sketch = "count_min_sketch('a', 0.01D, 0.99D, 1)"
+    val samples = Map(
+      "vec_dot" -> "vec_dot(array(1.0F, 2.0F), array(3.0F, 4.0F))",
+      "vec_scale" -> "vec_scale(array(2.0F), 2.0D)",
+      "vec_absmax" -> "vec_absmax(array(-3.0F, 2.0F))",
+      "vec_quant" -> "vec_quant(array(1.5F), 2.0D)",
+      "rolling_min_hash" -> "rolling_min_hash('hello world, hello graft')",
+      "rolling_hashes" -> "rolling_hashes('hello world, hello graft')",
+      "minhash_sig" -> "minhash_sig(array('a b c', 'b c d'))",
+      "simhash64" -> "simhash64(array('a', 'b'))",
+      "word_shingles3" -> "word_shingles3('a b c d')",
+      "word_shingles2" -> "word_shingles2('a b c')",
+      "count_in_set" -> "count_in_set(array('a', 'b', 'a'), 'a,c')",
+      "cms_estimate" -> s"cms_estimate($sketch, 'a')",
+      "cms_merge" ->
+        s"cms_estimate(cms_merge(s), 'a') FROM (SELECT $sketch AS s)")
+    assert(samples.keySet ===
+      graft.functions.VectorExpressions.functions.map(_.name).toSet)
+    samples.foreach { case (name, call) =>
+      val row = fresh.sql(s"SELECT $call").collect().head
+      withClue(s"$name: ") { assert(!row.isNullAt(0)) }
+    }
   }
 
   test("format matrix: json and orc round-trip the customer table") {

@@ -51,7 +51,6 @@ class LlmOpsSpec extends AnyFunSuite {
     // empty cluster keeps its seed; seed codes cycle over the corpus)
     // must keep the codebook dense and the full ADC chain runnable.
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     def chain(vecs: Seq[(Long, Seq[Float])]) = {
       val v = vecs.toDF("vec_id", "embedding")
         .withColumn("norm", sqrt(expr("vec_dot(embedding, embedding)")))
@@ -196,7 +195,6 @@ class LlmOpsSpec extends AnyFunSuite {
     }
     // every distinct shingle is novel in exactly one doc (its first)
     val totalNovel = rows.map(_.getAs[Long]("n_novel")).sum
-    graft.functions.VectorExpressions.register(spark)
     val distinctShingles = Tables(spark, sf, "documents")
       .select(explode(expr("word_shingles3(text)")).as("sg"))
       .distinct().count()
@@ -877,7 +875,6 @@ class LlmOpsSpec extends AnyFunSuite {
     // pruning): the pairs s11 reports for doc 0 must carry exactly the
     // brute-force score — validates the token-max/sum arithmetic
     // independently of candidate selection
-    graft.functions.VectorExpressions.register(spark)
     val nv = Tables(spark, sf, "embeddings")
       .withColumn("norm", sqrt(expr("vec_dot(embedding, embedding)")))
       .filter(col("norm") > 0)
@@ -1224,7 +1221,6 @@ class LlmOpsSpec extends AnyFunSuite {
     // mathematical contracts, which both engines could violate
     // together. Run through the real SQL expression texts.
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(19)
     val vecs = (0L until 200L)
       .map(i => (i, Seq.fill(64)((rnd.nextDouble() - 0.5) * 2.0)))

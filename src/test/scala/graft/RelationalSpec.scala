@@ -4,20 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("warehouse").toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession("4",
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("warehouse").toString,
+    "spark.sql.extensions" -> "graft.GraftExtensions")
   val sf: String = "/root/testdata/sf0.001"
 }
 
@@ -31,6 +22,9 @@ class RelationalSpec extends AnyFunSuite {
   test("every query runs at sf0.001 and oracle keys all exist") {
     val qs = SparkEntry.queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
+    // the inventory is 209 queries, each under its own name
+    assert(SparkEntry.registry.map(_.name).distinct.size === 209 &&
+      SparkEntry.registry.size === 209)
     qs.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()
       withClue(s"$name: ") { assert(n >= 0) }

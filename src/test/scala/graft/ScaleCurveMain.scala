@@ -88,13 +88,8 @@ object ScaleCurveMain {
       if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 4)
     val runs = sys.env.getOrElse("SPARK_GRAFT_CURVE_RUNS", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus,
+      "spark.sql.extensions" -> "graft.GraftExtensions")
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_CURVE_ONLY: comma-separated query-name allowlist, so
     // a large-multiplier sweep can measure a specific crossover without

@@ -1066,7 +1066,6 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(42)
     def vec(): Seq[Float] = Seq.fill(8)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1141,7 +1140,6 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(7)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1224,7 +1222,6 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(13)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1314,7 +1311,6 @@ class StreamingSpec extends AnyFunSuite {
     // bqBase joins the heal and the co-retrain exactly as sqBase does
     import spark.implicits._
     import graft.stream.IndexIngest
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(17)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1383,7 +1379,6 @@ class StreamingSpec extends AnyFunSuite {
   test("paired generation withBq: the binary member rides the machinery end-to-end") {
     import spark.implicits._
     import graft.stream.IndexIngest
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(18)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1434,7 +1429,6 @@ class StreamingSpec extends AnyFunSuite {
     // join the skew deferral (a retrain folding an SQ-uncommitted
     // batch in would double-ingest on that batch's replay)
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(11)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1533,7 +1527,6 @@ class StreamingSpec extends AnyFunSuite {
     // (deterministic training). The stream_state high-water mark must
     // survive, so replay protection carries across the retrain.
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(11)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1682,7 +1675,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("compaction policy: merges only past the fragmentation threshold, then back to one file per cell") {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(13)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val root = java.nio.file.Files.createTempDirectory("graft-policy")
@@ -1720,7 +1712,6 @@ class StreamingSpec extends AnyFunSuite {
     // the appended rows + the replay mark; bootstrap must initialize
     // only — a living index is untouchable by it
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(17)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val initial = (0L until 20L).map(i => (i, vec()))
@@ -1819,7 +1810,6 @@ class StreamingSpec extends AnyFunSuite {
     // next aligned cycle retrains over the full row set.
     import spark.implicits._
     import graft.stream.IndexIngest
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(14)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1869,7 +1859,6 @@ class StreamingSpec extends AnyFunSuite {
     // generation would carry neither its rows nor its mark)
     import spark.implicits._
     import graft.stream.IndexIngest
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(15)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -1964,7 +1953,6 @@ class StreamingSpec extends AnyFunSuite {
     // must build from the IVF lists and carry the IVF marks
     import spark.implicits._
     import graft.stream.IndexIngest
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(16)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -2012,7 +2000,6 @@ class StreamingSpec extends AnyFunSuite {
     // own lineage (VERDICT r11 #4).
     import spark.implicits._
     import graft.stream.IndexIngest
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(13)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val initial = (0L until 20L).map(i => (i, vec()))
@@ -2063,7 +2050,6 @@ class StreamingSpec extends AnyFunSuite {
     // new-IVF + old-PQ).
     import spark.implicits._
     import graft.stream.IndexIngest
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(12)
     def vec(): Seq[Float] = Seq.fill(64)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
@@ -2789,7 +2775,6 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.register(spark)
     val rnd = new scala.util.Random(7)
     def vec(): Seq[Float] = Seq.fill(8)(rnd.nextFloat() - 0.5f)
     val baseVecs = (0L until 40L).map(i => (i, vec()))
