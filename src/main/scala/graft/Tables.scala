@@ -30,12 +30,17 @@ object Tables {
     * plain TIMESTAMP micros (arrives as TIMESTAMP_NTZ — cast to the
     * session-zoned type, identity on wall-clock under the UTC session).
     * [[normalizeEventsTs]] branches on the LOADED type, so either
-    * generation yields the same `timestamp` column downstream. */
+    * generation yields the same `timestamp` column downstream.
+    *
+    * The schema is resolved from the file footer on the driver
+    * ([[io.Load.parquet]]): building the catalog starts no Spark job. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
     if (name == "events") {
+      // set before the load: the footer is converted under this flag
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventsTs(spark.read.parquet(s"$sfDir/$name.parquet"))
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+      normalizeEventsTs(io.Load.parquet(spark, path))
+    } else io.Load.parquet(spark, path)
   }
 
   /** Normalize `ts` to session-zoned microsecond TimestampType from

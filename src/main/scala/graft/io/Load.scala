@@ -1,7 +1,14 @@
 package graft.io
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
 
 /** Reference-parity loading surface (SURVEY.md §2.1 S1-S8).
@@ -70,6 +77,74 @@ object Load {
     csvDir(spark, dir,
       metaData.split(",").map(_.trim).toSeq,
       metaDataType.split(",").map(_.trim).toSeq, cfg)
+
+  /** A parquet read, with `options`, that starts no schema inference
+    * job.
+    *
+    * Plain `read.parquet` infers the schema by reading a footer inside
+    * a distributed job — one job (60–100 ms of driver CPU in local
+    * mode) per table or artifact frame, even for a single file. When
+    * schemas are not merged, Spark touches exactly one footer: that of
+    * the first data file in path order (`ParquetUtils.inferSchema`).
+    * This reads that same footer on the driver and converts it with a
+    * converter built from the session conf, so `nanosAsLong`, INT96,
+    * binary-as-string and NTZ inference come out as Spark's own
+    * inference would; the frame is then read with that schema declared.
+    *
+    * Everything else — reader options (a merged-schema read), a glob, a
+    * missing path, a directory holding subdirectories (partitioned
+    * layouts) or summary files, no data files, an unreadable footer —
+    * takes the plain inferring read, so its result and its errors stay
+    * Spark's own. */
+  def parquet(spark: SparkSession, path: String,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    val reader = spark.read.options(options)
+    (if (options.isEmpty) footerSchema(spark, path) else None)
+      .fold(reader.parquet(path))(s => reader.schema(s).parquet(path))
+  }
+
+  /** The schema Spark would infer for `path`, read from one footer on
+    * the driver; `None` for every case [[parquet]] leaves to Spark. */
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled ||
+        path.exists("*?[]{}\\".contains(_))) None
+    else try {
+      val p = new Path(path)
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val fs = p.getFileSystem(hadoopConf)
+      val root = fs.getFileStatus(p)
+      val files =
+        if (!root.isDirectory) Seq(root)
+        else fs.listStatus(p).toSeq
+          .filterNot(f => hiddenByFileIndex(f.getPath.getName))
+      // ParquetUtils.splitFiles sorts by path; siblings share a parent,
+      // so the first by path is the first by name
+      val first = files.sortBy(_.getPath.getName).headOption
+      val plain = files.forall(f =>
+        f.isFile && !f.getPath.getName.startsWith("_"))
+      first.filter(f => plain && f.getLen > 0).map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(conf))
+      }
+    } catch {
+      case NonFatal(_) => None
+    }
+  }
+
+  /** Names Spark's file index skips when listing a directory
+    * (`HadoopFSUtils.shouldFilterOutPathName`); the parquet summary
+    * files `_metadata`/`_common_metadata` are kept. */
+  private def hiddenByFileIndex(name: String): Boolean = {
+    val exclude = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    exclude &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+  }
 }
 
 /** Canonical mapping from the reference's metadata type vocabulary to

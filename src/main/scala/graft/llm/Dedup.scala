@@ -1138,8 +1138,8 @@ object Dedup {
     * later — together they must reconstruct EXACTLY d18's standing
     * side, which is what makes d18 the from-scratch control for the
     * grown index. */
-  private val dedupIncBasePred = col("doc_id") % 3 === 1
-  private val dedupIncBatchPred = col("doc_id") % 3 === 2
+  private[graft] val dedupIncBasePred = col("doc_id") % 3 === 1
+  private[graft] val dedupIncBatchPred = col("doc_id") % 3 === 2
 
   private val dedupIncCache = graft.io.ValidatedPathCache.single()
   private[graft] val dedupIncBuildCount =
@@ -1165,8 +1165,8 @@ object Dedup {
     dedupIncCache.get(dir) {
       val base = graft.io.ArtifactStore.artifactPath("dedup-index-inc", dir)
       val docs = Tables(spark, dir, "documents")
-      val (nA, xA) = docsFingerprintParts(docs.filter(dedupIncBasePred))
-      val (nB, xB) = docsFingerprintParts(docs.filter(dedupIncBatchPred))
+      val Seq((nA, xA), (nB, xB)) = Retrieval.frameDocsFingerprintPartsWhere(
+        docs, dedupIncBasePred, dedupIncBatchPred)
       val (built, appended) = graft.io.ArtifactStore.ensureIncremental(
         base, fpString(nA, xA), fpString(nA + nB, xA ^ xB)) {
         writeDedupIndexInto(docs.filter(dedupIncBasePred), _)
@@ -1292,9 +1292,9 @@ object Dedup {
       val old = Tables(spark, dir, "documents")
         .filter(col("doc_id") % 3 =!= 0)
       val delPred = col("doc_id") % TakedownMod === TakedownRem
-      IndexDelete.buildThenDelete(base,
-        docsFingerprintParts(old),
-        docsFingerprintParts(old.filter(delPred)))(
+      val Seq(full, del) =
+        Retrieval.frameDocsFingerprintPartsWhere(old, lit(true), delPred)
+      IndexDelete.buildThenDelete(base, full, del)(
         writeDedupIndexInto(old, _))(
         lshApplyDeletes(spark, base, Tables(spark, dir, "documents")
           .filter(delPred).select(col("doc_id"))))

@@ -276,12 +276,12 @@ object IndexDelete {
     tombIndexCache.get(dir) {
       val base = graft.io.ArtifactStore.artifactPath("ivf-tomb", dir)
       val v = Similarity.normed(spark, dir)
-      val del = v.filter(pmod(col("vec_id"), lit(DeleteMod)) === DeleteRes)
-      buildThenDelete(base,
-        Similarity.frameFingerprintParts(v),
-        Similarity.frameFingerprintParts(del))(
+      val delPred = pmod(col("vec_id"), lit(DeleteMod)) === DeleteRes
+      val Seq(full, del) =
+        Similarity.frameFingerprintPartsWhere(v, lit(true), delPred)
+      buildThenDelete(base, full, del)(
         Similarity.ivfBuildFrom(v, _))(
-        applyDeletes(spark, base, del.select(col("vec_id"))))
+        applyDeletes(spark, base, v.filter(delPred).select(col("vec_id"))))
     }
 
   /** s32: the s15 serving contract on an index that has taken
@@ -293,7 +293,7 @@ object IndexDelete {
     * ability to search), but never appear as neighbors. */
   def s32TombstoneSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = tombIndexBase(spark, dir)
-    val centroids = spark.read.parquet(s"$base/centroids")
+    val centroids = graft.io.Load.parquet(spark, s"$base/centroids")
     val q = Similarity.normed(spark, dir)
       .filter(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("query_id"),

@@ -1442,7 +1442,7 @@ object Pipeline {
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         col("n_chars"))
       .write.mode("overwrite").parquet(s"$out/batch=e2")
-    spark.read.option("mergeSchema", "true").parquet(out)
+    graft.io.Load.parquet(spark, out, Map("mergeSchema" -> "true"))
       .groupBy(col("batch").cast("string").as("batch"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("source").isNull, 1L).otherwise(0L))

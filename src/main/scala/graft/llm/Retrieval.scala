@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -109,12 +109,8 @@ object Retrieval {
   private[graft] def bm25ForgetCachedPaths(): Unit = bm25Cache.clear()
 
   private def docsFingerprint(spark: SparkSession, dir: String): String = {
-    val r = Tables(spark, dir, "documents")
-      .select(xxhash64(col("doc_id"), col("text")).as("h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
-      .collect()(0)
-    val s = if (r.isNullAt(1)) 0L else r.getLong(1)
-    s"${r.getLong(0)}_${java.lang.Long.toUnsignedString(s)}"
+    val Seq((n, x)) = docsFingerprintParts(spark, dir, lit(true))
+    fpStr(n, x)
   }
 
   private[graft] def bm25IndexBase(spark: SparkSession, dir: String): String =
@@ -174,7 +170,7 @@ object Retrieval {
       .select(col("doc_id"), col("dl"), col("term"), col("tf"), col("df"))
 
   private[graft] def bm25Totals(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${bm25IndexBase(spark, dir)}/totals")
+    graft.io.Load.parquet(spark, s"${bm25IndexBase(spark, dir)}/totals")
 
   /** The s10 core without the presentation sort — shared with
     * [[s13HybridRrf]], which re-joins the ranked list and must not pay
@@ -253,7 +249,7 @@ object Retrieval {
   /** The incremental split: "yesterday's corpus" (the base segment the
     * index was built over) vs "tonight's crawl batch" (appended as a
     * DELTA segment — ~1/9 of the docs, a realistic nightly fraction). */
-  private val incDocPred = col("doc_id") % 9 === 4
+  private[graft] val incDocPred = col("doc_id") % 9 === 4
 
   private val bm25IncCache = graft.io.ValidatedPathCache.single()
   private[graft] val bm25IncBuildCount =
@@ -262,20 +258,20 @@ object Retrieval {
     new java.util.concurrent.atomic.AtomicInteger
   private[graft] def bm25IncForgetCachedPaths(): Unit = bm25IncCache.clear()
 
-  private def docsFingerprintParts(
-      spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column): (Long, Long) =
-    frameDocsFingerprintParts(
-      Tables(spark, dir, "documents").filter(pred))
+  private def docsFingerprintParts(spark: SparkSession, dir: String,
+      preds: Column*): Seq[(Long, Long)] =
+    frameDocsFingerprintPartsWhere(Tables(spark, dir, "documents"), preds: _*)
 
   /** The same fingerprint over an arbitrary `(doc_id, text, …)` frame
     * — what the streaming BM25 sink hashes each micro-batch with. */
-  private[graft] def frameDocsFingerprintParts(df: DataFrame): (Long, Long) = {
-    val r = df.select(xxhash64(col("doc_id"), col("text")).as("h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
-      .collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+  private[graft] def frameDocsFingerprintParts(df: DataFrame): (Long, Long) =
+    frameDocsFingerprintPartsWhere(df, lit(true)).head
+
+  /** [[frameDocsFingerprintParts]] of `df.filter(p)` for each of
+    * `preds`, all from ONE scan ([[Similarity.partsWhere]]). */
+  private[graft] def frameDocsFingerprintPartsWhere(df: DataFrame,
+      preds: Column*): Seq[(Long, Long)] =
+    Similarity.partsWhere(df, xxhash64(col("doc_id"), col("text")), preds)
 
   private def fpStr(n: Long, x: Long): String =
     graft.io.ArtifactStore.fingerprint(n, x)
@@ -328,8 +324,8 @@ object Retrieval {
   private def bm25IncIndexBase(spark: SparkSession, dir: String): String =
     bm25IncCache.get(dir) {
       val base = graft.io.ArtifactStore.artifactPath("bm25-index-inc", dir)
-      val (nA, xA) = docsFingerprintParts(spark, dir, !incDocPred)
-      val (nB, xB) = docsFingerprintParts(spark, dir, incDocPred)
+      val Seq((nA, xA), (nB, xB)) =
+        docsFingerprintParts(spark, dir, !incDocPred, incDocPred)
       val (built, appended) = graft.io.ArtifactStore.ensureIncremental(
         base, fpStr(nA, xA), fpStr(nA + nB, xA ^ xB)) { staging =>
         val (p, t) = segmentPostings(spark, dir, !incDocPred, "base")
@@ -393,7 +389,7 @@ object Retrieval {
       .parquet(s"$base/postings")
       .select(col("doc_id"), col("dl"), col("term"), col("tf"),
         col("df"), col("seg"))
-    val totals = spark.read.parquet(s"$base/totals")
+    val totals = graft.io.Load.parquet(spark, s"$base/totals")
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("t_tokens")).as("t_tokens"))
     val cand0 = postings.join(broadcast(queryTerms(spark, dir)), "term")
@@ -636,9 +632,8 @@ object Retrieval {
     bm25TombCache.get(dir) {
       val base = graft.io.ArtifactStore.artifactPath("bm25-tomb", dir)
       val delPred = pmod(col("doc_id"), lit(DelMod)) === lit(DelRem)
-      IndexDelete.buildThenDelete(base,
-        docsFingerprintParts(spark, dir, lit(true)),
-        docsFingerprintParts(spark, dir, delPred)) { staging =>
+      val Seq(full, del) = docsFingerprintParts(spark, dir, lit(true), delPred)
+      IndexDelete.buildThenDelete(base, full, del) { staging =>
         val d = Tables(spark, dir, "documents")
         val (p, t) = segmentPostingsFrame(d, "base")
         graft.io.Store.writePartitionedParquet(
@@ -672,7 +667,7 @@ object Retrieval {
     val live = postings.join(
       broadcast(IndexDelete.tombstonesAt(spark, base, "doc_id")),
       Seq("doc_id"), "left_anti")
-    val totals = spark.read.parquet(s"$base/totals")
+    val totals = graft.io.Load.parquet(spark, s"$base/totals")
       .select(col("n_docs"), col("t_tokens"))
     val cand = live
       .join(broadcast(queryTerms(spark, dir)), "term")

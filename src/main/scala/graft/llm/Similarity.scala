@@ -148,33 +148,53 @@ object Similarity {
     * beyond the 1-row aggregate — ~100× cheaper than retraining, and
     * only ever compared against a marker the same engine wrote. */
   private def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val (n, x) = fingerprintParts(spark, dir, lit(true))
+    val Seq((n, x)) = fingerprintParts(spark, dir, lit(true))
     fpString(n, x)
   }
 
   /** Fingerprint components `(count, xor-of-row-hashes)` of the rows
-    * matching `pred` — kept as parts because xor-of-hashes composes:
-    * `fp(A ∪ B) = (nA + nB, xA ^ xB)` for disjoint A and B, so an
-    * incremental consumer derives the post-append fingerprint from the
-    * stored base fingerprint plus a scan of ONLY the new batch — the
+    * matching each of `preds` — kept as parts because xor-of-hashes
+    * composes: `fp(A ∪ B) = (nA + nB, xA ^ xB)` for disjoint A and B, so
+    * an incremental consumer derives the post-append fingerprint from
+    * the stored base fingerprint plus a scan of ONLY the new batch — the
     * property that lets a nightly crawl append to a 100 TB index
     * without re-reading the corpus ([[s16IncrementalIndexUpdate]]). */
-  private def fingerprintParts(
-      spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column): (Long, Long) =
-    frameFingerprintParts(Tables(spark, dir, "embeddings").filter(pred))
+  private def fingerprintParts(spark: SparkSession, dir: String,
+      preds: Column*): Seq[(Long, Long)] =
+    frameFingerprintPartsWhere(Tables(spark, dir, "embeddings"), preds: _*)
 
   /** The same fingerprint over an arbitrary `(vec_id, embedding, …)`
     * frame — what the streaming ingest sink
     * ([[graft.stream.IndexIngest]]) hashes each micro-batch with
     * before xor-combining into the artifact's running fingerprint. */
-  private[graft] def frameFingerprintParts(df: DataFrame): (Long, Long) = {
-    val r = df
-      .select(xxhash64(to_json(struct(col("vec_id"), col("embedding"))))
-        .as("h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
-      .collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  private[graft] def frameFingerprintParts(df: DataFrame): (Long, Long) =
+    frameFingerprintPartsWhere(df, lit(true)).head
+
+  /** [[frameFingerprintParts]] of `df.filter(p)` for each of `preds`,
+    * all from ONE scan of `df`. */
+  private[graft] def frameFingerprintPartsWhere(df: DataFrame,
+      preds: Column*): Seq[(Long, Long)] =
+    partsWhere(df,
+      xxhash64(to_json(struct(col("vec_id"), col("embedding")))), preds)
+
+  /** The one fingerprint kernel: `(count, bit_xor of h)` over the rows
+    * matching each predicate, as one aggregate over one scan —
+    * `count(when(p, 1))` and `bit_xor(CASE WHEN p THEN h END)`, an empty
+    * match giving `(0, 0)`. The predicates need not be disjoint (an
+    * "all rows vs deleted rows" pair is one call), and each pair equals
+    * the single-predicate scan of `df.filter(p)` exactly. */
+  private[graft] def partsWhere(df: DataFrame, h: Column,
+      preds: Seq[Column]): Seq[(Long, Long)] = {
+    val ps = preds.indices.map(i => s"p$i")
+    val aggs = ps.flatMap(p => Seq(count(when(col(p), 1)),
+      bit_xor(when(col(p), col("h")))))
+    val r = df.select(h.as("h") +: preds.zip(ps).map { case (c, p) =>
+        c.as(p) }: _*)
+      .agg(aggs.head, aggs.tail: _*).collect()(0)
+    ps.indices.map { i =>
+      val x = 2 * i + 1
+      (r.getLong(2 * i), if (r.isNullAt(x)) 0L else r.getLong(x))
+    }
   }
 
   private def fpString(n: Long, x: Long): String =
@@ -234,7 +254,7 @@ object Similarity {
     val centroids = ivfTrainCentroids(v, cells)
     centroids.coalesce(1).write.mode("overwrite")
       .parquet(s"$staging/centroids")
-    val loaded = spark.read.parquet(s"$staging/centroids")
+    val loaded = graft.io.Load.parquet(spark, s"$staging/centroids")
     graft.io.Store.writePartitionedParquet(
       assignToCentroids(v, loaded),
       s"$staging/assignments", Seq("cell"), Seq("vec_id"))
@@ -296,7 +316,7 @@ object Similarity {
     * assignment, higher ranks are the probe cells. */
   private[graft] def ivfRanked(spark: SparkSession, dir: String): DataFrame =
     rankedAgainst(normed(spark, dir),
-      spark.read.parquet(s"${ivfIndexBase(spark, dir)}/centroids"))
+      graft.io.Load.parquet(spark, s"${ivfIndexBase(spark, dir)}/centroids"))
 
   /** Every vector of `v` ranked against `centroids` — THE cell-ranking
     * kernel (one broadcast fan-out of v × K + a per-vector window),
@@ -887,7 +907,7 @@ object Similarity {
     * the IVF-PQ serving chain and the SQ/BQ from-frame servers. */
   private def storedProbes(spark: SparkSession, queries: DataFrame,
       ivfBase: String): DataFrame = {
-    val centroids = spark.read.parquet(s"$ivfBase/centroids")
+    val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("norm").as("qn"))
@@ -1069,7 +1089,7 @@ object Similarity {
     val sub = pqSub(nv)
     pqTrainCodebook(nv, sub).coalesce(1).write.mode("overwrite")
       .parquet(s"$staging/codebook")
-    val cb = spark.read.parquet(s"$staging/codebook")
+    val cb = graft.io.Load.parquet(spark, s"$staging/codebook")
     graft.io.Store.writePartitionedParquet(
       pqEncode(sub, cb).join(cells, "vec_id"),
       s"$staging/codes", Seq("cell"), Seq("vec_id"))
@@ -1176,7 +1196,7 @@ object Similarity {
     * [[s20Sql]] verbatim (d18/d19-vs-d10 precedent). */
   def s21PqIndexSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = pqIndexBase(spark, dir)
-    val cb = spark.read.parquet(s"$base/codebook")
+    val cb = graft.io.Load.parquet(spark, s"$base/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
       .parquet(s"$base/codes")
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
@@ -1208,7 +1228,7 @@ object Similarity {
     * s26 pays 8 bytes per candidate and the pool cut. */
   def s26FilteredIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val pqBase = pqIndexBase(spark, dir)
-    val cb = spark.read.parquet(s"$pqBase/codebook")
+    val cb = graft.io.Load.parquet(spark, s"$pqBase/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
       .parquet(s"$pqBase/codes")
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
@@ -1291,7 +1311,7 @@ object Similarity {
       val fp = labeledCorpusFingerprint(spark, dir)
       val pqBase = pqIndexBase(spark, dir)
       val built = graft.io.ArtifactStore.ensure(base, fp) { staging =>
-        spark.read.parquet(s"$pqBase/codebook").coalesce(1)
+        graft.io.Load.parquet(spark, s"$pqBase/codebook").coalesce(1)
           .write.mode("overwrite").parquet(s"$staging/codebook")
         val codes = spark.read.schema(pqCodesSchema)
           .parquet(s"$pqBase/codes")
@@ -1319,7 +1339,7 @@ object Similarity {
     * query wants. */
   def s27LabelPartitionedSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = lblPqIndexBase(spark, dir)
-    val cb = spark.read.parquet(s"$base/codebook")
+    val cb = graft.io.Load.parquet(spark, s"$base/codebook")
     val stored = spark.read.schema(lblCodesSchema).parquet(s"$base/codes")
       .filter(col("label") === LblTarget) // partition-column equality
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
@@ -1347,7 +1367,7 @@ object Similarity {
     * so engine and oracle replay the identical IEEE ops. 16 rows,
     * always broadcast. */
   private def unitCentroids(spark: SparkSession, ivfBase: String): DataFrame =
-    spark.read.parquet(s"$ivfBase/centroids")
+    graft.io.Load.parquet(spark, s"$ivfBase/centroids")
       .withColumn("cu", expr("transform(centroid, x -> x / cnorm)"))
       .select(col("cell"), col("cu"))
 
@@ -1439,7 +1459,7 @@ object Similarity {
   def s28ResidualPqSearch(spark: SparkSession, dir: String): DataFrame = {
     val ivfBase = ivfIndexBase(spark, dir)
     val base = pqResIndexBase(spark, dir)
-    val cb = spark.read.parquet(s"$base/codebook")
+    val cb = graft.io.Load.parquet(spark, s"$base/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
       .parquet(s"$base/codes")
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
@@ -1564,7 +1584,7 @@ object Similarity {
     // round-trip parquet bit-exactly so this is also value-identical
     // to encoding against the live frame)
     graft.io.Store.writePartitionedParquet(
-      sqEncode(nvc, spark.read.parquet(s"$staging/params")),
+      sqEncode(nvc, graft.io.Load.parquet(spark, s"$staging/params")),
       s"$staging/codes", Seq("cell"), Seq("vec_id"))
   }
 
@@ -1605,7 +1625,8 @@ object Similarity {
   private def sqRecon(spark: SparkSession, sqBase: String): DataFrame =
     spark.read.schema(sqCodesSchema).parquet(s"$sqBase/codes")
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("scodes"))
-      .join(broadcast(spark.read.parquet(s"$sqBase/params")), lit(true))
+      .join(broadcast(graft.io.Load.parquet(spark, s"$sqBase/params")),
+        lit(true))
       .withColumn("rv", expr(
         "transform(scodes, (c, j) -> element_at(vmin, j + 1) + " +
           "(CAST(c AS DOUBLE) * element_at(vdiff, j + 1)) / 255.0)"))
@@ -1973,7 +1994,7 @@ object Similarity {
     * equal the s23 audit's total (spec-pinned). */
   def s25NprobeSweep(spark: SparkSession, dir: String): DataFrame = {
     val base = pqIndexBase(spark, dir)
-    val cb = spark.read.parquet(s"$base/codebook")
+    val cb = graft.io.Load.parquet(spark, s"$base/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
       .parquet(s"$base/codes")
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
@@ -2191,15 +2212,15 @@ object Similarity {
     pqIncCache.get(dir) {
       val base = graft.io.ArtifactStore.artifactPath("pq-index-inc", dir)
       val ivfBase = ivfIncIndexBase(spark, dir)
-      val (nA, xA) = fingerprintParts(spark, dir, !incBatchPred)
-      val (nB, xB) = fingerprintParts(spark, dir, incBatchPred)
+      val Seq((nA, xA), (nB, xB)) =
+        fingerprintParts(spark, dir, !incBatchPred, incBatchPred)
       val (trained, applied) = graft.io.ArtifactStore.ensureIncremental(
           base, fpString(nA, xA), fpString(nA + nB, xA ^ xB)) { staging =>
         val nvBase = pqNv(spark, dir).filter(!incBatchPred)
         val subBase = pqSub(nvBase)
         pqTrainCodebook(nvBase, subBase).coalesce(1).write.mode("overwrite")
           .parquet(s"$staging/codebook")
-        val cb = spark.read.parquet(s"$staging/codebook")
+        val cb = graft.io.Load.parquet(spark, s"$staging/codebook")
         // cells from the incremental IVF artifact: the encode side is
         // base-only, so the join restricts the lists to base rows
         val cells = invertedListsAt(spark, ivfBase)
@@ -2208,7 +2229,7 @@ object Similarity {
           pqEncode(subBase, cb).join(cells, "vec_id"),
           s"$staging/codes", Seq("cell"), Seq("vec_id"))
       } { live =>
-        val cb = spark.read.parquet(s"$live/codebook")
+        val cb = graft.io.Load.parquet(spark, s"$live/codebook")
         val nvBatch = pqNv(spark, dir).filter(incBatchPred)
         val cells = invertedListsAt(spark, ivfBase)
           .select(col("vec_id"), col("cell"))
@@ -2266,7 +2287,7 @@ object Similarity {
     * inverted lists, no corpus table exists). */
   private[graft] def storedIvfPqServeFrom(spark: SparkSession,
       queries: DataFrame, ivfBase: String, pqBase: String): DataFrame = {
-    val cb = spark.read.parquet(s"$pqBase/codebook")
+    val cb = graft.io.Load.parquet(spark, s"$pqBase/codebook")
     val storedCodes = spark.read.schema(pqCodesSchema)
       .parquet(s"$pqBase/codes")
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
@@ -2563,8 +2584,8 @@ object Similarity {
     * training subtree: at most one more training pass per JVM ever
     * happens no matter how many probe batches run. */
   def s15IndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val centroids = spark.read
-      .parquet(s"${ivfIndexBase(spark, dir)}/centroids")
+    val centroids =
+      graft.io.Load.parquet(spark, s"${ivfIndexBase(spark, dir)}/centroids")
     val q = normed(spark, dir)
       .filter(col("vec_id") % 5 === 0)
       .select(col("vec_id").as("query_id"),
@@ -2611,7 +2632,7 @@ object Similarity {
       .select(col("embedding"), col("norm")).collect()(0)
     val qv = q.getSeq[Float](0)
     val qn = q.getDouble(1)
-    spark.read.parquet(s"$base/centroids").collect().toSeq
+    graft.io.Load.parquet(spark, s"$base/centroids").collect().toSeq
       .map { r =>
         val cv = r.getSeq[Double](r.fieldIndex("centroid"))
         val dot = qv.iterator.zip(cv.iterator)
@@ -2647,7 +2668,7 @@ object Similarity {
     * trained and built on it) vs "tonight's crawl batch" (appended to
     * the index WITHOUT retraining). One residue class ≈ 1/7 of the
     * vectors — a realistic nightly-batch fraction. */
-  private val incBatchPred = col("vec_id") % 7 === 3
+  private[graft] val incBatchPred = col("vec_id") % 7 === 3
 
   private val ivfIncCache = graft.io.ValidatedPathCache.single()
   private[graft] val ivfIncTrainCount =
@@ -2677,8 +2698,8 @@ object Similarity {
   private def ivfIncIndexBase(spark: SparkSession, dir: String): String =
     ivfIncCache.get(dir) {
       val base = graft.io.ArtifactStore.artifactPath("ivf-index-inc", dir)
-      val (nA, xA) = fingerprintParts(spark, dir, !incBatchPred)
-      val (nB, xB) = fingerprintParts(spark, dir, incBatchPred)
+      val Seq((nA, xA), (nB, xB)) =
+        fingerprintParts(spark, dir, !incBatchPred, incBatchPred)
       val fpBase = fpString(nA, xA)
       val fpUnion = fpString(nA + nB, xA ^ xB)
       val (trained, applied) =
@@ -2688,12 +2709,12 @@ object Similarity {
             val centroids = ivfTrainCentroids(corpus)
             centroids.coalesce(1).write.mode("overwrite")
               .parquet(s"$staging/centroids")
-            val loaded = spark.read.parquet(s"$staging/centroids")
+            val loaded = graft.io.Load.parquet(spark, s"$staging/centroids")
             graft.io.Store.writePartitionedParquet(
               assignToCentroids(corpus, loaded),
               s"$staging/assignments", Seq("cell"), Seq("vec_id"))
         } { live =>
-          val centroids = spark.read.parquet(s"$live/centroids")
+          val centroids = graft.io.Load.parquet(spark, s"$live/centroids")
           assignToCentroids(normed(spark, dir).filter(incBatchPred),
             centroids)
             .repartition(col("cell"))
@@ -2720,7 +2741,7 @@ object Similarity {
     * (Faiss `add` vs `train`; cf. Jégou et al., PAMI'11). */
   def s16IncrementalIndexUpdate(spark: SparkSession, dir: String): DataFrame = {
     val base = ivfIncIndexBase(spark, dir)
-    val centroids = spark.read.parquet(s"$base/centroids")
+    val centroids = graft.io.Load.parquet(spark, s"$base/centroids")
     val q = normed(spark, dir).filter(incBatchPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("norm").as("qn"))

@@ -284,7 +284,7 @@ object IndexIngest {
     val v = withNorm(batch)
     appendOnce(base, batchId,
         Similarity.frameFingerprintParts(v), appId) { live =>
-      val centroids = spark.read.parquet(s"$live/centroids")
+      val centroids = graft.io.Load.parquet(spark, s"$live/centroids")
       Similarity.assignToCentroids(v, centroids)
         .repartition(col("cell"))
         .sortWithinPartitions(col("cell"), col("vec_id"))
@@ -423,7 +423,7 @@ object IndexIngest {
           .write.mode("overwrite").parquet(s"$staging/dochash")
       } else {
         // pre-dochash artifact (no deletes possible): segment-sum path
-        spark.read.parquet(s"$live/totals")
+        graft.io.Load.parquet(spark, s"$live/totals")
           .agg(sum(col("n_docs")).as("n_docs"),
             sum(col("t_tokens")).as("t_tokens"))
           .withColumn("seg", lit("base"))
@@ -480,7 +480,7 @@ object IndexIngest {
     val spark = vectors.sparkSession
     val v = withNorm(vectors)
     bootstrapOnce(base, Similarity.frameFingerprintParts(v)) { staging =>
-      val centroids = spark.read.parquet(s"$ivfBase/centroids")
+      val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
       Similarity.pqBuildFrom(v, staging,
         Similarity.assignToCentroids(v, centroids)
           .select(col("vec_id"), col("cell")))
@@ -505,8 +505,8 @@ object IndexIngest {
     val v = withNorm(batch)
     appendOnce(base, batchId,
         Similarity.frameFingerprintParts(v), appId) { live =>
-      val cb = spark.read.parquet(s"$live/codebook")
-      val centroids = spark.read.parquet(s"$ivfBase/centroids")
+      val cb = graft.io.Load.parquet(spark, s"$live/codebook")
+      val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
       val cells = Similarity.assignToCentroids(v, centroids)
         .select(col("vec_id"), col("cell"))
       Similarity.pqEncode(Similarity.pqSub(Similarity.pqNvFrame(v)), cb)
@@ -1266,7 +1266,7 @@ object IndexIngest {
     * unlike the PQ sink no vec_id re-join is ever needed). */
   private def sqNvc(v: DataFrame, ivfBase: String): DataFrame =
     Similarity.assignToCentroids(v,
-        v.sparkSession.read.parquet(s"$ivfBase/centroids"))
+        graft.io.Load.parquet(v.sparkSession, s"$ivfBase/centroids"))
       .withColumn("nv",
         expr(Similarity.UnitNvExpr))
       .select(col("vec_id"), col("cell"), col("nv"))
@@ -1310,7 +1310,7 @@ object IndexIngest {
     appendOnce(base, batchId,
         Similarity.frameFingerprintParts(v), appId) { live =>
       Similarity.sqEncode(sqNvc(v, ivfBase),
-          spark.read.parquet(s"$live/params"))
+          graft.io.Load.parquet(spark, s"$live/params"))
         .repartition(col("cell"))
         .sortWithinPartitions(col("cell"), col("vec_id"))
         .write.mode("append").partitionBy("cell")

@@ -1,0 +1,119 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.graftbridge.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.io.ArtifactStore
+import graft.llm.{Dedup, IndexDelete, Retrieval, Similarity}
+
+/** The fused fingerprint kernel (one scan for every predicate of an
+  * artifact's pair) yields exactly the parts — and so the marker
+  * strings — of one scan per predicate, for every pair an artifact
+  * computes, on the fixture corpus and on an empty one. A marker
+  * written before the kernel was fused therefore stays current. */
+class FusedFingerprintSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  // one scan per predicate, as the artifacts fingerprinted before
+  private def vecParts(df: DataFrame): (Long, Long) = {
+    val r = df
+      .select(xxhash64(to_json(struct(col("vec_id"), col("embedding"))))
+        .as("h"))
+      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
+      .collect()(0)
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  private def docParts(df: DataFrame): (Long, Long) = {
+    val r = df.select(xxhash64(col("doc_id"), col("text")).as("h"))
+      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
+      .collect()(0)
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  private lazy val emptyDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_fp").toString
+    Seq("documents", "embeddings").foreach { t =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          Tables(spark, sf, t).schema)
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    dir
+  }
+
+  /** (artifact kinds, frame, predicates, vector rows?) for every paired
+    * fingerprint the artifacts compute. */
+  private def pairs(dir: String): Seq[(String, DataFrame, Seq[Column], Boolean)] = {
+    val emb = Tables(spark, dir, "embeddings")
+    val docs = Tables(spark, dir, "documents")
+    Seq(
+      ("ivf-index-inc, pq-index-inc", emb,
+        Seq(!Similarity.incBatchPred, Similarity.incBatchPred), true),
+      ("ivf-tomb", Similarity.normed(spark, dir), Seq(lit(true),
+        pmod(col("vec_id"), lit(IndexDelete.DeleteMod)) === IndexDelete.DeleteRes),
+        true),
+      ("bm25-index", docs, Seq(lit(true)), false),
+      ("bm25-index-inc", docs,
+        Seq(!Retrieval.incDocPred, Retrieval.incDocPred), false),
+      ("bm25-tomb", docs, Seq(lit(true),
+        pmod(col("doc_id"), lit(Retrieval.DelMod)) === lit(Retrieval.DelRem)),
+        false),
+      ("dedup-index-inc", docs,
+        Seq(Dedup.dedupIncBasePred, Dedup.dedupIncBatchPred), false),
+      ("dedup-tomb", docs.filter(col("doc_id") % 3 =!= 0), Seq(lit(true),
+        col("doc_id") % Dedup.TakedownMod === Dedup.TakedownRem), false))
+  }
+
+  private def fused(df: DataFrame, preds: Seq[Column],
+      vec: Boolean): Seq[(Long, Long)] =
+    if (vec) Similarity.frameFingerprintPartsWhere(df, preds: _*)
+    else Retrieval.frameDocsFingerprintPartsWhere(df, preds: _*)
+
+  private def fp(parts: Seq[(Long, Long)]): Seq[String] =
+    parts.map { case (n, x) => ArtifactStore.fingerprint(n, x) }
+
+  Seq("sf0.001" -> (() => sf), "empty" -> (() => emptyDir)).foreach {
+    case (label, dir) =>
+      test(s"fused parts == per-predicate scans, every pair ($label corpus)") {
+        pairs(dir()).foreach { case (kinds, df, preds, vec) =>
+          val expected = preds.map(p =>
+            if (vec) vecParts(df.filter(p)) else docParts(df.filter(p)))
+          withClue(s"$kinds: ") {
+            assert(fused(df, preds, vec) === expected)
+            assert(fp(fused(df, preds, vec)) === fp(expected))
+            if (label == "empty") assert(expected.forall(_ == ((0L, 0L))))
+          }
+        }
+        // the single-frame kernels the streaming sinks call
+        val emb = Tables(spark, dir(), "embeddings")
+        val docs = Tables(spark, dir(), "documents")
+        assert(Similarity.frameFingerprintParts(emb) === vecParts(emb))
+        assert(Retrieval.frameDocsFingerprintParts(docs) === docParts(docs))
+        assert(Dedup.docsFingerprintParts(docs) === docParts(docs))
+      }
+  }
+
+  test("a fused pair reads the corpus once") {
+    val sc = spark.sparkContext
+    val docs = Tables(spark, sf, "documents")
+    val rows = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null)
+          rows.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Retrieval.frameDocsFingerprintPartsWhere(docs,
+        !Retrieval.incDocPred, Retrieval.incDocPred)
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(rows.get === docs.count())
+  }
+}
