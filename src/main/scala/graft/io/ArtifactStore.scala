@@ -2,6 +2,9 @@ package graft.io
 
 import java.nio.file.Paths
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{bit_xor, col, count, when}
+
 /** Shared-artifact publication: the "train once, probe many" contract
   * behind the persisted IVF and BM25 indexes. A 100 TB pipeline builds
   * an index in one job and serves it to every later job — which means
@@ -622,4 +625,37 @@ object ArtifactStore {
     * batch's parts onto the stored value. */
   def fingerprint(n: Long, x: Long): String =
     s"${n}_${java.lang.Long.toUnsignedString(x)}"
+
+  /** A rendered fingerprint with the parts `(dn, dx)` composed in —
+    * `(n + dn, x ^ dx)`: a batch appended (positive `dn`) or removed
+    * (negative `dn`; xor is its own inverse). */
+  def composed(fp: String, dn: Long, dx: Long): String = {
+    val Array(n, x) = fp.split("_")
+    fingerprint(n.toLong + dn, java.lang.Long.parseUnsignedLong(x) ^ dx)
+  }
+
+  /** The one fingerprint kernel: the parts `(count, xor of h)` over the
+    * rows of `df` matching each of `preds`, as one aggregate over one
+    * scan — `count(when(p, 1))` and `bit_xor(CASE WHEN p THEN h END)`,
+    * an empty match giving `(0, 0)` (xor, not sum: ANSI mode makes a
+    * Long sum of hashes overflow). The predicates need not be disjoint
+    * (an "all rows vs deleted rows" pair is one call), and each pair
+    * equals the single-predicate scan of `df.filter(p)` exactly. Kept
+    * as parts because xor-of-hashes composes: `fp(A ∪ B) = (nA + nB,
+    * xA ^ xB)` for disjoint A and B, so an incremental consumer derives
+    * the post-append fingerprint from the base parts plus a scan of
+    * ONLY the new batch ([[Artifact.ensureIncremental]]). */
+  def partsWhere(df: DataFrame, h: Column,
+      preds: Seq[Column]): Seq[(Long, Long)] = {
+    val ps = preds.indices.map(i => s"p$i")
+    val aggs = ps.flatMap(p => Seq(count(when(col(p), 1)),
+      bit_xor(when(col(p), col("h")))))
+    val r = df.select(h.as("h") +: preds.zip(ps).map { case (c, p) =>
+        c.as(p) }: _*)
+      .agg(aggs.head, aggs.tail: _*).collect()(0)
+    ps.indices.map { i =>
+      val x = 2 * i + 1
+      (r.getLong(2 * i), if (r.isNullAt(x)) 0L else r.getLong(x))
+    }
+  }
 }

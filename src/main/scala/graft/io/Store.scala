@@ -76,15 +76,19 @@ object Store {
     * tasks × values tiny files — the classic partitioned-write
     * small-file explosion. Skewed partition values would concentrate in
     * single tasks; callers with one giant value add a salt column to
-    * `partitionCols` and drop it from the written frame. */
+    * `partitionCols` and drop it from the written frame.
+    *
+    * `SaveMode.Append` is the same layout written as new files into the
+    * existing partition dirs — an index's incremental batch append. */
   def writePartitionedParquet(df: DataFrame, baseDir: String,
       partitionCols: Seq[String], sortCols: Seq[String],
+      mode: SaveMode = SaveMode.Overwrite,
       cfg: graft.GraftConfig = graft.GraftConfig()): String = {
     val base = cfg.resolvePath(baseDir)
     import org.apache.spark.sql.functions.col
     df.repartition(partitionCols.map(col): _*)
       .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-      .write.mode(SaveMode.Overwrite)
+      .write.mode(mode)
       .partitionBy(partitionCols: _*)
       .parquet(base)
     base

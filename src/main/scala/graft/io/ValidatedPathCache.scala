@@ -26,54 +26,38 @@ package graft.io
   * still driver-side milliseconds; the slow path runs exactly when
   * the artifact actually moved.
   *
-  * `A` is the resolution the call site returns (a base path, or a
-  * pair of them); `basesOf` lists the artifact bases it stands for —
-  * every one must still carry the fingerprint it had when cached.
+  * The resolution is the artifact base path itself; it must still
+  * carry the fingerprint it had when cached. [[Artifact]] holds one
+  * per artifact kind.
   *
   * Size-bounded (LRU): the keyspace is "corpus dirs ever queried",
   * which in a long-lived multi-tenant serving JVM grows forever
   * (VERDICT r13 #6); eviction costs the evictee one refresh round on
   * its next query, never correctness. */
-final class ValidatedPathCache[A](basesOf: A => Seq[String],
-    maxEntries: Int = 1024) {
+final class ValidatedPathCache(maxEntries: Int = 1024) {
 
-  private val m = new BoundedMemo[(A, Seq[(String, String)])](maxEntries)
+  private val m = new BoundedMemo[(String, String)](maxEntries)
 
-  /** Test hook: forget the memo (NOT the on-disk artifacts), so a
-    * spec can exercise the cross-process reuse path. */
+  /** Forget the memo (NOT the on-disk artifacts). */
   def clear(): Unit = m.clear()
 
-  /** The validated resolution for `key`, re-running `refresh` when
-    * absent or when any underlying artifact no longer carries the
-    * fingerprint it was cached with. Two racing threads may both
-    * refresh (the artifact lock below serializes any actual build);
-    * last-put wins, and both get a correct value. A refresh whose
-    * artifacts do not validate afterwards (e.g. a concurrent writer
-    * mid-flight) is returned but NOT cached — the next read retries. */
-  def get(key: String)(refresh: => A): A = {
+  /** The validated base for `key`, re-running `refresh` when absent or
+    * when the artifact no longer carries the fingerprint it was cached
+    * with. Two racing threads may both refresh (the artifact lock
+    * below serializes any actual build); last-put wins, and both get a
+    * correct value. A refresh whose artifact does not validate
+    * afterwards (e.g. a concurrent writer mid-flight) is returned but
+    * NOT cached — the next read retries. */
+  def get(key: String)(refresh: => String): String = {
     m.get(key) match {
-      case Some(cur) if cur._2.forall { case (b, fp) =>
-          ArtifactStore.isCurrentUnlocked(b, fp) } =>
-        cur._1
+      case Some((b, fp)) if ArtifactStore.isCurrentUnlocked(b, fp) => b
       case _ =>
-        val v = refresh
-        val marks =
-          basesOf(v).map(b => b -> ArtifactStore.currentFingerprint(b))
-        if (marks.nonEmpty && marks.forall(_._2.isDefined))
-          m.put(key, (v, marks.map { case (b, f) => (b, f.get) }))
-        else
-          m.remove(key)
-        v
+        val b = refresh
+        ArtifactStore.currentFingerprint(b) match {
+          case Some(fp) => m.put(key, (b, fp))
+          case None => m.remove(key)
+        }
+        b
     }
   }
-}
-
-object ValidatedPathCache {
-  /** For resolutions that ARE the artifact base path. */
-  def single(): ValidatedPathCache[String] =
-    new ValidatedPathCache[String](b => Seq(b))
-
-  /** For resolutions naming an artifact PAIR (e.g. IVF + PQ). */
-  def pair(): ValidatedPathCache[(String, String)] =
-    new ValidatedPathCache[(String, String)](p => Seq(p._1, p._2))
 }

@@ -270,45 +270,31 @@ object Authority {
 
   // ---------------------------------------------------------------- g04
 
-  private val prCache = graft.io.ValidatedPathCache.single()
-  private[graft] val prBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def prForgetCachedPaths(): Unit = prCache.clear()
+  private[graft] val prScores = graft.io.Artifact("pagerank-scores")
 
   /** g04's log split: "yesterday's interaction log" (the scores
     * artifact was computed over it) vs "tonight's event append". */
   private val isNewEvent = col("event_id") % 10 === 6
 
+  /** Fingerprint parts of the click events matching each of `preds`
+    * ([[graft.io.ArtifactStore.partsWhere]], one scan), so the scores
+    * artifacts compose with the rest of the artifact layer. */
+  private def eventParts(events: DataFrame,
+      preds: Column*): Seq[(Long, Long)] =
+    graft.io.ArtifactStore.partsWhere(events,
+      xxhash64(col("event_id"), col("user_id"), col("props")), preds)
+
   /** The persisted rank-scores artifact: yesterday's 3-round PageRank
     * over the old graph, stored `(nid, qr)` — built at most once per
-    * corpus through [[graft.io.ArtifactStore.ensure]], fingerprinted
-    * over the old click events' content. */
-  /** Content fingerprint of an event subset — the (count, xor) pair in
-    * [[graft.io.ArtifactStore.fingerprint]]'s shared format, so the
-    * scores artifacts compose with the rest of the artifact layer. */
-  private def eventsFp(rows: DataFrame): String = {
-    val r = rows
-      .select(xxhash64(col("event_id"), col("user_id"), col("props"))
-        .as("h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
-      .collect()(0)
-    val x = if (r.isNullAt(1)) 0L else r.getLong(1)
-    graft.io.ArtifactStore.fingerprint(r.getLong(0), x)
-  }
-
-  private def pageRankScoresBase(spark: SparkSession, dir: String): String =
-    prCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("pagerank-scores", dir)
-      val old = clickEvents(spark, dir).filter(!isNewEvent)
-      val fp = eventsFp(old)
-      val built = graft.io.ArtifactStore.ensure(base, fp) { staging =>
-        val (e, d) = graphFrom(old)
-        propagate(e, d, lit(1048576L), lit(157286L), iters = 3)
-          .coalesce(4).write.mode("overwrite").parquet(s"$staging/scores")
-      }
-      if (built) prBuildCount.incrementAndGet()
-      base
+    * corpus, fingerprinted over the old click events' content. */
+  private def pageRankScoresBase(spark: SparkSession, dir: String): String = {
+    lazy val old = clickEvents(spark, dir).filter(!isNewEvent)
+    prScores.ensure(dir)(eventParts(old, lit(true)).head) { staging =>
+      val (e, d) = graphFrom(old)
+      propagate(e, d, lit(1048576L), lit(157286L), iters = 3)
+        .coalesce(4).write.mode("overwrite").parquet(s"$staging/scores")
     }
+  }
 
   private val scoresSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("nid",
@@ -398,17 +384,12 @@ object Authority {
     * ([[isNewEvent]] Δ2 stays tonight's batch, as in g04). */
   private val isGen1Event = col("event_id") % 10 === 7
 
-  private val rollCache = graft.io.ValidatedPathCache.single()
-  private[graft] val rollBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] val rollAppendCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def rollForgetCachedPaths(): Unit = rollCache.clear()
+  private[graft] val rollScores = graft.io.Artifact("pagerank-roll")
 
   /** The ROLLING scores artifact ("pagerank-roll", separate from g04's
     * read-only "pagerank-scores" so g04 stays a valid single-step
     * control): each night's refresh both CONSUMES the standing scores
-    * and REPLACES them. [[graft.io.ArtifactStore.ensureIncremental]]'s
+    * and REPLACES them. [[graft.io.Artifact.ensureIncremental]]'s
     * state machine does the roll: already at fp(G1) → nothing (every
     * repeat run); at fp(G0) → warm-refine in place; absent/stale → cold
     * bootstrap over G0 then the refine. The refine step reads the live
@@ -417,34 +398,29 @@ object Authority {
     * delete), warm-starts 2 rounds over G1 and writes back; the marker
     * is down for the duration, so a crash mid-roll reads as invalid and
     * rebuilds rather than serving half-rolled scores. */
-  private def rollScoresBase(spark: SparkSession, dir: String): String =
-    rollCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("pagerank-roll", dir)
-      val g0 = clickEvents(spark, dir).filter(!isNewEvent && !isGen1Event)
-      val g1 = clickEvents(spark, dir).filter(!isNewEvent)
-      val (built, appended) =
-        graft.io.ArtifactStore.ensureIncremental(base, eventsFp(g0),
-            eventsFp(g1)) { staging =>
-          val (e, d) = graphFrom(g0)
-          propagate(e, d, lit(1048576L), lit(157286L), iters = 3)
-            .coalesce(4).write.mode("overwrite")
-            .parquet(s"$staging/scores")
-        } { live =>
-          val stored = spark.read.schema(scoresSchema)
-            .parquet(s"$live/scores").localCheckpoint()
-          val (e, d) = graphFrom(g1)
-          val warm = d.select(col("src").as("nid"))
-            .join(stored, Seq("nid"), "left")
-            .select(col("nid"),
-              coalesce(col("qr"), lit(1048576L)).as("qr"))
-          propagateFrom(e, d, warm, lit(157286L), iters = 2)
-            .coalesce(4).write.mode("overwrite")
-            .parquet(s"$live/scores")
-        }
-      if (built) rollBuildCount.incrementAndGet()
-      if (appended) rollAppendCount.incrementAndGet()
-      base
+  private def rollScoresBase(spark: SparkSession, dir: String): String = {
+    lazy val g1 = clickEvents(spark, dir).filter(!isNewEvent)
+    // G0 and Δ1 = G1 \ G0 are disjoint: one scan, fp(G1) derived
+    lazy val Seq(g0Parts, d1Parts) = eventParts(g1, !isGen1Event, isGen1Event)
+    rollScores.ensureIncremental(dir)(g0Parts, d1Parts) { staging =>
+      val (e, d) = graphFrom(
+        clickEvents(spark, dir).filter(!isNewEvent && !isGen1Event))
+      propagate(e, d, lit(1048576L), lit(157286L), iters = 3)
+        .coalesce(4).write.mode("overwrite")
+        .parquet(s"$staging/scores")
+    } { live =>
+      val stored = spark.read.schema(scoresSchema)
+        .parquet(s"$live/scores").localCheckpoint()
+      val (e, d) = graphFrom(g1)
+      val warm = d.select(col("src").as("nid"))
+        .join(stored, Seq("nid"), "left")
+        .select(col("nid"),
+          coalesce(col("qr"), lit(1048576L)).as("qr"))
+      propagateFrom(e, d, warm, lit(157286L), iters = 2)
+        .coalesce(4).write.mode("overwrite")
+        .parquet(s"$live/scores")
     }
+  }
 
   /** g05: ROLLING authority refresh — the missing half of g04's
     * warm-start story. g04 CONSUMES a stored fixed point but never

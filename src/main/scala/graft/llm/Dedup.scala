@@ -959,23 +959,7 @@ object Dedup {
 
   // ---------------------------------------------------------------- d18
 
-  private val dedupIdxCache = graft.io.ValidatedPathCache.single()
-  private[graft] val dedupIdxBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def dedupIdxForgetCachedPaths(): Unit = dedupIdxCache.clear()
-
-  /** Content-fingerprint parts `(count, xor-of-row-hashes)` of a
-    * (doc_id, text) relation — the documents twin of
-    * [[Similarity.frameFingerprintParts]], with the same composition
-    * law `fp(A ∪ B) = (nA + nB, xA ^ xB)` for disjoint sides: an
-    * incremental consumer ([[d19IncrementalIndexAppend]], the
-    * streaming LSH sink) derives the post-append fingerprint from the
-    * stored base fingerprint plus a scan of ONLY the new batch. */
-  private[graft] def docsFingerprintParts(df: DataFrame): (Long, Long) =
-    Retrieval.frameDocsFingerprintParts(df) // the ONE docs kernel
-
-  private def fpString(n: Long, x: Long): String =
-    graft.io.ArtifactStore.fingerprint(n, x)
+  private[graft] val dedupIndex = graft.io.Artifact("dedup-index")
 
   /** Full build of the LSH dedup index layout into `staging`:
     * `digests/` (the side's distinct content digests) + `bands/`
@@ -992,8 +976,9 @@ object Dedup {
   }
 
   /** One digest row PER DOCUMENT — `(doc_id, h, h64)`, where `h64` is
-    * exactly the [[docsFingerprintParts]] row hash. The per-doc grain
-    * (rather than the old distinct-`h` set) is what the DELETE verb
+    * exactly the [[Retrieval.frameDocsFingerprintParts]] row hash. The
+    * per-doc grain (rather than the old distinct-`h` set) is what the
+    * DELETE verb
     * requires twice over: removing doc D must not remove a digest
     * another live doc still carries (multiplicity — Lucene's live-docs
     * is per doc, not per term), and moving the artifact fingerprint
@@ -1018,11 +1003,9 @@ object Dedup {
   private[graft] def appendDedupIndexInto(batch: DataFrame, live: String): Unit = {
     digestRows(batch)
       .coalesce(1).write.mode("append").parquet(s"$live/digests")
-    bandedDocs(batch)
-      .repartition(col("band"))
-      .sortWithinPartitions(col("band"), col("bucket"), col("doc_id"))
-      .write.mode("append").partitionBy("band")
-      .parquet(s"$live/bands")
+    graft.io.Store.writePartitionedParquet(bandedDocs(batch),
+      s"$live/bands", Seq("band"), Seq("bucket", "doc_id"),
+      org.apache.spark.sql.SaveMode.Append)
   }
 
   /** The persisted LSH dedup index — the THIRD stored artifact (after
@@ -1039,18 +1022,16 @@ object Dedup {
     *
     * Built once per corpus over d10's "standing corpus" split
     * (`doc_id % 3 != 0`), fingerprinted over that side's content. */
-  private def dedupIndexBase(spark: SparkSession, dir: String): String =
-    dedupIdxCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("dedup-index", dir)
-      val old = Tables(spark, dir, "documents")
-        .filter(col("doc_id") % 3 =!= 0)
-      val (n, x) = docsFingerprintParts(old)
-      val built = graft.io.ArtifactStore.ensure(base, fpString(n, x)) {
-        writeDedupIndexInto(old, _)
-      }
-      if (built) dedupIdxBuildCount.incrementAndGet()
-      base
-    }
+  private def dedupIndexBase(spark: SparkSession, dir: String): String = {
+    lazy val old = standingDocs(spark, dir)
+    dedupIndex.ensure(dir)(Retrieval.frameDocsFingerprintParts(old))(
+      writeDedupIndexInto(old, _))
+  }
+
+  /** d10's standing corpus (`doc_id % 3 != 0`) — what d18's and d20's
+    * indexes cover. */
+  private def standingDocs(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir, "documents").filter(col("doc_id") % 3 =!= 0)
 
   private[graft] val digestSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id", LongType),
@@ -1141,12 +1122,7 @@ object Dedup {
   private[graft] val dedupIncBasePred = col("doc_id") % 3 === 1
   private[graft] val dedupIncBatchPred = col("doc_id") % 3 === 2
 
-  private val dedupIncCache = graft.io.ValidatedPathCache.single()
-  private[graft] val dedupIncBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] val dedupIncAppendCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def dedupIncForgetCachedPaths(): Unit = dedupIncCache.clear()
+  private[graft] val dedupIncIndex = graft.io.Artifact("dedup-index-inc")
 
   /** The incrementally-maintained LSH index artifact behind
     * [[d19IncrementalIndexAppend]] — the third artifact family to get
@@ -1154,29 +1130,21 @@ object Dedup {
     * on the base half of the standing corpus, then the adjudicated
     * batch's digests + band postings are folded in by an append-mode
     * write that touches only new files under the 16 existing band
-    * partition dirs. [[graft.io.ArtifactStore.ensureIncremental]]'s
+    * partition dirs. [[graft.io.Artifact.ensureIncremental]]'s
     * single-lock state machine: at the union fingerprint → no work
     * (every JVM after the first); at the base fingerprint → append in
     * place; absent/stale → build the base, then append. The union
     * fingerprint is DERIVED (`(nA + nB, xA ^ xB)`), so the nightly
     * job scans only the new batch — the indexed corpus is never
     * re-fingerprinted, let alone re-shingled. */
-  private def dedupIncIndexBase(spark: SparkSession, dir: String): String =
-    dedupIncCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("dedup-index-inc", dir)
-      val docs = Tables(spark, dir, "documents")
-      val Seq((nA, xA), (nB, xB)) = Retrieval.frameDocsFingerprintPartsWhere(
-        docs, dedupIncBasePred, dedupIncBatchPred)
-      val (built, appended) = graft.io.ArtifactStore.ensureIncremental(
-        base, fpString(nA, xA), fpString(nA + nB, xA ^ xB)) {
-        writeDedupIndexInto(docs.filter(dedupIncBasePred), _)
-      } {
-        appendDedupIndexInto(docs.filter(dedupIncBatchPred), _)
-      }
-      if (built) dedupIncBuildCount.incrementAndGet()
-      if (appended) dedupIncAppendCount.incrementAndGet()
-      base
-    }
+  private def dedupIncIndexBase(spark: SparkSession, dir: String): String = {
+    lazy val docs = Tables(spark, dir, "documents")
+    lazy val Seq(base, batch) = Retrieval.frameDocsFingerprintPartsWhere(
+      docs, dedupIncBasePred, dedupIncBatchPred)
+    dedupIncIndex.ensureIncremental(dir)(base, batch)(
+      writeDedupIndexInto(docs.filter(dedupIncBasePred), _))(
+      appendDedupIndexInto(docs.filter(dedupIncBatchPred), _))
+  }
 
   /** d19: the persisted dedup index kept CURRENT — yesterday's index
     * plus tonight's adjudicated batch, appended without rebuilding
@@ -1202,9 +1170,7 @@ object Dedup {
   val TakedownMod = 11L
   val TakedownRem = 2L
 
-  private val dedupTombCache = graft.io.ValidatedPathCache.single()
-  private[graft] def dedupTombForgetCachedPaths(): Unit =
-    dedupTombCache.clear()
+  private[graft] val dedupTomb = graft.io.Artifact("dedup-tomb")
 
   /** [[IndexDelete.removalPlan]] for the LSH dedup index: victims
     * resolved through the per-doc digest rows (id present, not already
@@ -1286,19 +1252,15 @@ object Dedup {
     * the staged-publish path, then the takedown applied as a real
     * fingerprint-checked mutation — the same two-state machine as the
     * vector and lexical delete artifacts. */
-  private def dedupTombIndexBase(spark: SparkSession, dir: String): String =
-    dedupTombCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("dedup-tomb", dir)
-      val old = Tables(spark, dir, "documents")
-        .filter(col("doc_id") % 3 =!= 0)
-      val delPred = col("doc_id") % TakedownMod === TakedownRem
-      val Seq(full, del) =
-        Retrieval.frameDocsFingerprintPartsWhere(old, lit(true), delPred)
-      IndexDelete.buildThenDelete(base, full, del)(
-        writeDedupIndexInto(old, _))(
-        lshApplyDeletes(spark, base, Tables(spark, dir, "documents")
-          .filter(delPred).select(col("doc_id"))))
-    }
+  private def dedupTombIndexBase(spark: SparkSession, dir: String): String = {
+    val delPred = col("doc_id") % TakedownMod === TakedownRem
+    lazy val old = standingDocs(spark, dir)
+    lazy val Seq(full, del) =
+      Retrieval.frameDocsFingerprintPartsWhere(old, lit(true), delPred)
+    dedupTomb.ensureDeleted(dir)(full, del)(writeDedupIndexInto(old, _))(
+      lshApplyDeletes(spark, _, Tables(spark, dir, "documents")
+        .filter(delPred).select(col("doc_id"))))
+  }
 
   /** d20: the takedown verb on the dedup state — d18's incremental
     * dedup against a standing index that has taken REMOVALS (license

@@ -211,9 +211,7 @@ object IndexDelete {
         s"no valid index artifact at $base — build first"))
     val (removedIds, (dn, dx)) = plan
     if (dn == 0) return 0L
-    val Array(cn, cx) = cur.split("_")
-    val next = graft.io.ArtifactStore.fingerprint(cn.toLong - dn,
-      java.lang.Long.parseUnsignedLong(cx) ^ dx)
+    val next = graft.io.ArtifactStore.composed(cur, -dn, dx)
     val ok = graft.io.ArtifactStore.mutate(base, cur, next)(
       writeTombstones(_, removedIds))
     // tolerate exactly one race: a concurrent applier landed the SAME
@@ -233,56 +231,21 @@ object IndexDelete {
   // s32 — tombstone-aware serving on a persisted-and-mutated index
   // -------------------------------------------------------------------
 
-  private val tombIndexCache = graft.io.ValidatedPathCache.single()
-  private[graft] def tombForgetCachedPaths(): Unit = tombIndexCache.clear()
-
-  /** THE build-then-delete two-state machine, shared by all three
-    * batch delete artifacts (vector [[tombIndexBase]], lexical
-    * [[Retrieval.bm25TombIndexBase]], dedup
-    * [[Dedup.dedupTombIndexBase]]): at the post-delete fingerprint →
-    * serve; at the full-corpus fingerprint (a fresh build, or a crash
-    * between build and delete) → apply the deletes; anything else →
-    * build at the full fingerprint, then apply. One definition holds
-    * the crash-recovery reasoning. `fullParts`/`delParts` are the
-    * corpus' and the delete set's fingerprint components; `applyDel`
-    * runs the family's delete (idempotent via [[applyRemoval]]'s
-    * fingerprint check, so a lost race here self-resolves). */
-  private[graft] def buildThenDelete(base: String,
-      fullParts: (Long, Long), delParts: (Long, Long))(
-      build: String => Unit)(applyDel: => Long): String = {
-    val (n, x) = fullParts
-    val (dn, dx) = delParts
-    val fpFull = graft.io.ArtifactStore.fingerprint(n, x)
-    val fpLive = graft.io.ArtifactStore.fingerprint(n - dn, x ^ dx)
-    if (!graft.io.ArtifactStore.isCurrent(base, fpLive)) {
-      graft.io.ArtifactStore.ensure(base, fpFull)(build)
-      if (fpLive != fpFull) applyDel
-    }
-    base
-  }
+  private[graft] val ivfTomb = graft.io.Artifact("ivf-tomb")
 
   /** s32's index artifact: the full-corpus IVF index built through the
     * normal staged-publish path, then `remove_ids(vec_id % 17 == 3)`
     * applied as a REAL fingerprint-checked mutation (not baked into
     * the build — the artifact on disk goes through the same two states
-    * a production index does). State machine per JVM touch, memoized
-    * against the marker like every serving path:
-    *
-    *   at post-delete fp → serve; at full-corpus fp (crash between
-    *   build and delete, or a fresh build) → apply the deletes;
-    *   anything else → build at the full fp, then apply.
-    */
-  private[graft] def tombIndexBase(spark: SparkSession, dir: String): String =
-    tombIndexCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("ivf-tomb", dir)
-      val v = Similarity.normed(spark, dir)
-      val delPred = pmod(col("vec_id"), lit(DeleteMod)) === DeleteRes
-      val Seq(full, del) =
-        Similarity.frameFingerprintPartsWhere(v, lit(true), delPred)
-      buildThenDelete(base, full, del)(
-        Similarity.ivfBuildFrom(v, _))(
-        applyDeletes(spark, base, v.filter(delPred).select(col("vec_id"))))
-    }
+    * a production index does) — [[graft.io.Artifact.ensureDeleted]]. */
+  private[graft] def tombIndexBase(spark: SparkSession, dir: String): String = {
+    val delPred = pmod(col("vec_id"), lit(DeleteMod)) === DeleteRes
+    lazy val v = Similarity.normed(spark, dir)
+    lazy val Seq(full, del) =
+      Similarity.frameFingerprintPartsWhere(v, lit(true), delPred)
+    ivfTomb.ensureDeleted(dir)(full, del)(Similarity.ivfBuildFrom(v, _))(
+      applyDeletes(spark, _, v.filter(delPred).select(col("vec_id"))))
+  }
 
   /** s32: the s15 serving contract on an index that has taken
     * deletions — probe the STORED centroids (trained before the

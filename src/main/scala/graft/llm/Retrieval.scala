@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -66,7 +66,8 @@ import graft.{Query, Tables}
   *    matches, not with the corpus.
   * The plan test pins all of this: no shuffled join anywhere, ZERO
   * corpus-shaped exchanges in the probe plan, ≤ 4 keyed exchanges
-  * total; the build-once contract is pinned via [[bm25BuildCount]].
+  * total; the build-once contract is pinned via [[bm25Index]]'s
+  * build counter.
   */
 object Retrieval {
 
@@ -86,11 +87,8 @@ object Retrieval {
     * filesystem into per-term directories. */
   val PostingBuckets = 64L
 
-  /** Build-at-most-once guard for the persisted BM25 index — the
-    * lexical twin of [[Similarity.ivfIndexBase]], same
-    * [[graft.io.ArtifactStore]] contract (content fingerprint,
-    * exclusive lock, staged atomic publish, manifest-validated
-    * marker). Layout under one base dir:
+  /** The persisted BM25 index — the lexical twin of
+    * [[Similarity.ivfIndexBase]]. Layout under one base dir:
     *
     *  - `postings/` — `(doc_id, dl, term, tf, df) PARTITIONED BY
     *    tbucket` (xxhash64(term) mod [[PostingBuckets]]): the inverted
@@ -103,54 +101,13 @@ object Retrieval {
     * Everything stored is an exact integer, so parquet round-trips
     * bit-identically and the unchanged DuckDB oracles (which replay
     * the build chain in SQL) still hash-match every probe. */
-  private val bm25Cache = graft.io.ValidatedPathCache.single()
-  private[graft] val bm25BuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def bm25ForgetCachedPaths(): Unit = bm25Cache.clear()
+  private[graft] val bm25Index = graft.io.Artifact("bm25-index")
 
-  private def docsFingerprint(spark: SparkSession, dir: String): String = {
-    val Seq((n, x)) = docsFingerprintParts(spark, dir, lit(true))
-    fpStr(n, x)
+  private[graft] def bm25IndexBase(spark: SparkSession, dir: String): String = {
+    lazy val d = Tables(spark, dir, "documents")
+    bm25Index.ensure(dir)(frameDocsFingerprintParts(d))(
+      writeSegment(d, None, _))
   }
-
-  private[graft] def bm25IndexBase(spark: SparkSession, dir: String): String =
-    bm25Cache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("bm25-index", dir)
-      val fp = docsFingerprint(spark, dir)
-      val built = graft.io.ArtifactStore.ensure(base, fp) { staging =>
-        val d = Tables(spark, dir, "documents")
-          .withColumn("ws", split(col("text"), " "))
-        // dl rides the groupBy key: doc_id determines it, so the wider
-        // key costs nothing and saves a postings⋈lengths join
-        val tf = d.select(col("doc_id"),
-            size(col("ws")).cast(LongType).as("dl"),
-            explode(col("ws")).as("term"))
-          .groupBy(col("doc_id"), col("dl"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-        // tf is already distinct per (doc, term), so df is a per-term
-        // count of it — attached as a WINDOW over the postings rather
-        // than a second groupBy + join-back: Catalyst cannot share one
-        // corpus aggregate between two consuming branches (column
-        // pruning makes the subtrees differ, defeating ReuseExchange),
-        // so the agg+join form scans and shuffles the corpus twice.
-        // The window form pays one term-keyed exchange over the
-        // postings instead; a stopword's posting list is one window
-        // partition (sorter spills — same skew trade as d15,
-        // acceptable for a count)
-        val postings = tf.withColumn("df",
-            count(lit(1)).over(Window.partitionBy(col("term"))))
-          .withColumn("tbucket",
-            pmod(xxhash64(col("term")), lit(PostingBuckets)))
-        graft.io.Store.writePartitionedParquet(
-          postings, s"$staging/postings", Seq("tbucket"),
-          Seq("term", "doc_id"))
-        d.agg(count(lit(1)).as("n_docs"),
-            sum(size(col("ws")).cast(LongType)).as("t_tokens"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/totals")
-      }
-      if (built) bm25BuildCount.incrementAndGet()
-      base
-    }
 
   /** Declared, not inferred — an empty corpus writes a file-less
     * partitioned dir (the EmptyInputSpec contract), and an index
@@ -251,16 +208,7 @@ object Retrieval {
     * DELTA segment — ~1/9 of the docs, a realistic nightly fraction). */
   private[graft] val incDocPred = col("doc_id") % 9 === 4
 
-  private val bm25IncCache = graft.io.ValidatedPathCache.single()
-  private[graft] val bm25IncBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] val bm25IncAppendCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def bm25IncForgetCachedPaths(): Unit = bm25IncCache.clear()
-
-  private def docsFingerprintParts(spark: SparkSession, dir: String,
-      preds: Column*): Seq[(Long, Long)] =
-    frameDocsFingerprintPartsWhere(Tables(spark, dir, "documents"), preds: _*)
+  private[graft] val bm25IncIndex = graft.io.Artifact("bm25-index-inc")
 
   /** The same fingerprint over an arbitrary `(doc_id, text, …)` frame
     * — what the streaming BM25 sink hashes each micro-batch with. */
@@ -268,49 +216,64 @@ object Retrieval {
     frameDocsFingerprintPartsWhere(df, lit(true)).head
 
   /** [[frameDocsFingerprintParts]] of `df.filter(p)` for each of
-    * `preds`, all from ONE scan ([[Similarity.partsWhere]]). */
+    * `preds`, all from ONE scan ([[graft.io.ArtifactStore.partsWhere]]). */
   private[graft] def frameDocsFingerprintPartsWhere(df: DataFrame,
       preds: Column*): Seq[(Long, Long)] =
-    Similarity.partsWhere(df, xxhash64(col("doc_id"), col("text")), preds)
+    graft.io.ArtifactStore.partsWhere(df,
+      xxhash64(col("doc_id"), col("text")), preds)
 
-  private def fpStr(n: Long, x: Long): String =
-    graft.io.ArtifactStore.fingerprint(n, x)
-
-  /** One SEGMENT of the incremental index: postings (tf + df **local
-    * to the segment's docs**) and the segment's 1-row totals. The df
-    * window and totals aggregate scan only `pred`'s docs — appending a
-    * batch never re-reads the indexed corpus, which is the whole point
-    * (Lucene's segment model: each segment carries its own stats,
-    * merged at query time). */
-  private def segmentPostings(spark: SparkSession, dir: String,
-      pred: org.apache.spark.sql.Column,
-      seg: String): (DataFrame, DataFrame) =
-    segmentPostingsFrame(Tables(spark, dir, "documents").filter(pred), seg)
-
-  /** [[segmentPostings]] over an arbitrary `(doc_id, text, …)` frame —
-    * the entry point the streaming sink uses (each micro-batch becomes
-    * one segment). */
-  private[graft] def segmentPostingsFrame(
-      docs: DataFrame, seg: String): (DataFrame, DataFrame) = {
+  /** One SEGMENT of an index over `docs`: postings (tf + df **local
+    * to the segment's docs**) and the segment's 1-row totals, each
+    * tagged with `seg` when given (the single-segment `bm25-index`
+    * carries no tag). The df window and totals aggregate scan only
+    * `docs` — appending a batch never re-reads the indexed corpus,
+    * which is the whole point (Lucene's segment model: each segment
+    * carries its own stats, merged at query time). */
+  private def segmentPostingsFrame(
+      docs: DataFrame, seg: Option[String]): (DataFrame, DataFrame) = {
+    def tagged(df: DataFrame) = seg.fold(df)(s => df.withColumn("seg", lit(s)))
     val d = docs.withColumn("ws", split(col("text"), " "))
+    // dl rides the groupBy key: doc_id determines it, so the wider
+    // key costs nothing and saves a postings⋈lengths join
     val tf = d.select(col("doc_id"),
         size(col("ws")).cast(LongType).as("dl"),
         explode(col("ws")).as("term"))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    val postings = tf.withColumn("df",
-        count(lit(1)).over(Window.partitionBy(col("term"))))
-      .withColumn("seg", lit(seg))
+    // tf is already distinct per (doc, term), so df is a per-term
+    // count of it — attached as a WINDOW over the postings rather
+    // than a second groupBy + join-back: Catalyst cannot share one
+    // corpus aggregate between two consuming branches (column
+    // pruning makes the subtrees differ, defeating ReuseExchange),
+    // so the agg+join form scans and shuffles the corpus twice.
+    // The window form pays one term-keyed exchange over the
+    // postings instead; a stopword's posting list is one window
+    // partition (sorter spills — same skew trade as d15,
+    // acceptable for a count)
+    val postings = tagged(tf.withColumn("df",
+        count(lit(1)).over(Window.partitionBy(col("term")))))
       .withColumn("tbucket",
         pmod(xxhash64(col("term")), lit(PostingBuckets)))
-    val totals = d.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("ws")).cast(LongType)).as("t_tokens"))
-      .withColumn("seg", lit(seg))
+    val totals = tagged(d.agg(count(lit(1)).as("n_docs"),
+        sum(size(col("ws")).cast(LongType)).as("t_tokens")))
     (postings, totals)
   }
 
+  /** Write `docs` as one segment ([[segmentPostingsFrame]]) under
+    * `into`: `postings/` term-hash bucketed, `totals/` one file.
+    * `SaveMode.Append` adds a delta segment to a live index, writing
+    * only into the batch's bucket dirs — the entry point the streaming
+    * sink uses too (each micro-batch becomes one segment). */
+  private[graft] def writeSegment(docs: DataFrame, seg: Option[String],
+      into: String, mode: SaveMode = SaveMode.Overwrite): Unit = {
+    val (p, t) = segmentPostingsFrame(docs, seg)
+    graft.io.Store.writePartitionedParquet(p, s"$into/postings",
+      Seq("tbucket"), Seq("term", "doc_id"), mode)
+    t.coalesce(1).write.mode(mode).parquet(s"$into/totals")
+  }
+
   /** The INCREMENTAL BM25 index artifact behind
-    * [[s17IncrementalBm25]] — [[graft.io.ArtifactStore
+    * [[s17IncrementalBm25]] — [[graft.io.Artifact
     * .ensureIncremental]] over two segments: the base segment is built
     * once; the batch is folded in by appending a delta segment whose
     * postings carry segment-LOCAL df, written only into its term-hash
@@ -321,29 +284,14 @@ object Retrieval {
     * per-doc) — which is why s17's oracle IS s10's SQL. The union
     * fingerprint is derived `(nA+nB, xA^xB)`: the nightly job scans
     * only the batch. */
-  private def bm25IncIndexBase(spark: SparkSession, dir: String): String =
-    bm25IncCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("bm25-index-inc", dir)
-      val Seq((nA, xA), (nB, xB)) =
-        docsFingerprintParts(spark, dir, !incDocPred, incDocPred)
-      val (built, appended) = graft.io.ArtifactStore.ensureIncremental(
-        base, fpStr(nA, xA), fpStr(nA + nB, xA ^ xB)) { staging =>
-        val (p, t) = segmentPostings(spark, dir, !incDocPred, "base")
-        graft.io.Store.writePartitionedParquet(
-          p, s"$staging/postings", Seq("tbucket"), Seq("term", "doc_id"))
-        t.coalesce(1).write.mode("overwrite").parquet(s"$staging/totals")
-      } { live =>
-        val (p, t) = segmentPostings(spark, dir, incDocPred, "delta")
-        p.repartition(col("tbucket"))
-          .sortWithinPartitions(col("tbucket"), col("term"), col("doc_id"))
-          .write.mode("append").partitionBy("tbucket")
-          .parquet(s"$live/postings")
-        t.coalesce(1).write.mode("append").parquet(s"$live/totals")
-      }
-      if (built) bm25IncBuildCount.incrementAndGet()
-      if (appended) bm25IncAppendCount.incrementAndGet()
-      base
-    }
+  private def bm25IncIndexBase(spark: SparkSession, dir: String): String = {
+    lazy val d = Tables(spark, dir, "documents")
+    lazy val Seq(base, batch) =
+      frameDocsFingerprintPartsWhere(d, !incDocPred, incDocPred)
+    bm25IncIndex.ensureIncremental(dir)(base, batch)(
+      writeSegment(d.filter(!incDocPred), Some("base"), _))(
+      writeSegment(d.filter(incDocPred), Some("delta"), _, SaveMode.Append))
+  }
 
   private[graft] val segPostingsSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id", LongType),
@@ -567,9 +515,7 @@ object Retrieval {
   val DelMod = 13L
   val DelRem = 5L
 
-  private val bm25TombCache = graft.io.ValidatedPathCache.single()
-  private[graft] def bm25TombForgetCachedPaths(): Unit =
-    bm25TombCache.clear()
+  private[graft] val bm25Tomb = graft.io.Artifact("bm25-tomb")
 
   /** The per-doc identity sidecar the lexical DELETE verb requires:
     * `(doc_id, h, dl)` — one row per indexed document. A delete
@@ -584,6 +530,12 @@ object Retrieval {
     docs.select(col("doc_id"),
       xxhash64(col("doc_id"), col("text")).as("h"),
       size(split(col("text"), " ")).cast(LongType).as("dl"))
+
+  /** Write `docs`' [[docHashFrame]] as one sorted file under `into`. */
+  private[graft] def writeDocHash(docs: DataFrame, into: String,
+      mode: SaveMode = SaveMode.Overwrite): Unit =
+    docHashFrame(docs).coalesce(1).sortWithinPartitions(col("doc_id"))
+      .write.mode(mode).parquet(s"$into/dochash")
 
   private[graft] val docHashSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("doc_id", LongType),
@@ -628,22 +580,16 @@ object Retrieval {
     * `delete(doc_id % 13 == 5)` applied as a real fingerprint-checked
     * mutation — the same two-state machine as
     * [[IndexDelete.tombIndexBase]]. */
-  private[graft] def bm25TombIndexBase(spark: SparkSession, dir: String): String =
-    bm25TombCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("bm25-tomb", dir)
-      val delPred = pmod(col("doc_id"), lit(DelMod)) === lit(DelRem)
-      val Seq(full, del) = docsFingerprintParts(spark, dir, lit(true), delPred)
-      IndexDelete.buildThenDelete(base, full, del) { staging =>
-        val d = Tables(spark, dir, "documents")
-        val (p, t) = segmentPostingsFrame(d, "base")
-        graft.io.Store.writePartitionedParquet(
-          p, s"$staging/postings", Seq("tbucket"), Seq("term", "doc_id"))
-        t.coalesce(1).write.mode("overwrite").parquet(s"$staging/totals")
-        docHashFrame(d).coalesce(1).sortWithinPartitions(col("doc_id"))
-          .write.mode("overwrite").parquet(s"$staging/dochash")
-      }(bm25ApplyDeletes(spark, base, Tables(spark, dir, "documents")
-        .filter(delPred).select(col("doc_id"))))
-    }
+  private[graft] def bm25TombIndexBase(spark: SparkSession, dir: String): String = {
+    val delPred = pmod(col("doc_id"), lit(DelMod)) === lit(DelRem)
+    lazy val d = Tables(spark, dir, "documents")
+    lazy val Seq(full, del) =
+      frameDocsFingerprintPartsWhere(d, lit(true), delPred)
+    bm25Tomb.ensureDeleted(dir)(full, del) { staging =>
+      writeSegment(d, Some("base"), staging)
+      writeDocHash(d, staging)
+    }(bm25ApplyDeletes(spark, _, d.filter(delPred).select(col("doc_id"))))
+  }
 
   /** s33: BM25 search over an index that has taken deletions, in the
     * state Lucene actually serves between a delete and the next

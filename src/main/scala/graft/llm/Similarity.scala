@@ -111,57 +111,14 @@ object Similarity {
       .withColumn("cnorm", sqrt(expr("vec_dot(centroid, centroid)")))
   }
 
-  /** Train-at-most-once guard: corpus dir → persisted index base path
-    * for this JVM. The first toucher FINGERPRINTS the corpus (one
-    * cheap scan) and compares against the marker stored with the
-    * artifact: on a match the on-disk index is reused with NO training
-    * — this is how the artifact survives across processes (bench,
-    * verify and driver runs all share one training) while a
-    * regenerated fixture under the same path can never serve a stale
-    * index to a FRESH JVM (the content fingerprint moves with the
-    * data, unlike an mtime). The guard is first-touch-per-JVM: later
-    * hits return the cached base with no re-validation, so a corpus
-    * regenerated UNDER a long-lived JVM (and, pathologically, two dirs
-    * whose slug sanitization collides — `/tmp/a/b` vs `/tmp/a_b`)
-    * keeps serving the cached generation until restart or
-    * `*ForgetCachedPaths()` — the documented trade every serving
-    * process makes (re-fingerprinting per probe would re-scan the
-    * corpus per query). On a mismatch it trains and republishes through
-    * [[graft.io.ArtifactStore.ensure]] — exclusive cross-process lock,
-    * staged build, atomic rename, manifest-validated marker written
-    * last — so concurrent first-touching JVMs serialize (one trains,
-    * the others reuse) and a reader can never observe a partial or
-    * pruned file set as current. `ivfTrainCount` increments on actual
-    * training only, so the spec can pin "at most one training pass
-    * ever serves s02 + d11 + s14 + s15". */
-  private val ivfIndexCache = graft.io.ValidatedPathCache.single()
-  private[graft] val ivfTrainCount = new java.util.concurrent.atomic.AtomicInteger
-
-  /** Test hook: forget the per-JVM path cache (NOT the on-disk
-    * artifact), so a spec can exercise the cross-process reuse path. */
-  private[graft] def ivfForgetCachedPaths(): Unit = ivfIndexCache.clear()
-
-  /** Content fingerprint of the embeddings table: row count + an
-    * order-independent XOR of per-row hashes (xor, not sum: ANSI mode
-    * makes a Long sum of hashes overflow; rows are distinct by vec_id
-    * so xor cancellation cannot hide a change). One scan, no shuffle
-    * beyond the 1-row aggregate — ~100× cheaper than retraining, and
-    * only ever compared against a marker the same engine wrote. */
-  private def corpusFingerprint(spark: SparkSession, dir: String): String = {
-    val Seq((n, x)) = fingerprintParts(spark, dir, lit(true))
-    fpString(n, x)
-  }
-
-  /** Fingerprint components `(count, xor-of-row-hashes)` of the rows
-    * matching each of `preds` — kept as parts because xor-of-hashes
-    * composes: `fp(A ∪ B) = (nA + nB, xA ^ xB)` for disjoint A and B, so
-    * an incremental consumer derives the post-append fingerprint from
-    * the stored base fingerprint plus a scan of ONLY the new batch — the
-    * property that lets a nightly crawl append to a 100 TB index
-    * without re-reading the corpus ([[s16IncrementalIndexUpdate]]). */
-  private def fingerprintParts(spark: SparkSession, dir: String,
-      preds: Column*): Seq[(Long, Long)] =
-    frameFingerprintPartsWhere(Tables(spark, dir, "embeddings"), preds: _*)
+  /** Fingerprint parts of the whole embeddings table: row count + an
+    * order-independent XOR of per-row hashes (rows are distinct by
+    * vec_id, so xor cancellation cannot hide a change). One scan, no
+    * shuffle beyond the 1-row aggregate — ~100× cheaper than
+    * retraining, and only ever compared against a marker the same
+    * engine wrote. */
+  private def corpusParts(spark: SparkSession, dir: String): (Long, Long) =
+    frameFingerprintParts(Tables(spark, dir, "embeddings"))
 
   /** The same fingerprint over an arbitrary `(vec_id, embedding, …)`
     * frame — what the streaming ingest sink
@@ -171,34 +128,13 @@ object Similarity {
     frameFingerprintPartsWhere(df, lit(true)).head
 
   /** [[frameFingerprintParts]] of `df.filter(p)` for each of `preds`,
-    * all from ONE scan of `df`. */
+    * all from ONE scan of `df` ([[graft.io.ArtifactStore.partsWhere]]). */
   private[graft] def frameFingerprintPartsWhere(df: DataFrame,
       preds: Column*): Seq[(Long, Long)] =
-    partsWhere(df,
+    graft.io.ArtifactStore.partsWhere(df,
       xxhash64(to_json(struct(col("vec_id"), col("embedding")))), preds)
 
-  /** The one fingerprint kernel: `(count, bit_xor of h)` over the rows
-    * matching each predicate, as one aggregate over one scan —
-    * `count(when(p, 1))` and `bit_xor(CASE WHEN p THEN h END)`, an empty
-    * match giving `(0, 0)`. The predicates need not be disjoint (an
-    * "all rows vs deleted rows" pair is one call), and each pair equals
-    * the single-predicate scan of `df.filter(p)` exactly. */
-  private[graft] def partsWhere(df: DataFrame, h: Column,
-      preds: Seq[Column]): Seq[(Long, Long)] = {
-    val ps = preds.indices.map(i => s"p$i")
-    val aggs = ps.flatMap(p => Seq(count(when(col(p), 1)),
-      bit_xor(when(col(p), col("h")))))
-    val r = df.select(h.as("h") +: preds.zip(ps).map { case (c, p) =>
-        c.as(p) }: _*)
-      .agg(aggs.head, aggs.tail: _*).collect()(0)
-    ps.indices.map { i =>
-      val x = 2 * i + 1
-      (r.getLong(2 * i), if (r.isNullAt(x)) 0L else r.getLong(x))
-    }
-  }
-
-  private def fpString(n: Long, x: Long): String =
-    graft.io.ArtifactStore.fingerprint(n, x)
+  private[graft] val ivfIndex = graft.io.Artifact("ivf-index")
 
   /** The persisted IVF index artifact (the judge-visible "train once,
     * probe many" contract a 100 TB ANN pipeline runs — the reference's
@@ -222,14 +158,8 @@ object Similarity {
     * (ivfRankedCte replays the training chain in SQL) still hash-match
     * every probe query. */
   private[graft] def ivfIndexBase(spark: SparkSession, dir: String): String =
-    ivfIndexCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("ivf-index", dir)
-      val fp = corpusFingerprint(spark, dir)
-      val trained =
-        graft.io.ArtifactStore.ensure(base, fp)(ivfBuildInto(spark, dir, _))
-      if (trained) ivfTrainCount.incrementAndGet()
-      base
-    }
+    ivfIndex.ensure(dir)(corpusParts(spark, dir))(
+      ivfBuildFrom(normed(spark, dir), _))
 
   /** THE IVF build pipeline (train centroids → assign every vector →
     * cell-major write), parameterized on the vector SOURCE `(vec_id,
@@ -259,11 +189,6 @@ object Similarity {
       assignToCentroids(v, loaded),
       s"$staging/assignments", Seq("cell"), Seq("vec_id"))
   }
-
-  /** [[ivfBuildFrom]] over the whole corpus at `dir`. */
-  private def ivfBuildInto(spark: SparkSession, dir: String,
-      staging: String): Unit =
-    ivfBuildFrom(normed(spark, dir), staging)
 
   /** Rank-1 cell assignment of `vectors` against `centroids` — the
     * shared kernel of index build ([[ivfIndexBase]]) and incremental
@@ -1025,10 +950,7 @@ object Similarity {
 
   // ---------------------------------------------------------------- s21
 
-  private val pqIndexCache = graft.io.ValidatedPathCache.single()
-  private[graft] val pqTrainCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def pqForgetCachedPaths(): Unit = pqIndexCache.clear()
+  private[graft] val pqIndex = graft.io.Artifact("pq-index")
 
   /** Stored-codes read schema — declared, not inferred, for the same
     * empty-partitioned-dir reason as [[invertedListSchema]]. */
@@ -1058,14 +980,8 @@ object Similarity {
     * are value-identical to the live chain — s21's oracle is s20's SQL
     * verbatim. */
   private[graft] def pqIndexBase(spark: SparkSession, dir: String): String =
-    pqIndexCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("pq-index", dir)
-      val fp = corpusFingerprint(spark, dir)
-      val trained = graft.io.ArtifactStore.ensure(base, fp)(
-        pqBuildInto(spark, dir, _, ivfIndexBase(spark, dir)))
-      if (trained) pqTrainCount.incrementAndGet()
-      base
-    }
+    pqIndex.ensure(dir)(corpusParts(spark, dir))(
+      pqBuildInto(spark, dir, _, ivfIndexBase(spark, dir)))
 
   /** THE PQ build pipeline (train codebook → encode every vector
     * against the STORED codebook → cell-major write), parameterized on
@@ -1258,10 +1174,7 @@ object Similarity {
     * the scan never even lists another label's dirs. */
   val LblTarget = 3
 
-  private val lblPqCache = graft.io.ValidatedPathCache.single()
-  private[graft] val lblBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def lblForgetCachedPaths(): Unit = lblPqCache.clear()
+  private[graft] val lblPqIndex = graft.io.Artifact("pq-index-lbl")
 
   /** Stored-codes read schema of the label-partitioned code table
     * (declared, not inferred — empty partition dirs again). */
@@ -1273,6 +1186,19 @@ object Similarity {
     org.apache.spark.sql.types.StructField("label",
       org.apache.spark.sql.types.IntegerType),
     org.apache.spark.sql.types.StructField("cell", LongType)))
+
+  /** Fingerprint parts covering the LABEL column too: this artifact's
+    * content bakes labels into the partition layout, so a label-only
+    * backfill (vec_id + embedding unchanged — exactly the metadata
+    * dimension the layout serves) must read as a different corpus and
+    * rebuild, where [[corpusParts]] would wrongly revalidate and s27
+    * would serve neighbors filtered by STALE labels (review-caught
+    * r12). */
+  private def labeledCorpusParts(spark: SparkSession,
+      dir: String): (Long, Long) =
+    graft.io.ArtifactStore.partsWhere(Tables(spark, dir, "embeddings"),
+      xxhash64(to_json(struct(col("vec_id"), col("embedding"),
+        col("label")))), Seq(lit(true))).head
 
   /** The LABEL-PARTITIONED code table — the layout answer to s26's
     * post-filter pool starvation (its scaladoc names this fix): under
@@ -1288,41 +1214,18 @@ object Similarity {
     * self-contained. Derived from the serving PQ artifact (same
     * codebook, same cells — one training, two layouts), built once
     * per corpus fingerprint. */
-  /** Fingerprint covering the LABEL column too: this artifact's
-    * content bakes labels into the partition layout, so a label-only
-    * backfill (vec_id + embedding unchanged — exactly the metadata
-    * dimension the layout serves) must read as a different corpus and
-    * rebuild, where [[corpusFingerprint]] would wrongly revalidate
-    * and s27 would serve neighbors filtered by STALE labels
-    * (review-caught r12). */
-  private def labeledCorpusFingerprint(spark: SparkSession,
-      dir: String): String = {
-    val r = Tables(spark, dir, "embeddings")
-      .select(xxhash64(to_json(struct(col("vec_id"), col("embedding"),
-        col("label")))).as("h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
-      .collect()(0)
-    fpString(r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
-
   private[graft] def lblPqIndexBase(spark: SparkSession, dir: String): String =
-    lblPqCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("pq-index-lbl", dir)
-      val fp = labeledCorpusFingerprint(spark, dir)
+    lblPqIndex.ensure(dir)(labeledCorpusParts(spark, dir)) { staging =>
       val pqBase = pqIndexBase(spark, dir)
-      val built = graft.io.ArtifactStore.ensure(base, fp) { staging =>
-        graft.io.Load.parquet(spark, s"$pqBase/codebook").coalesce(1)
-          .write.mode("overwrite").parquet(s"$staging/codebook")
-        val codes = spark.read.schema(pqCodesSchema)
-          .parquet(s"$pqBase/codes")
-        val labels = Tables(spark, dir, "embeddings")
-          .select(col("vec_id"), col("label"))
-        graft.io.Store.writePartitionedParquet(
-          codes.join(labels, "vec_id"),
-          s"$staging/codes", Seq("label", "cell"), Seq("vec_id"))
-      }
-      if (built) lblBuildCount.incrementAndGet()
-      base
+      graft.io.Load.parquet(spark, s"$pqBase/codebook").coalesce(1)
+        .write.mode("overwrite").parquet(s"$staging/codebook")
+      val codes = spark.read.schema(pqCodesSchema)
+        .parquet(s"$pqBase/codes")
+      val labels = Tables(spark, dir, "embeddings")
+        .select(col("vec_id"), col("label"))
+      graft.io.Store.writePartitionedParquet(
+        codes.join(labels, "vec_id"),
+        s"$staging/codes", Seq("label", "cell"), Seq("vec_id"))
     }
 
   /** s27: label-partitioned filtered vector search — "top-5 neighbors
@@ -1355,10 +1258,7 @@ object Similarity {
 
   // ---------------------------------------------------------------- s28
 
-  private val resPqCache = graft.io.ValidatedPathCache.single()
-  private[graft] val resPqBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def resPqForgetCachedPaths(): Unit = resPqCache.clear()
+  private[graft] val resPqIndex = graft.io.Artifact("pq-res-index")
 
   /** The unit-normalized centroids `(cell, cu)` of the stored IVF —
     * the coarse-quantizer frame of the RESIDUAL chain: both the
@@ -1389,14 +1289,8 @@ object Similarity {
     * residual frame, so the artifact round-trips bit-exactly and the
     * DuckDB oracle replays the whole build. */
   private[graft] def pqResIndexBase(spark: SparkSession, dir: String): String =
-    resPqCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("pq-res-index", dir)
-      val fp = corpusFingerprint(spark, dir)
-      val built = graft.io.ArtifactStore.ensure(base, fp)(
-        pqResBuildInto(spark, dir, _, ivfIndexBase(spark, dir)))
-      if (built) resPqBuildCount.incrementAndGet()
-      base
-    }
+    resPqIndex.ensure(dir)(corpusParts(spark, dir))(
+      pqResBuildInto(spark, dir, _, ivfIndexBase(spark, dir)))
 
   /** The residual-PQ build pipeline: unit-normalize the stored lists,
     * subtract each vector's own unit centroid (cell kept INLINE on the
@@ -1485,10 +1379,7 @@ object Similarity {
 
   // ---------------------------------------------------------------- s29
 
-  private val sqCache = graft.io.ValidatedPathCache.single()
-  private[graft] val sqBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def sqForgetCachedPaths(): Unit = sqCache.clear()
+  private[graft] val sqIndex = graft.io.Artifact("sq-index")
 
   /** Stored SQ8 codes read schema (declared — empty partition dirs). */
   private[graft] val sqCodesSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -1539,14 +1430,8 @@ object Similarity {
     * PARTITIONED BY cell`, sharded identically to the lists. Built
     * reading only the IVF artifact. */
   private[graft] def sqIndexBase(spark: SparkSession, dir: String): String =
-    sqCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("sq-index", dir)
-      val fp = corpusFingerprint(spark, dir)
-      val built = graft.io.ArtifactStore.ensure(base, fp)(
-        sqBuildInto(spark, _, ivfIndexBase(spark, dir)))
-      if (built) sqBuildCount.incrementAndGet()
-      base
-    }
+    sqIndex.ensure(dir)(corpusParts(spark, dir))(
+      sqBuildInto(spark, _, ivfIndexBase(spark, dir)))
 
   /** The SQ8 build over the stored inverted lists: unit-normalize with
     * the cell kept inline, then the shared build tail. */
@@ -1676,10 +1561,7 @@ object Similarity {
 
   // ---------------------------------------------------------------- s30
 
-  private val bqCache = graft.io.ValidatedPathCache.single()
-  private[graft] val bqBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def bqForgetCachedPaths(): Unit = bqCache.clear()
+  private[graft] val bqIndex = graft.io.Artifact("bq-index")
 
   /** Stored sign-bit codes read schema (declared — empty partition
     * dirs). The 64 sign bits pack into TWO 32-bit halves rather than
@@ -1723,14 +1605,8 @@ object Similarity {
     * reading only the IVF artifact; appends are trivially frozen-model
     * (sign bits depend on nothing trained). */
   private[graft] def bqIndexBase(spark: SparkSession, dir: String): String =
-    bqCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("bq-index", dir)
-      val fp = corpusFingerprint(spark, dir)
-      val built = graft.io.ArtifactStore.ensure(base, fp)(
-        bqBuildInto(spark, _, ivfIndexBase(spark, dir)))
-      if (built) bqBuildCount.incrementAndGet()
-      base
-    }
+    bqIndex.ensure(dir)(corpusParts(spark, dir))(
+      bqBuildInto(spark, _, ivfIndexBase(spark, dir)))
 
   private def bqBuildInto(spark: SparkSession,
       staging: String, listsBase: String): Unit =
@@ -1898,10 +1774,7 @@ object Similarity {
       .orderBy(col("query_id"))
   }
 
-  private val gtCache = graft.io.ValidatedPathCache.single()
-  private[graft] val gtBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def gtForgetCachedPaths(): Unit = gtCache.clear()
+  private[graft] val gtTop10 = graft.io.Artifact("gt-top10")
 
   private[graft] val gtSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("query_id", LongType),
@@ -1920,15 +1793,9 @@ object Similarity {
     * the live computation ([[exactTruth10Live]]) — oracles keep
     * replaying the computation itself. */
   private def gtBase(spark: SparkSession, dir: String): String =
-    gtCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("gt-top10", dir)
-      val fp = corpusFingerprint(spark, dir)
-      val built = graft.io.ArtifactStore.ensure(base, fp) { staging =>
-        exactTruth10Live(spark, dir).coalesce(4)
-          .write.mode("overwrite").parquet(s"$staging/truth")
-      }
-      if (built) gtBuildCount.incrementAndGet()
-      base
+    gtTop10.ensure(dir)(corpusParts(spark, dir)) { staging =>
+      exactTruth10Live(spark, dir).coalesce(4)
+        .write.mode("overwrite").parquet(s"$staging/truth")
     }
 
   /** Exact ground truth for the audit family (s23/s24/s25), read from
@@ -2063,10 +1930,8 @@ object Similarity {
 
   // ---------------------------------------------------------------- s24
 
-  private val rtIndexCache = graft.io.ValidatedPathCache.pair()
-  private[graft] val rtTrainCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def rtForgetCachedPaths(): Unit = rtIndexCache.clear()
+  private[graft] val rtIvfIndex = graft.io.Artifact("ivf-index-rt")
+  private[graft] val rtPqIndex = graft.io.Artifact("pq-index-rt")
 
   /** The RETRAINED index generation — what the recall-regression
     * response ([[s24RecallRetrain]]) builds when the serving SLO is
@@ -2091,18 +1956,12 @@ object Similarity {
     * generation is genuinely new content; keeping its own base is what
     * lets the spec observe that the loop FIRED, and what a pointer
     * swap needs either way. */
-  private def rtIndexBases(spark: SparkSession, dir: String): (String, String) =
-    rtIndexCache.get(dir) {
-      val fp = corpusFingerprint(spark, dir)
-      val ivfBase = graft.io.ArtifactStore.artifactPath("ivf-index-rt", dir)
-      val ivfBuilt = graft.io.ArtifactStore.ensure(ivfBase, fp)(
-        ivfBuildInto(spark, dir, _))
-      val pqBase = graft.io.ArtifactStore.artifactPath("pq-index-rt", dir)
-      val pqBuilt = graft.io.ArtifactStore.ensure(pqBase, fp)(
-        pqBuildInto(spark, dir, _, ivfBase))
-      if (ivfBuilt || pqBuilt) rtTrainCount.incrementAndGet()
-      (ivfBase, pqBase)
-    }
+  private def rtIndexBases(spark: SparkSession, dir: String): (String, String) = {
+    lazy val parts = corpusParts(spark, dir) // one scan for a cold pair
+    val ivfBase =
+      rtIvfIndex.ensure(dir)(parts)(ivfBuildFrom(normed(spark, dir), _))
+    (ivfBase, rtPqIndex.ensure(dir)(parts)(pqBuildInto(spark, dir, _, ivfBase)))
+  }
 
   /** Recall SLO floor, as a numerator over 10: the retrain arms iff
     * audited `10·hits < RecallFloorNum · truthRows` — i.e. mean recall
@@ -2190,12 +2049,7 @@ object Similarity {
 
   // ---------------------------------------------------------------- s22
 
-  private val pqIncCache = graft.io.ValidatedPathCache.single()
-  private[graft] val pqIncTrainCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] val pqIncAppendCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def pqIncForgetCachedPaths(): Unit = pqIncCache.clear()
+  private[graft] val pqIncIndex = graft.io.Artifact("pq-index-inc")
 
   /** The INCREMENTAL PQ index — the PQ sidecar of [[ivfIncIndexBase]],
     * completing the nightly-append story for the compressed index:
@@ -2208,41 +2062,23 @@ object Similarity {
     * table and the vector lists shard identically at every point in
     * the lifecycle. Union fingerprint derived `(nA+nB, xA^xB)`: the
     * nightly job scans only the batch, never the indexed corpus. */
-  private def pqIncIndexBase(spark: SparkSession, dir: String): String =
-    pqIncCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("pq-index-inc", dir)
-      val ivfBase = ivfIncIndexBase(spark, dir)
-      val Seq((nA, xA), (nB, xB)) =
-        fingerprintParts(spark, dir, !incBatchPred, incBatchPred)
-      val (trained, applied) = graft.io.ArtifactStore.ensureIncremental(
-          base, fpString(nA, xA), fpString(nA + nB, xA ^ xB)) { staging =>
-        val nvBase = pqNv(spark, dir).filter(!incBatchPred)
-        val subBase = pqSub(nvBase)
-        pqTrainCodebook(nvBase, subBase).coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/codebook")
-        val cb = graft.io.Load.parquet(spark, s"$staging/codebook")
-        // cells from the incremental IVF artifact: the encode side is
-        // base-only, so the join restricts the lists to base rows
-        val cells = invertedListsAt(spark, ivfBase)
-          .select(col("vec_id"), col("cell"))
-        graft.io.Store.writePartitionedParquet(
-          pqEncode(subBase, cb).join(cells, "vec_id"),
-          s"$staging/codes", Seq("cell"), Seq("vec_id"))
-      } { live =>
+  private def pqIncIndexBase(spark: SparkSession, dir: String): String = {
+    lazy val Seq(base, batch) = incParts(spark, dir)
+    // cells from the incremental IVF artifact: the encode side is
+    // base-only (or batch-only), so the join restricts the lists to it
+    def cells = invertedListsAt(spark, ivfIncIndexBase(spark, dir))
+      .select(col("vec_id"), col("cell"))
+    pqIncIndex.ensureIncremental(dir)(base, batch)(
+      pqBuildFromNv(pqNv(spark, dir).filter(!incBatchPred), _, cells)) {
+      live =>
         val cb = graft.io.Load.parquet(spark, s"$live/codebook")
         val nvBatch = pqNv(spark, dir).filter(incBatchPred)
-        val cells = invertedListsAt(spark, ivfBase)
-          .select(col("vec_id"), col("cell"))
-        pqEncode(pqSub(nvBatch), cb).join(cells, "vec_id")
-          .repartition(col("cell"))
-          .sortWithinPartitions(col("cell"), col("vec_id"))
-          .write.mode("append").partitionBy("cell")
-          .parquet(s"$live/codes")
-      }
-      if (trained) pqIncTrainCount.incrementAndGet()
-      if (applied) pqIncAppendCount.incrementAndGet()
-      base
+        graft.io.Store.writePartitionedParquet(
+          pqEncode(pqSub(nvBatch), cb).join(cells, "vec_id"),
+          s"$live/codes", Seq("cell"), Seq("vec_id"),
+          org.apache.spark.sql.SaveMode.Append)
     }
+  }
 
   /** s22: incremental IVF-PQ — tonight's crawl batch joins the
     * COMPRESSED index without any retraining: vectors appended to the
@@ -2670,12 +2506,13 @@ object Similarity {
     * vectors — a realistic nightly-batch fraction. */
   private[graft] val incBatchPred = col("vec_id") % 7 === 3
 
-  private val ivfIncCache = graft.io.ValidatedPathCache.single()
-  private[graft] val ivfIncTrainCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] val ivfIncAppendCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def ivfIncForgetCachedPaths(): Unit = ivfIncCache.clear()
+  /** Fingerprint parts of the two sides of the split, base then batch,
+    * from one scan of the embeddings table. */
+  private def incParts(spark: SparkSession, dir: String): Seq[(Long, Long)] =
+    frameFingerprintPartsWhere(Tables(spark, dir, "embeddings"),
+      !incBatchPred, incBatchPred)
+
+  private[graft] val ivfIncIndex = graft.io.Artifact("ivf-index-inc")
 
   /** The INCREMENTAL index artifact behind [[s16IncrementalIndexUpdate]]:
     * trained once on the base corpus, then the batch is folded in by
@@ -2694,38 +2531,18 @@ object Similarity {
     * The union fingerprint is DERIVED — `(nA + nB, xA ^ xB)` — so at
     * 100 TB the nightly job scans only the new batch: the base
     * fingerprint comes from the artifact's own marker, never from
-    * re-reading the indexed corpus ([[fingerprintParts]]). */
-  private def ivfIncIndexBase(spark: SparkSession, dir: String): String =
-    ivfIncCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("ivf-index-inc", dir)
-      val Seq((nA, xA), (nB, xB)) =
-        fingerprintParts(spark, dir, !incBatchPred, incBatchPred)
-      val fpBase = fpString(nA, xA)
-      val fpUnion = fpString(nA + nB, xA ^ xB)
-      val (trained, applied) =
-        graft.io.ArtifactStore.ensureIncremental(base, fpBase, fpUnion) {
-          staging =>
-            val corpus = normed(spark, dir).filter(!incBatchPred)
-            val centroids = ivfTrainCentroids(corpus)
-            centroids.coalesce(1).write.mode("overwrite")
-              .parquet(s"$staging/centroids")
-            val loaded = graft.io.Load.parquet(spark, s"$staging/centroids")
-            graft.io.Store.writePartitionedParquet(
-              assignToCentroids(corpus, loaded),
-              s"$staging/assignments", Seq("cell"), Seq("vec_id"))
-        } { live =>
-          val centroids = graft.io.Load.parquet(spark, s"$live/centroids")
-          assignToCentroids(normed(spark, dir).filter(incBatchPred),
-            centroids)
-            .repartition(col("cell"))
-            .sortWithinPartitions(col("cell"), col("vec_id"))
-            .write.mode("append").partitionBy("cell")
-            .parquet(s"$live/assignments")
-        }
-      if (trained) ivfIncTrainCount.incrementAndGet()
-      if (applied) ivfIncAppendCount.incrementAndGet()
-      base
+    * re-reading the indexed corpus ([[incParts]]). */
+  private def ivfIncIndexBase(spark: SparkSession, dir: String): String = {
+    lazy val Seq(base, batch) = incParts(spark, dir)
+    ivfIncIndex.ensureIncremental(dir)(base, batch)(
+      ivfBuildFrom(normed(spark, dir).filter(!incBatchPred), _)) { live =>
+      val centroids = graft.io.Load.parquet(spark, s"$live/centroids")
+      graft.io.Store.writePartitionedParquet(
+        assignToCentroids(normed(spark, dir).filter(incBatchPred), centroids),
+        s"$live/assignments", Seq("cell"), Seq("vec_id"),
+        org.apache.spark.sql.SaveMode.Append)
     }
+  }
 
   /** s16: incremental index update — tonight's crawl batch (1/7 of the
     * vectors) is appended to the persisted IVF index by assignment to

@@ -226,10 +226,7 @@ object Tokenizer {
   // the persisted vocabulary — tokenizers are trained once and SHIPPED
   // ------------------------------------------------------------------
 
-  private val vocabCache = graft.io.ValidatedPathCache.single()
-  private[graft] val bpeTrainCount =
-    new java.util.concurrent.atomic.AtomicInteger
-  private[graft] def bpeForgetCachedPaths(): Unit = vocabCache.clear()
+  private[graft] val bpeVocab = graft.io.Artifact("bpe-vocab")
 
   /** Declared read schemas (empty-corpus artifacts write file-less
     * dirs; and an artifact reader knows its format). */
@@ -268,25 +265,18 @@ object Tokenizer {
     * exact string/long round-trip keep every oracle (which replays
     * training in SQL) hash-identical. */
   private[graft] def bpeVocabBase(spark: SparkSession, dir: String): String =
-    vocabCache.get(dir) {
-      val base = graft.io.ArtifactStore.artifactPath("bpe-vocab", dir)
-      val (n, x) = Retrieval.frameDocsFingerprintParts(
-        Tables(spark, dir, "documents"))
-      val built = graft.io.ArtifactStore.ensure(base,
-          graft.io.ArtifactStore.fingerprint(n, x)) { staging =>
-        val (merges, vocab) = bpeRounds(spark, dir)
-        merges.coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/merges")
-        vocab.coalesce(1).sortWithinPartitions(col("w"))
-          .write.mode("overwrite").parquet(s"$staging/vocab")
-        // both tables are on disk: the vocabulary checkpoint (and the
-        // winners the merge union references) are dead — free them
-        // instead of leaking one vocab-scale block set per training
-        // (the d07 storage-regression class)
-        graft.Checkpoints.release(vocab)
-      }
-      if (built) bpeTrainCount.incrementAndGet()
-      base
+    bpeVocab.ensure(dir)(Retrieval.frameDocsFingerprintParts(
+        Tables(spark, dir, "documents"))) { staging =>
+      val (merges, vocab) = bpeRounds(spark, dir)
+      merges.coalesce(1).write.mode("overwrite")
+        .parquet(s"$staging/merges")
+      vocab.coalesce(1).sortWithinPartitions(col("w"))
+        .write.mode("overwrite").parquet(s"$staging/vocab")
+      // both tables are on disk: the vocabulary checkpoint (and the
+      // winners the merge union references) are dead — free them
+      // instead of leaking one vocab-scale block set per training
+      // (the d07 storage-regression class)
+      graft.Checkpoints.release(vocab)
     }
 
   /** t19: learn the first [[BpeMerges]] BPE merges over the corpus.
@@ -346,7 +336,7 @@ object Tokenizer {
     */
   /** Per-JVM memo of the COLLECTED 8-row merge list, keyed by artifact
     * base and validated against the marker fingerprint on every read
-    * (the ValidatedPathCache discipline, inlined for a non-path
+    * (the [[graft.io.Artifact]] memo discipline, inlined for a non-path
     * value): a streaming ingest calls [[encodeDocs]] per micro-batch,
     * and re-collecting an immutable shipped model per batch is a
     * needless driver-side job on the hot path (review-caught); a

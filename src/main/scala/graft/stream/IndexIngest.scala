@@ -1,9 +1,9 @@
 package graft.stream
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-import graft.io.ArtifactStore
+import graft.io.{ArtifactStore, Store}
 import graft.llm.{Dedup, Retrieval, Similarity}
 
 /** Streaming maintenance of a persisted IVF index: the
@@ -42,9 +42,6 @@ object IndexIngest {
     df.withColumn("norm", sqrt(expr("vec_dot(embedding, embedding)")))
       .filter(col("norm") > 0)
   }
-
-  private def fpStr(n: Long, x: Long): String =
-    ArtifactStore.fingerprint(n, x)
 
   /** Every touch of artifact-internal files (replay marks, generation
     * pointers, fragmentation probes) goes through the store's backend
@@ -125,7 +122,7 @@ object IndexIngest {
     if (ArtifactStore.currentFingerprint(base).isEmpty)
       ArtifactStore.restoreAside(base)
     val (n, x) = parts
-    val offered = fpStr(n, x)
+    val offered = ArtifactStore.fingerprint(n, x)
     ArtifactStore.currentFingerprint(base) match {
       case None =>
         ArtifactStore.ensure(base, offered)(build)
@@ -218,9 +215,7 @@ object IndexIngest {
       throw new IllegalStateException(
         s"no valid index artifact at $base — bootstrap first"))
     val (pn, px) = parts
-    val Array(cn, cx) = cur.split("_")
-    val next = fpStr(cn.toLong + pn,
-      java.lang.Long.parseUnsignedLong(cx) ^ px)
+    val next = ArtifactStore.composed(cur, pn, px)
     val ok = ArtifactStore.mutate(base, cur, next) { live =>
       body(live)
       writeStateAtomic(base, readState(base) + (markKey -> batchId))
@@ -285,11 +280,9 @@ object IndexIngest {
     appendOnce(base, batchId,
         Similarity.frameFingerprintParts(v), appId) { live =>
       val centroids = graft.io.Load.parquet(spark, s"$live/centroids")
-      Similarity.assignToCentroids(v, centroids)
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$live/assignments")
+      Store.writePartitionedParquet(
+        Similarity.assignToCentroids(v, centroids),
+        s"$live/assignments", Seq("cell"), Seq("vec_id"), SaveMode.Append)
     }
   }
 
@@ -363,13 +356,8 @@ object IndexIngest {
   def bm25Bootstrap(base: String, docs: DataFrame): BootstrapStatus =
     bootstrapOnce(base, Retrieval.frameDocsFingerprintParts(docs)) {
       staging =>
-        val (p, t) = Retrieval.segmentPostingsFrame(docs, "base")
-        graft.io.Store.writePartitionedParquet(
-          p, s"$staging/postings", Seq("tbucket"), Seq("term", "doc_id"))
-        t.coalesce(1).write.mode("overwrite").parquet(s"$staging/totals")
-        Retrieval.docHashFrame(docs)
-          .coalesce(1).sortWithinPartitions(col("doc_id"))
-          .write.mode("overwrite").parquet(s"$staging/dochash")
+        Retrieval.writeSegment(docs, Some("base"), staging)
+        Retrieval.writeDocHash(docs, staging)
     }
 
   /** Merge the BM25 index's accumulated segments into one — the real
@@ -444,15 +432,8 @@ object IndexIngest {
       batch: DataFrame, batchId: Long): Unit = {
     appendOnce(base, batchId,
       Retrieval.frameDocsFingerprintParts(batch), appId) { live =>
-      val (p, t) = Retrieval.segmentPostingsFrame(batch, s"b$batchId")
-      p.repartition(col("tbucket"))
-        .sortWithinPartitions(col("tbucket"), col("term"), col("doc_id"))
-        .write.mode("append").partitionBy("tbucket")
-        .parquet(s"$live/postings")
-      t.coalesce(1).write.mode("append").parquet(s"$live/totals")
-      Retrieval.docHashFrame(batch)
-        .coalesce(1).sortWithinPartitions(col("doc_id"))
-        .write.mode("append").parquet(s"$live/dochash")
+      Retrieval.writeSegment(batch, Some(s"b$batchId"), live, SaveMode.Append)
+      Retrieval.writeDocHash(batch, live, SaveMode.Append)
     }
   }
 
@@ -509,12 +490,10 @@ object IndexIngest {
       val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
       val cells = Similarity.assignToCentroids(v, centroids)
         .select(col("vec_id"), col("cell"))
-      Similarity.pqEncode(Similarity.pqSub(Similarity.pqNvFrame(v)), cb)
-        .join(cells, "vec_id")
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$live/codes")
+      Store.writePartitionedParquet(
+        Similarity.pqEncode(Similarity.pqSub(Similarity.pqNvFrame(v)), cb)
+          .join(cells, "vec_id"),
+        s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
     }
   }
 
@@ -1155,7 +1134,7 @@ object IndexIngest {
     val v = graft.llm.IndexDelete.liveListsAt(spark, ivfBase)
       .select(col("vec_id"), col("embedding"), col("norm"))
     val (n, x) = Similarity.frameFingerprintParts(v)
-    ArtifactStore.ensure(ivfBase, fpStr(n, x)) { staging =>
+    ArtifactStore.ensure(ivfBase, ArtifactStore.fingerprint(n, x)) { staging =>
       Similarity.ivfBuildFrom(v, staging)
       copyStateInto(ivfBase, staging)
     }
@@ -1309,12 +1288,10 @@ object IndexIngest {
     val v = withNorm(batch)
     appendOnce(base, batchId,
         Similarity.frameFingerprintParts(v), appId) { live =>
-      Similarity.sqEncode(sqNvc(v, ivfBase),
-          graft.io.Load.parquet(spark, s"$live/params"))
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$live/codes")
+      Store.writePartitionedParquet(
+        Similarity.sqEncode(sqNvc(v, ivfBase),
+          graft.io.Load.parquet(spark, s"$live/params")),
+        s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
     }
   }
 
@@ -1358,11 +1335,8 @@ object IndexIngest {
     val v = withNorm(batch)
     appendOnce(base, batchId,
         Similarity.frameFingerprintParts(v), appId) { live =>
-      Similarity.bqBits(sqNvc(v, ivfBase))
-        .repartition(col("cell"))
-        .sortWithinPartitions(col("cell"), col("vec_id"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$live/codes")
+      Store.writePartitionedParquet(Similarity.bqBits(sqNvc(v, ivfBase)),
+        s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
     }
   }
 
@@ -1383,7 +1357,7 @@ object IndexIngest {
     * corpus (digests + band postings through the atomic-publish path);
     * a no-op when the artifact is already current for these docs. */
   def lshBootstrap(base: String, docs: DataFrame): BootstrapStatus =
-    bootstrapOnce(base, Dedup.docsFingerprintParts(docs)) {
+    bootstrapOnce(base, Retrieval.frameDocsFingerprintParts(docs)) {
       Dedup.writeDedupIndexInto(docs, _)
     }
 
@@ -1400,7 +1374,7 @@ object IndexIngest {
     * never partial. */
   def lshAppendSink(base: String, appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit =
-    appendOnce(base, batchId, Dedup.docsFingerprintParts(batch), appId) {
+    appendOnce(base, batchId, Retrieval.frameDocsFingerprintParts(batch), appId) {
       Dedup.appendDedupIndexInto(batch, _)
     }
 

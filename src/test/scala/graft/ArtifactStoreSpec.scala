@@ -433,7 +433,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
     // moved. The "other JVM" is simulated by mutating the artifact
     // directly, bypassing the cache.
     val base = freshBase()
-    val cache = graft.io.ValidatedPathCache.single()
+    val cache = new graft.io.ValidatedPathCache()
     var refreshes = 0
     def resolve(): String = cache.get("corpus") {
       refreshes += 1
@@ -458,7 +458,7 @@ class ArtifactStoreSpec extends AnyFunSuite {
       "a swept marker must invalidate the memo")
     // a refresh that does NOT leave a valid artifact is served but
     // not cached — the next read retries instead of pinning a husk
-    val cache2 = graft.io.ValidatedPathCache.single()
+    val cache2 = new graft.io.ValidatedPathCache()
     val ghost = freshBase()
     var tries = 0
     def resolveGhost(): String = cache2.get("corpus") { tries += 1; ghost }

@@ -86,7 +86,7 @@ class BoundedSpec extends AnyFunSuite {
     }
     val bases = Seq("a", "b", "c").map(mkArtifact)
     val refreshes = new AtomicInteger
-    val cache = new ValidatedPathCache[String](b => Seq(b), maxEntries = 2)
+    val cache = new ValidatedPathCache(maxEntries = 2)
     def resolve(i: Int): String =
       cache.get(s"corpus-$i") { refreshes.incrementAndGet(); bases(i) }
     resolve(0); resolve(1)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ArtifactStore
-import graft.llm.{Dedup, IndexDelete, Retrieval, Similarity}
+import graft.llm.{Authority, Dedup, IndexDelete, Retrieval, Similarity}
 
 /** The fused fingerprint kernel (one scan for every predicate of an
   * artifact's pair) yields exactly the parts — and so the marker
@@ -94,8 +94,38 @@ class FusedFingerprintSpec extends AnyFunSuite {
         val docs = Tables(spark, dir(), "documents")
         assert(Similarity.frameFingerprintParts(emb) === vecParts(emb))
         assert(Retrieval.frameDocsFingerprintParts(docs) === docParts(docs))
-        assert(Dedup.docsFingerprintParts(docs) === docParts(docs))
       }
+  }
+
+  test("labeled and click-event markers equal the per-frame kernels they replaced") {
+    // one scan per frame, as these three kinds fingerprinted before
+    def frameFp(df: DataFrame, h: Column): String = {
+      val r = df.select(h.as("h"))
+        .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("s"))
+        .collect()(0)
+      ArtifactStore.fingerprint(r.getLong(0),
+        if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    val clicks = Tables(spark, sf, "events")
+      .filter(col("event_type") === "click")
+    val eventHash = xxhash64(col("event_id"), col("user_id"), col("props"))
+    val isNewEvent = col("event_id") % 10 === 6
+    val isGen1Event = col("event_id") % 10 === 7
+    val labeled = frameFp(Tables(spark, sf, "embeddings"),
+      xxhash64(to_json(struct(col("vec_id"), col("embedding"), col("label")))))
+    // g05's marker is fp(G1), derived from the disjoint sides G0 and
+    // G1 \ G0; G1 is also g04's "old events" side
+    val g1 = frameFp(clicks.filter(!isNewEvent), eventHash)
+    assert(g1 != frameFp(clicks.filter(!isNewEvent && !isGen1Event), eventHash))
+    Seq(
+      (Similarity.lblPqIndex, () => Similarity.s27LabelPartitionedSearch(spark, sf), labeled),
+      (Authority.prScores, () => Authority.g04WarmStartPageRank(spark, sf), g1),
+      (Authority.rollScores, () => Authority.g05RollingPageRank(spark, sf), g1)
+    ).foreach { case (a, query, expected) =>
+      query().collect()
+      assert(ArtifactStore.currentFingerprint(a.base(sf)).contains(expected),
+        a.kind)
+    }
   }
 
   test("a fused pair reads the corpus once") {

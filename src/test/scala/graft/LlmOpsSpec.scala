@@ -1007,10 +1007,10 @@ class LlmOpsSpec extends AnyFunSuite {
     }
     // build-once: a fresh first-toucher (path cache forgotten = the next
     // serving JVM) reuses the stored residual codebook + codes
-    Similarity.resPqForgetCachedPaths()
-    val b0 = Similarity.resPqBuildCount.get()
+    Similarity.resPqIndex.forget()
+    val b0 = Similarity.resPqIndex.builds.get()
     Similarity.s28ResidualPqSearch(spark, sf).collect()
-    assert(Similarity.resPqBuildCount.get() == b0,
+    assert(Similarity.resPqIndex.builds.get() == b0,
       "a matching fingerprint must reuse the stored residual-PQ index")
     // recall@10 against exact truth (s01's brute-force list), residual
     // codes vs the raw-vector twin s20 on the same probes/pool/refine.
@@ -1047,10 +1047,10 @@ class LlmOpsSpec extends AnyFunSuite {
       }
     }
     // build-once: a fresh first-toucher reuses the stored params + codes
-    Similarity.sqForgetCachedPaths()
-    val b0 = Similarity.sqBuildCount.get()
+    Similarity.sqIndex.forget()
+    val b0 = Similarity.sqIndex.builds.get()
     Similarity.s29SqSearch(spark, sf).collect()
-    assert(Similarity.sqBuildCount.get() == b0,
+    assert(Similarity.sqIndex.builds.get() == b0,
       "a matching fingerprint must reuse the stored SQ8 index")
     // the compression/fidelity trade must be visible: SQ8 spends 64 B
     // per vector (8 bits per dimension) where PQ spends 8 B (16
@@ -1075,10 +1075,10 @@ class LlmOpsSpec extends AnyFunSuite {
       }
     }
     // build-once: a fresh first-toucher reuses the stored codes
-    Similarity.bqForgetCachedPaths()
-    val b0 = Similarity.bqBuildCount.get()
+    Similarity.bqIndex.forget()
+    val b0 = Similarity.bqIndex.builds.get()
     Similarity.s30BqSearch(spark, sf).collect()
-    assert(Similarity.bqBuildCount.get() == b0,
+    assert(Similarity.bqIndex.builds.get() == b0,
       "a matching fingerprint must reuse the stored sign-bit index")
     // measured on this fixture: bq=481 / pq=487 / sq=561 hits — at the
     // 32-candidate pool the exact refine recovers nearly all of PQ's
@@ -1186,7 +1186,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // serving state — the crash-between-states recovery path is the
     // second touch of the same machine
     graft.io.ArtifactStore.deleteTree(base)
-    IndexDelete.tombForgetCachedPaths()
+    IndexDelete.ivfTomb.forget()
     val rows2 = IndexDelete.s32TombstoneSearch(spark, sf).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rn"),
         r.getAs[Long]("neighbor_id"))).toSet
@@ -1277,11 +1277,11 @@ class LlmOpsSpec extends AnyFunSuite {
     // JVM) must reuse the stored panel with ZERO rebuilds — the GT
     // pass is the expensive audit stage and is a pure function of the
     // corpus, so it runs at artifact-build cadence only
-    Similarity.gtForgetCachedPaths()
-    val b0 = Similarity.gtBuildCount.get()
+    Similarity.gtTop10.forget()
+    val b0 = Similarity.gtTop10.builds.get()
     Similarity.s23RecallAudit(spark, sf).collect()
     Similarity.s25NprobeSweep(spark, sf).collect()
-    assert(Similarity.gtBuildCount.get() == b0,
+    assert(Similarity.gtTop10.builds.get() == b0,
       "a matching fingerprint must reuse the stored ground truth")
     // and the audit PLAN reads the artifact — the all-pairs subtree
     // lives in the builder, not in the per-audit query
@@ -1319,10 +1319,12 @@ class LlmOpsSpec extends AnyFunSuite {
       assert(graft.io.ArtifactStore.currentFingerprint(
           graft.io.ArtifactStore.artifactPath(kind, sf)).nonEmpty,
         s"$kind not published")
-    Similarity.rtForgetCachedPaths()
-    val t0 = Similarity.rtTrainCount.get()
+    def rtBuilds = Similarity.rtIvfIndex.builds.get() +
+      Similarity.rtPqIndex.builds.get()
+    Similarity.rtIvfIndex.forget(); Similarity.rtPqIndex.forget()
+    val t0 = rtBuilds
     Similarity.s24RecallRetrain(spark, sf).collect()
-    assert(Similarity.rtTrainCount.get() == t0,
+    assert(rtBuilds == t0,
       "a matching fingerprint must reuse the retrained generation")
   }
 
@@ -1488,10 +1490,10 @@ class LlmOpsSpec extends AnyFunSuite {
       || got.map(_._2).toSet == Set("exact", "unique"))
     // build-once: a fresh first-toucher (path cache forgotten = the
     // next batch's JVM) reuses the stored index with zero rebuilds
-    Dedup.dedupIdxForgetCachedPaths()
-    val b0 = Dedup.dedupIdxBuildCount.get()
+    Dedup.dedupIndex.forget()
+    val b0 = Dedup.dedupIndex.builds.get()
     Dedup.d18PersistedDedupIndex(spark, sf).collect()
-    assert(Dedup.dedupIdxBuildCount.get() == b0,
+    assert(Dedup.dedupIndex.builds.get() == b0,
       "a matching fingerprint must reuse the stored dedup index")
   }
 
@@ -1555,13 +1557,13 @@ class LlmOpsSpec extends AnyFunSuite {
     // build-once + append-once: a fresh first-toucher (path cache
     // forgotten = the next nightly job's JVM) finds the artifact at
     // the UNION fingerprint — zero builds, zero appends
-    Dedup.dedupIncForgetCachedPaths()
-    val b0 = Dedup.dedupIncBuildCount.get()
-    val a0 = Dedup.dedupIncAppendCount.get()
+    Dedup.dedupIncIndex.forget()
+    val b0 = Dedup.dedupIncIndex.builds.get()
+    val a0 = Dedup.dedupIncIndex.appends.get()
     Dedup.d19IncrementalIndexAppend(spark, sf).collect()
-    assert(Dedup.dedupIncBuildCount.get() == b0,
+    assert(Dedup.dedupIncIndex.builds.get() == b0,
       "repeat touch must not rebuild the base index")
-    assert(Dedup.dedupIncAppendCount.get() == a0,
+    assert(Dedup.dedupIncIndex.appends.get() == a0,
       "repeat touch must not re-append the batch")
   }
 

@@ -116,13 +116,13 @@ class RetrievalSpec extends AnyFunSuite {
     // repeat touch from a "fresh JVM" (path cache forgotten): the
     // artifact is already at the union fingerprint — zero builds, zero
     // appends, and the delta segment is genuinely present
-    Retrieval.bm25IncForgetCachedPaths()
-    val b0 = Retrieval.bm25IncBuildCount.get()
-    val a0 = Retrieval.bm25IncAppendCount.get()
+    Retrieval.bm25IncIndex.forget()
+    val b0 = Retrieval.bm25IncIndex.builds.get()
+    val a0 = Retrieval.bm25IncIndex.appends.get()
     Retrieval.s17IncrementalBm25(spark, sf).collect()
-    assert(Retrieval.bm25IncBuildCount.get() == b0,
+    assert(Retrieval.bm25IncIndex.builds.get() == b0,
       "repeat touch must not rebuild the base segment")
-    assert(Retrieval.bm25IncAppendCount.get() == a0,
+    assert(Retrieval.bm25IncIndex.appends.get() == a0,
       "repeat touch must not re-append the delta segment")
   }
 

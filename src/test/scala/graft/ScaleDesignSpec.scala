@@ -465,13 +465,13 @@ class ScaleDesignSpec extends AnyFunSuite {
       s"t19's scan must read the vocabulary artifact, not the corpus:\n$plan")
     assert(!plan.toString.contains("Join"),
       s"the served merge table re-derives round work:\n$plan")
-    llm.Tokenizer.bpeForgetCachedPaths()
-    val t0 = llm.Tokenizer.bpeTrainCount.get()
+    llm.Tokenizer.bpeVocab.forget()
+    val t0 = llm.Tokenizer.bpeVocab.builds.get()
     llm.Tokenizer.t19BpeMerges(spark, sf).collect()
     llm.Tokenizer.t20BpeEncode(spark, sf).collect()
     llm.Tokenizer.t21BpeFertility(spark, sf).collect()
     llm.Pipeline.p22BpePacking(spark, sf).collect()
-    assert(llm.Tokenizer.bpeTrainCount.get() == t0,
+    assert(llm.Tokenizer.bpeVocab.builds.get() == t0,
       "a matching fingerprint must reuse the shipped tokenizer — " +
         "the family retrained")
   }
@@ -794,11 +794,11 @@ class ScaleDesignSpec extends AnyFunSuite {
       "s10 must scan the persisted postings artifact")
     // build-once: s10 + s13 after a path-cache reset reuse the stored
     // index with zero further builds (cross-process reuse contract)
-    llm.Retrieval.bm25ForgetCachedPaths()
-    val before = llm.Retrieval.bm25BuildCount.get()
+    llm.Retrieval.bm25Index.forget()
+    val before = llm.Retrieval.bm25Index.builds.get()
     SparkEntry.queries("s10_bm25_topk")(spark, sf).collect()
     SparkEntry.queries("s13_hybrid_rrf")(spark, sf).collect()
-    assert(llm.Retrieval.bm25BuildCount.get() == before,
+    assert(llm.Retrieval.bm25Index.builds.get() == before,
       "a matching fingerprint must reuse the stored BM25 index")
   }
 
@@ -1399,12 +1399,12 @@ class ScaleDesignSpec extends AnyFunSuite {
     // assignments laid out cell-major (one partition dir per cell);
     // (c) the stored inverted lists are exactly the rank-1 assignment
     // a live ranking against the stored centroids produces.
-    val before = llm.Similarity.ivfTrainCount.get()
+    val before = llm.Similarity.ivfIndex.builds.get()
     llm.Similarity.s02IvfTopK(spark, sf).collect()
     llm.DupClusters.d11SemDedup(spark, sf).collect()
     llm.Similarity.s14HardNegatives(spark, sf).collect()
     llm.Similarity.s15IndexProbe(spark, sf).collect()
-    val trained = llm.Similarity.ivfTrainCount.get() - before
+    val trained = llm.Similarity.ivfIndex.builds.get() - before
     assert(trained <= 1,
       s"four probe queries caused $trained training passes (want <= 1)")
     val base = new java.io.File(llm.Similarity.ivfIndexBase(spark, sf))
@@ -1426,10 +1426,10 @@ class ScaleDesignSpec extends AnyFunSuite {
     // per-JVM path cache) fingerprints the corpus, matches the stored
     // marker, and reuses the index with ZERO training — bench, verify
     // and driver runs all share one training pass per fixture
-    llm.Similarity.ivfForgetCachedPaths()
-    val before2 = llm.Similarity.ivfTrainCount.get()
+    llm.Similarity.ivfIndex.forget()
+    val before2 = llm.Similarity.ivfIndex.builds.get()
     llm.Similarity.s02IvfTopK(spark, sf).collect()
-    assert(llm.Similarity.ivfTrainCount.get() == before2,
+    assert(llm.Similarity.ivfIndex.builds.get() == before2,
       "a matching fingerprint must reuse the stored index, not retrain")
     // tamper detection end-to-end: validity is manifest-backed, not
     // marker-only — prune one inverted-list part-file (a tmp-reaper's
@@ -1445,10 +1445,10 @@ class ScaleDesignSpec extends AnyFunSuite {
       }.get
       finally pruned.close()
     Files.delete(victim)
-    llm.Similarity.ivfForgetCachedPaths()
-    val before3 = llm.Similarity.ivfTrainCount.get()
+    llm.Similarity.ivfIndex.forget()
+    val before3 = llm.Similarity.ivfIndex.builds.get()
     llm.Similarity.s02IvfTopK(spark, sf).collect()
-    assert(llm.Similarity.ivfTrainCount.get() == before3 + 1,
+    assert(llm.Similarity.ivfIndex.builds.get() == before3 + 1,
       "a pruned inverted-list file must invalidate the artifact")
     assert(llm.Similarity.ivfInvertedLists(spark, sf).count() == wholeCount,
       "the retrained index must be whole again")
@@ -1515,17 +1515,17 @@ class ScaleDesignSpec extends AnyFunSuite {
     // bootstrap this JVM's view (may build + append once if no prior
     // test touched the incremental artifact)
     llm.Similarity.s16IncrementalIndexUpdate(spark, sf).collect()
-    val t0 = llm.Similarity.ivfIncTrainCount.get()
-    val a0 = llm.Similarity.ivfIncAppendCount.get()
+    val t0 = llm.Similarity.ivfIncIndex.builds.get()
+    val a0 = llm.Similarity.ivfIncIndex.appends.get()
     // a fresh first-toucher (path cache forgotten = another JVM / the
     // next nightly job) finds the artifact already at the UNION
     // fingerprint: ZERO training and ZERO appends — repeat runs of the
     // pipeline never re-pay the base corpus
-    llm.Similarity.ivfIncForgetCachedPaths()
+    llm.Similarity.ivfIncIndex.forget()
     val rows = llm.Similarity.s16IncrementalIndexUpdate(spark, sf).collect()
-    assert(llm.Similarity.ivfIncTrainCount.get() == t0,
+    assert(llm.Similarity.ivfIncIndex.builds.get() == t0,
       "repeat touch must not retrain the incremental index")
-    assert(llm.Similarity.ivfIncAppendCount.get() == a0,
+    assert(llm.Similarity.ivfIncIndex.appends.get() == a0,
       "repeat touch must not re-append the batch")
     // the appended batch is IN the index: batch vectors come back as
     // neighbors (they are each other's nearest by construction of the
@@ -1537,13 +1537,13 @@ class ScaleDesignSpec extends AnyFunSuite {
 
   test("s22 incremental PQ: batch codes appended against the frozen codebook, repeat touch no-op") {
     llm.Similarity.s22IncrementalPqSearch(spark, sf).collect()
-    val t0 = llm.Similarity.pqIncTrainCount.get()
-    val a0 = llm.Similarity.pqIncAppendCount.get()
-    llm.Similarity.pqIncForgetCachedPaths()
+    val t0 = llm.Similarity.pqIncIndex.builds.get()
+    val a0 = llm.Similarity.pqIncIndex.appends.get()
+    llm.Similarity.pqIncIndex.forget()
     val rows = llm.Similarity.s22IncrementalPqSearch(spark, sf).collect()
-    assert(llm.Similarity.pqIncTrainCount.get() == t0,
+    assert(llm.Similarity.pqIncIndex.builds.get() == t0,
       "repeat touch must not retrain the incremental PQ codebook")
-    assert(llm.Similarity.pqIncAppendCount.get() == a0,
+    assert(llm.Similarity.pqIncIndex.appends.get() == a0,
       "repeat touch must not re-encode/re-append the batch codes")
     // the batch is IN the compressed index: appended vectors come back
     // as neighbors through codes the base corpus never recomputed
@@ -1599,10 +1599,10 @@ class ScaleDesignSpec extends AnyFunSuite {
     // fresh first-toucher resumes from it with only the 2 refinement
     // rounds, and the grown graph's new nodes are ranked too
     llm.Authority.g04WarmStartPageRank(spark, sf).collect()
-    llm.Authority.prForgetCachedPaths()
-    val b0 = llm.Authority.prBuildCount.get()
+    llm.Authority.prScores.forget()
+    val b0 = llm.Authority.prScores.builds.get()
     val rows = llm.Authority.g04WarmStartPageRank(spark, sf).collect()
-    assert(llm.Authority.prBuildCount.get() == b0,
+    assert(llm.Authority.prScores.builds.get() == b0,
       "a matching fingerprint must reuse the stored scores")
     assert(rows.nonEmpty)
     // warm-start covers the FULL grown graph's node set
@@ -1618,13 +1618,13 @@ class ScaleDesignSpec extends AnyFunSuite {
     // same corpus — finds fp(G1) current and pays ONLY the serving
     // rounds, neither the bootstrap nor the roll
     llm.Authority.g05RollingPageRank(spark, sf).collect()
-    llm.Authority.rollForgetCachedPaths()
-    val b0 = llm.Authority.rollBuildCount.get()
-    val a0 = llm.Authority.rollAppendCount.get()
+    llm.Authority.rollScores.forget()
+    val b0 = llm.Authority.rollScores.builds.get()
+    val a0 = llm.Authority.rollScores.appends.get()
     val rows = llm.Authority.g05RollingPageRank(spark, sf).collect()
-    assert(llm.Authority.rollBuildCount.get() == b0,
+    assert(llm.Authority.rollScores.builds.get() == b0,
       "a rolled artifact must never re-bootstrap")
-    assert(llm.Authority.rollAppendCount.get() == a0,
+    assert(llm.Authority.rollScores.appends.get() == a0,
       "a repeat run must not re-roll an already-rolled artifact")
     assert(rows.nonEmpty)
     // the serve warm-starts over the FULL grown graph's node set
@@ -1635,11 +1635,11 @@ class ScaleDesignSpec extends AnyFunSuite {
 
   test("s21 serves from the persisted PQ index: build-once, stored codes equal the live chain") {
     llm.Similarity.s21PqIndexSearch(spark, sf).collect()
-    llm.Similarity.pqForgetCachedPaths()
-    val t0 = llm.Similarity.pqTrainCount.get()
+    llm.Similarity.pqIndex.forget()
+    val t0 = llm.Similarity.pqIndex.builds.get()
     val df = llm.Similarity.s21PqIndexSearch(spark, sf)
     val rows = df.collect()
-    assert(llm.Similarity.pqTrainCount.get() == t0,
+    assert(llm.Similarity.pqIndex.builds.get() == t0,
       "a current pq-index artifact must never retrain or re-encode")
     // artifact-served == live-composed, row for row — the claim that
     // makes the stored codebook+codes a real index, not a cache

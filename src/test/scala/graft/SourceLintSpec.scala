@@ -11,8 +11,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * A parquet read whose schema is inferred costs a distributed
   * footer-read job per frame. Every read therefore either declares its
   * schema (`read.schema(s).parquet(p)`) or goes through
-  * [[io.Load.parquet]], which resolves the schema on the driver. */
+  * [[io.Load.parquet]], which resolves the schema on the driver.
+  *
+  * The operator modules in `graft/llm` resolve their artifacts through
+  * one [[io.Artifact]] handle per kind, and fingerprint through
+  * [[io.ArtifactStore.partsWhere]]: they hand-write no memo, artifact
+  * path, ensure call or xor aggregate of their own. */
 class SourceLintSpec extends AnyFunSuite {
+
+  private def sources(dir: String): Seq[(Path, String)] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(f => (f, Files.readString(f)))
+  }
+
+  /** Artifact-lifecycle boilerplate an operator module must leave to
+    * [[io.Artifact]] and the shared fingerprint kernel: (line, match). */
+  private[graft] def artifactBoilerplate(src: String): Seq[(Int, String)] =
+    ("""\bValidatedPathCache\b|\bbit_xor\b|""" +
+      """\bArtifactStore\s*\.\s*(artifactPath|ensure|ensureIncremental)\s*\(""")
+      .r.findAllMatchIn(src).map { m =>
+        (src.substring(0, m.start).count(_ == '\n') + 1,
+          m.matched.replaceAll("\\s+", ""))
+      }.toSeq
 
   /** Every reader chain — `.read` followed by `.method(args)` calls,
     * across line breaks — that ends in `.parquet(` without declaring a
@@ -65,12 +88,8 @@ class SourceLintSpec extends AnyFunSuite {
   }
 
   test("no parquet read in src/main infers its schema") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val files = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    val offenders = files.flatMap { (f: Path) =>
-      inferredParquetReads(Files.readString(f)).map { case (line, chain) =>
+    val offenders = sources("src/main/scala").flatMap { case (f, src) =>
+      inferredParquetReads(src).map { case (line, chain) =>
         s"$f:$line: $chain"
       }
     }
@@ -78,5 +97,37 @@ class SourceLintSpec extends AnyFunSuite {
       s"${offenders.size} parquet reads infer their schema (one Spark job " +
         "each); declare it or use graft.io.Load.parquet:\n" +
         offenders.mkString("\n"))
+  }
+
+  test("the boilerplate detector flags hand-written artifact lifecycle and only that") {
+    val flagged = Seq(
+      "private val c = graft.io.ValidatedPathCache.single()",
+      "new ValidatedPathCache(maxEntries = 2)",
+      "graft.io.ArtifactStore.artifactPath(\"ivf-index\", dir)",
+      "graft.io.ArtifactStore.ensure(base, fp)(build)",
+      "ArtifactStore\n      .ensure(base, fp)(build)",
+      "graft.io.ArtifactStore.ensureIncremental(base, a, b)(x)(y)",
+      ".agg(count(lit(1)), expr(\"bit_xor(h)\"))",
+      "bit_xor(when(col(p), col(\"h\")))")
+    val clean = Seq(
+      "ivfIndex.ensure(dir)(corpusParts(spark, dir))(build)",
+      "bm25IncIndex.ensureIncremental(dir)(base, batch)(b)(a)",
+      "graft.io.ArtifactStore.mutate(base, cur, next)(append)",
+      "graft.io.ArtifactStore.partsWhere(df, h, preds)",
+      "ArtifactStore.currentFingerprint(base)",
+      "[[graft.io.ArtifactStore.ensure]] staged build",
+      "xxhash64(col(\"doc_id\"), col(\"text\"))")
+    flagged.foreach(s => assert(artifactBoilerplate(s).size === 1, s))
+    clean.foreach(s => assert(artifactBoilerplate(s).isEmpty, s))
+  }
+
+  test("no module in src/main/scala/graft/llm hand-writes an artifact lifecycle") {
+    val offenders = sources("src/main/scala/graft/llm").flatMap { case (f, src) =>
+      artifactBoilerplate(src).map { case (line, hit) => s"$f:$line: $hit" }
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} hand-written artifact-lifecycle steps; resolve " +
+        "through a graft.io.Artifact handle and fingerprint through " +
+        "graft.io.ArtifactStore.partsWhere:\n" + offenders.mkString("\n"))
   }
 }

@@ -2241,7 +2241,7 @@ class StreamingSpec extends AnyFunSuite {
       src.addData(half2: _*); q.processAllAvailable()
     } finally q.stop()
     // fingerprint == a fresh fingerprint of the live standing docs
-    val (ln, lx) = graft.llm.Dedup.docsFingerprintParts(
+    val (ln, lx) = graft.llm.Retrieval.frameDocsFingerprintParts(
       standing.filter(!delPred))
     assert(graft.io.ArtifactStore.currentFingerprint(idx)
       .contains(graft.io.ArtifactStore.fingerprint(ln, lx)),
@@ -2419,7 +2419,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // prime the shipped artifact (train-at-most-once), then stream
     graft.llm.Tokenizer.t19BpeMerges(spark, sf).collect()
-    val t0 = graft.llm.Tokenizer.bpeTrainCount.get()
+    val t0 = graft.llm.Tokenizer.bpeVocab.builds.get()
     val docs = Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -2468,7 +2468,7 @@ class StreamingSpec extends AnyFunSuite {
       s"OOV encode must replay the merge contract: got ${novelRow._3}, " +
         s"want $expectedBpe")
     // and no micro-batch ever trained: the tokenizer stayed shipped
-    assert(graft.llm.Tokenizer.bpeTrainCount.get() == t0,
+    assert(graft.llm.Tokenizer.bpeVocab.builds.get() == t0,
       "streaming encode must never retrain the vocabulary")
   }
 
