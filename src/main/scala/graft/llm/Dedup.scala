@@ -1134,9 +1134,11 @@ object Dedup {
     * single-lock state machine: at the union fingerprint → no work
     * (every JVM after the first); at the base fingerprint → append in
     * place; absent/stale → build the base, then append. The union
-    * fingerprint is DERIVED (`(nA + nB, xA ^ xB)`), so the nightly
-    * job scans only the new batch — the indexed corpus is never
-    * re-fingerprinted, let alone re-shingled. */
+    * fingerprint is DERIVED (`(nA + nB, xA ^ xB)`) from one fused
+    * base+batch scan of the table on a memo miss, so the nightly job
+    * shingles and writes only the new batch — the indexed corpus is
+    * never re-shingled, but that fingerprint pass still reads it
+    * once. */
   private def dedupIncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val docs = Tables(spark, dir, "documents")
     lazy val Seq(base, batch) = Retrieval.frameDocsFingerprintPartsWhere(

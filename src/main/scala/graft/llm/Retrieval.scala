@@ -282,8 +282,10 @@ object Retrieval {
     * from-scratch full-corpus index EXACTLY (segments partition the
     * docs: df_full = Σ df_seg, totals_full = Σ totals_seg, tf/dl are
     * per-doc) — which is why s17's oracle IS s10's SQL. The union
-    * fingerprint is derived `(nA+nB, xA^xB)`: the nightly job scans
-    * only the batch. */
+    * fingerprint is derived `(nA+nB, xA^xB)` from one fused base+batch
+    * scan of the table on a memo miss: the nightly job tokenizes and
+    * writes only the batch, but its fingerprint pass reads the whole
+    * corpus once. */
   private def bm25IncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val d = Tables(spark, dir, "documents")
     lazy val Seq(base, batch) =

@@ -892,11 +892,7 @@ object Similarity {
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= RerankPool)
       .select(col("query_id"), col("neighbor_id"), col("adc_rank"))
-    exactRefine(pool, indexVectorFetch(spark, dir), 10)
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("adc_rank").cast("integer").as("adc_rank"))
-      .orderBy(col("query_id"), col("rn"))
+    refinedTop10(CodeTable.Pq, pool, indexVectorFetch(spark, dir))
   }
 
   /** s20: IVF-PQ search — the full Faiss `IVF16,PQ8`-style serving
@@ -941,11 +937,7 @@ object Similarity {
       .withColumn("adc_rank", row_number().over(wAdc))
       .filter(col("adc_rank") <= RerankPool)
       .select(col("query_id"), col("neighbor_id"), col("adc_rank"))
-    exactRefine(pool, indexVectorFetch(spark, dir), 10)
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("adc_rank").cast("integer").as("adc_rank"))
-      .orderBy(col("query_id"), col("rn"))
+    refinedTop10(CodeTable.Pq, pool, indexVectorFetch(spark, dir))
   }
 
   // ---------------------------------------------------------------- s21
@@ -984,21 +976,15 @@ object Similarity {
       pqBuildInto(spark, dir, _, ivfIndexBase(spark, dir)))
 
   /** THE PQ build pipeline (train codebook → encode every vector
-    * against the STORED codebook → cell-major write), parameterized on
-    * the vector SOURCE `(vec_id, embedding, norm)` and the `(vec_id,
-    * cell)` sharding frame — one body for every PQ-artifact
-    * constructor: serving build ([[pqIndexBase]]), retrained
-    * generation ([[rtIndexBases]]), streaming bootstrap, gate retrain
-    * and self-heal ([[graft.stream.IndexIngest]]). */
-  private[graft] def pqBuildFrom(v: DataFrame, staging: String,
-      cells: DataFrame): Unit =
-    pqBuildFromNv(pqNvFrame(v), staging, cells)
-
-  /** The PQ build tail over an ALREADY-derived `(vec_id, nv)` frame —
-    * ONE body for both encodings: the raw build feeds unit vectors
-    * ([[pqBuildFrom]]), the residual build feeds `nv − cu(cell)`
-    * ([[pqResBuildInto]]). A codebook-layout or codes-write change
-    * lands exactly once. */
+    * against the STORED codebook → cell-major write) over an
+    * ALREADY-derived `(vec_id, nv)` frame and the `(vec_id, cell)`
+    * sharding frame — one body for every PQ-artifact constructor and
+    * both encodings: the raw builds feed unit vectors (serving
+    * [[pqIndexBase]], retrained [[rtIndexBases]], incremental
+    * [[pqIncIndexBase]], and the streaming bootstrap, gate retrain and
+    * self-heal through [[CodeTable.Pq]]), the residual build feeds
+    * `nv − cu(cell)` ([[pqResBuildInto]]). A codebook-layout or
+    * codes-write change lands exactly once. */
   private[graft] def pqBuildFromNv(nv: DataFrame, staging: String,
       cells: DataFrame): Unit = {
     val spark = nv.sparkSession
@@ -1011,15 +997,9 @@ object Similarity {
       s"$staging/codes", Seq("cell"), Seq("vec_id"))
   }
 
-  /** The serving-side query LUT frame shared by every stored-code
-    * server (s21/s26/s27/s28): the `%4` query set's subvector slices
-    * against a STORED codebook. */
-  private def servingLuts(spark: SparkSession, dir: String,
-      cb: DataFrame): DataFrame =
-    pqLut(pqSub(pqNv(spark, dir)).filter(col("vec_id") % 4 === 0), cb)
-
-  /** The `%4` query panel's unit vectors `(vec_id, nv)` shared by the
-    * SQ/BQ corpus-panel servers' query-side frames. Deliberately NOT
+  /** The `%4` query panel's unit vectors `(vec_id, nv)` — every
+    * corpus-panel server's query-side frame source
+    * ([[CodeTable.query]]). Deliberately NOT
     * passed to [[exactRefine]] as queryNv on the corpus-panel servers:
     * their query vectors come free from the index fetch, and a third
     * corpus scan per query would break the "corpus reads are
@@ -1029,7 +1009,7 @@ object Similarity {
     * fingerprint and the next `ensure` rebuilds (sweeping them) before
     * the serve plan resolves. The from-frame servers, whose index IS
     * the store and whose tombstones persist legitimately, DO pass
-    * queryNv ([[sqServeFrom]]/[[bqServeFrom]]/[[storedIvfPqServeFrom]]). */
+    * queryNv ([[serveFrom]]). */
   private def servingQueryNv(spark: SparkSession, dir: String): DataFrame =
     pqNv(spark, dir).filter(col("vec_id") % 4 === 0)
 
@@ -1041,48 +1021,75 @@ object Similarity {
       .filter(col("cell_rank") <= 3 && col("vec_id") % 4 === 0)
       .select(col("cell"), col("vec_id").as("query_id"))
 
-  /** The fused cell-keyed ADC pool every stored-code server shares
-    * (s21/s26/s27/s28): probes ⋈ stored codes on `cell` — candidacy
-    * and code fetch in ONE join, pairs already distinct because each
-    * vector lives in exactly one stored cell — broadcast LUTs, the
-    * codegen'd 8-lookup ADC sum, plus an optional broadcast
-    * `(query_id, cell, qc)` correction frame (s28's residual coarse
-    * term) added into the score; ranked per query, cut to
-    * [[RerankPool]]. Returns `(query_id, neighbor_id, adc_rank)` —
+  /** The ONE candidate pool every stored-code server shares
+    * (s21/s22/s26–s30 and the from-frame server): probes ⋈ the kind's
+    * stored codes on `cell` — candidacy and code fetch in ONE join,
+    * pairs already distinct because each vector lives in exactly one
+    * stored cell — then the kind's coarse score against its query-side
+    * frame (broadcast where the kind says so: PQ's LUTs, BQ's query
+    * bits), plus an optional broadcast `(query_id, cell, qc)`
+    * correction frame (s28's residual coarse term) added into the
+    * score; ranked per query in the kind's order, cut to
+    * [[RerankPool]]. Returns `(query_id, neighbor_id, <rankCol>)` —
     * one body, so a tie-break or pool-size change lands exactly once
-    * across the raw, filtered, label-partitioned and residual
-    * serving paths. `liveBase` is the membership-authority IVF base
-    * whose tombstones cut the candidates BEFORE the pool window
-    * ([[IndexDelete.liveByMember]]): tombstoned ids must not occupy
-    * pool slots, or a heavily-deleted index starves the refine below
-    * k. An undeleted base keeps the bare plan (driver-side branch). */
-  private def adcPool(probes: DataFrame, storedCodes: DataFrame,
-      lut: DataFrame, correction: Option[DataFrame] = None,
-      liveBase: Option[String] = None): DataFrame = {
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    val cand = probes.join(storedCodes, "cell")
+    * across every kind and the raw, filtered, label-partitioned and
+    * residual serving paths (`stored` is the caller's so s27 can pass
+    * its label-pruned scan). `liveBase` is the membership-authority
+    * IVF base whose tombstones cut the candidates BEFORE the pool
+    * window ([[IndexDelete.liveByMember]]): tombstoned ids must not
+    * occupy pool slots, or a heavily-deleted index starves the refine
+    * below k. An undeleted base keeps the bare plan (driver-side
+    * branch). */
+  private def codePool(t: CodeTable, probes: DataFrame, stored: DataFrame,
+      query: DataFrame, liveBase: String,
+      correction: Option[DataFrame] = None): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(t.order, col("neighbor_id").asc)
+    val cand = probes.join(stored, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-    val live = liveBase.fold(cand)(b =>
-      IndexDelete.liveByMember(cand.sparkSession, b, cand, "neighbor_id"))
-    val joined = live.join(broadcast(lut), "query_id")
+    val joined = IndexDelete.liveByMember(cand.sparkSession, liveBase, cand,
+        "neighbor_id")
+      .join(if (t.broadcastQuery) broadcast(query) else query, "query_id")
     val scored = correction match {
       case Some(qc) => joined
         .join(broadcast(qc), Seq("query_id", "cell"))
-        .withColumn("score", col("qc") + expr(adcScoreExpr))
-      case None => joined.withColumn("score", expr(adcScoreExpr))
+        .withColumn(t.scoreCol, col("qc") + t.score)
+      case None => joined.withColumn(t.scoreCol, t.score)
     }
-    scored.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= RerankPool)
-      .select(col("query_id"), col("neighbor_id"), col("adc_rank"))
+    scored.withColumn(t.rankCol, row_number().over(w))
+      .filter(col(t.rankCol) <= RerankPool)
+      .select(col("query_id"), col("neighbor_id"), col(t.rankCol))
   }
 
-  /** [[pqBuildFrom]] over the whole corpus, cells joined from
+  /** The top-10 tail of every refined server: [[exactRefine]] of the
+    * pool, output `(query_id, rn, neighbor_id, score, <rankCol>)` with
+    * the kind's coarse rank kept beside the exact one. */
+  private def refinedTop10(t: CodeTable, pool: DataFrame, fetched: DataFrame,
+      queryNv: Option[DataFrame] = None): DataFrame =
+    exactRefine(pool, fetched, 10, queryNv = queryNv)
+      .select(col("query_id"), col("rn").cast("integer").as("rn"),
+        col("neighbor_id"), col("score"),
+        col(t.rankCol).cast("integer").as(t.rankCol))
+      .orderBy(col("query_id"), col("rn"))
+
+  /** The corpus-panel server (s21/s28/s29/s30): the `%4` panel probes
+    * the serving IVF's stored centroids, the kind's pool scores the
+    * stored codes at `base`, and the pool refines from the stored
+    * lists. */
+  private def servePanel(t: CodeTable, spark: SparkSession, dir: String,
+      base: String, correction: Option[DataFrame] = None): DataFrame = {
+    val pool = codePool(t, servingProbes(spark, dir), t.stored(spark, base),
+      t.query(servingQueryNv(spark, dir), base), ivfIndexBase(spark, dir),
+      correction)
+    refinedTop10(t, pool, indexVectorFetch(spark, dir))
+  }
+
+  /** [[pqBuildFromNv]] over the whole corpus, cells joined from
     * `listsBase`'s inverted lists so code table and vector lists shard
     * identically. */
   private def pqBuildInto(spark: SparkSession, dir: String,
       staging: String, listsBase: String): Unit =
-    pqBuildFrom(normed(spark, dir), staging,
+    pqBuildFromNv(pqNv(spark, dir), staging,
       invertedListsAt(spark, listsBase)
         .select(col("vec_id"), col("cell")))
 
@@ -1110,21 +1117,8 @@ object Similarity {
     * Result = s20 exactly (deterministic training + exact parquet
     * round-trip), which the spec asserts row-for-row; the oracle is
     * [[s20Sql]] verbatim (d18/d19-vs-d10 precedent). */
-  def s21PqIndexSearch(spark: SparkSession, dir: String): DataFrame = {
-    val base = pqIndexBase(spark, dir)
-    val cb = graft.io.Load.parquet(spark, s"$base/codebook")
-    val storedCodes = spark.read.schema(pqCodesSchema)
-      .parquet(s"$base/codes")
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
-    val pool = adcPool(servingProbes(spark, dir), storedCodes,
-      servingLuts(spark, dir, cb),
-      liveBase = Some(ivfIndexBase(spark, dir)))
-    exactRefine(pool, indexVectorFetch(spark, dir), 10)
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("adc_rank").cast("integer").as("adc_rank"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+  def s21PqIndexSearch(spark: SparkSession, dir: String): DataFrame =
+    servePanel(CodeTable.Pq, spark, dir, pqIndexBase(spark, dir))
 
   /** s26: filtered vector search on the COMPRESSED persisted index —
     * s14's cross-label hard-negative semantics served from the IVF-PQ
@@ -1144,13 +1138,10 @@ object Similarity {
     * s26 pays 8 bytes per candidate and the pool cut. */
   def s26FilteredIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val pqBase = pqIndexBase(spark, dir)
-    val cb = graft.io.Load.parquet(spark, s"$pqBase/codebook")
-    val storedCodes = spark.read.schema(pqCodesSchema)
-      .parquet(s"$pqBase/codes")
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
-    val pool = adcPool(servingProbes(spark, dir), storedCodes,
-      servingLuts(spark, dir, cb),
-      liveBase = Some(ivfIndexBase(spark, dir)))
+    val pool = codePool(CodeTable.Pq, servingProbes(spark, dir),
+      CodeTable.Pq.stored(spark, pqBase),
+      CodeTable.Pq.query(servingQueryNv(spark, dir), pqBase),
+      ivfIndexBase(spark, dir))
       .select(col("query_id"), col("neighbor_id"))
     val labels = Tables(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"))
@@ -1242,13 +1233,12 @@ object Similarity {
     * query wants. */
   def s27LabelPartitionedSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = lblPqIndexBase(spark, dir)
-    val cb = graft.io.Load.parquet(spark, s"$base/codebook")
     val stored = spark.read.schema(lblCodesSchema).parquet(s"$base/codes")
       .filter(col("label") === LblTarget) // partition-column equality
       .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
-    val pool = adcPool(servingProbes(spark, dir), stored,
-      servingLuts(spark, dir, cb),
-      liveBase = Some(ivfIndexBase(spark, dir)))
+    val pool = codePool(CodeTable.Pq, servingProbes(spark, dir), stored,
+      CodeTable.Pq.query(servingQueryNv(spark, dir), base),
+      ivfIndexBase(spark, dir))
       .select(col("query_id"), col("neighbor_id"))
     exactRefine(pool, indexVectorFetch(spark, dir), 5)
       .select(col("query_id"), col("rn").cast("integer").as("rn"),
@@ -1353,28 +1343,18 @@ object Similarity {
   def s28ResidualPqSearch(spark: SparkSession, dir: String): DataFrame = {
     val ivfBase = ivfIndexBase(spark, dir)
     val base = pqResIndexBase(spark, dir)
-    val cb = graft.io.Load.parquet(spark, s"$base/codebook")
-    val storedCodes = spark.read.schema(pqCodesSchema)
-      .parquet(s"$base/codes")
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
     // the coarse term is a query-frame × 16-centroid fan-out (16·Q
     // rows in the broadcast — tiny); deriving it from the probe frame
     // would plant a SECOND corpus-scale ivfRanked window subtree in the
     // same plan (DataFrames are not cached across the two uses).
-    // adcPool's inner (query_id, cell) join restricts it to the probed
+    // codePool's inner (query_id, cell) join restricts it to the probed
     // cells, so the scored rows are identical either way.
-    val qc = pqNv(spark, dir).filter(col("vec_id") % 4 === 0)
+    val qc = servingQueryNv(spark, dir)
       .join(broadcast(unitCentroids(spark, ivfBase)), lit(true))
       .withColumn("qc",
         floor(expr("vec_dot(nv, cu)") * lit(1048576.0)).cast(LongType))
       .select(col("vec_id").as("query_id"), col("cell"), col("qc"))
-    val pool = adcPool(servingProbes(spark, dir), storedCodes,
-      servingLuts(spark, dir, cb), Some(qc), liveBase = Some(ivfBase))
-    exactRefine(pool, indexVectorFetch(spark, dir), 10)
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("adc_rank").cast("integer").as("adc_rank"))
-      .orderBy(col("query_id"), col("rn"))
+    servePanel(CodeTable.Pq, spark, dir, base, Some(qc))
   }
 
   // ---------------------------------------------------------------- s29
@@ -1406,7 +1386,7 @@ object Similarity {
     * re-aggregate). Every other column rides the row untouched, which
     * is how the build keeps `cell` without a corpus-scale join. Shared
     * by the batch build ([[sqBuildFromNv]]) and the streaming append
-    * sink ([[graft.stream.IndexIngest]] `sqAppendSink` — appends never
+    * sink ([[graft.stream.IndexIngest.appendSink]] — appends never
     * retrain: the frozen ranges are the whole model). */
   private[graft] def sqEncode(nv: DataFrame, params: DataFrame): DataFrame =
     nv.join(broadcast(params), lit(true))
@@ -1431,21 +1411,11 @@ object Similarity {
     * reading only the IVF artifact. */
   private[graft] def sqIndexBase(spark: SparkSession, dir: String): String =
     sqIndex.ensure(dir)(corpusParts(spark, dir))(
-      sqBuildInto(spark, _, ivfIndexBase(spark, dir)))
-
-  /** The SQ8 build over the stored inverted lists: unit-normalize with
-    * the cell kept inline, then the shared build tail. */
-  private def sqBuildInto(spark: SparkSession,
-      staging: String, listsBase: String): Unit =
-    sqBuildFromNv(
-      invertedListsAt(spark, listsBase)
-        .withColumn("nv",
-          expr(UnitNvExpr))
-        .select(col("vec_id"), col("cell"), col("nv")),
-      staging)
+      CodeTable.Sq.buildFromNv(CodeTable.cellNv(
+        invertedListsAt(spark, ivfIndexBase(spark, dir))), _))
 
   /** The SQ8 build tail over an already-derived `(vec_id, cell, nv)`
-    * frame — ONE body for the batch build ([[sqBuildInto]]) and the
+    * frame — ONE body for the batch build ([[sqIndexBase]]) and the
     * streaming bootstrap: per-dim min/max over the unit vectors (one
     * map-side-combined 64-group aggregate — the WHOLE train step),
     * then every vector encoded elementwise against the trained ranges
@@ -1490,74 +1460,8 @@ object Similarity {
     * train-free builds and append-only growth — the index you pick
     * when encode throughput and recall matter more than the last 8×
     * of compression. */
-  def s29SqSearch(spark: SparkSession, dir: String): DataFrame = {
-    val qv = servingQueryNv(spark, dir)
-      .select(col("vec_id").as("query_id"), col("nv").as("qnv"))
-    val pool = sqPool(servingProbes(spark, dir),
-      sqRecon(spark, sqIndexBase(spark, dir)), qv,
-      ivfIndexBase(spark, dir))
-    exactRefine(pool, indexVectorFetch(spark, dir), 10)
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("sq_rank").cast("integer").as("sq_rank"))
-      .orderBy(col("query_id"), col("rn"))
-  }
-
-  /** SQ8 code reconstruction at a stored base: `(cell, neighbor_id,
-    * rv)` with `rv_j = vmin_j + code_j·vdiff_j/255` (Faiss
-    * `ScalarQuantizer::decode`). One body for s29 and
-    * [[sqServeFrom]]. */
-  private def sqRecon(spark: SparkSession, sqBase: String): DataFrame =
-    spark.read.schema(sqCodesSchema).parquet(s"$sqBase/codes")
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("scodes"))
-      .join(broadcast(graft.io.Load.parquet(spark, s"$sqBase/params")),
-        lit(true))
-      .withColumn("rv", expr(
-        "transform(scodes, (c, j) -> element_at(vmin, j + 1) + " +
-          "(CAST(c AS DOUBLE) * element_at(vdiff, j + 1)) / 255.0)"))
-      .select(col("cell"), col("neighbor_id"), col("rv"))
-
-  /** The SQ candidate pool — probes ⋈ reconstructed codes on cell,
-    * tombstone-cut at candidate scale BEFORE the rank window
-    * ([[adcPool]]'s liveBase contract: deleted members must not
-    * occupy [[RerankPool]] slots), codegen'd `vec_dot` score, top
-    * pool per query. One body for the corpus-panel server (s29) and
-    * the from-frame serving twin. */
-  private def sqPool(probes: DataFrame, recon: DataFrame, qv: DataFrame,
-      ivfBase: String): DataFrame = {
-    val wSq = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    IndexDelete.liveByMember(probes.sparkSession, ivfBase,
-        probes.join(recon, "cell")
-          .filter(col("query_id") =!= col("neighbor_id")), "neighbor_id")
-      .join(qv, "query_id")
-      .withColumn("score",
-        floor(expr("vec_dot(qnv, rv)") * lit(1048576.0)).cast(LongType))
-      .withColumn("sq_rank", row_number().over(wSq))
-      .filter(col("sq_rank") <= RerankPool)
-      .select(col("query_id"), col("neighbor_id"), col("sq_rank"))
-  }
-
-  /** [[storedIvfPqServeFrom]]'s SQ8 twin: serve an explicit
-    * `(vec_id, embedding, norm)` query frame from a stored
-    * (ivf, sq) artifact pair — the form a streaming maintenance loop
-    * needs (the panel comes out of the stored lists), and the
-    * delete-propagation surface that proves the SQ pool's tombstone
-    * cut. Same chain as s29: stored-centroid probes, reconstruct-and-
-    * score pool, exact refine from the LIVE stored lists. */
-  private[graft] def sqServeFrom(spark: SparkSession, queries: DataFrame,
-      ivfBase: String, sqBase: String): DataFrame = {
-    val qnv = pqNvFrame(queries)
-    val qv = qnv.select(col("vec_id").as("query_id"), col("nv").as("qnv"))
-    val pool = sqPool(storedProbes(spark, queries, ivfBase),
-      sqRecon(spark, sqBase), qv, ivfBase)
-    exactRefine(pool, liveVectorFetchAt(spark, ivfBase), 10,
-      queryNv = Some(qnv))
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("sq_rank").cast("integer").as("sq_rank"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+  def s29SqSearch(spark: SparkSession, dir: String): DataFrame =
+    servePanel(CodeTable.Sq, spark, dir, sqIndexBase(spark, dir))
 
   // ---------------------------------------------------------------- s30
 
@@ -1606,23 +1510,8 @@ object Similarity {
     * (sign bits depend on nothing trained). */
   private[graft] def bqIndexBase(spark: SparkSession, dir: String): String =
     bqIndex.ensure(dir)(corpusParts(spark, dir))(
-      bqBuildInto(spark, _, ivfIndexBase(spark, dir)))
-
-  private def bqBuildInto(spark: SparkSession,
-      staging: String, listsBase: String): Unit =
-    bqBuildFromNv(
-      invertedListsAt(spark, listsBase)
-        .withColumn("nv", expr(UnitNvExpr))
-        .select(col("vec_id"), col("cell"), col("nv")),
-      staging)
-
-  /** The BQ build tail over an already-derived `(vec_id, cell, nv)`
-    * frame — ONE body for the batch build and the streaming bootstrap
-    * ([[sqBuildFromNv]]'s contract for the sign-bit table; there is no
-    * params step at all). */
-  private[graft] def bqBuildFromNv(nvc: DataFrame, staging: String): Unit =
-    graft.io.Store.writePartitionedParquet(
-      bqBits(nvc), s"$staging/codes", Seq("cell"), Seq("vec_id"))
+      CodeTable.Bq.buildFromNv(CodeTable.cellNv(
+        invertedListsAt(spark, ivfIndexBase(spark, dir))), _))
 
   /** s30: IVF binary-quantization search served from the persisted
     * `bq-index` — the same workload contract as s21/s28/s29 (query set
@@ -1639,67 +1528,8 @@ object Similarity {
     * pure integer ALU — the index you pick when the corpus is too big
     * for SQ8's 4× and PQ's training cadence is operationally
     * unaffordable. */
-  def s30BqSearch(spark: SparkSession, dir: String): DataFrame = {
-    val qbits = bqBits(servingQueryNv(spark, dir))
-      .select(col("vec_id").as("query_id"),
-        col("bits_lo").as("qlo"), col("bits_hi").as("qhi"))
-    val pool = bqPool(servingProbes(spark, dir),
-      bqStored(spark, bqIndexBase(spark, dir)), qbits,
-      ivfIndexBase(spark, dir))
-    exactRefine(pool, indexVectorFetch(spark, dir), 10)
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("bq_rank").cast("integer").as("bq_rank"))
-      .orderBy(col("query_id"), col("rn"))
-  }
-
-  /** The stored sign-bit table at a base, candidate-shaped. One body
-    * for s30 and [[bqServeFrom]]. */
-  private def bqStored(spark: SparkSession, bqBase: String): DataFrame =
-    spark.read.schema(bqCodesSchema).parquet(s"$bqBase/codes")
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("bits_lo").as("clo"), col("bits_hi").as("chi"))
-
-  /** The BQ candidate pool — probes ⋈ stored sign bits on cell,
-    * tombstone-cut at candidate scale BEFORE the rank window
-    * ([[adcPool]]'s liveBase contract), two-popcount Hamming score,
-    * top pool per query. One body for the corpus-panel server (s30)
-    * and the from-frame serving twin. */
-  private def bqPool(probes: DataFrame, stored: DataFrame,
-      qbits: DataFrame, ivfBase: String): DataFrame = {
-    val wBq = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    IndexDelete.liveByMember(probes.sparkSession, ivfBase,
-        probes.join(stored, "cell")
-          .filter(col("query_id") =!= col("neighbor_id")), "neighbor_id")
-      .join(broadcast(qbits), "query_id")
-      .withColumn("hamming",
-        expr("bit_count(qlo ^ clo) + bit_count(qhi ^ chi)"))
-      .withColumn("bq_rank", row_number().over(wBq))
-      .filter(col("bq_rank") <= RerankPool)
-      .select(col("query_id"), col("neighbor_id"), col("bq_rank"))
-  }
-
-  /** [[storedIvfPqServeFrom]]'s binary twin: serve an explicit
-    * `(vec_id, embedding, norm)` query frame from a stored (ivf, bq)
-    * artifact pair — the streaming-posture form, and the
-    * delete-propagation surface that proves the BQ pool's tombstone
-    * cut. */
-  private[graft] def bqServeFrom(spark: SparkSession, queries: DataFrame,
-      ivfBase: String, bqBase: String): DataFrame = {
-    val qnv = pqNvFrame(queries)
-    val qbits = bqBits(qnv)
-      .select(col("vec_id").as("query_id"),
-        col("bits_lo").as("qlo"), col("bits_hi").as("qhi"))
-    val pool = bqPool(storedProbes(spark, queries, ivfBase),
-      bqStored(spark, bqBase), qbits, ivfBase)
-    exactRefine(pool, liveVectorFetchAt(spark, ivfBase), 10,
-      queryNv = Some(qnv))
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("bq_rank").cast("integer").as("bq_rank"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+  def s30BqSearch(spark: SparkSession, dir: String): DataFrame =
+    servePanel(CodeTable.Bq, spark, dir, bqIndexBase(spark, dir))
 
   // ---------------------------------------------------------------- s31
 
@@ -1862,9 +1692,7 @@ object Similarity {
   def s25NprobeSweep(spark: SparkSession, dir: String): DataFrame = {
     val base = pqIndexBase(spark, dir)
     val cb = graft.io.Load.parquet(spark, s"$base/codebook")
-    val storedCodes = spark.read.schema(pqCodesSchema)
-      .parquet(s"$base/codes")
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
+    val storedCodes = CodeTable.Pq.stored(spark, base)
     val lut = pqLut(
       pqSub(pqNv(spark, dir)).filter(col("vec_id") % 4 === 0), cb)
     val probes = ivfRanked(spark, dir)
@@ -2060,8 +1888,11 @@ object Similarity {
     * state machine of s16/s17/d19, fourth artifact family. Cells come
     * from the incremental IVF index's own assignments, so the code
     * table and the vector lists shard identically at every point in
-    * the lifecycle. Union fingerprint derived `(nA+nB, xA^xB)`: the
-    * nightly job scans only the batch, never the indexed corpus. */
+    * the lifecycle. Union fingerprint derived `(nA+nB, xA^xB)` from
+    * base and batch parts that one fused scan of the whole table
+    * computes on a memo miss ([[incParts]]): the nightly job WRITES
+    * only the batch, but its fingerprint pass still reads the corpus
+    * once. */
   private def pqIncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val Seq(base, batch) = incParts(spark, dir)
     // cells from the incremental IVF artifact: the encode side is
@@ -2095,7 +1926,8 @@ object Similarity {
     * 100 TB posture: per night the job scans the batch twice (assign +
     * encode — both against broadcast 16-row/128-row frozen models),
     * writes only touched cell partitions of the two artifacts, and
-    * derives the union fingerprint without rescanning the corpus; the
+    * derives the union fingerprint from one fused base+batch scan of
+    * the table (O(corpus) read, once per JVM — not a re-encode); the
     * serving plan reads 8-byte codes for candidates and full vectors
     * for pool members only. */
   def s22IncrementalPqSearch(spark: SparkSession, dir: String): DataFrame =
@@ -2113,38 +1945,32 @@ object Similarity {
     * which is exactly how a serving tier hot-swaps index generations. */
   private def storedIvfPqServe(spark: SparkSession, dir: String,
       ivfBase: String, pqBase: String, queryPred: Column): DataFrame =
-    storedIvfPqServeFrom(spark,
+    serveFrom(CodeTable.Pq, spark,
       normed(spark, dir).filter(queryPred), ivfBase, pqBase)
 
-  /** [[storedIvfPqServe]] with the query panel supplied as a frame of
-    * `(vec_id, embedding, norm)` instead of a corpus-dir predicate —
-    * the form the STREAMING maintenance loop needs, where the only
-    * store is the index itself (the panel comes out of the stored
-    * inverted lists, no corpus table exists). */
-  private[graft] def storedIvfPqServeFrom(spark: SparkSession,
-      queries: DataFrame, ivfBase: String, pqBase: String): DataFrame = {
-    val cb = graft.io.Load.parquet(spark, s"$pqBase/codebook")
-    val storedCodes = spark.read.schema(pqCodesSchema)
-      .parquet(s"$pqBase/codes")
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
+  /** THE query-frame server: serve an explicit `(vec_id, embedding,
+    * norm)` query frame from a stored `(ivfBase, base)` pair of kind
+    * `t` — the form the STREAMING maintenance loop needs, where the
+    * only store is the index itself (the panel comes out of the stored
+    * inverted lists, no corpus table exists), and the
+    * delete-propagation surface that proves each kind's tombstone cut.
+    * The panel probes the generation's stored centroids, the kind's
+    * pool scores the stored codes, and the pool exact-refines from the
+    * LIVE stored lists. */
+  private[graft] def serveFrom(t: CodeTable, spark: SparkSession,
+      queries: DataFrame, ivfBase: String, base: String): DataFrame = {
     val qnv = pqNvFrame(queries)
-    val lut = pqLut(pqSub(qnv), cb)
     // the shared pool body, tombstone-cut at candidate scale BEFORE
     // the rank window (liveBase): a tombstoned id must not occupy a
     // RerankPool slot, or a heavily-deleted index starves the refine
     // below k. Deletes are effective at the next query, not the next
     // maintenance window; an undeleted index has no tombstone dir and
     // this plans the plain stored scan.
-    val pool = adcPool(storedProbes(spark, queries, ivfBase), storedCodes,
-      lut, liveBase = Some(ivfBase))
+    val pool = codePool(t, storedProbes(spark, queries, ivfBase),
+      t.stored(spark, base), t.query(qnv, base), ivfBase)
     // query vectors from the PANEL, not the live fetch: a tombstoned
     // querier keeps searching (exactRefine's queryNv contract)
-    exactRefine(pool, liveVectorFetchAt(spark, ivfBase), 10,
-      queryNv = Some(qnv))
-      .select(col("query_id"), col("rn").cast("integer").as("rn"),
-        col("neighbor_id"), col("score"),
-        col("adc_rank").cast("integer").as("adc_rank"))
-      .orderBy(col("query_id"), col("rn"))
+    refinedTop10(t, pool, liveVectorFetchAt(spark, ivfBase), Some(qnv))
   }
 
   /** s11: multi-vector late-interaction retrieval (MaxSim, cf.
@@ -2528,10 +2354,12 @@ object Similarity {
     *   3. absent/stale/invalid → full build on the base corpus, then
     *      the append (the bootstrap path).
     *
-    * The union fingerprint is DERIVED — `(nA + nB, xA ^ xB)` — so at
-    * 100 TB the nightly job scans only the new batch: the base
-    * fingerprint comes from the artifact's own marker, never from
-    * re-reading the indexed corpus ([[incParts]]). */
+    * The union fingerprint is DERIVED — `(nA + nB, xA ^ xB)` — from the
+    * base and batch parts of ONE fused scan of the whole table
+    * ([[incParts]], on a memo miss). So the append's write is
+    * O(batch) and the base is never re-trained or re-assigned, but a
+    * fresh JVM's resolve still reads the indexed corpus once to
+    * fingerprint it. */
   private def ivfIncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val Seq(base, batch) = incParts(spark, dir)
     ivfIncIndex.ensureIncremental(dir)(base, batch)(

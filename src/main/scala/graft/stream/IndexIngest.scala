@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.io.{ArtifactStore, Store}
-import graft.llm.{Dedup, Retrieval, Similarity}
+import graft.llm.{CodeTable, Dedup, Retrieval, Similarity}
 
 /** Streaming maintenance of a persisted IVF index: the
   * `readStream → foreachBatch` twin of the nightly append
@@ -450,78 +450,73 @@ object IndexIngest {
     removeOnce(base, batchId, appId)(
       Retrieval.bm25RemovalPlan(batch.sparkSession, base, batch))
 
-  /** One-time PQ bootstrap: train the codebook on the initial corpus,
-    * encode it against the STAGED (stored) codebook, and write the
-    * code table cell-major — cells by assignment to the
-    * already-bootstrapped IVF artifact's centroids at `ivfBase`, so
-    * the code table and the vector lists shard identically from the
-    * first byte. A no-op when already current for these vectors. */
-  def pqBootstrap(base: String, ivfBase: String,
+  /** One-time code-table bootstrap for any [[CodeTable]] kind: train
+    * the kind's model on the initial corpus (PQ's codebook, SQ8's
+    * per-dim `(vmin, vdiff)` ranges — one min/max aggregate — or, for
+    * BQ, nothing at all: the whole build is one map-only encode),
+    * encode against the STAGED (stored) model, and write the code table
+    * cell-major — cells by assignment to the already-bootstrapped IVF
+    * artifact's centroids at `ivfBase`, so the code table and the
+    * vector lists shard identically from the first byte. A no-op when
+    * already current for these vectors. */
+  def bootstrap(t: CodeTable, base: String, ivfBase: String,
       vectors: DataFrame): BootstrapStatus = {
-    val spark = vectors.sparkSession
     val v = withNorm(vectors)
-    bootstrapOnce(base, Similarity.frameFingerprintParts(v)) { staging =>
-      val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
-      Similarity.pqBuildFrom(v, staging,
-        Similarity.assignToCentroids(v, centroids)
-          .select(col("vec_id"), col("cell")))
+    bootstrapOnce(base, Similarity.frameFingerprintParts(v)) {
+      t.buildFromNv(CodeTable.assignedNv(v, ivfBase), _)
     }
   }
 
-  /** The compressed-index twin of [[ivfAppendSink]] — the FOURTH
-    * exactly-once sink (IVF vectors, BM25 segments, LSH postings, now
-    * PQ codes): each micro-batch encodes against the STORED frozen
-    * codebook (`IndexIVFPQ::add` = `sa_encode` with trained codewords,
-    * never a retrain) and appends 8-byte code rows under its cells'
+  /** The compressed-index twin of [[ivfAppendSink]] — one exactly-once
+    * sink for every code-table kind (PQ, SQ8, BQ codes beside the IVF
+    * vectors, BM25 segments and LSH postings): each micro-batch
+    * encodes against the STORED frozen model ([[CodeTable.encode]] —
+    * `IndexIVFPQ::add` = `sa_encode` with trained codewords, SQ8's
+    * `ScalarQuantizer::compute_codes` against the frozen ranges, BQ's
+    * 64 sign comparisons; never a retrain) and appends under its cells'
     * partition dirs. Cells come from assignment to the IVF artifact's
     * stored centroids — deterministic, so the code table stays aligned
     * with what [[ivfAppendSink]] writes for the same feed regardless
     * of which sink commits a batch first. Same replay contract as the
-    * siblings: the high-water mark lives inside the artifact and
-    * commits in the same mutate as the rows. */
-  def pqAppendSink(base: String, ivfBase: String,
+    * siblings: the per-lineage high-water mark lives inside the
+    * artifact and commits in the same mutate as the rows.
+    *
+    * Note the frozen-model trade inherited from the batch posture
+    * (s22's frozen codebook): streamed vectors OUTSIDE the bootstrap
+    * corpus's per-dim envelope clamp to SQ8 code 0/255 — the recall
+    * gate, not the sink, is where a drifted model fires a retrain. BQ
+    * has no frozen model to drift from; it never needs an encode-side
+    * retrain, only the cell re-layout when the gate retrains the IVF
+    * generation (which is why it registers in [[DerivedKinds]]). */
+  def appendSink(t: CodeTable, base: String, ivfBase: String,
       appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val v = withNorm(batch)
     appendOnce(base, batchId,
         Similarity.frameFingerprintParts(v), appId) { live =>
-      val cb = graft.io.Load.parquet(spark, s"$live/codebook")
-      val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
-      val cells = Similarity.assignToCentroids(v, centroids)
-        .select(col("vec_id"), col("cell"))
-      Store.writePartitionedParquet(
-        Similarity.pqEncode(Similarity.pqSub(Similarity.pqNvFrame(v)), cb)
-          .join(cells, "vec_id"),
+      Store.writePartitionedParquet(t.encode(v, ivfBase, live),
         s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
     }
   }
 
-  /** The one compaction body every `codes/`-shaped table shares
-    * (PQ/SQ/BQ): re-sort each cell partition into one file, leaving
-    * everything else under the base (codebook, params, stream_state)
-    * unstaged — so the publish swaps layout only and the fingerprint
-    * survives ([[compactIvf]]'s contract). */
-  private def compactCodesTable(spark: org.apache.spark.sql.SparkSession,
-      base: String, schema: org.apache.spark.sql.types.StructType,
-      cols: Seq[String]): Boolean =
+  /** Compact a code table after a run of appends — the one body every
+    * `codes/`-shaped table shares: re-sort each cell partition into one
+    * file, leaving everything else under the base (PQ's codebook, SQ8's
+    * params, stream_state) unstaged — so the publish swaps layout only
+    * and the fingerprint survives ([[compactIvf]]'s contract). */
+  def compact(t: CodeTable, spark: org.apache.spark.sql.SparkSession,
+      base: String): Boolean =
     ArtifactStore.rewrite(base) { (live, staging) =>
       graft.io.Store.writePartitionedParquet(
-        spark.read.schema(schema).parquet(s"$live/codes")
-          .select(cols.map(col): _*),
+        spark.read.schema(t.schema).parquet(s"$live/codes")
+          .select(t.schema.fieldNames.toSeq.map(col): _*),
         s"$staging/codes", Seq("cell"), Seq("vec_id"))
     }
 
-  /** Compact the PQ code table after a run of appends: one sorted file
-    * per cell partition; the unstaged codebook survives. */
-  def compactPq(spark: org.apache.spark.sql.SparkSession,
-      base: String): Boolean =
-    compactCodesTable(spark, base, Similarity.pqCodesSchema,
-      Seq("vec_id", "codes", "cell"))
-
   /** The streaming RECALL GATE — s24's audit→decide→retrain loop at
     * index-maintenance cadence, for a streaming-maintained IVF-PQ pair
-    * ([[ivfAppendSink]] + [[pqAppendSink]]): every appended batch was
+    * ([[ivfAppendSink]] + [[appendSink]] of [[CodeTable.Pq]]): every
+    * appended batch was
     * encoded against models that never saw it, so recall decays batch
     * by batch; the maintenance scheduler runs this gate (like
     * [[compactIvf]], after a run of appends) and the index retrains
@@ -532,14 +527,14 @@ object IndexIngest {
     * the s23/s24 convention) and the ground truth both come out of the
     * stored inverted lists, and the served side is the s21 chain over
     * the stored centroids/codebook/codes
-    * ([[Similarity.storedIvfPqServeFrom]]).
+    * ([[Similarity.serveFrom]]).
     *
     * The retrain is an [[graft.io.ArtifactStore.rewrite]] of BOTH
     * artifacts: the vector set — and therefore the row-content
     * fingerprint — is unchanged; only the models and the layout/codes
     * they derive change, which is exactly rewrite's contract. The
     * non-staged `stream_state` high-water mark survives the publish
-    * (compactPq's codebook-survival contract), so batch replay
+    * ([[compact]]'s codebook-survival contract), so batch replay
     * protection carries straight across a retrain, and later appends
     * encode against the NEW frozen models — the Faiss retrain-and-
     * keep-adding lifecycle. Deterministic training makes the result
@@ -580,14 +575,15 @@ object IndexIngest {
     * is inside the same window, so probes never observe the
     * mixed-generation pair on the healthy path.
     *
-    * A co-maintained SQ8 code table ([[sqAppendSink]]) opts in via
-    * `sqBase`: it joins the heal (derivable from the IVF artifact like
-    * PQ), the skew deferral (its mark must agree too), and the retrain
-    * (an IVF retrain re-cells every dependent code table — the SQ
-    * ranges themselves are vector-set-pure and reproduce identically,
-    * but the cell partitioning must shard with the new lists). The
-    * audit signal stays the IVF-PQ pair's recall: one decision, all
-    * dependent tables move to the new generation together.
+    * Co-maintained derived code tables (SQ8, BQ — [[DerivedKinds]])
+    * opt in via `derived` (kind → base): each joins the heal
+    * (derivable from the IVF artifact like PQ), the skew deferral (its
+    * mark must agree too), and the retrain (an IVF retrain re-cells
+    * every dependent code table — the SQ ranges themselves are
+    * vector-set-pure and reproduce identically, but the cell
+    * partitioning must shard with the new lists). The audit signal
+    * stays the IVF-PQ pair's recall: one decision, all dependent
+    * tables move to the new generation together.
     *
     * Returns `(queries, hits, fired, retrained)` — the audit report
     * the maintenance job logs either way; `fired && !retrained` means
@@ -595,18 +591,12 @@ object IndexIngest {
     * cycle. */
   def recallGateAndRetrain(spark: org.apache.spark.sql.SparkSession,
       ivfBase: String, pqBase: String, panelMod: Long = 4,
-      sqBase: Option[String] = None,
-      bqBase: Option[String] = None): (Int, Long, Boolean, Boolean) = {
-    val ivfFp = healPair(spark, ivfBase, pqBase)
-    // co-maintained derived tables ([[sqAppendSink]]/[[bqAppendSink]])
-    // are equally derivable from the IVF artifact — same heal
-    val kinds = DerivedKinds.toMap
-    val derived: Seq[(String, (DataFrame, String) => Unit)] =
-      sqBase.map(_ -> kinds("sq")).toSeq ++
-        bqBase.map(_ -> kinds("bq")).toSeq
-    derived.foreach { case (b, build) =>
-      healDerivedAgainst(spark, ivfBase, b, ivfFp)(build)
-    }
+      derived: Seq[(CodeTable, String)] = Nil
+      ): (Int, Long, Boolean, Boolean) = {
+    val members = (CodeTable.Pq -> pqBase) +: derived
+    val ivfFp = healIvf(spark, ivfBase)
+    // every code table is derivable from the IVF artifact — same heal
+    members.foreach { case (t, b) => healMember(spark, ivfBase, b, ivfFp, t) }
     def lists = invertedLists(spark, ivfBase)
     val (queries, truthRows, hits) =
       auditRecall(spark, ivfBase, pqBase, panelMod)
@@ -620,9 +610,10 @@ object IndexIngest {
     // retrain forever after the first streamed delete (review-caught);
     // the retrain itself reads the live lists, so removals are always
     // consistently reflected on every rebuilt table
-    val retrained = fired && appendMarks(ivfBase) == appendMarks(pqBase) &&
-      derived.forall { case (b, _) =>
-        appendMarks(b) == appendMarks(ivfBase) }
+    val retrained = fired && {
+      val ivfMarks = appendMarks(ivfBase)
+      members.forall { case (_, b) => appendMarks(b) == ivfMarks }
+    }
     if (retrained) {
       val ivfOk = ArtifactStore.rewrite(ivfBase) { (live, staging) =>
         // retrain from the LIVE members: tombstoned rows drop out of
@@ -636,46 +627,41 @@ object IndexIngest {
         clearTombstonesInto(live, staging)
       }
       require(ivfOk, s"no valid IVF artifact to retrain at $ivfBase")
-      val pqOk = ArtifactStore.rewrite(pqBase) { (_, staging) =>
-        // vectors and cells come from the freshly-retrained IVF lists,
-        // so the code table shards identically to the new generation
-        Similarity.pqBuildFrom(
-          lists.select(col("vec_id"), col("embedding"), col("norm")),
-          staging, lists.select(col("vec_id"), col("cell")))
-      }
-      require(pqOk, s"no valid PQ artifact to retrain at $pqBase")
-      // the derived models are vector-set-pure (SQ ranges reproduce
+      // vectors and cells come from the freshly-retrained IVF lists, so
+      // every code table shards identically to the new generation. The
+      // derived models are vector-set-pure (SQ ranges reproduce
       // bit-identically; BQ has no model at all), but each code table's
       // CELL partitioning must shard with the new lists — skipping a
       // rewrite would leave that probe path on the old cell layout
-      derived.foreach { case (b, build) =>
+      members.foreach { case (t, b) =>
         val ok = ArtifactStore.rewrite(b) { (_, staging) =>
-          build(sqNvFromLists(lists), staging)
+          buildMember(t, lists, staging)
         }
-        require(ok, s"no valid derived artifact to retrain at $b")
+        require(ok, s"no valid ${t.member} artifact to retrain at $b")
       }
     }
     (queries, hits, fired, retrained)
   }
 
-  /** Stored inverted lists as the derived builds' `(vec_id, cell, nv)`
-    * frame. */
-  private def sqNvFromLists(lists: DataFrame): DataFrame = lists
-    .withColumn("nv",
-      expr(Similarity.UnitNvExpr))
-    .select(col("vec_id"), col("cell"), col("nv"))
+  /** THE member build both gate postures, the heal and late adoption
+    * share: the kind's whole table from stored inverted lists — their
+    * vectors and their cells, so the table shards identically to the
+    * generation it serves beside. */
+  private def buildMember(t: CodeTable, lists: DataFrame,
+      staging: String): Unit =
+    t.buildFromNv(CodeTable.cellNv(lists), staging)
 
-  /** The gate's heal preamble, shared by both retrain postures: roll
-    * back a crashed publish first (old generation split between the
-    * base and a `.tmp-old-*` aside — the restore brings back the old
-    * MARKER too, so the artifact usually revalidates outright, and it
-    * must run before any ensure/rewrite's orphan reap could destroy
-    * the aside copy). The self-heals below then cover only the
-    * residual marker-less-with-data class (aside-less marker loss):
-    * IVF re-marks itself from its own rows, PQ rebuilds from its
-    * sibling. Returns the healed IVF fingerprint. */
-  private def healPair(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String, pqBase: String): String = {
+  /** The gate's IVF heal preamble, shared by both retrain postures:
+    * roll back a crashed publish first (old generation split between
+    * the base and a `.tmp-old-*` aside — the restore brings back the
+    * old MARKER too, so the artifact usually revalidates outright, and
+    * it must run before any ensure/rewrite's orphan reap could destroy
+    * the aside copy). The self-heals then cover only the residual
+    * marker-less-with-data class (aside-less marker loss): IVF re-marks
+    * itself from its own rows here, each code table rebuilds from its
+    * sibling ([[healMember]]). Returns the healed IVF fingerprint. */
+  private def healIvf(spark: org.apache.spark.sql.SparkSession,
+      ivfBase: String): String = {
     graft.functions.VectorExpressions.register(spark)
     if (ArtifactStore.currentFingerprint(ivfBase).isEmpty)
       ArtifactStore.restoreAside(ivfBase)
@@ -684,15 +670,9 @@ object IndexIngest {
         fs.isDir(fs.join(b, "assignments"))
       })
       rebuildIvfFromSelf(spark, ivfBase)
-    val ivfFp = ArtifactStore.currentFingerprint(ivfBase).getOrElse(
+    ArtifactStore.currentFingerprint(ivfBase).getOrElse(
       throw new IllegalStateException(
         s"no valid IVF artifact at $ivfBase — bootstrap first"))
-    if (ArtifactStore.currentFingerprint(pqBase).isEmpty) {
-      ArtifactStore.restoreAside(pqBase) // same publish-crash roll-back
-      if (ArtifactStore.currentFingerprint(pqBase).isEmpty)
-        rebuildPqFrom(spark, ivfBase, pqBase, ivfFp)
-    }
-    ivfFp
   }
 
   /** The IVF artifact's LIVE members — stored lists minus tombstones
@@ -717,7 +697,7 @@ object IndexIngest {
     val panel = lists.filter(col("vec_id") % panelMod === 0)
       .select(col("vec_id"), col("embedding"), col("norm"))
     val served = Similarity
-      .storedIvfPqServeFrom(spark, panel, ivfBase, pqBase)
+      .serveFrom(CodeTable.Pq, spark, panel, ivfBase, pqBase)
       .select(col("query_id"), col("neighbor_id"))
     val nvAll = lists.select(col("vec_id"),
       expr(Similarity.UnitNvExpr)
@@ -758,34 +738,28 @@ object IndexIngest {
     * contract (VERDICT r11 #2). */
   private val CurrentName = "CURRENT"
 
-  private def genPaths(pairBase: String, gen: String): (String, String) = {
-    val (fs, root) = fsb(pairBase)
-    (fs.join(fs.join(root, gen), "ivf"),
-      fs.join(fs.join(root, gen), "pq"))
-  }
+  private def genPaths(pairBase: String, gen: String): (String, String) =
+    (memberGenPath(pairBase, gen, "ivf"),
+      memberGenPath(pairBase, gen, CodeTable.Pq.member))
 
   /** The derived generation members the pair machinery can carry
-    * beyond the core IVF-PQ pair (see [[bootstrapPair]]'s
-    * `withSq`/`withBq`): kind name → the build tail over the
-    * `(vec_id, cell, nv)` lists frame. Every kind here must be fully
-    * derivable from the IVF artifact — that is what makes the heal,
-    * the adoption and the co-retrain mechanical. Presence is
-    * self-describing: a generation that has a member's dir carries the
-    * table through every retrain; one that never did stays a pure
-    * IVF-PQ pair. */
-  private val DerivedKinds: Seq[(String, (DataFrame, String) => Unit)] =
-    Seq("sq" -> (Similarity.sqBuildFromNv _),
-      "bq" -> (Similarity.bqBuildFromNv _))
+    * beyond the core IVF-PQ pair (see [[bootstrapPair]]'s `derived`).
+    * Every kind here must be fully derivable from the IVF artifact —
+    * that is what makes the heal, the adoption and the co-retrain
+    * mechanical. Presence is self-describing: a generation that has a
+    * member's dir carries the table through every retrain; one that
+    * never did stays a pure IVF-PQ pair. */
+  private val DerivedKinds: Seq[CodeTable] = Seq(CodeTable.Sq, CodeTable.Bq)
 
   private def memberGenPath(pairBase: String, gen: String,
-      kind: String): String = {
+      member: String): String = {
     val (fs, root) = fsb(pairBase)
-    fs.join(fs.join(root, gen), kind)
+    fs.join(fs.join(root, gen), member)
   }
 
   private def memberIfPresent(pairBase: String, gen: String,
-      kind: String): Option[String] = {
-    val p = memberGenPath(pairBase, gen, kind)
+      member: String): Option[String] = {
+    val p = memberGenPath(pairBase, gen, member)
     if (fsb(pairBase)._1.isDir(p)) Some(p) else None
   }
 
@@ -804,21 +778,15 @@ object IndexIngest {
     * guarantees a consistent pair: generations are immutable except
     * for appends to the current one, and the pointer swap is a single
     * atomic rename. */
-  def resolvePair(pairBase: String): (String, String) = {
-    val gen = currentGen(pairBase).getOrElse(throw new IllegalStateException(
-      s"no CURRENT generation at $pairBase — bootstrapPair first"))
-    genPaths(pairBase, gen)
-  }
+  def resolvePair(pairBase: String): (String, String) =
+    genPaths(pairBase, requireGen(pairBase))
 
-  /** The CURRENT generation's SQ8 base, when the pair was bootstrapped
-    * `withSq` — same consistency rule as [[resolvePair]]: resolve once,
-    * use the returned path for the whole probe. */
-  def resolveSq(pairBase: String): Option[String] =
-    memberIfPresent(pairBase, requireGen(pairBase), "sq")
-
-  /** [[resolveSq]] for the binary member (`withBq`). */
-  def resolveBq(pairBase: String): Option[String] =
-    memberIfPresent(pairBase, requireGen(pairBase), "bq")
+  /** The CURRENT generation's base of code-table member `t`, when the
+    * generation carries one (PQ always; SQ8/BQ when bootstrapped with
+    * them in `derived`) — same consistency rule as [[resolvePair]]:
+    * resolve once, use the returned path for the whole probe. */
+  def resolveMember(t: CodeTable, pairBase: String): Option[String] =
+    memberIfPresent(pairBase, requireGen(pairBase), t.member)
 
   private def swapCurrent(pairBase: String, gen: String): Unit = {
     val (fs, root) = fsb(pairBase)
@@ -838,19 +806,17 @@ object IndexIngest {
   }
 
   /** One-time bootstrap of a generation-pointer pair: generation `g0`
-    * is built completely (IVF, then PQ sharded by its cells) and only
-    * then named by the pointer. Idempotent: a crash before the
-    * pointer write re-runs both bootstraps (valid artifacts no-op)
-    * and just writes the pointer; an existing pointer delegates to
-    * the per-artifact initialize-only semantics. */
+    * is built completely (IVF, then PQ sharded by its cells, then each
+    * `derived` code table) and only then named by the pointer.
+    * Idempotent: a crash before the pointer write re-runs both
+    * bootstraps (valid artifacts no-op) and just writes the pointer;
+    * an existing pointer delegates to the per-artifact
+    * initialize-only semantics. */
   def bootstrapPair(pairBase: String, vectors: DataFrame,
-      withSq: Boolean = false,
-      withBq: Boolean = false): BootstrapStatus = {
-    def members(gen: String, ivfBase: String): Unit = {
-      val spark = vectors.sparkSession
-      if (withSq) adoptMember(spark, pairBase, gen, ivfBase, "sq")
-      if (withBq) adoptMember(spark, pairBase, gen, ivfBase, "bq")
-    }
+      derived: Seq[CodeTable] = Nil): BootstrapStatus = {
+    def members(gen: String, ivfBase: String): Unit =
+      derived.foreach(
+        adoptMember(vectors.sparkSession, pairBase, gen, ivfBase, _))
     currentGen(pairBase) match {
       case Some(gen) =>
         val (ivfBase, pqBase) = genPaths(pairBase, gen)
@@ -860,7 +826,7 @@ object IndexIngest {
         // run (ADVICE r11 #4 follow-through, VERDICT r12 #6)
         val s = BootstrapStatus.worst(
           bootstrap(ivfBase, vectors),
-          pqBootstrap(pqBase, ivfBase, vectors))
+          bootstrap(CodeTable.Pq, pqBase, ivfBase, vectors))
         members(gen, ivfBase)
         s
       case None =>
@@ -874,7 +840,7 @@ object IndexIngest {
         // not report Built over vectors it does not index)
         val inner = BootstrapStatus.worst(
           bootstrap(ivfBase, vectors),
-          pqBootstrap(pqBase, ivfBase, vectors))
+          bootstrap(CodeTable.Pq, pqBase, ivfBase, vectors))
         members("g0", ivfBase)
         swapCurrent(pairBase, "g0")
         if (inner == BootstrapStatus.KeptDivergent) inner
@@ -882,8 +848,8 @@ object IndexIngest {
     }
   }
 
-  /** Add (or heal) a generation's derived member. LATE adoption —
-    * `withSq`/`withBq` on a pair that has already streamed appends —
+  /** Add (or heal) a generation's derived member. LATE adoption — a
+    * `derived` kind on a pair that has already streamed appends —
     * must NOT build from the offered bootstrap corpus: that table
     * would silently miss every appended vector and, carrying an empty
     * mark map, defer every future retrain forever (checkpointed
@@ -895,12 +861,11 @@ object IndexIngest {
     * On a fresh generation this is content-identical to encoding the
     * offered corpus — the lists ARE its assignment. */
   private def adoptMember(spark: org.apache.spark.sql.SparkSession,
-      pairBase: String, gen: String, ivfBase: String, kind: String): Unit =
-    healDerivedAgainst(spark, ivfBase, memberGenPath(pairBase, gen, kind),
+      pairBase: String, gen: String, ivfBase: String, t: CodeTable): Unit =
+    healMember(spark, ivfBase, memberGenPath(pairBase, gen, t.member),
       ArtifactStore.currentFingerprint(ivfBase).getOrElse(
         throw new IllegalStateException(
-          s"no valid IVF artifact at $ivfBase — bootstrap failed?")))(
-      DerivedKinds.toMap.apply(kind))
+          s"no valid IVF artifact at $ivfBase — bootstrap failed?")), t)
 
   /** The paired-generation sinks: each micro-batch resolves the
     * CURRENT generation once and appends to that pair. Same replay
@@ -915,40 +880,20 @@ object IndexIngest {
     * gate's pre-swap mark re-check this closes the silent-drop
     * windows around a concurrent retrain (review-caught r12). */
   def ivfAppendSinkPaired(pairBase: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val gen = requireGen(pairBase)
-    ivfAppendSink(genPaths(pairBase, gen)._1, appId)(batch, batchId)
-    requireGenUnmoved(pairBase, gen, batchId)
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    onCurrentGen(pairBase, batchId) { gen =>
+      ivfAppendSink(genPaths(pairBase, gen)._1, appId)(batch, batchId)
+    }
 
-  /** [[ivfAppendSinkPaired]]'s PQ twin. */
-  def pqAppendSinkPaired(pairBase: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val gen = requireGen(pairBase)
-    val (ivfBase, pqBase) = genPaths(pairBase, gen)
-    pqAppendSink(pqBase, ivfBase, appId)(batch, batchId)
-    requireGenUnmoved(pairBase, gen, batchId)
-  }
-
-  /** [[ivfAppendSinkPaired]]'s SQ8 twin (a generation bootstrapped
-    * `withSq`). */
-  def sqAppendSinkPaired(pairBase: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val gen = requireGen(pairBase)
-    sqAppendSink(memberGenPath(pairBase, gen, "sq"),
-      genPaths(pairBase, gen)._1, appId)(batch, batchId)
-    requireGenUnmoved(pairBase, gen, batchId)
-  }
-
-  /** [[ivfAppendSinkPaired]]'s binary twin (a generation bootstrapped
-    * `withBq`). */
-  def bqAppendSinkPaired(pairBase: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val gen = requireGen(pairBase)
-    bqAppendSink(memberGenPath(pairBase, gen, "bq"),
-      genPaths(pairBase, gen)._1, appId)(batch, batchId)
-    requireGenUnmoved(pairBase, gen, batchId)
-  }
+  /** [[ivfAppendSinkPaired]]'s code-table twin: appends to the current
+    * generation's member `t` (PQ always present; SQ8/BQ when the
+    * generation was bootstrapped with them in `derived`). */
+  def appendSinkPaired(t: CodeTable, pairBase: String,
+      appId: String = DefaultApp)(batch: DataFrame, batchId: Long): Unit =
+    onCurrentGen(pairBase, batchId) { gen =>
+      appendSink(t, memberGenPath(pairBase, gen, t.member),
+        genPaths(pairBase, gen)._1, appId)(batch, batchId)
+    }
 
   /** [[ivfAppendSinkPaired]]'s DELETE twin ([[ivfDeleteSink]]):
     * tombstones land on the current generation's IVF base — the
@@ -959,9 +904,18 @@ object IndexIngest {
     * s26 post-filter class); the next compaction or gate retrain
     * physicalizes the removal everywhere. */
   def ivfDeleteSinkPaired(pairBase: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
+      batch: DataFrame, batchId: Long): Unit =
+    onCurrentGen(pairBase, batchId) { gen =>
+      ivfDeleteSink(genPaths(pairBase, gen)._1, appId)(batch, batchId)
+    }
+
+  /** The one generation guard every paired sink runs: resolve the
+    * CURRENT generation, commit the batch there, then fail the batch
+    * if the pointer moved meanwhile (see [[ivfAppendSinkPaired]]). */
+  private def onCurrentGen(pairBase: String, batchId: Long)(
+      sink: String => Unit): Unit = {
     val gen = requireGen(pairBase)
-    ivfDeleteSink(genPaths(pairBase, gen)._1, appId)(batch, batchId)
+    sink(gen)
     requireGenUnmoved(pairBase, gen, batchId)
   }
 
@@ -992,32 +946,28 @@ object IndexIngest {
     * before the swap and are still scanning — the same reason Lucene
     * keeps the previous commit point until the next one).
     *
-    * A generation bootstrapped `withSq` carries its SQ8 table through
-    * the same machinery: healed from the IVF sibling, its replay mark
-    * part of the skew deferral and the pre-swap re-check, rebuilt
-    * against the new generation's cells before the pointer moves — so
-    * the never-mixed guarantee covers all THREE artifacts.
+    * A generation bootstrapped with derived members (SQ8, BQ) carries
+    * each table through the same machinery: healed from the IVF
+    * sibling, its replay mark part of the skew deferral and the
+    * pre-swap re-check, rebuilt against the new generation's cells
+    * before the pointer moves — so the never-mixed guarantee covers
+    * every artifact of the generation.
     *
     * `midBuild` is a test seam invoked between the two artifact
     * builds — the widest point of the old mixed window. */
   def recallGateAndRetrainPaired(spark: org.apache.spark.sql.SparkSession,
       pairBase: String, panelMod: Long = 4,
       midBuild: () => Unit = () => ()): (Int, Long, Boolean, Boolean) = {
-    val gen = currentGen(pairBase).getOrElse(throw new IllegalStateException(
-      s"no CURRENT generation at $pairBase — bootstrapPair first"))
+    val gen = requireGen(pairBase)
     val (ivfBase, pqBase) = genPaths(pairBase, gen)
-    val ivfFp = healPair(spark, ivfBase, pqBase)
+    val ivfFp = healIvf(spark, ivfBase)
     // derived generation members join the heal, the skew deferral, the
     // build and the swap-race re-check — presence is the gen dir, not
     // the marker, so a crashed member publish heals instead of silently
     // dropping the table from the next generation
-    val derivedCur: Seq[(String, String, (DataFrame, String) => Unit)] =
-      DerivedKinds.flatMap { case (kind, build) =>
-        memberIfPresent(pairBase, gen, kind).map((kind, _, build))
-      }
-    derivedCur.foreach { case (_, p, build) =>
-      healDerivedAgainst(spark, ivfBase, p, ivfFp)(build)
-    }
+    val members = (CodeTable.Pq -> pqBase) +: DerivedKinds.flatMap(t =>
+      memberIfPresent(pairBase, gen, t.member).map(t -> _))
+    members.foreach { case (t, p) => healMember(spark, ivfBase, p, ivfFp, t) }
     val (queries, truthRows, hits) =
       auditRecall(spark, ivfBase, pqBase, panelMod)
     val fired = Similarity.retrainDecision(truthRows, hits)
@@ -1028,12 +978,11 @@ object IndexIngest {
     // append lineages only, as in the fixed-base gate
     val marksBefore = readState(ivfBase)
     val appendsBefore = appendMarksOf(marksBefore)
-    var retrained = fired && appendsBefore == appendMarks(pqBase) &&
-      derivedCur.forall { case (_, p, _) =>
-        appendMarks(p) == appendsBefore }
+    var retrained = fired &&
+      members.forall { case (_, p) => appendMarks(p) == appendsBefore }
     if (retrained) {
       val next = s"g${gen.stripPrefix("g").toLong + 1}"
-      val (ivfNew, pqNew) = genPaths(pairBase, next)
+      val ivfNew = genPaths(pairBase, next)._1
       // same vector set → the new generation carries the SAME
       // fingerprint (content-derived, layout/model-insensitive); a
       // crashed prior attempt at this generation either revalidates
@@ -1047,19 +996,13 @@ object IndexIngest {
         copyStateInto(ivfBase, staging)
       }
       midBuild() // the old mixed window: g<N> still serves, complete
+      // vectors and cells from the NEW generation's lists, so each
+      // code table shards identically to what it will serve beside
       val newLists = invertedLists(spark, ivfNew)
-      ArtifactStore.ensure(pqNew, ivfFp) { staging =>
-        // vectors and cells from the NEW generation's lists, so the
-        // code table shards identically to what it will serve beside
-        Similarity.pqBuildFrom(
-          newLists.select(col("vec_id"), col("embedding"), col("norm")),
-          staging, newLists.select(col("vec_id"), col("cell")))
-        copyStateInto(pqBase, staging)
-      }
-      derivedCur.foreach { case (kind, p, build) =>
-        ArtifactStore.ensure(memberGenPath(pairBase, next, kind),
+      members.foreach { case (t, p) =>
+        ArtifactStore.ensure(memberGenPath(pairBase, next, t.member),
             ivfFp) { staging =>
-          build(sqNvFromLists(newLists), staging)
+          buildMember(t, newLists, staging)
           copyStateInto(p, staging)
         }
       }
@@ -1071,9 +1014,7 @@ object IndexIngest {
       // Together with the sinks' post-commit pointer re-check this
       // leaves no commit unaccounted for (review-caught r12).
       if (readState(ivfBase) != marksBefore ||
-          appendMarks(pqBase) != appendsBefore ||
-          derivedCur.exists { case (_, p, _) =>
-            appendMarks(p) != appendsBefore }) {
+          members.exists { case (_, p) => appendMarks(p) != appendsBefore }) {
         retrained = false
       } else swapCurrent(pairBase, next)
       // retention (only after a real swap): keep the just-replaced
@@ -1141,56 +1082,30 @@ object IndexIngest {
     ()
   }
 
-  /** Rebuild the PQ artifact entirely from the IVF artifact — the
-    * self-heal path for a marker-less PQ base (crash inside a prior
-    * rewrite) and the one place the PQ fingerprint is SET rather than
-    * chained: the rebuilt content is exactly the IVF lists' vector
-    * set, so it carries the IVF artifact's fingerprint and the replay
-    * mark is copied from the IVF artifact's `stream_state` (the
-    * rebuild's ensure sweeps the old one with the other stale
-    * children). */
-  private def rebuildPqFrom(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String, pqBase: String, fp: String): Unit = {
-    ArtifactStore.ensure(pqBase, fp) { staging =>
-      val v = graft.llm.IndexDelete.liveListsAt(spark, ivfBase)
-        .select(col("vec_id"), col("embedding"), col("norm"), col("cell"))
-      Similarity.pqBuildFrom(
-        v.select(col("vec_id"), col("embedding"), col("norm")),
-        staging, v.select(col("vec_id"), col("cell")))
-      // the replay mark is STAGED with the data (a post-publish copy
-      // would be an unmanifested extra file — the artifact would fail
-      // its own manifest validation and read as absent)
-      copyStateInto(ivfBase, staging)
-    }
-    ()
-  }
-
-  /** [[rebuildPqFrom]] for a derived code table (SQ8/BQ): equally
-    * derivable from the IVF artifact (the models are vector-set-pure
-    * and reproduce bit-identically — or do not exist; the cells come
-    * from the lists), fingerprint set to the IVF artifact's, replay
-    * mark copied the same staged way. */
-  private def rebuildDerivedFrom(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String, base: String, fp: String)(
-      build: (DataFrame, String) => Unit): Unit = {
-    ArtifactStore.ensure(base, fp) { staging =>
-      build(sqNvFromLists(invertedLists(spark, ivfBase)), staging)
-      copyStateInto(ivfBase, staging)
-    }
-    ()
-  }
-
-  /** The derived-member heal shared by both gate postures and
+  /** The code-table heal shared by both gate postures and
     * [[bootstrapPair]]'s adoption path: roll back a crashed publish
-    * first, then rebuild a still-invalid (or absent) member from the
-    * IVF sibling. A valid member is untouched. */
-  private def healDerivedAgainst(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String, base: String, ivfFp: String)(
-      build: (DataFrame, String) => Unit): Unit =
+    * first, then rebuild a still-invalid (or absent) member entirely
+    * from the IVF artifact — the self-heal path for a marker-less base
+    * (crash inside a prior rewrite) and the one place a code table's
+    * fingerprint is SET rather than chained: the rebuilt content is
+    * exactly the IVF lists' vector set (the models are vector-set-pure
+    * and reproduce bit-identically — or do not exist; the cells come
+    * from the lists), so it carries the IVF artifact's fingerprint and
+    * the replay mark is copied from the IVF artifact's `stream_state`
+    * (the rebuild's ensure sweeps the old one with the other stale
+    * children). A valid member is untouched. */
+  private def healMember(spark: org.apache.spark.sql.SparkSession,
+      ivfBase: String, base: String, ivfFp: String, t: CodeTable): Unit =
     if (ArtifactStore.currentFingerprint(base).isEmpty) {
-      ArtifactStore.restoreAside(base)
+      ArtifactStore.restoreAside(base) // same publish-crash roll-back
       if (ArtifactStore.currentFingerprint(base).isEmpty)
-        rebuildDerivedFrom(spark, ivfBase, base, ivfFp)(build)
+        ArtifactStore.ensure(base, ivfFp) { staging =>
+          buildMember(t, invertedLists(spark, ivfBase), staging)
+          // the replay mark is STAGED with the data (a post-publish
+          // copy would be an unmanifested extra file — the artifact
+          // would fail its own manifest validation and read as absent)
+          copyStateInto(ivfBase, staging)
+        }
     }
 
   /** Per-partition-dir fragmentation of a cell-major table: the
@@ -1233,125 +1148,11 @@ object IndexIngest {
     fs.childNames(fs.join(b, "tombstones")).count(_.startsWith("part-"))
   }
 
-  /** [[maybeCompactIvf]] for the PQ code table. */
-  def maybeCompactPq(spark: org.apache.spark.sql.SparkSession,
+  /** [[maybeCompactIvf]] for a code table of kind `t`. */
+  def maybeCompact(t: CodeTable, spark: org.apache.spark.sql.SparkSession,
       base: String, maxFilesPerCell: Int = 4): Boolean =
     fragmentation(base, "codes") >= maxFilesPerCell &&
-      compactPq(spark, base)
-
-  /** A normed batch as s29's `(vec_id, cell, nv)` build/encode frame:
-    * unit vectors with the cell from assignment to the IVF artifact's
-    * stored centroids riding each row (SQ's encode is elementwise, so
-    * unlike the PQ sink no vec_id re-join is ever needed). */
-  private def sqNvc(v: DataFrame, ivfBase: String): DataFrame =
-    Similarity.assignToCentroids(v,
-        graft.io.Load.parquet(v.sparkSession, s"$ivfBase/centroids"))
-      .withColumn("nv",
-        expr(Similarity.UnitNvExpr))
-      .select(col("vec_id"), col("cell"), col("nv"))
-
-  /** One-time SQ8 bootstrap: train the per-dim `(vmin, vdiff)` ranges
-    * on the initial corpus and write the code table cell-major — cells
-    * by assignment to the already-bootstrapped IVF artifact's centroids
-    * at `ivfBase`, so the scalar code table and the vector lists shard
-    * identically from the first byte ([[pqBootstrap]]'s contract for
-    * the quantizer whose whole train step is one min/max aggregate). */
-  def sqBootstrap(base: String, ivfBase: String,
-      vectors: DataFrame): BootstrapStatus = {
-    val v = withNorm(vectors)
-    bootstrapOnce(base, Similarity.frameFingerprintParts(v)) {
-      Similarity.sqBuildFromNv(sqNvc(v, ivfBase), _)
-    }
-  }
-
-  /** The scalar-quantized twin of [[pqAppendSink]] — the SIXTH
-    * exactly-once sink (IVF vectors, BM25 segments, LSH postings, PQ
-    * codes, paired-generation sinks, now SQ8 codes), and the cheapest
-    * append path of the index triad: SQ8 has NO trained codebook to
-    * consult — each micro-batch encodes elementwise against the stored
-    * frozen `(vmin, vdiff)` ranges (a 1-row broadcast + one codegen'd
-    * `transform`; `ScalarQuantizer::compute_codes` at add time) and
-    * appends under its cells' partition dirs. Cells come from
-    * assignment to the IVF artifact's stored centroids, keeping the
-    * code table aligned with [[ivfAppendSink]]'s lists for the same
-    * feed regardless of sink commit order. Same replay contract as the
-    * siblings: the per-lineage high-water mark lives inside the
-    * artifact and commits in the same mutate as the rows. Note the
-    * frozen-range trade inherited from the batch posture (s22's frozen
-    * codebook): streamed vectors OUTSIDE the bootstrap corpus's
-    * per-dim envelope clamp to code 0/255 — the recall gate, not the
-    * sink, is where a drifted envelope fires a retrain. */
-  def sqAppendSink(base: String, ivfBase: String,
-      appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val v = withNorm(batch)
-    appendOnce(base, batchId,
-        Similarity.frameFingerprintParts(v), appId) { live =>
-      Store.writePartitionedParquet(
-        Similarity.sqEncode(sqNvc(v, ivfBase),
-          graft.io.Load.parquet(spark, s"$live/params")),
-        s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
-    }
-  }
-
-  /** [[compactPq]] for the SQ8 code table; the unstaged 1-row params
-    * frame survives. */
-  def compactSq(spark: org.apache.spark.sql.SparkSession,
-      base: String): Boolean =
-    compactCodesTable(spark, base, Similarity.sqCodesSchema,
-      Seq("vec_id", "scodes", "cell"))
-
-  /** [[maybeCompactIvf]] for the SQ8 code table. */
-  def maybeCompactSq(spark: org.apache.spark.sql.SparkSession,
-      base: String, maxFilesPerCell: Int = 4): Boolean =
-    fragmentation(base, "codes") >= maxFilesPerCell &&
-      compactSq(spark, base)
-
-  /** One-time BQ bootstrap: sign-bit-encode the initial corpus and
-    * write the code table cell-major — the degenerate end of the
-    * bootstrap spectrum: there is NO train step at all (not even SQ8's
-    * min/max pass), so the whole build is one map-only encode. Cells
-    * by assignment to the already-bootstrapped IVF artifact at
-    * `ivfBase`, the siblings' contract. */
-  def bqBootstrap(base: String, ivfBase: String,
-      vectors: DataFrame): BootstrapStatus = {
-    val v = withNorm(vectors)
-    bootstrapOnce(base, Similarity.frameFingerprintParts(v)) {
-      Similarity.bqBuildFromNv(sqNvc(v, ivfBase), _)
-    }
-  }
-
-  /** [[sqAppendSink]]'s binary twin — the SEVENTH exactly-once sink,
-    * and the simplest possible one: sign bits depend on nothing
-    * trained, so the append IS the encode (64 comparisons per vector,
-    * map-only) plus the shared replay contract. There is no frozen
-    * model to drift from — a BQ table never needs an encode-side
-    * retrain, only the cell re-layout when the gate retrains the IVF
-    * generation (which is why it registers in [[DerivedKinds]]). */
-  def bqAppendSink(base: String, ivfBase: String,
-      appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val v = withNorm(batch)
-    appendOnce(base, batchId,
-        Similarity.frameFingerprintParts(v), appId) { live =>
-      Store.writePartitionedParquet(Similarity.bqBits(sqNvc(v, ivfBase)),
-        s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
-    }
-  }
-
-  /** [[compactPq]] for the BQ code table (one `codes/` child; nothing
-    * else under the base, so the rewrite stages everything). */
-  def compactBq(spark: org.apache.spark.sql.SparkSession,
-      base: String): Boolean =
-    compactCodesTable(spark, base, Similarity.bqCodesSchema,
-      Seq("vec_id", "bits_lo", "bits_hi", "cell"))
-
-  /** [[maybeCompactIvf]] for the BQ code table. */
-  def maybeCompactBq(spark: org.apache.spark.sql.SparkSession,
-      base: String, maxFilesPerCell: Int = 4): Boolean =
-    fragmentation(base, "codes") >= maxFilesPerCell &&
-      compactBq(spark, base)
+      compact(t, spark, base)
 
   /** One-time LSH dedup-index bootstrap over the initial standing
     * corpus (digests + band postings through the atomic-publish path);

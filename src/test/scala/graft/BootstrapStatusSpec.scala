@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.llm.CodeTable.{Bq, Pq, Sq}
 import graft.stream.IndexIngest
 import graft.stream.IndexIngest.BootstrapStatus._
 
@@ -60,9 +61,9 @@ class BootstrapStatusSpec extends AnyFunSuite {
       (tmp("pq"), tmp("sq"), tmp("bq"), tmp("bm25"), tmp("lsh"))
     val surfaces: Seq[(String,
         DataFrame => IndexIngest.BootstrapStatus, DataFrame, DataFrame)] = Seq(
-      ("pq", IndexIngest.pqBootstrap(pqB, ivf, _), a, b),
-      ("sq", IndexIngest.sqBootstrap(sqB, ivf, _), a, b),
-      ("bq", IndexIngest.bqBootstrap(bqB, ivf, _), a, b),
+      ("pq", IndexIngest.bootstrap(Pq, pqB, ivf, _), a, b),
+      ("sq", IndexIngest.bootstrap(Sq, sqB, ivf, _), a, b),
+      ("bq", IndexIngest.bootstrap(Bq, bqB, ivf, _), a, b),
       ("bm25", IndexIngest.bm25Bootstrap(bmB, _), da, db),
       ("lsh", IndexIngest.lshBootstrap(lshB, _), da, db))
     // each tuple's function is closed over ONE fresh base, so the
@@ -78,11 +79,11 @@ class BootstrapStatusSpec extends AnyFunSuite {
   test("bootstrapPair surfaces the WORST member status, members included") {
     val a = vecs(3, 48); val b = vecs(4, 48)
     val pair = tmp("pair")
-    assert(IndexIngest.bootstrapPair(pair, a, withSq = true, withBq = true)
+    assert(IndexIngest.bootstrapPair(pair, a, derived = Seq(Sq, Bq))
       == Built)
-    assert(IndexIngest.bootstrapPair(pair, a, withSq = true, withBq = true)
+    assert(IndexIngest.bootstrapPair(pair, a, derived = Seq(Sq, Bq))
       == Current)
-    assert(IndexIngest.bootstrapPair(pair, b, withSq = true, withBq = true)
+    assert(IndexIngest.bootstrapPair(pair, b, derived = Seq(Sq, Bq))
       == KeptDivergent,
       "a changed-corpus pair re-bootstrap must be observable")
     // half-lifecycle divergence: the IVF member is re-aligned to the
@@ -91,7 +92,7 @@ class BootstrapStatusSpec extends AnyFunSuite {
     // member's verdict, which the pre-fix code discarded
     val (ivfBase, pqBase) = IndexIngest.resolvePair(pair)
     graft.io.ArtifactStore.deleteTree(ivfBase)
-    assert(IndexIngest.bootstrapPair(pair, b, withSq = true, withBq = true)
+    assert(IndexIngest.bootstrapPair(pair, b, derived = Seq(Sq, Bq))
       == KeptDivergent,
       "IVF rebuilt over corpus B, PQ still at corpus A: the divergent " +
         "member must dominate the pair status")

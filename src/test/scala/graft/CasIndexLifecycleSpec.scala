@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ArtifactStore
+import graft.llm.CodeTable.Pq
 import graft.stream.IndexIngest
 
 /** The `casfs:` data plane for Spark: parquet bytes ride a scheme-
@@ -52,10 +53,10 @@ class CasIndexLifecycleSpec extends AnyFunSuite {
     val pq = freshBase("pq")
     assert(IndexIngest.bootstrap(ivf, base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
-    assert(IndexIngest.pqBootstrap(pq, ivf, base.toDF("vec_id", "embedding"))
+    assert(IndexIngest.bootstrap(Pq, pq, ivf, base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
     IndexIngest.ivfAppendSink(ivf)(b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSink(pq, ivf)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSink(Pq, pq, ivf)(b1.toDF("vec_id", "embedding"), 0L)
     def listCount() = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
       .parquet(s"$ivf/assignments").count()
@@ -75,7 +76,7 @@ class CasIndexLifecycleSpec extends AnyFunSuite {
           !col("vec_id").isin(deleted.toSeq: _*))
         .select(col("vec_id"), col("embedding"), col("norm"))
       graft.llm.Similarity
-        .storedIvfPqServeFrom(spark, panel, ivf, pq)
+        .serveFrom(Pq, spark, panel, ivf, pq)
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
     }
@@ -107,7 +108,7 @@ class CasIndexLifecycleSpec extends AnyFunSuite {
     assert(ArtifactStore.currentFingerprint(iv).isDefined)
     val b1 = (100L until 110L).map(i => (i, vec()))
     IndexIngest.ivfAppendSinkPaired(pair)(b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSinkPaired(pair)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSinkPaired(Pq, pair)(b1.toDF("vec_id", "embedding"), 0L)
     val n = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
       .parquet(s"$iv/assignments").count()

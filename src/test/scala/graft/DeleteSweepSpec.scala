@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{Dedup, IndexDelete, Retrieval, Similarity}
+import graft.llm.CodeTable.{Bq, Pq, Sq}
 
 /** Delete propagation as a GENERIC compliance property, not a
   * per-query test: once an id is tombstoned, it must never appear in
@@ -84,9 +85,9 @@ class DeleteSweepSpec extends AnyFunSuite {
     val bq = root.resolve("bq").toString
     val df = all.toDF("vec_id", "embedding")
     graft.stream.IndexIngest.bootstrap(ivf, df)
-    graft.stream.IndexIngest.pqBootstrap(pq, ivf, df)
-    graft.stream.IndexIngest.sqBootstrap(sq, ivf, df)
-    graft.stream.IndexIngest.bqBootstrap(bq, ivf, df)
+    graft.stream.IndexIngest.bootstrap(Pq, pq, ivf, df)
+    graft.stream.IndexIngest.bootstrap(Sq, sq, ivf, df)
+    graft.stream.IndexIngest.bootstrap(Bq, bq, ivf, df)
     // remove 75% of the membership — far past the point where the
     // 32-slot pool would starve if tombstones still occupied slots
     // (32 × 25% live ≈ 8 < k=10)
@@ -111,9 +112,9 @@ class DeleteSweepSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(deletedQueriers.nonEmpty, "panel must carry tombstoned queriers")
     val surfaces: Seq[(String, DataFrame)] = Seq(
-      "pq" -> Similarity.storedIvfPqServeFrom(spark, panel, ivf, pq),
-      "sq" -> Similarity.sqServeFrom(spark, panel, ivf, sq),
-      "bq" -> Similarity.bqServeFrom(spark, panel, ivf, bq))
+      "pq" -> Similarity.serveFrom(Pq, spark, panel, ivf, pq),
+      "sq" -> Similarity.serveFrom(Sq, spark, panel, ivf, sq),
+      "bq" -> Similarity.serveFrom(Bq, spark, panel, ivf, bq))
     val delSet = deleted.toSet
     surfaces.foreach { case (kind, servedDf) =>
       val rows = servedDf.select(col("query_id"), col("neighbor_id"))
@@ -144,7 +145,7 @@ class DeleteSweepSpec extends AnyFunSuite {
     val pq = root.resolve("pq").toString
     val df = all.toDF("vec_id", "embedding")
     graft.stream.IndexIngest.bootstrap(ivf, df)
-    graft.stream.IndexIngest.pqBootstrap(pq, ivf, df)
+    graft.stream.IndexIngest.bootstrap(Pq, pq, ivf, df)
     // the panel is captured BEFORE the wipe (a maintenance snapshot
     // whose queriers have all since been taken down — the most
     // degenerate serving state a delete-bearing index reaches)
@@ -154,7 +155,7 @@ class DeleteSweepSpec extends AnyFunSuite {
       .localCheckpoint(true)
     val n = IndexDelete.applyDeletes(spark, ivf, all.map(_._1).toDF("vec_id"))
     assert(n == all.size.toLong)
-    assert(Similarity.storedIvfPqServeFrom(spark, panel, ivf, pq)
+    assert(Similarity.serveFrom(Pq, spark, panel, ivf, pq)
       .count() == 0L, "an emptied index must serve the empty answer")
     graft.Checkpoints.release(panel)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ArtifactStore
+import graft.llm.CodeTable.Pq
 import graft.stream.IndexIngest
 
 /** `graftfs:`'s AbstractFileSystem binding — what gives FileContext
@@ -53,11 +54,11 @@ class HadoopIndexLifecycleSpec extends AnyFunSuite {
     val pq = freshBase("pq")
     assert(IndexIngest.bootstrap(ivf, base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
-    assert(IndexIngest.pqBootstrap(pq, ivf, base.toDF("vec_id", "embedding"))
+    assert(IndexIngest.bootstrap(Pq, pq, ivf, base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
     // exactly-once appends with replay marks living on graftfs:
     IndexIngest.ivfAppendSink(ivf)(b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSink(pq, ivf)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSink(Pq, pq, ivf)(b1.toDF("vec_id", "embedding"), 0L)
     def listCount() = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
       .parquet(s"$ivf/assignments").count()
@@ -83,7 +84,7 @@ class HadoopIndexLifecycleSpec extends AnyFunSuite {
           !col("vec_id").isin(deleted.toSeq: _*))
         .select(col("vec_id"), col("embedding"), col("norm"))
       graft.llm.Similarity
-        .storedIvfPqServeFrom(spark, panel, ivf, pq)
+        .serveFrom(Pq, spark, panel, ivf, pq)
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1)))
     }
@@ -118,7 +119,7 @@ class HadoopIndexLifecycleSpec extends AnyFunSuite {
     // paired append lands on the current generation through the scheme
     val b1 = (100L until 110L).map(i => (i, vec()))
     IndexIngest.ivfAppendSinkPaired(pair)(b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSinkPaired(pair)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSinkPaired(Pq, pair)(b1.toDF("vec_id", "embedding"), 0L)
     val n = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
       .parquet(s"$iv/assignments").count()

@@ -1676,7 +1676,7 @@ class ScaleDesignSpec extends AnyFunSuite {
     // code-table scan, so a 3-cell probe reads ~3/16 of the table's
     // partitions at runtime — for ALL THREE stored-code kinds (PQ raw,
     // SQ8, BQ), not just the one that was hand-checked when the shared
-    // adcPool/servingProbes tail was extracted. Without this, a probe
+    // codePool/servingProbes tail was extracted. Without this, a probe
     // scans the whole code table and the compression's I/O story is
     // fiction at 100 TB.
     for ((name, df) <- Seq(

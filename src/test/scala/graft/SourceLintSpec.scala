@@ -16,7 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * The operator modules in `graft/llm` resolve their artifacts through
   * one [[io.Artifact]] handle per kind, and fingerprint through
   * [[io.ArtifactStore.partsWhere]]: they hand-write no memo, artifact
-  * path, ensure call or xor aggregate of their own. */
+  * path, ensure call or xor aggregate of their own.
+  *
+  * The compressed code tables (PQ, SQ8, BQ) share one build, pool,
+  * server and set of streaming sinks written over the
+  * [[llm.CodeTable]] kind: `IndexIngest` and `Similarity` define no
+  * per-kind copy of them. */
 class SourceLintSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[(Path, String)] = {
@@ -36,6 +41,24 @@ class SourceLintSpec extends AnyFunSuite {
         (src.substring(0, m.start).count(_ == '\n') + 1,
           m.matched.replaceAll("\\s+", ""))
       }.toSeq
+
+  /** By file, the names a hand-copied code-table kind would define
+    * beside the [[llm.CodeTable]]-generic ones: a `def` of one of them
+    * is a per-kind copy. */
+  private val perKindEntries: Seq[(String, String)] = Seq(
+    "src/main/scala/graft/stream/IndexIngest.scala" ->
+      ("(pq|sq|bq)(Bootstrap|AppendSink|AppendSinkPaired)|" +
+        "compact(Pq|Sq|Bq)|maybeCompact(Pq|Sq|Bq)|resolve(Sq|Bq)"),
+    "src/main/scala/graft/llm/Similarity.scala" ->
+      "(sq|bq)(Pool|ServeFrom|BuildInto)")
+
+  /** Each `def` in `src` whose whole name matches `names`:
+    * (line, name). */
+  private[graft] def perKindDefs(src: String,
+      names: String): Seq[(Int, String)] =
+    raw"""\bdef\s+($names)\b""".r.findAllMatchIn(src).map { m =>
+      (src.substring(0, m.start).count(_ == '\n') + 1, m.group(1))
+    }.toSeq
 
   /** Every reader chain — `.read` followed by `.method(args)` calls,
     * across line breaks — that ends in `.parquet(` without declaring a
@@ -129,5 +152,50 @@ class SourceLintSpec extends AnyFunSuite {
       s"${offenders.size} hand-written artifact-lifecycle steps; resolve " +
         "through a graft.io.Artifact handle and fingerprint through " +
         "graft.io.ArtifactStore.partsWhere:\n" + offenders.mkString("\n"))
+  }
+
+  test("the per-kind detector flags the replaced code-table entries and only those") {
+    val (ingest, similarity) = (perKindEntries(0)._2, perKindEntries(1)._2)
+    val flagged = Seq(
+      ingest -> "def pqBootstrap(base: String, ivfBase: String,",
+      ingest -> "def sqAppendSink(base: String, ivfBase: String,",
+      ingest -> "  def bqAppendSinkPaired(pairBase: String)",
+      ingest -> "def compactSq(spark: SparkSession, base: String)",
+      ingest -> "def maybeCompactPq(spark: SparkSession,",
+      ingest -> "def resolveBq(pairBase: String)",
+      similarity -> "private def sqPool(probes: DataFrame,",
+      similarity -> "private[graft] def bqServeFrom(spark: SparkSession,",
+      similarity -> "private def sqBuildInto(spark: SparkSession,")
+    val clean = Seq(
+      ingest -> "def bootstrap(t: CodeTable, base: String,",
+      ingest -> "def appendSink(t: CodeTable, base: String,",
+      ingest -> "def appendSinkPaired(t: CodeTable, pairBase: String,",
+      ingest -> "def compactIvf(spark: SparkSession, base: String)",
+      ingest -> "def maybeCompactIvf(spark: SparkSession,",
+      ingest -> "def resolvePair(pairBase: String)",
+      ingest -> "def resolveMember(t: CodeTable, pairBase: String)",
+      ingest -> "def pqBootstrapLegacy(base: String)",
+      ingest -> "IndexIngest.pqBootstrap(pqB, ivf, v)",
+      similarity -> "private def codePool(t: CodeTable,",
+      similarity -> "private[graft] def serveFrom(t: CodeTable,",
+      similarity -> "private def pqBuildInto(spark: SparkSession,",
+      similarity -> "// sqPool and bqServeFrom were merged")
+    flagged.foreach { case (names, s) =>
+      assert(perKindDefs(s, names).size === 1, s) }
+    clean.foreach { case (names, s) =>
+      assert(perKindDefs(s, names).isEmpty, s) }
+  }
+
+  test("IndexIngest and Similarity define no per-kind code-table entry") {
+    val offenders = perKindEntries.flatMap { case (file, names) =>
+      val f = Paths.get(file)
+      assert(Files.isRegularFile(f), s"run from the repository root: $f")
+      perKindDefs(Files.readString(f), names).map { case (line, name) =>
+        s"$file:$line: def $name"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"${offenders.size} per-kind code-table entries; write them once " +
+        "over graft.llm.CodeTable:\n" + offenders.mkString("\n"))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.llm.CodeTable.{Bq, Pq, Sq}
 import graft.stream.EventWindows
 
 /** Structured Streaming behavior: the batch window queries re-run as real
@@ -1150,7 +1151,7 @@ class StreamingSpec extends AnyFunSuite {
     val pqIdx = root.resolve("pq").toString
     graft.stream.IndexIngest.bootstrap(
       ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.pqBootstrap(
+    graft.stream.IndexIngest.bootstrap(Pq,
       pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     def storedCodes(): Map[Long, (Long, Seq[Int])] = spark.read
       .schema(graft.llm.Similarity.pqCodesSchema)
@@ -1162,7 +1163,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = src.toDS().toDF("vec_id", "embedding")
       .writeStream
       .foreachBatch(
-        graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx) _)
+        graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx) _)
       .start()
     try {
       src.addData(b1); q.processAllAvailable()
@@ -1171,7 +1172,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(storedCodes().size == 60, "batch 2 codes must be appended")
     } finally q.stop()
     // exactly-once: a replayed committed batch id is a wholesale no-op
-    graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b2.toDF("vec_id", "embedding"), 1L)
     assert(storedCodes().size == 60, "replay must not double-ingest")
     assert(graft.io.ArtifactStore.currentFingerprint(pqIdx).isDefined)
@@ -1202,7 +1203,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(partFiles().values.exists(_ > 1),
       "appends should have left multi-file cells to make compaction real")
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(pqIdx)
-    assert(graft.stream.IndexIngest.compactPq(spark, pqIdx))
+    assert(graft.stream.IndexIngest.compact(Pq, spark, pqIdx))
     assert(partFiles().values.forall(_ == 1),
       s"compaction must leave one file per cell, got ${partFiles()}")
     assert(graft.io.ArtifactStore.currentFingerprint(pqIdx) == fpBefore,
@@ -1232,7 +1233,7 @@ class StreamingSpec extends AnyFunSuite {
     val sqIdx = root.resolve("sq").toString
     graft.stream.IndexIngest.bootstrap(
       ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.sqBootstrap(
+    graft.stream.IndexIngest.bootstrap(Sq,
       sqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     def storedCodes(): Map[Long, (Long, Seq[Int])] = spark.read
       .schema(graft.llm.Similarity.sqCodesSchema)
@@ -1244,7 +1245,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = src.toDS().toDF("vec_id", "embedding")
       .writeStream
       .foreachBatch(
-        graft.stream.IndexIngest.sqAppendSink(sqIdx, ivfIdx) _)
+        graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx) _)
       .start()
     try {
       src.addData(b1); q.processAllAvailable()
@@ -1253,7 +1254,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(storedCodes().size == 60, "batch 2 codes must be appended")
     } finally q.stop()
     // exactly-once: a replayed committed batch id is a wholesale no-op
-    graft.stream.IndexIngest.sqAppendSink(sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
       b2.toDF("vec_id", "embedding"), 1L)
     assert(storedCodes().size == 60, "replay must not double-ingest")
     assert(graft.io.ArtifactStore.currentFingerprint(sqIdx).isDefined)
@@ -1294,7 +1295,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(partFiles().values.exists(_ > 1),
       "appends should have left multi-file cells to make compaction real")
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(sqIdx)
-    assert(graft.stream.IndexIngest.maybeCompactSq(spark, sqIdx,
+    assert(graft.stream.IndexIngest.maybeCompact(Sq, spark, sqIdx,
       maxFilesPerCell = 2))
     assert(partFiles().values.forall(_ == 1),
       s"compaction must leave one file per cell, got ${partFiles()}")
@@ -1308,7 +1309,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming BQ ingest and gate co-retrain: the train-free sink and the derived-member machinery") {
     // the SEVENTH exactly-once sink (sign bits — nothing trained, the
     // append IS the encode) plus the generalized derived-member gate:
-    // bqBase joins the heal and the co-retrain exactly as sqBase does
+    // a derived Bq base joins the heal and co-retrain as an Sq one does
     import spark.implicits._
     import graft.stream.IndexIngest
     val rnd = new scala.util.Random(17)
@@ -1321,8 +1322,8 @@ class StreamingSpec extends AnyFunSuite {
     val pqIdx = root.resolve("pq").toString
     val bqIdx = root.resolve("bq").toString
     IndexIngest.bootstrap(ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    IndexIngest.pqBootstrap(pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    IndexIngest.bqBootstrap(bqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Pq, pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Bq, bqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     def bqRows(base: String) = spark.read
       .schema(graft.llm.Similarity.bqCodesSchema)
       .parquet(s"$base/codes").collect()
@@ -1331,28 +1332,28 @@ class StreamingSpec extends AnyFunSuite {
     assert(bqRows(bqIdx).size == 40)
     // aligned appends through all three sinks
     IndexIngest.ivfAppendSink(ivfIdx)(b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+    IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.bqAppendSink(bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(bqRows(bqIdx).size == 60, "the batch's codes must be appended")
     // replay is a wholesale no-op
-    IndexIngest.bqAppendSink(bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(bqRows(bqIdx).size == 60, "replay must not double-ingest")
     // the gate co-retrains the BQ table through the derived machinery
     val (_, h, fired, retrained) = IndexIngest.recallGateAndRetrain(
-      spark, ivfIdx, pqIdx, bqBase = Some(bqIdx))
+      spark, ivfIdx, pqIdx, derived = Seq(Bq -> bqIdx))
     assert(fired && retrained,
       s"frozen-model appends should fire and retrain here (hits $h)")
     val cleanIvf = root.resolve("clean-ivf").toString
     val cleanBq = root.resolve("clean-bq").toString
     IndexIngest.bootstrap(cleanIvf, all.toDF("vec_id", "embedding"))
-    IndexIngest.bqBootstrap(cleanBq, cleanIvf, all.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Bq, cleanBq, cleanIvf, all.toDF("vec_id", "embedding"))
     assert(bqRows(bqIdx) == bqRows(cleanBq),
       "retrained BQ codes must equal a from-scratch build on all vectors")
     // marks survived the retrain
-    IndexIngest.bqAppendSink(bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(bqRows(bqIdx) == bqRows(cleanBq),
       "replay after the co-retrain must not double-ingest")
@@ -1360,7 +1361,7 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(bqIdx, "_FINGERPRINT"))
     IndexIngest.recallGateAndRetrain(spark, ivfIdx, pqIdx,
-      bqBase = Some(bqIdx))
+      derived = Seq(Bq -> bqIdx))
     assert(graft.io.ArtifactStore.currentFingerprint(bqIdx)
       == graft.io.ArtifactStore.currentFingerprint(ivfIdx),
       "the healed BQ artifact must carry the IVF artifact's fingerprint")
@@ -1368,10 +1369,10 @@ class StreamingSpec extends AnyFunSuite {
       "the healed BQ table must rebuild to the same rows")
     // compaction policy: layout-only, threshold-gated
     // (appends above left multi-file cells only pre-retrain; force one)
-    IndexIngest.bqAppendSink(bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
       (300L until 305L).map(i => (i, vec())).toDF("vec_id", "embedding"), 1L)
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(bqIdx)
-    assert(IndexIngest.maybeCompactBq(spark, bqIdx, maxFilesPerCell = 2))
+    assert(IndexIngest.maybeCompact(Bq, spark, bqIdx, maxFilesPerCell = 2))
     assert(graft.io.ArtifactStore.currentFingerprint(bqIdx) == fpBefore,
       "compaction is layout-only: the content fingerprint must not move")
   }
@@ -1386,27 +1387,27 @@ class StreamingSpec extends AnyFunSuite {
     val pairBase = java.nio.file.Files.createTempDirectory("graft-pairbq")
       .resolve("trio").toString
     IndexIngest.bootstrapPair(pairBase, baseVecs.toDF("vec_id", "embedding"),
-      withSq = true, withBq = true)
-    assert(IndexIngest.resolveSq(pairBase).isDefined
-      && IndexIngest.resolveBq(pairBase).isDefined,
+      derived = Seq(Sq, Bq))
+    assert(IndexIngest.resolveMember(Sq, pairBase).isDefined
+      && IndexIngest.resolveMember(Bq, pairBase).isDefined,
       "withSq + withBq must create BOTH derived members")
     for (sink <- Seq(IndexIngest.ivfAppendSinkPaired(pairBase) _,
-        IndexIngest.pqAppendSinkPaired(pairBase) _,
-        IndexIngest.sqAppendSinkPaired(pairBase) _,
-        IndexIngest.bqAppendSinkPaired(pairBase) _))
+        IndexIngest.appendSinkPaired(Pq, pairBase) _,
+        IndexIngest.appendSinkPaired(Sq, pairBase) _,
+        IndexIngest.appendSinkPaired(Bq, pairBase) _))
       sink(b1.toDF("vec_id", "embedding"), 0L)
     val (_, h, fired, retrained) =
       IndexIngest.recallGateAndRetrainPaired(spark, pairBase)
     assert(fired && retrained,
       s"aligned marks + fired SLO must swap the quad (hits $h)")
     assert(IndexIngest.currentGen(pairBase).contains("g1"))
-    val g1Bq = IndexIngest.resolveBq(pairBase).get
+    val g1Bq = IndexIngest.resolveMember(Bq, pairBase).get
     val root2 = java.nio.file.Files.createTempDirectory("graft-pairbq-clean")
     val cleanIvf = root2.resolve("ivf").toString
     val cleanBq = root2.resolve("bq").toString
     IndexIngest.bootstrap(cleanIvf,
       (baseVecs ++ b1).toDF("vec_id", "embedding"))
-    IndexIngest.bqBootstrap(cleanBq, cleanIvf,
+    IndexIngest.bootstrap(Bq, cleanBq, cleanIvf,
       (baseVecs ++ b1).toDF("vec_id", "embedding"))
     def bqRows(base: String) = spark.read
       .schema(graft.llm.Similarity.bqCodesSchema)
@@ -1416,14 +1417,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(bqRows(g1Bq) == bqRows(cleanBq),
       "the swapped-in BQ member must equal a from-scratch build")
     // replay through the paired sink lands on g1's carried marks
-    IndexIngest.bqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Bq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(bqRows(g1Bq) == bqRows(cleanBq),
       "replay after the swap must not double-ingest")
   }
 
   test("recall gate with a co-maintained SQ8 table: heals, defers on SQ skew, retrains all three together") {
-    // sqBase opts the SQ8 code table into the gate: an IVF retrain
+    // a derived Sq base opts the SQ8 code table into the gate: an IVF retrain
     // re-cells every dependent table, so the SQ table must move to the
     // new generation in the same decision — and its replay mark must
     // join the skew deferral (a retrain folding an SQ-uncommitted
@@ -1441,19 +1442,19 @@ class StreamingSpec extends AnyFunSuite {
     val sqIdx = root.resolve("sq").toString
     graft.stream.IndexIngest.bootstrap(
       ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.pqBootstrap(
+    graft.stream.IndexIngest.bootstrap(Pq,
       pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.sqBootstrap(
+    graft.stream.IndexIngest.bootstrap(Sq,
       sqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     for ((b, id) <- Seq((b1, 0L), (bSkew, 1L))) {
       graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
         b.toDF("vec_id", "embedding"), id)
-      graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+      graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
         b.toDF("vec_id", "embedding"), id)
     }
     // the SQ sink is one batch BEHIND: ivf/pq marks agree with each
     // other, so only the sq-mark check can defer this cycle
-    graft.stream.IndexIngest.sqAppendSink(sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     def sqCodeRows(base: String) = spark.read
       .schema(graft.llm.Similarity.sqCodesSchema)
@@ -1462,17 +1463,17 @@ class StreamingSpec extends AnyFunSuite {
     val sqBefore = sqCodeRows(sqIdx)
     val (_, _, firedSkew, retrainedSkew) =
       graft.stream.IndexIngest.recallGateAndRetrain(
-        spark, ivfIdx, pqIdx, sqBase = Some(sqIdx))
+        spark, ivfIdx, pqIdx, derived = Seq(Sq -> sqIdx))
     assert(firedSkew && !retrainedSkew,
       "an SQ-skewed cycle must defer the retrain")
     assert(sqCodeRows(sqIdx) == sqBefore,
       "a deferred cycle must not touch the SQ table")
     // drain the skew — the next cycle retrains ALL THREE
-    graft.stream.IndexIngest.sqAppendSink(sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
       bSkew.toDF("vec_id", "embedding"), 1L)
     val (_, _, fired, retrained) =
       graft.stream.IndexIngest.recallGateAndRetrain(
-        spark, ivfIdx, pqIdx, sqBase = Some(sqIdx))
+        spark, ivfIdx, pqIdx, derived = Seq(Sq -> sqIdx))
     assert(fired && retrained,
       "aligned marks + fired SLO must retrain the triple")
     // the retrained SQ table == a from-scratch bootstrap over all
@@ -1481,7 +1482,7 @@ class StreamingSpec extends AnyFunSuite {
     val cleanSq = root.resolve("clean-sq").toString
     graft.stream.IndexIngest.bootstrap(
       cleanIvf, all.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.sqBootstrap(
+    graft.stream.IndexIngest.bootstrap(Sq,
       cleanSq, cleanIvf, all.toDF("vec_id", "embedding"))
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "retrained SQ codes must equal a from-scratch build on all vectors")
@@ -1494,7 +1495,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.io.ArtifactStore.currentFingerprint(cleanSq),
       "the rewrite must keep the chained fingerprint (same vector set)")
     // replay protection survived the co-retrain
-    graft.stream.IndexIngest.sqAppendSink(sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "replay after the co-retrain must not double-ingest")
@@ -1505,14 +1506,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.io.ArtifactStore.currentFingerprint(sqIdx).isEmpty)
     val (q3, h3, _, _) =
       graft.stream.IndexIngest.recallGateAndRetrain(
-        spark, ivfIdx, pqIdx, sqBase = Some(sqIdx))
+        spark, ivfIdx, pqIdx, derived = Seq(Sq -> sqIdx))
     assert(q3 > 0 && h3 >= 0)
     assert(graft.io.ArtifactStore.currentFingerprint(sqIdx)
       == graft.io.ArtifactStore.currentFingerprint(ivfIdx),
       "the healed SQ artifact must carry the IVF artifact's fingerprint")
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "the healed SQ table must rebuild to the same rows")
-    graft.stream.IndexIngest.sqAppendSink(sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
       bSkew.toDF("vec_id", "embedding"), 1L)
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "the healed mark must still block replays of committed batches")
@@ -1538,11 +1539,11 @@ class StreamingSpec extends AnyFunSuite {
     val pqIdx = root.resolve("pq").toString
     graft.stream.IndexIngest.bootstrap(
       ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.pqBootstrap(
+    graft.stream.IndexIngest.bootstrap(Pq,
       pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
-    graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     // SKEW DEFERRAL first: append one more batch to the IVF side only
     // — the marks disagree, so even a violated SLO must NOT retrain
@@ -1558,7 +1559,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$pqIdx/codebook").collect().toSet
       == cbBefore, "a deferred cycle must not touch the artifacts")
     // drain the skew (PQ catches up) — the next cycle may retrain
-    graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       bSkew.toDF("vec_id", "embedding"), 1L)
     assert(graft.io.ArtifactStore.currentFingerprint(pqIdx).isDefined,
       "pq must be valid after the drain append")
@@ -1588,7 +1589,7 @@ class StreamingSpec extends AnyFunSuite {
     val cleanPq = root.resolve("clean-pq").toString
     graft.stream.IndexIngest.bootstrap(
       cleanIvf, live.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.pqBootstrap(
+    graft.stream.IndexIngest.bootstrap(Pq,
       cleanPq, cleanIvf, live.toDF("vec_id", "embedding"))
     def centroidRows(base: String) = spark.read
       .parquet(s"$base/centroids").collect()
@@ -1619,7 +1620,7 @@ class StreamingSpec extends AnyFunSuite {
     val nBefore = listRows(ivfIdx).size
     graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
-    graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(listRows(ivfIdx).size == nBefore,
       "replay after retrain must not double-ingest")
@@ -1631,7 +1632,7 @@ class StreamingSpec extends AnyFunSuite {
       b2.toDF("vec_id", "embedding"), 2L)
     assert(listRows(ivfIdx).size == nBefore + 5,
       "the maintenance loop must keep accepting appends after a retrain")
-    graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b2.toDF("vec_id", "embedding"), 2L)
     // SELF-HEAL: simulate a crash inside a PQ rewrite (marker gone,
     // data intact) — the sinks would throw; the next gate cycle must
@@ -1648,7 +1649,7 @@ class StreamingSpec extends AnyFunSuite {
       "the healed PQ artifact must carry the IVF artifact's fingerprint")
     // the healed mark still blocks replays of committed batches
     val codesHealed = codeRows(pqIdx)
-    graft.stream.IndexIngest.pqAppendSink(pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b2.toDF("vec_id", "embedding"), 2L)
     assert(codeRows(pqIdx) == codesHealed,
       "replay after self-heal must not double-ingest")
@@ -1820,7 +1821,7 @@ class StreamingSpec extends AnyFunSuite {
     IndexIngest.bootstrapPair(pairBase, baseVecs.toDF("vec_id", "embedding"))
     IndexIngest.ivfAppendSinkPaired(pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     def listRows() = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
@@ -1831,7 +1832,7 @@ class StreamingSpec extends AnyFunSuite {
       IndexIngest.recallGateAndRetrainPaired(spark, pairBase, 4, () => {
         IndexIngest.ivfAppendSinkPaired(pairBase)(
           b2.toDF("vec_id", "embedding"), 1L)
-        IndexIngest.pqAppendSinkPaired(pairBase)(
+        IndexIngest.appendSinkPaired(Pq, pairBase)(
           b2.toDF("vec_id", "embedding"), 1L)
       })
     assert(fired1, s"recall should have fired (hits $h1 of $q1 queries)")
@@ -1868,15 +1869,15 @@ class StreamingSpec extends AnyFunSuite {
     val pairBase = java.nio.file.Files.createTempDirectory("graft-pairsq")
       .resolve("trio").toString
     IndexIngest.bootstrapPair(pairBase, baseVecs.toDF("vec_id", "embedding"),
-      withSq = true)
-    assert(IndexIngest.resolveSq(pairBase).isDefined,
+      derived = Seq(Sq))
+    assert(IndexIngest.resolveMember(Sq, pairBase).isDefined,
       "a withSq bootstrap must expose the generation's SQ base")
     def appendAll(b: Seq[(Long, Seq[Float])], id: Long): Unit = {
       IndexIngest.ivfAppendSinkPaired(pairBase)(
         b.toDF("vec_id", "embedding"), id)
-      IndexIngest.pqAppendSinkPaired(pairBase)(
+      IndexIngest.appendSinkPaired(Pq, pairBase)(
         b.toDF("vec_id", "embedding"), id)
-      IndexIngest.sqAppendSinkPaired(pairBase)(
+      IndexIngest.appendSinkPaired(Sq, pairBase)(
         b.toDF("vec_id", "embedding"), id)
     }
     appendAll(b1, 0L)
@@ -1890,7 +1891,7 @@ class StreamingSpec extends AnyFunSuite {
     val (_, h1, fired1, retrained1) =
       IndexIngest.recallGateAndRetrainPaired(spark, pairBase, 4, () => {
         midGen = IndexIngest.currentGen(pairBase)
-        midSqServes = IndexIngest.resolveSq(pairBase).exists(p =>
+        midSqServes = IndexIngest.resolveMember(Sq, pairBase).exists(p =>
           graft.io.ArtifactStore.currentFingerprint(p).isDefined)
       })
     assert(fired1, s"recall should have fired (hits $h1)")
@@ -1898,18 +1899,18 @@ class StreamingSpec extends AnyFunSuite {
     assert(midGen.contains("g0") && midSqServes,
       "mid-build readers must resolve the complete old generation")
     assert(IndexIngest.currentGen(pairBase).contains("g1"))
-    val g1Sq = IndexIngest.resolveSq(pairBase).get
+    val g1Sq = IndexIngest.resolveMember(Sq, pairBase).get
     // the swapped-in SQ table == a from-scratch build over all vectors
     val all = baseVecs ++ b1
     val root2 = java.nio.file.Files.createTempDirectory("graft-pairsq-clean")
     val cleanIvf = root2.resolve("ivf").toString
     val cleanSq = root2.resolve("sq").toString
     IndexIngest.bootstrap(cleanIvf, all.toDF("vec_id", "embedding"))
-    IndexIngest.sqBootstrap(cleanSq, cleanIvf, all.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Sq, cleanSq, cleanIvf, all.toDF("vec_id", "embedding"))
     assert(sqRows(g1Sq) == sqRows(cleanSq),
       "the new generation's SQ table must equal a from-scratch build")
     // replay through the paired sink lands on g1's mark map — no-op
-    IndexIngest.sqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Sq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(sqRows(g1Sq) == sqRows(cleanSq),
       "replay after the swap must not double-ingest")
@@ -1918,7 +1919,7 @@ class StreamingSpec extends AnyFunSuite {
     appendAll(b2, 1L)
     val (_, h2, fired2, retrained2) =
       IndexIngest.recallGateAndRetrainPaired(spark, pairBase, 4, () => {
-        IndexIngest.sqAppendSinkPaired(pairBase)(
+        IndexIngest.appendSinkPaired(Sq, pairBase)(
           b3.toDF("vec_id", "embedding"), 2L)
       })
     assert(fired2, s"recall should have fired again (hits $h2)")
@@ -1929,18 +1930,18 @@ class StreamingSpec extends AnyFunSuite {
     // cycle completes the swap with the racing batch carried
     IndexIngest.ivfAppendSinkPaired(pairBase)(
       b3.toDF("vec_id", "embedding"), 2L)
-    IndexIngest.pqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Pq, pairBase)(
       b3.toDF("vec_id", "embedding"), 2L)
     val (_, _, fired3, retrained3) =
       IndexIngest.recallGateAndRetrainPaired(spark, pairBase)
     assert(fired3 && retrained3, "the aligned cycle must complete the swap")
     assert(IndexIngest.currentGen(pairBase).contains("g2"))
-    val g2Sq = IndexIngest.resolveSq(pairBase).get
+    val g2Sq = IndexIngest.resolveMember(Sq, pairBase).get
     assert(sqRows(g2Sq).keySet ==
       (all ++ b2 ++ b3).map(_._1).toSet,
       "the final generation must carry the racing batch's codes")
     // and the racing batch's replay is a no-op against g2
-    IndexIngest.sqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Sq, pairBase)(
       b3.toDF("vec_id", "embedding"), 2L)
     assert(sqRows(g2Sq).keySet == (all ++ b2 ++ b3).map(_._1).toSet)
   }
@@ -1960,23 +1961,23 @@ class StreamingSpec extends AnyFunSuite {
     val pairBase = java.nio.file.Files.createTempDirectory("graft-adopt")
       .resolve("trio").toString
     IndexIngest.bootstrapPair(pairBase, baseVecs.toDF("vec_id", "embedding"))
-    assert(IndexIngest.resolveSq(pairBase).isEmpty,
+    assert(IndexIngest.resolveMember(Sq, pairBase).isEmpty,
       "withSq=false must not create an SQ member")
     IndexIngest.ivfAppendSinkPaired(pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     // late adoption, offered the ORIGINAL bootstrap corpus
     IndexIngest.bootstrapPair(pairBase, baseVecs.toDF("vec_id", "embedding"),
-      withSq = true)
-    val sq = IndexIngest.resolveSq(pairBase).get
+      derived = Seq(Sq))
+    val sq = IndexIngest.resolveMember(Sq, pairBase).get
     def sqIds() = spark.read
       .schema(graft.llm.Similarity.sqCodesSchema)
       .parquet(s"$sq/codes").collect().map(_.getLong(0)).toSet
     assert(sqIds() == (baseVecs ++ b1).map(_._1).toSet,
       "the adopted table must carry the appended vectors, not just the corpus")
     // the IVF marks came with it: the committed batch replays as a no-op
-    IndexIngest.sqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Sq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(sqIds() == (baseVecs ++ b1).map(_._1).toSet,
       "the adopted mark map must block replays of committed batches")
@@ -1987,7 +1988,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(retrained,
       "adoption must leave the marks aligned — the gate was wedged")
     assert(IndexIngest.currentGen(pairBase).contains("g1"))
-    assert(IndexIngest.resolveSq(pairBase).isDefined,
+    assert(IndexIngest.resolveMember(Sq, pairBase).isDefined,
       "the adopted member must ride the swap")
   }
 
@@ -2084,7 +2085,7 @@ class StreamingSpec extends AnyFunSuite {
         .parquet(s"$iv/assignments")
         .filter(col("vec_id") % 4 === 0)
         .select(col("vec_id"), col("embedding"), col("norm"))
-      graft.llm.Similarity.storedIvfPqServeFrom(spark, panel, iv, pq)
+      graft.llm.Similarity.serveFrom(Pq, spark, panel, iv, pq)
         .select(col("query_id"), col("neighbor_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     }
@@ -2092,7 +2093,7 @@ class StreamingSpec extends AnyFunSuite {
     // g0 models), then snapshot what the old pair serves
     IndexIngest.ivfAppendSinkPaired(pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     val servedBefore = servedSet()
     assert(servedBefore.nonEmpty)
@@ -2125,14 +2126,14 @@ class StreamingSpec extends AnyFunSuite {
     // wholesale no-op against the NEW generation…
     IndexIngest.ivfAppendSinkPaired(pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.pqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(listRows(iv1) == 60, "replay after swap must not double-ingest")
     // …and a LATER batch still appends to the new generation
     val b2 = (200L until 205L).map(i => (i, vec()))
     IndexIngest.ivfAppendSinkPaired(pairBase)(
       b2.toDF("vec_id", "embedding"), 1L)
-    IndexIngest.pqAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(Pq, pairBase)(
       b2.toDF("vec_id", "embedding"), 1L)
     assert(listRows(iv1) == 65)
     assert(spark.read.schema(graft.llm.Similarity.pqCodesSchema)
@@ -2837,7 +2838,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // the serve path drops tombstoned ids even while their code rows
     // linger: exact-refine inner-joins the live lists
-    // (storedIvfPqServeFrom is exercised by the gate tests; here the
+    // (serveFrom is exercised by the gate tests; here the
     // probe contract via liveListsAt is what s32 serves from)
 
     // deletes alone trigger the compaction policy (tombstone files)
