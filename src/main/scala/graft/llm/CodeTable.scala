@@ -69,7 +69,7 @@ object CodeTable {
     * cell from assignment to `ivfBase`'s stored centroids. */
   private[graft] def assignedNv(v: DataFrame, ivfBase: String): DataFrame =
     cellNv(Similarity.assignToCentroids(v,
-      graft.io.Load.parquet(v.sparkSession, s"$ivfBase/centroids")))
+      Similarity.centroidsAt(v.sparkSession, ivfBase)))
 
   /** The ⌊x·2²⁰⌋ BIGINT quantization every cross-engine score uses. */
   private def quantized(dot: String): Column =
@@ -85,8 +85,8 @@ object CodeTable {
     def encode(v: DataFrame, ivfBase: String, live: String): DataFrame = {
       val spark = v.sparkSession
       val cb = graft.io.Load.parquet(spark, s"$live/codebook")
-      val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
-      val cells = Similarity.assignToCentroids(v, centroids)
+      val cells = Similarity.assignToCentroids(v,
+        Similarity.centroidsAt(spark, ivfBase))
         .select(col("vec_id"), col("cell"))
       Similarity.pqEncode(Similarity.pqSub(Similarity.pqNvFrame(v)), cb)
         .join(cells, "vec_id")

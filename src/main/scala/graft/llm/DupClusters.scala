@@ -189,12 +189,8 @@ object DupClusters {
     * exact-verified). */
   def d21SemDedupProvisioned(spark: SparkSession, dir: String): DataFrame = {
     val v = Similarity.normed(spark, dir)
-    val members = Similarity
-      .rankedAgainst(v,
-        Similarity.ivfTrainCentroids(v, Similarity.provisionedCells(v)))
-      .filter(col("cell_rank") === 1)
-      .select(col("cell"), col("vec_id"), col("embedding"), col("norm"))
-    semDedupFromMembers(members)
+    semDedupFromMembers(Similarity.assignToCentroids(v,
+      Similarity.ivfTrainCentroids(v, Similarity.provisionedCells(v))))
   }
 
   /** The semantic-dedup tail shared by d11 and d21: within-cell

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import org.apache.spark.sql.expressions.Window
-
 import graft.Query
 
 /** Deletion on the persisted vector index — the lifecycle verb the
@@ -256,32 +254,10 @@ object IndexDelete {
     * ability to search), but never appear as neighbors. */
   def s32TombstoneSearch(spark: SparkSession, dir: String): DataFrame = {
     val base = tombIndexBase(spark, dir)
-    val centroids = graft.io.Load.parquet(spark, s"$base/centroids")
-    val q = Similarity.normed(spark, dir)
-      .filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id").as("query_id"),
-        reverse(col("embedding")).as("qv"), col("norm").as("qn"))
-    val byQ = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probes = q.join(broadcast(centroids), lit(true))
-      .withColumn("csim",
-        expr("vec_dot(qv, centroid)") / (col("qn") * col("cnorm")))
-      .withColumn("cell_rank", row_number().over(byQ))
-      .filter(col("cell_rank") <= 3)
-      .select(col("cell"), col("query_id"), col("qv"), col("qn"))
-    val index = liveListsAt(spark, base)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"), col("norm").as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    probes.join(index, "cell")
-      .withColumn("cosine", expr("vec_dot(qv, cv)") / (col("qn") * col("cn")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    Similarity.probedTopK(
+      Similarity.rankedAgainst(Similarity.reversedQueries(spark, dir),
+        Similarity.centroidsAt(spark, base)),
+      liveListsAt(spark, base), keep = lit(true))
   }
 
   /** s32 oracle: the s15 chain (independent replay of what the

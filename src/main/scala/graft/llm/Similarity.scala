@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -89,13 +89,7 @@ object Similarity {
         col("norm").as("cnorm"))
 
     // Lloyd round: assign to nearest seed…
-    val byVec = Window.partitionBy(col("vec_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val assign0 = v.join(broadcast(seeds), lit(true))
-      .withColumn("csim",
-        expr("vec_dot(embedding, centroid)") / (col("norm") * col("cnorm")))
-      .withColumn("rk", row_number().over(byVec))
-      .filter(col("rk") === 1)
+    val assign0 = assignToCentroids(v, seeds)
       .select(col("cell"), col("embedding"))
     // …then recompute each cell's centroid as the quantized member mean
     assign0
@@ -180,33 +174,48 @@ object Similarity {
     * set per artifact. */
   private[graft] def ivfBuildFrom(v: DataFrame, staging: String,
       cells: Int = 16): Unit = {
-    val spark = v.sparkSession
-    val centroids = ivfTrainCentroids(v, cells)
-    centroids.coalesce(1).write.mode("overwrite")
+    ivfTrainCentroids(v, cells).coalesce(1).write.mode("overwrite")
       .parquet(s"$staging/centroids")
-    val loaded = graft.io.Load.parquet(spark, s"$staging/centroids")
-    graft.io.Store.writePartitionedParquet(
-      assignToCentroids(v, loaded),
-      s"$staging/assignments", Seq("cell"), Seq("vec_id"))
+    writeLists(assignToCentroids(v, centroidsAt(v.sparkSession, staging)),
+      staging)
   }
 
   /** Rank-1 cell assignment of `vectors` against `centroids` — the
     * shared kernel of index build ([[ivfIndexBase]]) and incremental
-    * append ([[s16IncrementalIndexUpdate]]): a new batch joins the
+    * append ([[ivfAppendInto]]): a new batch joins the
     * index by assigning to the EXISTING centroids, never by moving
     * them (Faiss `add` vs `train`). */
   private[graft] def assignToCentroids(
-      vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val byVec = Window.partitionBy(col("vec_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    vectors
-      .join(broadcast(centroids), lit(true))
-      .withColumn("csim",
-        expr("vec_dot(embedding, centroid)") / (col("norm") * col("cnorm")))
-      .withColumn("rk", row_number().over(byVec))
-      .filter(col("rk") === 1)
+      vectors: DataFrame, centroids: DataFrame): DataFrame =
+    rankedAgainst(vectors, centroids).filter(col("cell_rank") === 1)
       .select(col("cell"), col("vec_id"), col("embedding"), col("norm"))
-  }
+
+  /** The stored coarse quantizer of the IVF artifact at `base`: its
+    * trained `(cell, centroid, cnorm)` rows — the one reader of the
+    * `centroids/` child. */
+  private[graft] def centroidsAt(spark: SparkSession, base: String): DataFrame =
+    graft.io.Load.parquet(spark, s"$base/centroids")
+
+  /** THE inverted-list writer: `lists` `(cell, vec_id, embedding,
+    * norm)` written cell-major under `base`'s `assignments/` child in
+    * [[invertedListSchema]]'s column order — `Overwrite` for a build
+    * or a compaction's staging dir, `Append` for a batch folded into a
+    * live base. */
+  private[graft] def writeLists(lists: DataFrame, base: String,
+      mode: SaveMode = SaveMode.Overwrite): Unit =
+    graft.io.Store.writePartitionedParquet(
+      lists.select(invertedListSchema.fieldNames.toSeq.map(col): _*),
+      s"$base/assignments", Seq("cell"), Seq("vec_id"), mode)
+
+  /** Fold the normed batch `v` `(vec_id, embedding, norm)` into the
+    * IVF artifact at `live`: rank-1 assignment to its STORED centroids
+    * (Faiss `add`, not `train`), appended under the batch's cell
+    * partitions only. The one append body of the nightly job
+    * ([[ivfIncIndexBase]]) and the streaming sink
+    * ([[graft.stream.IndexIngest.ivfAppendSink]]). */
+  private[graft] def ivfAppendInto(v: DataFrame, live: String): Unit =
+    writeLists(assignToCentroids(v, centroidsAt(v.sparkSession, live)),
+      live, SaveMode.Append)
 
   /** The inverted-list artifact's layout — declared, not inferred: an
     * index reader knows its format, and an EMPTY corpus writes a
@@ -241,13 +250,17 @@ object Similarity {
     * assignment, higher ranks are the probe cells. */
   private[graft] def ivfRanked(spark: SparkSession, dir: String): DataFrame =
     rankedAgainst(normed(spark, dir),
-      graft.io.Load.parquet(spark, s"${ivfIndexBase(spark, dir)}/centroids"))
+      centroidsAt(spark, ivfIndexBase(spark, dir)))
 
-  /** Every vector of `v` ranked against `centroids` — THE cell-ranking
-    * kernel (one broadcast fan-out of v × K + a per-vector window),
-    * shared by the persisted-index path ([[ivfRanked]]) and the
-    * from-frame √n-provisioned path ([[s34IvfSqrtProvisioned]]), so
-    * the two postures cannot drift. */
+  /** Every vector of `v` `(vec_id, embedding, norm)` ranked against
+    * `centroids` — THE cell-ranking kernel (one broadcast fan-out of
+    * v × K + a per-vector window over `(csim desc, cell asc)`). Every
+    * coarse stage runs through it: the Lloyd assign of training, the
+    * rank-1 list assignment of builds and appends
+    * ([[assignToCentroids]]), the persisted-index probes
+    * ([[ivfRanked]], [[storedProbes]], s15/s16/s32) and the from-frame
+    * √n-provisioned path ([[s34IvfSqrtProvisioned]]), so no two of
+    * them can drift. */
   private[graft] def rankedAgainst(v: DataFrame,
       centroids: DataFrame): DataFrame = {
     val byVec = Window.partitionBy(col("vec_id"))
@@ -260,30 +273,30 @@ object Similarity {
       .withColumn("cell_rank", row_number().over(byVec))
   }
 
-  def s02IvfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val ranked = ivfRanked(spark, dir)
-
+  def s02IvfTopK(spark: SparkSession, dir: String): DataFrame =
     // the index side IS the stored artifact: cell-major inverted lists
     // read off disk (cell-pruned at scale), never recomputed
-    val index = ivfInvertedLists(spark, dir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"), col("norm").as("cn"))
-    probedTopK(ranked, index)
-  }
+    probedTopK(ivfRanked(spark, dir), ivfInvertedLists(spark, dir))
 
-  /** The probe tail shared by s02 and s34: top-3 probe cells per
-    * query, cell-restricted candidate join against `index`
-    * (`(cell, neighbor_id, cv, cn)`), exact cosine, k=5. The join is
-    * EQUI on cell — candidates per query are the probed cells'
+  /** The probe tail shared by every batch IVF probe (s02, s15, s16,
+    * s32, s34): top-3 probe cells per query of `ranked`
+    * ([[rankedAgainst]]'s output), cell-restricted candidate join
+    * against `lists` (`(cell, vec_id, embedding, norm)`), the pair
+    * predicate `keep` (by default no self-pairs; s15/s32's reversed
+    * queries keep them, as their oracles do), exact cosine, k=5. The
+    * join is EQUI on cell — candidates per query are the probed cells'
     * occupancy, never n². */
-  private def probedTopK(ranked: DataFrame, index: DataFrame): DataFrame = {
+  private[graft] def probedTopK(ranked: DataFrame, lists: DataFrame,
+      keep: Column = col("query_id") =!= col("neighbor_id")): DataFrame = {
     val probes = ranked.filter(col("cell_rank") <= 3)
       .select(col("cell"), col("vec_id").as("query_id"),
         col("embedding").as("qv"), col("norm").as("qn"))
+    val index = lists.select(col("cell"), col("vec_id").as("neighbor_id"),
+      col("embedding").as("cv"), col("norm").as("cn"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     probes.join(index, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
+      .filter(keep)
       .withColumn("cosine", expr("vec_dot(qv, cv)") / (col("qn") * col("cn")))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
       .distinct() // a neighbor can appear via several probed cells
@@ -313,10 +326,7 @@ object Similarity {
   def s34IvfSqrtProvisioned(spark: SparkSession, dir: String): DataFrame = {
     val v = normed(spark, dir)
     val ranked = rankedAgainst(v, ivfTrainCentroids(v, provisionedCells(v)))
-    val index = ranked.filter(col("cell_rank") === 1)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"), col("norm").as("cn"))
-    probedTopK(ranked, index)
+    probedTopK(ranked, ranked.filter(col("cell_rank") === 1))
   }
 
   /** Same result as [[s01BruteForceTopK]], computed with the typed
@@ -831,20 +841,10 @@ object Similarity {
     * [[servingProbes]] (same expressions, same tie-break), shared by
     * the IVF-PQ serving chain and the SQ/BQ from-frame servers. */
   private def storedProbes(spark: SparkSession, queries: DataFrame,
-      ivfBase: String): DataFrame = {
-    val centroids = graft.io.Load.parquet(spark, s"$ivfBase/centroids")
-    val q = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("norm").as("qn"))
-    val byQ = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    q.join(broadcast(centroids), lit(true))
-      .withColumn("csim",
-        expr("vec_dot(qv, centroid)") / (col("qn") * col("cnorm")))
-      .withColumn("cell_rank", row_number().over(byQ))
+      ivfBase: String): DataFrame =
+    rankedAgainst(queries, centroidsAt(spark, ivfBase))
       .filter(col("cell_rank") <= 3)
-      .select(col("cell"), col("query_id"))
-  }
+      .select(col("cell"), col("vec_id").as("query_id"))
 
   /** s19 candidate-pool width: ADC keeps this many candidates per
     * query before the exact re-rank — the recall/cost knob of every
@@ -919,10 +919,7 @@ object Similarity {
     * not probed — the recall/cost trade IVF-PQ is. */
   def s20IvfPqSearch(spark: SparkSession, dir: String): DataFrame = {
     val (_, codes, lut) = pqAdcComponents(spark, dir)
-    val ranked = ivfRanked(spark, dir)
-    val probes = ranked
-      .filter(col("cell_rank") <= 3 && col("vec_id") % 4 === 0)
-      .select(col("cell"), col("vec_id").as("query_id"))
+    val probes = servingProbes(spark, dir)
     val index = ivfInvertedLists(spark, dir)
       .select(col("cell"), col("vec_id").as("neighbor_id"))
     val cand = probes.join(index, "cell")
@@ -1257,7 +1254,7 @@ object Similarity {
     * so engine and oracle replay the identical IEEE ops. 16 rows,
     * always broadcast. */
   private def unitCentroids(spark: SparkSession, ivfBase: String): DataFrame =
-    graft.io.Load.parquet(spark, s"$ivfBase/centroids")
+    centroidsAt(spark, ivfBase)
       .withColumn("cu", expr("transform(centroid, x -> x / cnorm)"))
       .select(col("cell"), col("cu"))
 
@@ -1886,28 +1883,30 @@ object Similarity {
     * `add` on an `IndexIVFPQ`: `sa_encode` with stored codewords, no
     * retrain) and appended to its cells' code partitions — the exact
     * state machine of s16/s17/d19, fourth artifact family. Cells come
-    * from the incremental IVF index's own assignments, so the code
-    * table and the vector lists shard identically at every point in
-    * the lifecycle. Union fingerprint derived `(nA+nB, xA^xB)` from
+    * from the incremental IVF index — its stored lists for the base
+    * build, and for the batch the streaming sink's encode
+    * ([[CodeTable.Pq.encode]]: assignment to the same stored centroids
+    * the lists' append used) — so the code table and the vector lists
+    * shard identically at every point in the lifecycle. Union fingerprint derived `(nA+nB, xA^xB)` from
     * base and batch parts that one fused scan of the whole table
     * computes on a memo miss ([[incParts]]): the nightly job WRITES
     * only the batch, but its fingerprint pass still reads the corpus
     * once. */
   private def pqIncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val Seq(base, batch) = incParts(spark, dir)
-    // cells from the incremental IVF artifact: the encode side is
-    // base-only (or batch-only), so the join restricts the lists to it
-    def cells = invertedListsAt(spark, ivfIncIndexBase(spark, dir))
-      .select(col("vec_id"), col("cell"))
     pqIncIndex.ensureIncremental(dir)(base, batch)(
-      pqBuildFromNv(pqNv(spark, dir).filter(!incBatchPred), _, cells)) {
+      // cells from the incremental IVF artifact: the encode side is
+      // base-only, so the join restricts the lists to it
+      pqBuildFromNv(pqNv(spark, dir).filter(!incBatchPred), _,
+        invertedListsAt(spark, ivfIncIndexBase(spark, dir))
+          .select(col("vec_id"), col("cell")))) {
       live =>
-        val cb = graft.io.Load.parquet(spark, s"$live/codebook")
-        val nvBatch = pqNv(spark, dir).filter(incBatchPred)
+        // the streaming sink's encode: the batch's cells by assignment
+        // to the same stored centroids its IVF append used
         graft.io.Store.writePartitionedParquet(
-          pqEncode(pqSub(nvBatch), cb).join(cells, "vec_id"),
-          s"$live/codes", Seq("cell"), Seq("vec_id"),
-          org.apache.spark.sql.SaveMode.Append)
+          CodeTable.Pq.encode(normed(spark, dir).filter(incBatchPred),
+            ivfIncIndexBase(spark, dir), live),
+          s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
     }
   }
 
@@ -2245,35 +2244,19 @@ object Similarity {
     * recompute it). ScaleDesignSpec pins that this plan contains no
     * training subtree: at most one more training pass per JVM ever
     * happens no matter how many probe batches run. */
-  def s15IndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val centroids =
-      graft.io.Load.parquet(spark, s"${ivfIndexBase(spark, dir)}/centroids")
-    val q = normed(spark, dir)
+  def s15IndexProbe(spark: SparkSession, dir: String): DataFrame =
+    probedTopK(rankedAgainst(reversedQueries(spark, dir),
+      centroidsAt(spark, ivfIndexBase(spark, dir))),
+      ivfInvertedLists(spark, dir), keep = lit(true))
+
+  /** s15's derived query batch `(vec_id, embedding, norm)`, shared with
+    * s32: every 5th vector with its embedding REVERSED and its
+    * pre-reversal `norm` kept (see [[s15IndexProbe]] for why neither
+    * engine may recompute it). */
+  private[graft] def reversedQueries(spark: SparkSession, dir: String): DataFrame =
+    normed(spark, dir)
       .filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id").as("query_id"),
-        reverse(col("embedding")).as("qv"), col("norm").as("qn"))
-    val byQ = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probes = q.join(broadcast(centroids), lit(true))
-      .withColumn("csim",
-        expr("vec_dot(qv, centroid)") / (col("qn") * col("cnorm")))
-      .withColumn("cell_rank", row_number().over(byQ))
-      .filter(col("cell_rank") <= 3)
-      .select(col("cell"), col("query_id"), col("qv"), col("qn"))
-    val index = ivfInvertedLists(spark, dir)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"), col("norm").as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    probes.join(index, "cell")
-      .withColumn("cosine", expr("vec_dot(qv, cv)") / (col("qn") * col("cn")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
-  }
+      .withColumn("embedding", reverse(col("embedding")))
 
   /** The point-lookup read path an index SERVER runs per query: rank
     * the 16 stored centroids against one query vector ON THE
@@ -2294,7 +2277,7 @@ object Similarity {
       .select(col("embedding"), col("norm")).collect()(0)
     val qv = q.getSeq[Float](0)
     val qn = q.getDouble(1)
-    graft.io.Load.parquet(spark, s"$base/centroids").collect().toSeq
+    centroidsAt(spark, base).collect().toSeq
       .map { r =>
         val cv = r.getSeq[Double](r.fieldIndex("centroid"))
         val dot = qv.iterator.zip(cv.iterator)
@@ -2363,13 +2346,8 @@ object Similarity {
   private def ivfIncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val Seq(base, batch) = incParts(spark, dir)
     ivfIncIndex.ensureIncremental(dir)(base, batch)(
-      ivfBuildFrom(normed(spark, dir).filter(!incBatchPred), _)) { live =>
-      val centroids = graft.io.Load.parquet(spark, s"$live/centroids")
-      graft.io.Store.writePartitionedParquet(
-        assignToCentroids(normed(spark, dir).filter(incBatchPred), centroids),
-        s"$live/assignments", Seq("cell"), Seq("vec_id"),
-        org.apache.spark.sql.SaveMode.Append)
-    }
+      ivfBuildFrom(normed(spark, dir).filter(!incBatchPred), _))(
+      ivfAppendInto(normed(spark, dir).filter(incBatchPred), _))
   }
 
   /** s16: incremental index update — tonight's crawl batch (1/7 of the
@@ -2386,32 +2364,8 @@ object Similarity {
     * (Faiss `add` vs `train`; cf. Jégou et al., PAMI'11). */
   def s16IncrementalIndexUpdate(spark: SparkSession, dir: String): DataFrame = {
     val base = ivfIncIndexBase(spark, dir)
-    val centroids = graft.io.Load.parquet(spark, s"$base/centroids")
-    val q = normed(spark, dir).filter(incBatchPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("norm").as("qn"))
-    val byQ = Window.partitionBy(col("query_id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val probes = q.join(broadcast(centroids), lit(true))
-      .withColumn("csim",
-        expr("vec_dot(qv, centroid)") / (col("qn") * col("cnorm")))
-      .withColumn("cell_rank", row_number().over(byQ))
-      .filter(col("cell_rank") <= 3)
-      .select(col("cell"), col("query_id"), col("qv"), col("qn"))
-    val index = invertedListsAt(spark, base)
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv"), col("norm").as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    probes.join(index, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr("vec_dot(qv, cv)") / (col("qn") * col("cn")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("rn"), col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rn"))
+    probedTopK(rankedAgainst(normed(spark, dir).filter(incBatchPred),
+      centroidsAt(spark, base)), invertedListsAt(spark, base))
   }
 
   /** s18: single-query point lookup against the persisted index — the

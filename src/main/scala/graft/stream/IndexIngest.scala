@@ -173,11 +173,8 @@ object IndexIngest {
   def compactIvf(spark: org.apache.spark.sql.SparkSession,
       base: String): Boolean =
     ArtifactStore.rewrite(base) { (live, staging) =>
-      val lists = graft.llm.IndexDelete.liveListsAt(spark, live)
-      graft.io.Store.writePartitionedParquet(
-        lists.select(col("vec_id"), col("embedding"), col("norm"),
-          col("cell")),
-        s"$staging/assignments", Seq("cell"), Seq("vec_id"))
+      Similarity.writeLists(
+        graft.llm.IndexDelete.liveListsAt(spark, live), staging)
       clearTombstonesInto(live, staging)
     }
 
@@ -228,9 +225,11 @@ object IndexIngest {
     require(!appId.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"appId must not contain tab/newline: '$appId'")
 
-  /** [[commitOnce]] keyed by the plain append lineage. */
+  /** [[commitOnce]] keyed by the plain append lineage. `parts` stays
+    * by-name through to commitOnce, so a replayed batch id is skipped
+    * before the batch's fingerprint job would run. */
   private def appendOnce(base: String, batchId: Long,
-      parts: (Long, Long), appId: String = DefaultApp)(
+      parts: => (Long, Long), appId: String = DefaultApp)(
       append: String => Unit): Unit = {
     requireAppId(appId)
     commitOnce(base, batchId, appId, parts)(append)
@@ -267,23 +266,14 @@ object IndexIngest {
     }
   }
 
-  private def readMark(base: String, appId: String = DefaultApp): Long =
-    readState(base).getOrElse(appId, -1L)
-
   /** The `foreachBatch` sink: fold one micro-batch of
     * `(vec_id, embedding)` into the index at `base`. Use as
     * `stream.writeStream.foreachBatch(IndexIngest.ivfAppendSink(base) _)`. */
   def ivfAppendSink(base: String, appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val v = withNorm(batch)
-    appendOnce(base, batchId,
-        Similarity.frameFingerprintParts(v), appId) { live =>
-      val centroids = graft.io.Load.parquet(spark, s"$live/centroids")
-      Store.writePartitionedParquet(
-        Similarity.assignToCentroids(v, centroids),
-        s"$live/assignments", Seq("cell"), Seq("vec_id"), SaveMode.Append)
-    }
+    appendOnce(base, batchId, Similarity.frameFingerprintParts(v), appId)(
+      Similarity.ivfAppendInto(v, _))
   }
 
   /** The EIGHTH exactly-once sink — streaming DELETES: fold one

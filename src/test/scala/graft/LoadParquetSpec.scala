@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
@@ -10,8 +9,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.graftbridge.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,24 +25,6 @@ class LoadParquetSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
-
-  /** `f`'s result and the Spark jobs started while it ran, counted
-    * after the listener bus has delivered every event. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = f
-      ListenerBusDrain(sc)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Same schema and rows as the inferring read; resolving the schema
     * starts no job. */

@@ -10,6 +10,25 @@ object SparkTestSession {
       java.nio.file.Files.createTempDirectory("warehouse").toString,
     "spark.sql.extensions" -> "graft.GraftExtensions")
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `f`'s result and the Spark jobs started while it ran, counted
+    * after the listener bus has delivered every event. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      org.apache.spark.graftbridge.ListenerBusDrain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {

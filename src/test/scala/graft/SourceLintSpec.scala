@@ -21,7 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * The compressed code tables (PQ, SQ8, BQ) share one build, pool,
   * server and set of streaming sinks written over the
   * [[llm.CodeTable]] kind: `IndexIngest` and `Similarity` define no
-  * per-kind copy of them. */
+  * per-kind copy of them.
+  *
+  * The IVF coarse quantizer is written once in [[llm.Similarity]]: the
+  * centroid ranking (the only `col("csim")` outside SQL text) lives in
+  * `rankedAgainst`, and only that module names the artifact's
+  * `centroids/` and `assignments/` children. */
 class SourceLintSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[(Path, String)] = {
@@ -59,6 +64,32 @@ class SourceLintSpec extends AnyFunSuite {
     raw"""\bdef\s+($names)\b""".r.findAllMatchIn(src).map { m =>
       (src.substring(0, m.start).count(_ == '\n') + 1, m.group(1))
     }.toSeq
+
+  /** Each `col("csim")` on a line that is not SQL text (a line whose
+    * first non-blank character is `|`), with the `def` it sits in:
+    * (line, enclosing def name, or "" before any def). */
+  private[graft] def csimColumns(src: String): Seq[(Int, String)] = {
+    var owner = ""
+    src.split("\n", -1).toSeq.zipWithIndex.flatMap { case (l, i) =>
+      if (l.trim.startsWith("|")) Nil
+      else {
+        """\bdef\s+(\w+)""".r.findFirstMatchIn(l)
+          .foreach(m => owner = m.group(1))
+        """col\(\s*"csim"\s*\)""".r.findAllMatchIn(l)
+          .map(_ => (i + 1, owner)).toSeq
+      }
+    }
+  }
+
+  /** Path literals naming the IVF artifact's layout children: (line,
+    * match). */
+  private[graft] def ivfLayoutPaths(src: String): Seq[(Int, String)] =
+    """/(centroids|assignments)"""".r.findAllMatchIn(src).map { m =>
+      (src.substring(0, m.start).count(_ == '\n') + 1, m.matched)
+    }.toSeq
+
+  private def isSimilarity(f: Path): Boolean =
+    f.endsWith(Paths.get("graft", "llm", "Similarity.scala"))
 
   /** Every reader chain — `.read` followed by `.method(args)` calls,
     * across line breaks — that ends in `.parquet(` without declaring a
@@ -197,5 +228,44 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"${offenders.size} per-kind code-table entries; write them once " +
         "over graft.llm.CodeTable:\n" + offenders.mkString("\n"))
+  }
+
+  test("the csim detector flags the column outside SQL text, with its def") {
+    assert(csimColumns("def s15(q: DataFrame) =\n  q.orderBy(col(\"csim\").desc)\n" +
+      "x.select(col( \"csim\" ))\nprivate[graft] def rankedAgainst(v: DataFrame) =\n" +
+      "  v.withColumn(\"csim\", x).select(col(\"csim\"))") ===
+      Seq((2, "s15"), (3, "s15"), (5, "rankedAgainst")))
+    Seq("      |      ORDER BY csim DESC, cell) AS rk FROM qs)",
+      "val csim = dot / (qn * cnorm)", "windowLines.forall(_.contains(\"csim\"))")
+      .foreach(l => assert(csimColumns(l).isEmpty, l))
+  }
+
+  test("the centroid ranking is written once, in Similarity.rankedAgainst") {
+    val offenders = sources("src/main/scala").flatMap { case (f, src) =>
+      csimColumns(src).filterNot(_._2 == "rankedAgainst" && isSimilarity(f))
+        .map { case (line, owner) => s"$f:$line: in def '$owner'" }
+    }
+    assert(offenders.isEmpty, s"${offenders.size} hand-written centroid " +
+      "rankings; rank through llm.Similarity.rankedAgainst:\n" +
+      offenders.mkString("\n"))
+  }
+
+  test("the layout detector flags IVF child path literals and only those") {
+    Seq("Load.parquet(spark, s\"$ivfBase/centroids\")", "s\"${b}/centroids\"",
+      "s\"$live/assignments\", Seq(\"cell\"), Seq(\"vec_id\")")
+      .foreach(l => assert(ivfLayoutPaths(l).size === 1, l))
+    Seq("fs.join(b, \"assignments\")", "s\"$live/codes\", Seq(\"cell\")",
+      "s\"$base/centroids/part-0\"", "// centroids/ and assignments/ children")
+      .foreach(l => assert(ivfLayoutPaths(l).isEmpty, l))
+  }
+
+  test("only llm/Similarity.scala names the IVF artifact's centroids/ and assignments/ paths") {
+    val offenders = sources("src/main/scala").filterNot(p => isSimilarity(p._1))
+      .flatMap { case (f, src) =>
+        ivfLayoutPaths(src).map { case (line, hit) => s"$f:$line: $hit" }
+      }
+    assert(offenders.isEmpty, s"${offenders.size} IVF layout paths outside " +
+      "llm.Similarity; use centroidsAt, invertedListsAt and writeLists:\n" +
+      offenders.mkString("\n"))
   }
 }
