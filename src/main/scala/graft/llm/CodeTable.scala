@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** One cell-major compressed code table kind — the Faiss index-factory
   * suffix after `IVF16,` (`PQ8`, `SQ8`, binary). The three kinds share
@@ -71,10 +71,6 @@ object CodeTable {
     cellNv(Similarity.assignToCentroids(v,
       Similarity.centroidsAt(v.sparkSession, ivfBase)))
 
-  /** The ⌊x·2²⁰⌋ BIGINT quantization every cross-engine score uses. */
-  private def quantized(dot: String): Column =
-    floor(expr(dot) * lit(1048576.0)).cast(LongType)
-
   /** Product quantization (s21/s22/s26–s28): the 8-byte ADC codes
     * against a trained 128-row codebook; the coarse score is the
     * codegen'd 8-lookup sum over the query's broadcast LUT. */
@@ -127,7 +123,7 @@ object CodeTable {
       qnv.select(col("vec_id").as("query_id"), col("nv").as("qnv"))
     def broadcastQuery: Boolean = false
     def scoreCol: String = "score"
-    def score: Column = quantized("vec_dot(qnv, rv)")
+    def score: Column = Similarity.quantized(expr("vec_dot(qnv, rv)"))
     def order: Column = col("score").desc
   }
 

@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Query
@@ -10,99 +11,75 @@ import graft.Query
   * per duplicate cluster — the step after [[Dedup.d03MinHashLsh]] in a
   * real training-data pipeline.
   *
-  * Algorithm: distributed label propagation to a fixpoint — every doc
-  * starts as its own label (its id); each round, every node adopts the
-  * minimum label in its neighborhood (both edge directions + itself);
-  * converges in O(cluster diameter) rounds. Each round is one
-  * shuffle-join + one aggregate: no driver-side union-find, no
-  * assumption the edge set fits anywhere in memory. Near-dup clusters
-  * have tiny diameters (near-clique), so the loop runs 2-3 rounds in
-  * practice; `maxIter` bounds pathological chains.
+  * Algorithm: large-star/small-star alternation (Kiveris et al.,
+  * "Connected Components in MapReduce and Beyond", SoCC 2014 — the
+  * algorithm GraphFrames ships). Edges point from the larger id to the
+  * smaller; a large-star step re-points every edge's lower end at its
+  * neighborhood minimum, a small-star step re-points each vertex and
+  * its smaller neighbors at the least of them. The alternation reaches
+  * a forest of stars centered on each component's minimum id in
+  * O(log² n) rounds, proven, whatever the component diameter — no
+  * round cap, no settable knob. Each round is a few shuffle-shaped
+  * DataFrame ops run through [[graft.Checkpoints.converge]]: no
+  * driver-side union-find, no assumption the edge set fits anywhere
+  * in memory.
   */
 object DupClusters {
 
-  /** @param pairs edges as (doc_a, doc_b); vertices default to the edge
-    *              endpoints
-    * @param maxIter cap on *label-changing* rounds (≈ the largest
-    *                component diameter the caller will tolerate); a
-    *                final zero-change confirming round is always allowed
-    *                on top, so a component needing exactly maxIter
-    *                propagation rounds still completes
-    * @return (doc_id, cluster) — cluster = min doc_id reachable
-    * @throws IllegalStateException if labels still change after maxIter
-    *         propagation rounds (diameter > maxIter) — unconverged
-    *         labels would be silently wrong minima */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    // localCheckpoint, not persist (r7): every propagation round joins
-    // `edges`, and with persist each round's job still carries the full
-    // upstream lineage (for d07 that is the whole MinHash/LSH pipeline)
-    // through planning — and re-EXECUTES it if storage pressure evicts
-    // the cached blocks mid-loop, which is exactly what a long multi-
-    // query job produces. The checkpoint materializes the edge set once
-    // and truncates the lineage, so each round is one join + one agg
-    // over a flat scan, whatever ran before. (d11/g01 already do this.)
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"),
-        col("doc_a").as("dst")))
+  /** @param pairs edges as (doc_a, doc_b); the vertices are the edge
+    *              endpoints, a self-pair included
+    * @return (doc_id, cluster) — cluster = min doc_id reachable */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    // the seed state: every edge once, as (hi, lo) with hi > lo, plus a
+    // self-loop per vertex. Loops carry the Γ⁺ convention (a vertex is
+    // its own neighborhood's candidate minimum) and keep every vertex
+    // in the state, so the fixed point IS the label table.
+    val a = col("doc_a")
+    val b = col("doc_b")
+    val seed = pairs
+      .select(explode(array(
+        struct(greatest(a, b).as("hi"), least(a, b).as("lo")),
+        struct(a.as("hi"), a.as("lo")),
+        struct(b.as("hi"), b.as("lo")))).as("e"))
+      .select(col("e.hi").as("hi"), col("e.lo").as("lo"))
       .distinct()
       .localCheckpoint()
-    // per-round lineage truncation, not persist (round-14): persist
-    // caches BLOCKS but keeps the LOGICAL plan, and each round's plan
-    // embeds the previous round's labels twice (the neighborMin join +
-    // the carry join) — 2^rounds plan nodes. Components with diameter
-    // ~2-3 (every near-dup fixture until the ×8 scale sweep) never
-    // noticed; the ×8 corpus chains components ~10 deep, and round 10's
-    // plan STRING alone (AQE renders it per plan-update event, UI on or
-    // off) is gigabytes — the d21 ×8 OOM was Spark printing the plan,
-    // with the data itself at a trivial 24k edges. An EAGER
-    // localCheckpoint per round materializes AND truncates, so every
-    // round's plan is one checkpoint scan + join + agg, whatever the
-    // diameter.
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster", col("doc_id"))
-      .localCheckpoint()
-    // the frame actually holding the checkpoint for the current level —
-    // `labels` becomes a projection over it after round 1, and releasing
-    // a projection is a silent no-op
-    var cached = labels
-    var converged = false
-    var changingRounds = 0
-    while (!converged && changingRounds <= maxIter) {
-      // each node adopts min(own label, neighbors' labels)
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("doc_id", "dst"), "dst")
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("cluster")).as("neighbor_min"))
-      // carry the previous label alongside the new one so convergence
-      // detection is a filter over the same checkpointed frame — no
-      // extra join (and its shuffle) per round
-      val next = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster").as("old"),
-          least(col("cluster"), coalesce(col("neighbor_min"),
-            col("cluster"))).as("cluster"))
-        .localCheckpoint() // eager: round N materializes HERE, so the
-          // previous round's blocks are safe to release below
-      val changed = next.filter(col("cluster") =!= col("old")).count()
-      graft.Checkpoints.release(cached)
-      cached = next
-      labels = next.select(col("doc_id"), col("cluster"))
-      converged = changed == 0
-      if (!converged) changingRounds += 1
-    }
-    if (!converged) {
-      graft.Checkpoints.release(cached)
-      graft.Checkpoints.release(edges)
-      throw new IllegalStateException(
-        s"connectedComponents still changing after $maxIter propagation " +
-          "rounds — a component's diameter exceeds maxIter; raise maxIter")
-    }
-    // snap the result free of the last round's checkpoint, then release
-    // every intermediate deterministically — the result checkpoint is
-    // the only storage this op hands back to the caller
-    val result = labels.localCheckpoint()
-    graft.Checkpoints.release(cached)
-    graft.Checkpoints.release(edges)
-    result
+    // budget: the vertex count. The proven bound is O(log² n); every
+    // graph of ≤ 6 vertices needs ≤ n − 1 rounds and random graphs of
+    // 3–40 vertices ≤ ⌈log₂ n⌉ + 2, so only a bug exhausts it
+    val vertices = seed.filter(col("hi") === col("lo")).count()
+    graft.Checkpoints.converge(seed, vertices)(starRound)
+      .select(col("hi").as("doc_id"), col("lo").as("cluster"))
+  }
+
+  /** One large-star then one small-star step (Kiveris et al.) over
+    * `(hi, lo)` edges, marking each output edge [[graft.Checkpoints.Changed]]
+    * when a step re-pointed the edge it came from. Neither step
+    * re-points an edge of a star forest whose centers carry the only
+    * loops, and that forest is the fixed point. */
+  private def starRound(e: DataFrame): DataFrame = {
+    // large-star: every non-loop edge moves its lower end to that end's
+    // neighborhood minimum m — the least lo among its own out-edges
+    // (its loop, when it has no smaller neighbor). Loops pass through.
+    val m = e.groupBy(col("hi").as("v")).agg(min(col("lo")).as("m"))
+    val large = e.join(m, col("lo") === col("v"))
+      .select(col("hi"),
+        when(col("hi") === col("lo"), col("lo")).otherwise(col("m"))
+          .as("lo"),
+        (col("hi") =!= col("lo") && col("m") =!= col("lo")).as("moved"))
+    // small-star: each vertex re-points itself and every smaller
+    // neighbor at the least of them
+    val small = large
+      .withColumn("m", min(col("lo")).over(Window.partitionBy(col("hi"))))
+      .select(explode(array(
+        struct(col("hi"), col("m").as("lo"),
+          (col("moved") || col("lo") =!= col("m")).as("moved")),
+        when(col("lo") =!= col("m"),
+          struct(col("lo").as("hi"), col("m").as("lo"),
+            lit(true).as("moved"))))).as("e"))
+      .filter(col("e").isNotNull)
+    small.groupBy(col("e.hi").as("hi"), col("e.lo").as("lo"))
+      .agg(max(col("e.moved")).as(graft.Checkpoints.Changed))
   }
 
   /** d07: cluster assignment for every document that has a near-dup
@@ -114,8 +91,8 @@ object DupClusters {
 
   /** Drop every non-representative near-dup cluster member of `docs`
     * (representative = minimum doc_id = the CC label) given near-dup
-    * `pairs`; fingerprint the survivors. One anti join after the label
-    * propagation — shared stage of d09 and [[Pipeline.cleanCorpus]]. */
+    * `pairs`; fingerprint the survivors. One anti join after the connected
+    * components — shared stage of d09 and [[Pipeline.cleanCorpus]]. */
   private[llm] def dropNonRepresentatives(docs: DataFrame,
       pairs: DataFrame): DataFrame = {
     val clusters = connectedComponents(pairs)
@@ -129,7 +106,7 @@ object DupClusters {
 
   /** d09: the dedup pipeline's end product — the corpus with every
     * non-representative cluster member removed. Clusters from d07's
-    * label propagation; the removal is one anti join, so the full
+    * connected components; the removal is one anti join, so the full
     * dedup-and-keep-one flow is LSH pairs → CC labels → anti join —
     * every stage a shuffle-shaped DataFrame op. */
   def d09DedupCorpus(spark: SparkSession, dir: String): DataFrame =
@@ -137,7 +114,7 @@ object DupClusters {
       graft.Tables(spark, dir, "documents"),
       Dedup.d03MinHashLsh(spark, dir))
 
-  /** d11 near-dup edge threshold — see the threshold note on
+  /** d11/d21 near-dup edge threshold — see the threshold note on
     * [[d11SemDedup]]. */
   val SemDedupThreshold = 0.45
 
@@ -149,17 +126,18 @@ object DupClusters {
     * within-cell pairs recover the near-dup edges at n²/K cost with
     * `cell` as the co-partition key (the join shuffles on cell; AQE
     * absorbs cell-size skew). Edges (cosine ≥ [[SemDedupThreshold]])
-    * feed the same label-propagation CC as the text path; the labels are
+    * feed the same connected components as the text path; the labels are
     * the duplicate-cluster assignment — `cluster` = the kept
     * representative.
     *
     * The threshold sits ABOVE d06's 0.4 deliberately: semantic dedup
-    * removes near-identical content, and label-propagation cost is
-    * O(component diameter) rounds — at 0.4 the bench-scale fixture's
-    * barely-similar pairs chain into ~75-node components of diameter
-    * ~10 (measured), i.e. threshold choice IS the scale knob for any
-    * transitive dedup. At 0.45 components stay ≤ ~5 nodes, diameter
-    * ≤ 3, at every fixture scale.
+    * removes near-identical content, and at 0.4 the bench-scale
+    * fixture's barely-similar pairs chain into ~75-node components
+    * (measured) — clusters of merely related documents, not
+    * duplicates. 0.45 keeps the fixture's components ≤ ~5 nodes; the
+    * value is what d11/d21 select and what their oracles replay. The
+    * component diameter costs no rounds ([[connectedComponents]] runs
+    * O(log² n) of them).
     *
     * The trade against d06 is the standard ANN one: a cross-cell
     * near-dup pair is missed (LlmOpsSpec measures the within-cell
@@ -179,7 +157,7 @@ object DupClusters {
     * OTHER finding of the round-14 scale curves (PERF.md: d11 at ×4
     * OOMed because 16 pinned cells on cluster-free vectors give cell
     * occupancy n/16, so the within-cell pair stage materializes
-    * O(n²/16) rows into label propagation; with k = ⌈√n⌉ the occupancy
+    * O(n²/16) rows into connected components; with k = ⌈√n⌉ the occupancy
     * is O(√n) and the pair stage is O(n) TOTAL — n cells' worth of
     * √n·√n pairs — the curve that survives the adversarial regime).
     * Same deterministic training chain, same within-cell exact-cosine

@@ -19,8 +19,8 @@ import graft.{Query, Tables}
   * collect(), and every stage is the frame-parameterized core of an
   * operator that is also tested standalone (t02/d01/d03/d07/d09). At
   * 100 TB the stages are: one scan + filter, one digest shuffle, the
-  * LSH band shuffles over survivors only, and two label-propagation
-  * joins per CC round over the (tiny) near-dup subgraph.
+  * LSH band shuffles over survivors only, and O(log² n) large-star/
+  * small-star CC rounds over the (tiny) near-dup subgraph.
   */
 object Pipeline {
 
@@ -290,7 +290,7 @@ object Pipeline {
     * near-duplicate documents can never straddle the split (a val doc
     * whose near-twin sits in train silently inflates eval). Membership
     * is decided per DUPLICATE CLUSTER, not per document: near-dup
-    * components (the shared MinHash-LSH + label-propagation stages of
+    * components (the shared MinHash-LSH + connected-components stages of
     * d03/d07) elect their min-id representative, every member inherits
     * the representative's content-hash bucket, and bucket < 9 ⇒ train
     * (a 90/10 split). Singletons are their own representative, so the
@@ -298,7 +298,7 @@ object Pipeline {
     * reproducible across runs, engines, partitionings.
     *
     * Plan shape at 100 TB: the LSH/CC stages are d03/d07's (banded,
-    * capped, O(diameter) rounds over the near-dup subgraph only); the
+    * capped, O(log² n) rounds over the near-dup subgraph only); the
     * rest is one left join of labels onto the corpus and one equi-join
     * to fetch the representative's fingerprint bucket — all
     * shuffle-shaped, nothing driver-side. */

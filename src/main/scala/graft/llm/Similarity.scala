@@ -54,6 +54,30 @@ object Similarity {
       .orderBy(col("query_id"), col("rn"))
   }
 
+  /** The ⌊x·2²⁰⌋ BIGINT quantization every cross-engine score and
+    * trained mean uses — the oracles replay it as
+    * `CAST(FLOOR(x * 1048576) AS BIGINT)`. Pass `x` cast to double where
+    * it is not one already. */
+  private[graft] def quantized(x: Column): Column =
+    floor(x * lit(1048576.0)).cast(LongType)
+
+  /** The quantized member mean: per `keys` group, each coordinate `j`
+    * of the array column `vec` summed as [[quantized]] BIGINTs (exact
+    * in any order), divided back into the double `mean`, and collected
+    * into the array `out` ordered by `j`. One body for IVF training,
+    * the PQ codebook refinement and s11's per-document centroids. */
+  private def memberMean(members: DataFrame, keys: Seq[String], vec: String,
+      mean: String, out: String): DataFrame =
+    members
+      .select(keys.map(col) :+ posexplode(col(vec)).as(Seq("j", "x")): _*)
+      .withColumn("q", quantized(col("x").cast(DoubleType)))
+      .groupBy((keys :+ "j").map(col): _*)
+      .agg((sum(col("q")).cast(DoubleType) / count(lit(1)) / lit(1048576.0))
+        .as(mean))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("j"), col(mean)))),
+        s => s.getField(mean)).as(out))
+
   /** IVF approximate top-k (K=16 cells, nprobe=3, k=5), with trained
     * centroids: the 16 lowest vec_ids seed the cells, then ONE Lloyd
     * round refines them (assign every vector to its nearest seed by
@@ -92,16 +116,7 @@ object Similarity {
     val assign0 = assignToCentroids(v, seeds)
       .select(col("cell"), col("embedding"))
     // …then recompute each cell's centroid as the quantized member mean
-    assign0
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("j", "x")))
-      .withColumn("q",
-        floor(col("x").cast(DoubleType) * lit(1048576.0)).cast(LongType))
-      .groupBy(col("cell"), col("j"))
-      .agg((sum(col("q")).cast(DoubleType) / count(lit(1)) / lit(1048576.0))
-        .as("m"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("m")))),
-        s => s.getField("m")).as("centroid"))
+    memberMean(assign0, Seq("cell"), "embedding", "m", "centroid")
       .withColumn("cnorm", sqrt(expr("vec_dot(centroid, centroid)")))
   }
 
@@ -723,15 +738,8 @@ object Similarity {
         explode(sequence(lit(0), lit(PqM - 1))).as("m"), col("nv"))
       .withColumn("cw", expr("slice(nv, m * 8 + 1, 8)"))
       .select(col("m"), col("code"), col("cw"))
-    val refined = pqAssign(sub, seedSub)
-      .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("j", "x")))
-      .withColumn("q", floor(col("x") * lit(1048576.0)).cast(LongType))
-      .groupBy(col("m"), col("code"), col("j"))
-      .agg((sum(col("q")).cast(DoubleType) / count(lit(1)) / lit(1048576.0))
-        .as("cwj"))
-      .groupBy(col("m"), col("code"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("cwj")))),
-        s => s.getField("cwj")).as("cwT"))
+    val refined = memberMean(pqAssign(sub, seedSub), Seq("m", "code"), "sv",
+      "cwj", "cwT")
     seedSub.join(refined, Seq("m", "code"), "left")
       .select(col("m"), col("code"),
         coalesce(col("cwT"), col("cw")).as("cw"))
@@ -750,8 +758,7 @@ object Similarity {
     * filtered to the query set) against codebook `cwF`. */
   private[graft] def pqLut(sub: DataFrame, cwF: DataFrame): DataFrame =
     sub.join(broadcast(cwF), "m")
-      .withColumn("lv",
-        floor(expr("vec_dot(sv, cw)") * lit(1048576.0)).cast(LongType))
+      .withColumn("lv", quantized(expr("vec_dot(sv, cw)")))
       .groupBy(col("vec_id"))
       .agg(transform(
         array_sort(collect_list(struct(col("m"), col("code"), col("lv")))),
@@ -804,8 +811,7 @@ object Similarity {
     val w = Window.partitionBy(partCols.map(col): _*)
       .orderBy(col("score").desc, col("neighbor_id").asc)
     pool.join(qv, "query_id").join(cv, "neighbor_id")
-      .withColumn("score",
-        floor(expr("vec_dot(qnv, cnv)") * lit(1048576.0)).cast(LongType))
+      .withColumn("score", quantized(expr("vec_dot(qnv, cnv)")))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .drop("qnv", "cnv")
@@ -1348,8 +1354,7 @@ object Similarity {
     // cells, so the scored rows are identical either way.
     val qc = servingQueryNv(spark, dir)
       .join(broadcast(unitCentroids(spark, ivfBase)), lit(true))
-      .withColumn("qc",
-        floor(expr("vec_dot(nv, cu)") * lit(1048576.0)).cast(LongType))
+      .withColumn("qc", quantized(expr("vec_dot(nv, cu)")))
       .select(col("vec_id").as("query_id"), col("cell"), col("qc"))
     servePanel(CodeTable.Pq, spark, dir, base, Some(qc))
   }
@@ -1562,8 +1567,7 @@ object Similarity {
     servingProbes(spark, dir).join(lists, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
       .join(broadcast(qv), "query_id")
-      .withColumn("score",
-        floor(expr("vec_dot(qnv, cnv)") * lit(1048576.0)).cast(LongType))
+      .withColumn("score", quantized(expr("vec_dot(qnv, cnv)")))
       .filter(col("score") >= lit(RangeRadius))
       .select(col("query_id"), col("neighbor_id"), col("score"))
       .orderBy(col("query_id"), col("neighbor_id"))
@@ -1617,11 +1621,11 @@ object Similarity {
     * bench invocation. Layout: `truth/` = `(query_id, neighbor_id)` for
     * the `vec_id % 4 = 0` audit panel, 10 rows per query. Training-free
     * and integer-quantized, so the stored rows are value-identical to
-    * the live computation ([[exactTruth10Live]]) — oracles keep
+    * the live computation ([[exactTop10]]) — oracles keep
     * replaying the computation itself. */
   private def gtBase(spark: SparkSession, dir: String): String =
     gtTop10.ensure(dir)(corpusParts(spark, dir)) { staging =>
-      exactTruth10Live(spark, dir).coalesce(4)
+      exactTop10(pqNv(spark, dir), col("vec_id") % 4 === 0).coalesce(4)
         .write.mode("overwrite").parquet(s"$staging/truth")
     }
 
@@ -1640,23 +1644,41 @@ object Similarity {
       .filter(queryPred)
       .select(col("vec_id").as("query_id"), col("neighbor_id"))
 
-  /** The live GT computation ([[gtBase]]'s builder): definitionally
-    * all-pairs for the query set — the labeled quadratic baseline, run
-    * offline at artifact-build cadence and SHARED across every setting
-    * being audited, never per serving configuration. */
-  private def exactTruth10Live(spark: SparkSession, dir: String): DataFrame = {
-    val nv = pqNv(spark, dir)
-    val q = nv.filter(col("vec_id") % 4 === 0)
+  /** The exact top-10 truth kernel over unit vectors `nv(vec_id, nv)`:
+    * for every `isQuery` row, its 10 best OTHER vectors by quantized
+    * cosine, ties to the lower id. Definitionally all-pairs for the
+    * query set — the labeled quadratic baseline, run offline at
+    * artifact-build cadence ([[gtBase]]'s builder) or audit cadence
+    * (the streaming recall gate over stored lists), never per serving
+    * configuration. Returns `(query_id, neighbor_id)`. */
+  private[graft] def exactTop10(nv: DataFrame, isQuery: Column): DataFrame = {
+    val q = nv.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("nv").as("qnv"))
     val c = nv.select(col("vec_id").as("neighbor_id"), col("nv").as("cnv"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id").asc)
     q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("score",
-        floor(expr("vec_dot(qnv, cnv)") * lit(1048576.0)).cast(LongType))
+      .withColumn("score", quantized(expr("vec_dot(qnv, cnv)")))
       .withColumn("ern", row_number().over(w))
       .filter(col("ern") <= 10)
       .select(col("query_id"), col("neighbor_id"))
+  }
+
+  /** The recall audit's 1-row aggregate of `truth(query_id,
+    * neighbor_id)` against the pairs `served` returned: `(queries,
+    * truth rows, hits)` — integer counts, the driver-side scalar
+    * posture. */
+  private[graft] def recallCounts(truth: DataFrame,
+      served: DataFrame): (Int, Long, Long) = {
+    val row = truth
+      .join(served.select(col("query_id"), col("neighbor_id"))
+          .withColumn("hit", lit(1)),
+        Seq("query_id", "neighbor_id"), "left")
+      .agg(countDistinct(col("query_id")).cast("integer").as("queries"),
+        count(lit(1)).as("truth_rows"),
+        count(col("hit")).as("hits"))
+      .head()
+    (row.getInt(0), row.getLong(1), row.getLong(2))
   }
 
   /** s25: nprobe tuning sweep — the recall/cost curve that picks the
@@ -1845,26 +1867,15 @@ object Similarity {
     val ivfInc = ivfIncIndexBase(spark, dir)
     val pqInc = pqIncIndexBase(spark, dir)
     val truth = exactTruth10(spark, dir, auditPred)
-    def audit(served: DataFrame): (Int, Long, Long) = {
-      val row = truth
-        .join(served.select(col("query_id"), col("neighbor_id"))
-            .withColumn("hit", lit(1)),
-          Seq("query_id", "neighbor_id"), "left")
-        .agg(countDistinct(col("query_id")).cast("integer").as("queries"),
-          count(lit(1)).as("truth_rows"),
-          count(col("hit")).as("hits"))
-        .head() // 1-row audit aggregate (driver-side scalar posture)
-      (row.getInt(0), row.getLong(1), row.getLong(2))
-    }
-    val (dq, dt, dh) =
-      audit(storedIvfPqServe(spark, dir, ivfInc, pqInc, auditPred))
+    val (dq, dt, dh) = recallCounts(truth,
+      storedIvfPqServe(spark, dir, ivfInc, pqInc, auditPred))
     val fired = retrainDecision(dt, dh)
     val rows =
       if (!fired) Seq(("served_degraded", dq, dh, fired))
       else {
         val (rtIvf, rtPq) = rtIndexBases(spark, dir)
-        val (rq, _, rh) =
-          audit(storedIvfPqServe(spark, dir, rtIvf, rtPq, auditPred))
+        val (rq, _, rh) = recallCounts(truth,
+          storedIvfPqServe(spark, dir, rtIvf, rtPq, auditPred))
         Seq(("served_degraded", dq, dh, true),
           ("served_retrained", rq, rh, true))
       }
@@ -1999,23 +2010,14 @@ object Similarity {
         expr(UnitNvExpr))
       .select(col("vec_id"), expr("vec_id div 8").as("did"),
         (col("vec_id") % 8).as("tok"), col("nv"))
-    val cent = nv
-      .select(col("did"), posexplode(col("nv")).as(Seq("j", "x")))
-      .withColumn("q", floor(col("x") * lit(1048576.0)).cast(LongType))
-      .groupBy(col("did"), col("j"))
-      .agg((sum(col("q")).cast(DoubleType) / count(lit(1)) / lit(1048576.0))
-        .as("cj"))
-      .groupBy(col("did"))
-      .agg(transform(array_sort(collect_list(struct(col("j"), col("cj")))),
-        s => s.getField("cj")).as("c"))
+    val cent = memberMean(nv, Seq("did"), "nv", "cj", "c")
     val qc = cent.filter(col("did") % 5 === 0)
       .select(col("did").as("qdid"), col("c").as("qc"))
     val wCoarse = Window.partitionBy(col("qdid"))
       .orderBy(col("cscore").desc, col("cdid").asc)
     val cand = cent.select(col("did").as("cdid"), col("c").as("cc"))
       .join(broadcast(qc), col("qdid") =!= col("cdid"))
-      .withColumn("cscore",
-        floor(expr("vec_dot(qc, cc)") * lit(1048576.0)).cast(LongType))
+      .withColumn("cscore", quantized(expr("vec_dot(qc, cc)")))
       .withColumn("cr", row_number().over(wCoarse))
       .filter(col("cr") <= 8)
       .select(col("qdid"), col("cdid"))
@@ -2025,8 +2027,7 @@ object Similarity {
     val w = Window.partitionBy(col("qdid"))
       .orderBy(col("maxsim").desc, col("cdid").asc)
     broadcast(cand).join(qtok, "qdid").join(ctok, "cdid")
-      .withColumn("dot",
-        floor(expr("vec_dot(qnv, cnv)") * lit(1048576.0)).cast(LongType))
+      .withColumn("dot", quantized(expr("vec_dot(qnv, cnv)")))
       .groupBy(col("qdid"), col("cdid"), col("qtok"))
       .agg(max(col("dot")).as("md"))
       .groupBy(col("qdid"), col("cdid"))
@@ -2069,8 +2070,7 @@ object Similarity {
     val tgt = nv.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id").as("y"), col("nv").as("yv"))
     val p = src.join(tgt, col("x") =!= col("y"))
-      .withColumn("qc",
-        floor(expr("vec_dot(xv, yv)") * lit(1048576.0)).cast(LongType))
+      .withColumn("qc", quantized(expr("vec_dot(xv, yv)")))
       .select(col("x"), col("y"), col("qc"))
       .localCheckpoint()
     marginMineTail(p)
@@ -2177,8 +2177,7 @@ object Similarity {
     val nv = pqNv(spark, dir) // the canonical (vec_id, nv) builder
     cp.join(nv.select(col("vec_id").as("x"), col("nv").as("xv")), "x")
       .join(nv.select(col("vec_id").as("y"), col("nv").as("yv")), "y")
-      .withColumn("qc",
-        floor(expr("vec_dot(xv, yv)") * lit(1048576.0)).cast(LongType))
+      .withColumn("qc", quantized(expr("vec_dot(xv, yv)")))
       .select(col("x"), col("y"), col("qc"))
   }
 

@@ -73,12 +73,14 @@ object Relational7 {
     * `a.anc = b.node`), so round k holds every pair of distance ≤ 2^k —
     * **O(log depth) shuffle rounds**, not the O(depth) of naive
     * frontier expansion (at a 100 TB graph with depth 10^3, that is ~10
-    * joins instead of ~1000). Each round snaps to a `localCheckpoint`
-    * so lineage stays flat, and convergence is a driver-side count
-    * compare (d07's contract: scalars cross the driver, never rows).
-    * In a tree each (node, ancestor) pair has exactly one distance, so
-    * the per-round `distinct` both dedups the doubled sums and makes
-    * the output total-ordered by (node, dist). The oracle is DuckDB's
+    * joins instead of ~1000). The rounds run through
+    * [[graft.Checkpoints.converge]]: each snaps to a `localCheckpoint`
+    * so lineage stays flat, and convergence is a driver-side count of
+    * newly found pairs (d07's contract: scalars cross the driver, never
+    * rows). In a tree each (node, ancestor) pair has exactly one
+    * distance, so the per-round grouping on (node, anc, dist) both
+    * dedups the doubled sums and makes the output total-ordered by
+    * (node, dist). The oracle is DuckDB's
     * native `WITH RECURSIVE` — linear recursion; set equality against
     * the doubled enumeration is the semantic proof. */
   def q72Ancestors(spark: SparkSession, dir: String): DataFrame = {
@@ -88,32 +90,23 @@ object Relational7 {
         expr("s_suppkey DIV 2").as("anc"),
         lit(1L).as("dist"))
       .localCheckpoint()
-    var closure = edges
-    var count = closure.count()
-    var converged = false
-    var rounds = 0
-    val maxRounds = 12 // depth 2^12 — far beyond any fixture or sane tree
-    while (!converged && rounds < maxRounds) {
+    // a tree with e edges is at most e deep, and round k closes every
+    // path of length ≤ 2^k: ⌈log₂ e⌉ doubling rounds, + 2 of slack.
+    // Running out means the edges are not a tree.
+    val e = edges.count()
+    val log2e = 64 - java.lang.Long.numberOfLeadingZeros(math.max(e - 1, 0))
+    graft.Checkpoints.converge(edges, log2e + 2) { closure =>
       val doubled = closure.as("a")
         .join(closure.as("b"), col("a.anc") === col("b.node"))
         .select(col("a.node").as("node"), col("b.anc").as("anc"),
           (col("a.dist") + col("b.dist")).as("dist"))
-      val next = closure.unionByName(doubled).distinct().localCheckpoint()
-      val nextCount = next.count()
-      converged = nextCount == count
-      // `next` is materialized (localCheckpoint is eager), so the
-      // previous round's checkpoint blocks are dead — free them now
-      // instead of leaking one checkpoint per round (Checkpoints doc)
-      graft.Checkpoints.release(closure)
-      closure = next
-      count = nextCount
-      rounds += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"transitive closure still growing after $maxRounds doubling " +
-          s"rounds (depth > ${1 << maxRounds}) — raise maxRounds")
-    closure.orderBy(col("node"), col("dist"))
+      // a row is changed when the doubling found it first
+      closure.withColumn(graft.Checkpoints.Changed, lit(false))
+        .unionByName(doubled.withColumn(graft.Checkpoints.Changed, lit(true)))
+        .groupBy(col("node"), col("anc"), col("dist"))
+        .agg(min(col(graft.Checkpoints.Changed))
+          .as(graft.Checkpoints.Changed))
+    }.orderBy(col("node"), col("dist"))
   }
 
   val q72Sql: String =

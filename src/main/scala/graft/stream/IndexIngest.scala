@@ -686,32 +686,11 @@ object IndexIngest {
     val lists = invertedLists(spark, ivfBase)
     val panel = lists.filter(col("vec_id") % panelMod === 0)
       .select(col("vec_id"), col("embedding"), col("norm"))
-    val served = Similarity
-      .serveFrom(CodeTable.Pq, spark, panel, ivfBase, pqBase)
-      .select(col("query_id"), col("neighbor_id"))
     val nvAll = lists.select(col("vec_id"),
-      expr(Similarity.UnitNvExpr)
-        .as("nv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    val truth = nvAll.filter(col("vec_id") % panelMod === 0)
-      .select(col("vec_id").as("query_id"), col("nv").as("qnv"))
-      .join(nvAll.select(col("vec_id").as("neighbor_id"),
-        col("nv").as("cnv")), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score",
-        floor(expr("vec_dot(qnv, cnv)") * lit(1048576.0)).cast("long"))
-      .withColumn("ern", row_number().over(w))
-      .filter(col("ern") <= 10)
-      .select(col("query_id"), col("neighbor_id"))
-    val r = truth
-      .join(served.withColumn("hit", lit(1)),
-        Seq("query_id", "neighbor_id"), "left")
-      .agg(countDistinct(col("query_id")).cast("integer").as("queries"),
-        count(lit(1)).as("truth_rows"),
-        count(col("hit")).as("hits"))
-      .head() // 1-row audit aggregate, the s24 posture
-    (r.getInt(0), r.getLong(1), r.getLong(2))
+      expr(Similarity.UnitNvExpr).as("nv"))
+    Similarity.recallCounts(
+      Similarity.exactTop10(nvAll, col("vec_id") % panelMod === 0),
+      Similarity.serveFrom(CodeTable.Pq, spark, panel, ivfBase, pqBase))
   }
 
   // ---------------------------------------------------------------

@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * layer each run, same as Bench): run 1 carries any artifact build
   * (the scaled dir is a fresh corpus → fresh artifact), later runs
   * are the serving cost. Output: one JSON line per (multiplier,
-  * query) with all runs — curve analysis separates train from probe.
+  * query) with all runs — curve analysis separates train from probe —
+  * and, per run, the fixpoint rounds it spent (`Checkpoints.rounds`).
   * Scratch data lands under java.io.tmpdir and is reused across
   * invocations of the same multiplier. */
 object ScaleCurveMain {
@@ -111,8 +112,9 @@ object ScaleCurveMain {
       val dir = scaledDir(spark, src, m)
       val rows = spark.read.parquet(s"$dir/embeddings.parquet").count()
       queries.foreach { q =>
-        val times = (1 to runs).map { _ =>
+        val timed = (1 to runs).map { _ =>
           releaseStorage(spark)
+          val r0 = Checkpoints.rounds.get()
           val t0 = System.nanoTime()
           val ok = try {
             SparkEntry.queries(q)(spark, dir)
@@ -121,12 +123,14 @@ object ScaleCurveMain {
             System.err.println(s"[curve] $q x$m failed: ${e.getMessage}")
             false
           }
-          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+          val wall = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+          (wall, Checkpoints.rounds.get() - r0)
         }
         def r(v: Double) = String.format(
           java.util.Locale.ROOT, "%.2f", Double.box(v))
         println(s"""{"curve":"$q","x":$m,"vecs":$rows,""" +
-          s""""runs":[${times.map(r).mkString(",")}]}""")
+          s""""runs":[${timed.map(t => r(t._1)).mkString(",")}],""" +
+          s""""rounds":[${timed.map(_._2).mkString(",")}]}""")
       }
     }
     spark.stop()

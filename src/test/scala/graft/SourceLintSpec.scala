@@ -26,7 +26,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * The IVF coarse quantizer is written once in [[llm.Similarity]]: the
   * centroid ranking (the only `col("csim")` outside SQL text) lives in
   * `rankedAgainst`, and only that module names the artifact's
-  * `centroids/` and `assignments/` children. */
+  * `centroids/` and `assignments/` children.
+  *
+  * The ⌊x·2²⁰⌋ cross-engine quantizer is written once, as
+  * `Similarity.quantized`. Iterative operators run through
+  * [[Checkpoints.converge]], which releases their checkpoints: only
+  * `Checkpoints` itself and the BPE trainer (a merge-budget loop, not a
+  * fixpoint) call `Checkpoints.release`. */
 class SourceLintSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[(Path, String)] = {
@@ -65,21 +71,37 @@ class SourceLintSpec extends AnyFunSuite {
       (src.substring(0, m.start).count(_ == '\n') + 1, m.group(1))
     }.toSeq
 
-  /** Each `col("csim")` on a line that is not SQL text (a line whose
-    * first non-blank character is `|`), with the `def` it sits in:
-    * (line, enclosing def name, or "" before any def). */
-  private[graft] def csimColumns(src: String): Seq[(Int, String)] = {
+  /** Each match of `pattern` on a line that is not SQL text (a line
+    * whose first non-blank character is `|`), with the `def` it sits
+    * in: (line, enclosing def name, or "" before any def). */
+  private def outsideSqlText(src: String,
+      pattern: scala.util.matching.Regex): Seq[(Int, String)] = {
     var owner = ""
     src.split("\n", -1).toSeq.zipWithIndex.flatMap { case (l, i) =>
       if (l.trim.startsWith("|")) Nil
       else {
         """\bdef\s+(\w+)""".r.findFirstMatchIn(l)
           .foreach(m => owner = m.group(1))
-        """col\(\s*"csim"\s*\)""".r.findAllMatchIn(l)
-          .map(_ => (i + 1, owner)).toSeq
+        pattern.findAllMatchIn(l).map(_ => (i + 1, owner)).toSeq
       }
     }
   }
+
+  /** Each `col("csim")` outside SQL text, with its `def`. */
+  private[graft] def csimColumns(src: String): Seq[(Int, String)] =
+    outsideSqlText(src, """col\(\s*"csim"\s*\)""".r)
+
+  /** Each hand-written ⌊x·2²⁰⌋ BIGINT quantizer outside SQL text, with
+    * its `def`. */
+  private[graft] def quantizerCopies(src: String): Seq[(Int, String)] =
+    outsideSqlText(src, """lit\(1048576\.0\)\)\.cast\(""".r)
+
+  /** Each `Checkpoints.release(` call: (line, match). */
+  private[graft] def releaseCalls(src: String): Seq[(Int, String)] =
+    """\bCheckpoints\s*\.\s*release\s*\(""".r.findAllMatchIn(src).map { m =>
+      (src.substring(0, m.start).count(_ == '\n') + 1,
+        m.matched.replaceAll("\\s+", ""))
+    }.toSeq
 
   /** Path literals naming the IVF artifact's layout children: (line,
     * match). */
@@ -267,5 +289,46 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"${offenders.size} IVF layout paths outside " +
       "llm.Similarity; use centroidsAt, invertedListsAt and writeLists:\n" +
       offenders.mkString("\n"))
+  }
+
+  test("the quantizer detector flags hand copies outside SQL text, with their def") {
+    assert(quantizerCopies("def s11(v: DataFrame) =\n" +
+      "  v.withColumn(\"q\", floor(col(\"x\") * lit(1048576.0)).cast(LongType))\n" +
+      "private[graft] def quantized(x: Column): Column =\n" +
+      "  floor(x * lit(1048576.0)).cast(LongType)") ===
+      Seq((2, "s11"), (4, "quantized")))
+    Seq("      |    CAST(FLOOR(v[CAST(t.j AS INT) + 1] * 1048576) AS BIGINT) AS q",
+      "  .agg((sum(col(\"q\")).cast(DoubleType) / count(lit(1)) / lit(1048576.0))",
+      "val RangeRadius: Long = 188743L // floor(0.18 * 1048576)")
+      .foreach(l => assert(quantizerCopies(l).isEmpty, l))
+  }
+
+  test("the ⌊x·2²⁰⌋ quantizer is written once, in Similarity.quantized") {
+    val offenders = sources("src/main/scala").flatMap { case (f, src) =>
+      quantizerCopies(src).filterNot(_._2 == "quantized" && isSimilarity(f))
+        .map { case (line, owner) => s"$f:$line: in def '$owner'" }
+    }
+    assert(offenders.isEmpty, s"${offenders.size} hand-written quantizers; " +
+      "call llm.Similarity.quantized:\n" + offenders.mkString("\n"))
+  }
+
+  test("the release detector flags Checkpoints.release calls and only those") {
+    Seq("graft.Checkpoints.release(cached)", "Checkpoints.release(edges)",
+      "Checkpoints . release (frame)")
+      .foreach(l => assert(releaseCalls(l).size === 1, l))
+    Seq("def release(df: DataFrame): Unit =", "release(held)",
+      "graft.Checkpoints.converge(seed, n)(step)", "lr.rdd.unpersist(blocking = false)")
+      .foreach(l => assert(releaseCalls(l).isEmpty, l))
+  }
+
+  test("only Checkpoints and the BPE trainer call Checkpoints.release") {
+    val allowed = Set("Checkpoints.scala", "Tokenizer.scala")
+    val offenders = sources("src/main/scala")
+      .filterNot(p => allowed(p._1.getFileName.toString))
+      .flatMap { case (f, src) =>
+        releaseCalls(src).map { case (line, hit) => s"$f:$line: $hit" }
+      }
+    assert(offenders.isEmpty, s"${offenders.size} Checkpoints.release calls; " +
+      "iterate through Checkpoints.converge:\n" + offenders.mkString("\n"))
   }
 }
