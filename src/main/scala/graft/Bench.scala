@@ -14,13 +14,22 @@ object Bench {
     * clean storage layer, exactly as a per-job cluster submission would.
     * Safe here because queries are built fresh per run — nothing
     * references the previous run's frames. */
-  private def releaseStorage(spark: SparkSession): Unit = {
+  private[graft] def releaseStorage(spark: SparkSession): Unit = {
+    dropStorage(spark)
+    // nudge the ContextCleaner: broadcast + accumulator cleanup keys off
+    // driver GC, and small-heap JVMs can go a long time between majors.
+    // Only between timed runs: the full GC costs ~0.3-0.5 s a call on an
+    // 8 GB driver (Verify at sf0.01 on 4 cores: 206-244 s without it,
+    // 290-325 s with it), so untimed callers take [[dropStorage]] alone.
+    System.gc()
+  }
+
+  /** Drop cached plans and every persisted RDD (`localCheckpoint`
+    * blocks included) — the storage half of [[releaseStorage]]. */
+  private[graft] def dropStorage(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    // nudge the ContextCleaner: broadcast + accumulator cleanup keys off
-    // driver GC, and small-heap JVMs can go a long time between majors
-    System.gc()
   }
 
   /** JSON keys for the per-query map: each query's id prefix (text

@@ -113,7 +113,9 @@ object Tables {
     * shuffle once both sides are orderkey-hashed at the same count;
     * events windows partition by user_id). Dimension tables pass
     * through untouched: they broadcast, and a parallelism floor on a
-    * broadcast build is pure overhead. */
+    * broadcast build is pure overhead. Opt-in per query: the floor's
+    * exchange measured ~0.2-0.4 s (OPTIMIZATION_r14.md), so only
+    * queries whose serial kernel costs more call this. */
   def factSpread(spark: SparkSession, sfDir: String,
       name: String): DataFrame = {
     val df = apply(spark, sfDir, name)

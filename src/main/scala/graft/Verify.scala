@@ -25,10 +25,8 @@ object Verify {
       }
       // drop cached plans + persisted/localCheckpoint blocks the query
       // leaked — ~40 checkpointing queries would otherwise accumulate
-      // storage across the 157-query dump (see Bench.releaseStorage)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // storage across the dump
+      Bench.dropStorage(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -36,7 +36,8 @@ import scala.jdk.CollectionConverters._
   * see the whole old file, absence, or the whole new file). A binding
   * that weakens one of them ([[CasFs.rename]]) must carry the
   * re-derivation of each dependent crash argument in its scaladoc,
-  * and the crash-window suites run through it.
+  * and the shared storage contract suites (`ArtifactPublishContract`,
+  * `TokenLockContract`, `IndexLifecycleContract`) run on it.
   */
 private[graft] trait ArtifactFs {
   /** Join with the backend's separator. */
@@ -575,10 +576,11 @@ private[graft] final class HadoopFs(
     * sufficient mutex on every FileSystem: HDFS makes it atomic at
     * the namenode, but check-then-create implementations (Hadoop's
     * own RawLocalFileSystem; some object-store adapters) let a
-    * stampede of contenders all "win" the create — the stress spec
-    * measured 16 overlapping critical sections out of 24 acquisitions
-    * before this design. So acquisition is create + WRITE OWN TOKEN +
-    * settle + READ-BACK: racing creates all write the same file, the
+    * stampede of contenders all "win" the create — the lock-stress
+    * contract test (`TokenLockContract`) measured 16 overlapping
+    * critical sections out of 24 acquisitions before this design. So
+    * acquisition is create + WRITE OWN TOKEN + settle + READ-BACK:
+    * racing creates all write the same file, the
     * LAST write survives, and exactly the racer whose token survives
     * proceeds — everyone else backs off without touching the file
     * (it is now someone else's mutex). The settle pause bounds the

@@ -133,9 +133,9 @@ private[graft] final class CasFs(client: ObjectStoreClient)
     * the protocol genuinely needs one: a compaction stages an EMPTY
     * `tombstones` child to clear the live tombstone set, and a
     * marker-less no-op `mkdirs` made that staged child invisible to
-    * the publish (caught by the CAS lifecycle suite — the tombstones
-    * survived compaction). The marker is dot-prefixed so Spark's
-    * hidden-file filter skips it inside parquet table dirs, and
+    * the publish (caught by `IndexLifecycleContract` on CAS — the
+    * tombstones survived compaction). The marker is dot-prefixed so
+    * Spark's hidden-file filter skips it inside parquet table dirs, and
     * [[childNames]]/[[filesUnder]] hide it from listings — manifests
     * stay byte-identical in shape across bindings — while any key
     * under the prefix (marker included) keeps [[isDir]] true. */

@@ -285,13 +285,11 @@ object Dedup {
     // (d08/d15's key swap): the self-join exchange ships and sorts
     // 8-byte longs. Distinct-shingle digests are what `inter` counts,
     // so a 64-bit collision between two DIFFERENT shingles of a
-    // candidate pair could inflate a count — the DuckDB oracle joins
-    // the raw strings and catches any such at verify SF, and the
-    // 100 TB posture is the shared [[PostingWideDigest]] 16-byte knob.
+    // candidate pair could inflate a count — see [[shingleDigest]].
     val postings = sh
       .select(col("doc_id"), size(col("shingles")).as("n"),
         explode(col("shingles")).as("sg0"))
-      .select(col("doc_id"), col("n"), postingDigest(col("sg0")).as("sg"))
+      .select(col("doc_id"), col("n"), shingleDigest(col("sg0")).as("sg"))
     val pairCounts = postings.as("a")
       .join(postings.as("b"),
         col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id") &&
@@ -407,11 +405,11 @@ object Dedup {
     * that the uncapped join is the honest baseline. */
   def d13Containment(spark: SparkSession, dir: String): DataFrame = {
     val sh = shingled(spark, dir)
-    // digest posting keys, same swap + same oracle-guarded collision
-    // posture as d04 (shared [[PostingWideDigest]] 16-byte knob)
+    // digest posting keys, same swap + same collision posture as d04
+    // ([[shingleDigest]])
     val postings = sh
       .select(col("doc_id"), explode(col("shingles")).as("sg0"))
-      .select(col("doc_id"), postingDigest(col("sg0")).as("sg"))
+      .select(col("doc_id"), shingleDigest(col("sg0")).as("sg"))
     val pairCounts = postings.as("a")
       .join(postings.as("b"),
         col("a.sg") === col("b.sg") && col("a.doc_id") < col("b.doc_id"))
@@ -680,46 +678,18 @@ object Dedup {
     * partial-overlap passages that the doc-level near-dup ops miss. */
   val DupSpanL = 24
 
-  /** 100 TB knob for [[d15DupSpans]]: widen the shingle digest from 8
-    * to 16 bytes. At the fixture SFs a 64-bit digest is collision-free
-    * in expectation (n²/2⁶⁵ ≈ 5·10⁻⁸ at sf0.1, and the raw-string
-    * oracle would hash-mismatch if one ever fired), but at the
-    * advertised 10¹³⁺ position scale collisions are EXPECTED
-    * (~n²/2⁶⁵ ≈ 10⁶) and each one could mark a unique position as
-    * duplicated. The wide form keys the duplicate-marking window on a
-    * pair of independent xxhash64s (the second seeded by a prefixed
-    * constant column), pushing P(any collision) to n²/2¹²⁹ ≈ 10⁻¹³ at
-    * 10¹³ positions — the swap is this constant, not a code edit. */
-  val DupSpanWideDigest = false
-
-  /** The same 100 TB knob for the d04/d12/d13 posting joins, whose
-    * intersection COUNTS feed Jaccard/containment directly with no
-    * downstream exact verify (unlike d08, where every candidate passes
-    * an exact array check, so collisions are provably harmless there):
-    * an 8-byte collision between two DIFFERENT shingles of a candidate
-    * pair silently inflates `inter`. The raw-string oracle catches any
-    * such at verify SF; at production position counts flip this
-    * constant — [[DupSpanWideDigest]]'s probability arithmetic applies
-    * unchanged, and the swap is the constant, not a code edit. */
-  val PostingWideDigest = false
-
-  /** 8-or-16-byte digest key: a single xxhash64 long, or a pair of
-    * independent xxhash64s (second seeded by a prefixed constant
-    * column). Both group/sort/partition identically; the pair just
-    * costs a wider exchange. */
-  private def digestKey(s: Column, wide: Boolean): Column =
-    if (wide) struct(xxhash64(s), xxhash64(lit(1L), s))
-    else xxhash64(s)
-
-  /** Shingle digest for [[d15DupSpans]]/[[d16SharedSpanPairs]] under
-    * [[DupSpanWideDigest]]. */
-  private def spanDigest(s: Column): Column =
-    digestKey(s, DupSpanWideDigest)
-
-  /** Posting-join shingle key for [[d04NgramJaccard]] (and thus d12)
-    * and [[d13Containment]] under [[PostingWideDigest]]. */
-  private def postingDigest(s: Column): Column =
-    digestKey(s, PostingWideDigest)
+  /** The 8-byte shingle digest keying the posting joins
+    * ([[d04NgramJaccard]], and so d12; [[d13Containment]]) and the span
+    * windows ([[d15DupSpans]], [[d16SharedSpanPairs]]). Among n
+    * distinct shingles P(any 64-bit collision) ≈ n²/2⁶⁵: ~5·10⁻⁸ at
+    * sf0.1, where the DuckDB oracle (which joins/groups the raw
+    * strings) would hash-mismatch if one ever fired, but ~10⁶ expected
+    * at 10¹³ positions. A collision inflates a posting join's `inter`
+    * count (no downstream exact verify, unlike d08's array check) or
+    * merges two shingle groups and marks a unique span position
+    * duplicated. At that scale key on a pair of independent xxhash64s
+    * (n²/2¹²⁹). */
+  private def shingleDigest(s: Column): Column = xxhash64(s)
 
   /** d15: exact-substring span dedup — the passage-level complement to
     * the doc-level ops (d01..d13): find every maximal character span of
@@ -748,11 +718,8 @@ object Dedup {
     * window sorter compares longs — measured equal in isolation but
     * far more stable under executor memory pressure (the string-key
     * sort spilled to 14 s mid-bench; the long-key sort holds ~4 s).
-    * A digest collision would merge two shingle groups and could mark
-    * a unique position duplicated — P(collision) ≈ n²/2⁶⁵, ~5·10⁻⁸ at
-    * sf0.1, and the DuckDB oracle (which groups by the raw string)
-    * would hash-mismatch if one ever fired at verify SF; at 10¹³⁺
-    * positions swap in a 16-byte digest. The trade: a boilerplate
+    * A digest collision could mark a unique position duplicated (see
+    * [[shingleDigest]]). The trade: a boilerplate
     * shingle appearing everywhere is one window partition (sorter
     * spills, no AQE split) where an agg+join shape could split it —
     * at pathological shingle skew revert to agg+join. The per-doc
@@ -768,7 +735,7 @@ object Dedup {
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(0), length(col("text")) - lit(L))).as("p"))
       .select(col("doc_id"), col("p").cast(LongType).as("pos"),
-        spanDigest(col("text").substr(col("p") + 1, lit(L))).as("h"))
+        shingleDigest(col("text").substr(col("p") + 1, lit(L))).as("h"))
     val perShingle = Window.partitionBy(col("h"))
     val hits = shingles
       .withColumn("mn", min(col("doc_id")).over(perShingle))
@@ -848,9 +815,7 @@ object Dedup {
     * attribution of stopword-like shingles for boundedness), then every
     * window/aggregate is keyed by (doc_a, doc_b[, diag]) — sized by
     * matching pairs, never by the corpus. Digest collisions (d15's
-    * note) could fabricate an L-char span; the raw-string oracle would
-    * catch one at verify SF, and [[DupSpanWideDigest]] is the same
-    * 16-byte escape hatch. */
+    * note) could fabricate an L-char span; see [[shingleDigest]]. */
   /** Positions-per-shingle bound for [[d16SharedSpanPairs]]'s posting
     * self-join (m10's hot-digest cap): shingles above it are dropped
     * before pairing, bounding the join at sum-of-df² with df ≤ cap.
@@ -872,7 +837,7 @@ object Dedup {
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(0), length(col("text")) - lit(L))).as("p"))
       .select(col("doc_id"), col("p").cast(LongType).as("pos"),
-        spanDigest(col("text").substr(col("p") + 1, lit(L))).as("h"))
+        shingleDigest(col("text").substr(col("p") + 1, lit(L))).as("h"))
     // d15's one-pass prefilter before the self-join: only positions
     // whose shingle occurs in ≥ 2 distinct docs can form a cross-doc
     // pair, so both join sides shrink from every position to just the
@@ -1322,7 +1287,7 @@ object Dedup {
         .select(col("doc_id").as(idName), col("text"),
           explode(sequence(lit(0), length(col("text")) - lit(L))).as("p"))
         .select(col(idName), col("p").cast(LongType).as("pos"),
-          spanDigest(col("text").substr(col("p") + 1, lit(L))).as("h"))
+          shingleDigest(col("text").substr(col("p") + 1, lit(L))).as("h"))
     val evalIdx = shingles(isEval, "eval_id").select("eval_id", "h").distinct()
     val hits = shingles(!isEval, "train_id")
       .join(broadcast(evalIdx), "h")

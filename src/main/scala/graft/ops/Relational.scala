@@ -31,17 +31,6 @@ import graft.{Query, Tables}
   */
 object Relational {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables(spark, dir, name)
-
-  /** [[t]] with the scale-adaptive parallelism floor (Tables.spread),
-    * keyed so downstream joins/aggregations reuse the exchange. Opt-in
-    * per query: round-14 measured the floor's exchange at ~0.2-0.4 s on
-    * this box, so only queries whose serial kernel costs more use it
-    * (the bench diffs in OPTIMIZATION_r14.md are the receipts). */
-  private def tf(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables.factSpread(spark, dir, name)
-
   private def ts(s: String): Column = lit(java.sql.Timestamp.valueOf(s))
 
   /** Exact 2-decimal view of a money/quantity double column. */
@@ -62,7 +51,7 @@ object Relational {
   /** TPC-H Q1-style pricing summary: scan → filter → hash-agg → sort.
     * Partial aggregation happens map-side; only 6 groups shuffle. */
   def q01PricingSummary(spark: SparkSession, dir: String): DataFrame =
-    tf(spark, dir, "lineitem")
+    Tables.factSpread(spark, dir, "lineitem")
       .filter(col("l_shipdate") <= ts("2000-12-01 00:00:00"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -91,7 +80,7 @@ object Relational {
   /** TPC-H Q6-style single-row predicate aggregate — everything pushes to
     * the scan; no shuffle at all (final agg over partial aggs). */
   def q06Forecast(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Tables(spark, dir, "lineitem")
       .filter(col("l_shipdate") >= ts("1996-01-01 00:00:00") &&
         col("l_shipdate") < ts("1998-01-01 00:00:00") &&
         col("l_discount").between(0.04, 0.09) && col("l_quantity") < 24)
@@ -114,7 +103,7 @@ object Relational {
   /** Global top-k via TakeOrderedAndProject — per-partition top-k then a
     * k-row merge on the driver; no full sort, no full shuffle. */
   def q02TopOrders(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       .limit(10)
@@ -131,11 +120,11 @@ object Relational {
     * turns it into a broadcast join; lineitem⋈orders shuffles on the
     * orderkey. */
   def q03ShipPriority(spark: SparkSession, dir: String): DataFrame = {
-    val cust = t(spark, dir, "customer")
+    val cust = Tables(spark, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
-    val ord = t(spark, dir, "orders")
+    val ord = Tables(spark, dir, "orders")
       .filter(col("o_orderdate") < ts("1998-01-01 00:00:00"))
-    val li = t(spark, dir, "lineitem")
+    val li = Tables(spark, dir, "lineitem")
       .filter(col("l_shipdate") > ts("1996-01-01 00:00:00"))
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
@@ -159,12 +148,12 @@ object Relational {
   /** TPC-H Q5-style snowflake join (region→nation→customer→orders→
     * lineitem): dims broadcast, fact shuffles once. */
   def q05NationRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val region = t(spark, dir, "region").filter(col("r_name") =!= "AFRICA")
-    val nation = t(spark, dir, "nation")
-    val cust = t(spark, dir, "customer")
-    val ord = t(spark, dir, "orders")
+    val region = Tables(spark, dir, "region").filter(col("r_name") =!= "AFRICA")
+    val nation = Tables(spark, dir, "nation")
+    val cust = Tables(spark, dir, "customer")
+    val ord = Tables(spark, dir, "orders")
       .filter(col("o_orderdate") >= ts("1996-01-01 00:00:00"))
-    val li = t(spark, dir, "lineitem")
+    val li = Tables(spark, dir, "lineitem")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
@@ -189,8 +178,8 @@ object Relational {
   /** Explicit broadcast-hash join of the fact table against a small dim
     * (part): zero shuffle on the build side, fact side stays in place. */
   def q07BrandRevenue(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
-      .join(broadcast(t(spark, dir, "part")),
+    Tables(spark, dir, "lineitem")
+      .join(broadcast(Tables(spark, dir, "part")),
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(money(col("l_extendedprice")).as("gross"),
@@ -210,9 +199,9 @@ object Relational {
     * high-value order. Semi joins ship only the join key — at scale this
     * is strictly cheaper than join+distinct. */
   def q08SemiJoin(spark: SparkSession, dir: String): DataFrame = {
-    val bigF = t(spark, dir, "orders")
+    val bigF = Tables(spark, dir, "orders")
       .filter(col("o_orderstatus") === "F" && col("o_totalprice") > 150000)
-    t(spark, dir, "customer")
+    Tables(spark, dir, "customer")
       .join(bigF, col("c_custkey") === col("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
       .orderBy(col("c_custkey"))
@@ -226,9 +215,9 @@ object Relational {
 
   /** Left-anti join (NOT EXISTS): customers with no urgent orders. */
   def q09AntiJoin(spark: SparkSession, dir: String): DataFrame = {
-    val urgent = t(spark, dir, "orders")
+    val urgent = Tables(spark, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
-    t(spark, dir, "customer")
+    Tables(spark, dir, "customer")
       .join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"))
       .orderBy(col("c_custkey"))
@@ -244,8 +233,8 @@ object Relational {
     * sides bigger than a broadcast threshold at real scale; AQE decides
     * locally). */
   def q10SupplierRevenue(spark: SparkSession, dir: String): DataFrame =
-    tf(spark, dir, "lineitem")
-      .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    Tables.factSpread(spark, dir, "lineitem")
+      .join(Tables(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_suppkey"), col("s_name"))
       .agg(sum(discPrice).cast(DoubleType).as("revenue"),
         count(lit(1)).as("n_items"))
@@ -268,7 +257,7 @@ object Relational {
   def q11WindowTopK(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("p_brand"))
       .orderBy(col("p_retailprice").desc, col("p_partkey").asc)
-    t(spark, dir, "part")
+    Tables(spark, dir, "part")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .select(col("p_brand"), col("rn"), col("p_partkey"),
@@ -302,7 +291,7 @@ object Relational {
       .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
         col("l_quantity"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(spark, dir, "lineitem")
+    Tables(spark, dir, "lineitem")
       .withColumn("running_qty", sum(dec2(col("l_quantity"))).over(w)
         .cast(DoubleType))
       .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
@@ -324,7 +313,7 @@ object Relational {
   def q13WindowLag(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    t(spark, dir, "events")
+    Tables(spark, dir, "events")
       .withColumn("prev_value", lag(col("value"), 1).over(w))
       .withColumn("delta", col("value") - col("prev_value"))
       .select(col("user_id"), col("event_id"), col("value"),
@@ -343,7 +332,7 @@ object Relational {
   /** rank() with genuine ties (integer p_size). */
   def q14WindowRank(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("p_type")).orderBy(col("p_size").desc)
-    t(spark, dir, "part")
+    Tables(spark, dir, "part")
       .withColumn("size_rank", rank().over(w))
       .filter(col("size_rank") <= 2)
       .select(col("p_type"), col("size_rank"), col("p_partkey"),
@@ -363,7 +352,7 @@ object Relational {
   // ---------------------------------------------------------------------
 
   def q15Rollup(spark: SparkSession, dir: String): DataFrame =
-    tf(spark, dir, "lineitem")
+    Tables.factSpread(spark, dir, "lineitem")
       .rollup(col("l_returnflag"), col("l_linestatus"))
       .agg(count(lit(1)).as("n"), money(col("l_quantity")).as("qty"))
       .orderBy(col("l_returnflag").asc_nulls_first,
@@ -376,7 +365,7 @@ object Relational {
       |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin
 
   def q16Cube(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Tables(spark, dir, "orders")
       .cube(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), money(col("o_totalprice")).as("total"))
       .orderBy(col("o_orderstatus").asc_nulls_first,
@@ -404,7 +393,7 @@ object Relational {
   /** Pivot with an explicit value list (deterministic output columns);
     * oracle is the equivalent conditional aggregation. */
   def q18Pivot(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Tables(spark, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .pivot("l_linestatus", Seq("F", "O"))
       .agg(count(lit(1)))
@@ -422,7 +411,7 @@ object Relational {
 
   /** INTERSECT: customers ordering in both 1995 and 2000. */
   def q19Intersect(spark: SparkSession, dir: String): DataFrame = {
-    val ord = t(spark, dir, "orders")
+    val ord = Tables(spark, dir, "orders")
     def buyers(y: Int) = ord
       .filter(year(col("o_orderdate")) === y).select(col("o_custkey"))
     buyers(1995).intersect(buyers(2000)).orderBy(col("o_custkey"))
@@ -436,7 +425,7 @@ object Relational {
 
   /** EXCEPT: customers who ordered in 1995 but not in 2000. */
   def q20Except(spark: SparkSession, dir: String): DataFrame = {
-    val ord = t(spark, dir, "orders")
+    val ord = Tables(spark, dir, "orders")
     def buyers(y: Int) = ord
       .filter(year(col("o_orderdate")) === y).select(col("o_custkey"))
     buyers(1995).except(buyers(2000)).orderBy(col("o_custkey"))
@@ -450,7 +439,7 @@ object Relational {
 
   /** UNION ALL of two heterogeneous event slices, unioned by name. */
   def q21UnionAll(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+    val ev = Tables(spark, dir, "events")
     val errors = ev.filter(col("event_type") === "error")
       .select(col("event_id"), col("event_type"), col("value"))
     val bigBuys = ev.filter(col("event_type") === "purchase" &&
@@ -470,7 +459,7 @@ object Relational {
 
   /** DISTINCT over a projection. */
   def q22Distinct(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "customer")
+    Tables(spark, dir, "customer")
       .select(col("c_mktsegment"), col("c_nationkey")).distinct()
       .orderBy(col("c_mktsegment"), col("c_nationkey"))
 
@@ -505,7 +494,7 @@ object Relational {
     * mirrors the reference's job-status filter
     * (`/root/reference/R/DataFrameOperationR.R:135`). */
   def q24FilterProject(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Tables(spark, dir, "events")
       .filter(col("event_type") === "error" && col("value") > 100 &&
         col("user_id") =!= 0)
       .select(col("event_id"), col("user_id"), col("value"))
@@ -523,7 +512,7 @@ object Relational {
   def q25LatestPerUser(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    t(spark, dir, "events")
+    Tables(spark, dir, "events")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
@@ -541,7 +530,7 @@ object Relational {
   /** F1-F6 parity: concat / regexp_replace / split / trim / case / cast
     * as codegen'd column expressions (no UDFs). */
   def q26StringFuncs(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "customer")
+    Tables(spark, dir, "customer")
       .select(
         col("c_custkey"),
         upper(col("c_name")).as("name_upper"),
@@ -564,7 +553,7 @@ object Relational {
 
   /** F10-ish date functions: year/month extraction + month truncation. */
   def q27DateFuncs(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Tables(spark, dir, "orders")
       .groupBy(year(col("o_orderdate")).as("y"),
         month(col("o_orderdate")).as("m"),
         date_trunc("month", col("o_orderdate")).as("month_start"))
@@ -583,7 +572,7 @@ object Relational {
     * `props` JSON string with get_json_object (oracle uses a regexp —
     * engine-identical on this shape). */
   def q28JsonExtract(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "events")
+    Tables(spark, dir, "events")
       .withColumn("k",
         get_json_object(col("props"), "$.k").cast(LongType))
       .groupBy((col("k") % 10).as("k_mod"))
@@ -600,7 +589,7 @@ object Relational {
 
   /** Conditional aggregation (CASE WHEN inside agg). */
   def q29CaseAgg(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Tables(spark, dir, "orders")
       .groupBy(col("o_orderstatus"))
       .agg(
         count(when(col("o_orderpriority") === "1-URGENT", 1)).as("n_urgent"),

@@ -10,23 +10,12 @@ import graft.{Query, Tables}
   * subqueries, full-outer set reconciliation, approximate sketches. */
 object Relational2 {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables(spark, dir, name)
-
-  /** [[t]] with the scale-adaptive parallelism floor (Tables.spread),
-    * keyed so downstream joins/aggregations reuse the exchange. Opt-in
-    * per query: round-14 measured the floor's exchange at ~0.2-0.4 s on
-    * this box, so only queries whose serial kernel costs more use it
-    * (the bench diffs in OPTIMIZATION_r14.md are the receipts). */
-  private def tf(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables.factSpread(spark, dir, name)
-
   /** Left outer join with null-side handling: every customer with their
     * order count and total — including customers with no orders
     * (COALESCE over the null side). */
   def q31LeftOuter(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "customer")
-      .join(t(spark, dir, "orders"),
+    Tables(spark, dir, "customer")
+      .join(Tables(spark, dir, "orders"),
         col("c_custkey") === col("o_custkey"), "left_outer")
       .groupBy(col("c_custkey"), col("c_name"))
       .agg(
@@ -44,7 +33,7 @@ object Relational2 {
 
   /** HAVING: nations with at least 50 customers. */
   def q32Having(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "customer")
+    Tables(spark, dir, "customer")
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") >= 50)
@@ -71,7 +60,7 @@ object Relational2 {
   /** Full outer join: reconcile per-user click vs purchase activity;
     * users may appear on either side only. */
   def q34FullOuter(spark: SparkSession, dir: String): DataFrame = {
-    val ev = t(spark, dir, "events")
+    val ev = Tables(spark, dir, "events")
     val clicks = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id").as("cu")).agg(count(lit(1)).as("n_clicks"))
     val buys = ev.filter(col("event_type") === "purchase")
@@ -118,7 +107,7 @@ object Relational2 {
 
   /** The production (benched) shape: one pass, sketch state only. */
   def q35Production(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "orders")
+    Tables(spark, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .agg(
         approx_count_distinct(col("o_custkey"), 0.02).as("approx_customers"),
@@ -136,7 +125,7 @@ object Relational2 {
     * literal TRUE — a real correctness gate, not rows-only. */
   def q35Verified(spark: SparkSession, dir: String): DataFrame = {
     val sketches = q35Production(spark, dir)
-    val exact = t(spark, dir, "orders")
+    val exact = Tables(spark, dir, "orders")
       .groupBy(col("o_orderpriority").as("ep"))
       .agg(
         count_distinct(col("o_custkey")).as("exact_customers"),

@@ -11,21 +11,10 @@ import graft.{Query, Tables}
   * functions, ordered collection aggregates, statistical moments. */
 object Relational3 {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables(spark, dir, name)
-
-  /** [[t]] with the scale-adaptive parallelism floor (Tables.spread),
-    * keyed so downstream joins/aggregations reuse the exchange. Opt-in
-    * per query: round-14 measured the floor's exchange at ~0.2-0.4 s on
-    * this box, so only queries whose serial kernel costs more use it
-    * (the bench diffs in OPTIMIZATION_r14.md are the receipts). */
-  private def tf(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables.factSpread(spark, dir, name)
-
   /** Unpivot (melt): the lineitem charge components as (metric, value)
     * rows. */
   def q36Unpivot(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "lineitem")
+    Tables(spark, dir, "lineitem")
       .filter(col("l_orderkey") <= 100)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_extendedprice"), col("l_discount"), col("l_tax"))
@@ -45,7 +34,7 @@ object Relational3 {
   /** Lateral explode with position over a real array column. Raw float
     * elements pass through untouched (bit-exact in any engine). */
   def q37Explode(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "embeddings")
+    Tables(spark, dir, "embeddings")
       .filter(col("vec_id") < 10)
       .select(col("vec_id"),
         posexplode(col("embedding")).as(Seq("pos", "component")))
@@ -63,7 +52,7 @@ object Relational3 {
   def q38WindowDist(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("c_acctbal"), col("c_custkey"))
-    t(spark, dir, "customer")
+    Tables(spark, dir, "customer")
       .select(col("c_mktsegment"), col("c_custkey"), col("c_acctbal"),
         percent_rank().over(w).as("pr"),
         cume_dist().over(w).as("cd"),
@@ -85,7 +74,7 @@ object Relational3 {
     * sort_array fixes it — same contract as DuckDB's ORDER BY inside
     * string_agg). */
   def q39CollectAgg(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "nation")
+    Tables(spark, dir, "nation")
       .groupBy(col("n_regionkey"))
       .agg(
         array_join(sort_array(collect_list(col("n_name"))), ",")
@@ -154,7 +143,7 @@ object Relational3 {
     * the events `props` string into a struct column (the pipeline-grade
     * path — get_json_object re-parses per field; from_json parses once). */
   def q41FromJson(spark: SparkSession, dir: String): DataFrame =
-    tf(spark, dir, "events")
+    Tables.factSpread(spark, dir, "events")
       .withColumn("p", from_json(col("props"), StructType(Seq(
         StructField("k", LongType)))))
       .groupBy(col("event_type"))

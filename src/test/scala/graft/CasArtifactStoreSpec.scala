@@ -1,551 +1,67 @@
 package graft
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.AtomicBoolean
 
-import org.scalatest.funsuite.AnyFunSuite
+/** [[ArtifactPublishContract]] and [[TokenLockContract]] on the
+  * [[graft.io.CasFs]] object-store binding — the third deployment
+  * posture (S3-class: conditional writes, no rename): atomic stale
+  * takeover, renewal-proves-ownership and the owner-token fence, with
+  * rename degraded to copy+delete. */
+class CasArtifactStoreSpec
+    extends ArtifactPublishContract with TokenLockContract {
+  protected val binding: TokenBinding = CasBinding
 
-import graft.io.{ArtifactStore, ObjectBlob, ObjectStoreClient}
-
-/** A disk-backed [[ObjectStoreClient]] modeling exactly the S3-class
-  * contract [[graft.io.CasFs]] is written against: a FLAT key space
-  * (no rename, no directories — `list` by string prefix), per-object
-  * atomic puts (temp + ATOMIC_MOVE locally), and server-arbitrated
-  * conditional writes (every mutating op serializes on one monitor,
-  * the local stand-in for the store's own request arbitration). Keys
-  * are `casfs:`-scheme URIs whose path half is a real local path, so
-  * Spark's parquet IO can ride the same bytes through a scheme-bound
-  * RawLocalFileSystem while the control plane goes through CAS —
-  * the same data-plane/control-plane split the Hadoop suites use.
-  *
-  * Etags: client-written objects carry a UUID per version; objects
-  * written by the data plane (Spark, the specs' writeData) surface a
-  * derived `ext-<size>-<mtime>` tag — stable until the object
-  * changes, which is all CAS needs (only the lock and marker are ever
-  * CAS targets, and those always go through the client). */
-final class DiskObjectStore(prefix: String) extends ObjectStoreClient {
-  private val etags = new java.util.HashMap[String, String]()
-
-  private def local(key: String) = Paths.get(key.stripPrefix(prefix))
-
-  def get(key: String): Option[ObjectBlob] = synchronized {
-    val p = local(key)
-    if (!Files.isRegularFile(p)) None
-    else Some(ObjectBlob(Files.readAllBytes(p), etagOf(key),
-      Files.getLastModifiedTime(p).toMillis))
-  }
-
-  override def stat(key: String): Option[graft.io.ObjectStat] =
-    synchronized {
-      val p = local(key)
-      if (!Files.isRegularFile(p)) None
-      else Some(graft.io.ObjectStat(etagOf(key), Files.size(p),
-        Files.getLastModifiedTime(p).toMillis))
-    }
-
-  private def etagOf(key: String): String = {
-    val p = local(key)
-    Option(etags.get(key)).getOrElse(
-      s"ext-${Files.size(p)}-${Files.getLastModifiedTime(p).toMillis}")
-  }
-
-  def list(keyPrefix: String): Seq[(String, Long, Long)] = synchronized {
-    val dir = local(keyPrefix.stripSuffix("/"))
-    if (!Files.isDirectory(dir)) Seq.empty
-    else {
-      val s = Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator.asScala.filter(Files.isRegularFile(_)).map { f =>
-          (prefix + f.toString, Files.size(f),
-            Files.getLastModifiedTime(f).toMillis)
-        }.toSeq
-      } finally s.close()
-    }
-  }
-
-  def put(key: String, body: Array[Byte]): String = synchronized {
-    val p = local(key)
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(s".obj-${java.util.UUID.randomUUID}")
-    Files.write(tmp, body)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    val tag = java.util.UUID.randomUUID.toString
-    etags.put(key, tag)
-    tag
-  }
-
-  def putIfAbsent(key: String, body: Array[Byte]): Option[String] =
-    synchronized {
-      if (Files.isRegularFile(local(key))) None else Some(put(key, body))
-    }
-
-  def putIfMatch(key: String, body: Array[Byte],
-      etag: String): Option[String] = synchronized {
-    if (Files.isRegularFile(local(key)) && etagOf(key) == etag)
-      Some(put(key, body))
-    else None
-  }
-
-  def delete(key: String): Unit = synchronized {
-    // objects only: a local DIRECTORY at this path is a husk of the
-    // disk backing, not an object — a flat store has no entry there
-    val p = local(key)
-    if (Files.isRegularFile(p)) Files.delete(p)
-    etags.remove(key)
-    ()
-  }
-
-  def copy(srcKey: String, dstKey: String): Unit = synchronized {
-    put(dstKey, Files.readAllBytes(local(srcKey)))
-    ()
-  }
-}
-
-/** ONE registration for every suite touching the CAS test scheme
-  * (suites run in parallel in one JVM — same reasoning as
-  * [[GraftTestFs]]). */
-object GraftCasStore {
-  val Scheme = "casfs"
-  val client = new DiskObjectStore(Scheme + ":")
-  lazy val registered: Unit =
-    ArtifactStore.registerObjectStore(Scheme, client)
-}
-
-/** The SAME publish protocol driven through the [[graft.io.CasFs]]
-  * object-store binding — the third deployment posture (S3-class:
-  * conditional writes, no rename). These re-prove the crash-at-any-
-  * instant guarantees of ArtifactStoreSpec/HadoopArtifactStoreSpec
-  * through CAS coordination, plus the CAS-specific properties: atomic
-  * stale takeover, renewal-proves-ownership, and the owner-token
-  * fence. */
-class CasArtifactStoreSpec extends AnyFunSuite {
-
-  private val Scheme = GraftCasStore.Scheme
-
-  private def freshBase(): String = {
-    GraftCasStore.registered
-    Scheme + ":" + Files.createTempDirectory("graft-cas-spec")
-      .resolve("artifact").toString
-  }
-
-  private def local(base: String): String = base.stripPrefix(Scheme + ":")
-
-  private def writeData(dir: String, name: String, body: String): Unit = {
-    val p = Paths.get(local(dir), "data", name)
-    Files.createDirectories(p.getParent)
-    Files.write(p, body.getBytes(UTF_8))
-  }
-
-  private def readData(base: String, name: String): String =
-    new String(
-      Files.readAllBytes(Paths.get(local(base), "data", name)), UTF_8)
-
-  private def newCasFs(): graft.io.CasFs =
-    new graft.io.CasFs(GraftCasStore.client) // a fresh "process"
-
-  test("publish, reuse and release through conditional writes") {
-    val base = freshBase()
-    assert(ArtifactStore.ensure(base, "fp-1")(writeData(_, "part-0", "x")))
-    assert(ArtifactStore.isCurrent(base, "fp-1"))
-    assert(readData(base, "part-0") == "x")
-    assert(!ArtifactStore.ensure(base, "fp-1")(_ => fail("must reuse")))
-    assert(!Files.exists(Paths.get(local(base), ".lock")),
-      "the lock object must be deleted on release")
-  }
-
-  test("racing first-touchers through CAS: one build wins") {
-    val base = freshBase()
-    val builds = new AtomicInteger
-    val entered = new CountDownLatch(2)
-    val pool = Executors.newFixedThreadPool(2)
-    val results = (1 to 2).map { _ =>
-      pool.submit(new java.util.concurrent.Callable[String] {
-        def call(): String = {
-          entered.countDown(); entered.await()
-          ArtifactStore.ensure(base, "fp-1") { staging =>
-            builds.incrementAndGet()
-            Thread.sleep(100)
-            writeData(staging, "part-0", "alpha")
-            writeData(staging, "part-1", "beta")
-          }
-          readData(base, "part-0") + readData(base, "part-1")
-        }
-      })
-    }
-    pool.shutdown()
-    assert(pool.awaitTermination(30, TimeUnit.SECONDS))
-    assert(builds.get() == 1, s"racers built ${builds.get()} times (want 1)")
-    assert(results.map(_.get()).toSet == Set("alphabeta"))
-  }
-
-  test("a fresh foreign lock blocks; a stale one is taken over by CAS") {
-    val base = freshBase()
-    ArtifactStore.ensure(base, "fp-1")(writeData(_, "part-0", "v1"))
-    val lockKey = base + "/.lock"
-    // a FRESH foreign lock (live holder) blocks the next touch
-    GraftCasStore.client.put(lockKey, "foreign-holder".getBytes(UTF_8))
-    val done = new CountDownLatch(1)
-    val t = new Thread(() => {
-      ArtifactStore.currentFingerprint(base); done.countDown()
-    })
-    t.start()
-    assert(!done.await(400, TimeUnit.MILLISECONDS),
-      "a live lock object must block the protocol")
-    GraftCasStore.client.delete(lockKey) // the holder releases
-    assert(done.await(30, TimeUnit.SECONDS), "release must unblock")
-    t.join()
-    // an ABANDONED lock (older than the TTL) is taken over atomically
-    GraftCasStore.client.put(lockKey, "dead-holder".getBytes(UTF_8))
-    Files.setLastModifiedTime(Paths.get(local(base), ".lock"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - graft.io.CasFs.LockStaleMs - 60_000))
-    assert(ArtifactStore.currentFingerprint(base).contains("fp-1"),
-      "a stale lock must be CAS-taken, not waited on forever")
-  }
-
-  test("a LIVE holder renews by CAS past the TTL and is never displaced") {
-    GraftCasStore.registered
-    val base = Scheme + ":" + Files
-      .createTempDirectory("graft-cas-renew").resolve("artifact").toString
-    val prevTtl = graft.io.CasFs.LockStaleMs
-    graft.io.CasFs.LockStaleMs = 900L
-    try {
-      val inCritical = new AtomicInteger
-      val overlaps = new AtomicInteger
-      val pool = Executors.newFixedThreadPool(2)
-      def contend(fs: graft.io.CasFs, holdMs: Long) =
-        pool.submit(new Runnable {
-          def run(): Unit = fs.lock(base) {
-            if (inCritical.incrementAndGet() > 1) overlaps.incrementAndGet()
-            Thread.sleep(holdMs)
-            inCritical.decrementAndGet()
-          }
-        })
-      val holder = newCasFs()
-      val a = contend(holder, 3600L) // 4× the TTL
-      Thread.sleep(300)
-      val b = contend(newCasFs(), 100L)
-      pool.shutdown()
-      assert(pool.awaitTermination(60, TimeUnit.SECONDS))
-      a.get(); b.get()
-      assert(overlaps.get() == 0,
-        "a waiter displaced a LIVE holder — the CAS renewal failed")
-      assert(holder.stats.displacements.get() == 0,
-        "the live holder must never observe a displacement")
-    } finally graft.io.CasFs.LockStaleMs = prevTtl
-  }
-
-  test("lock stress: 8 processes, tiny TTL, CAS mutual exclusion holds") {
-    GraftCasStore.registered
-    val base = Scheme + ":" + Files
-      .createTempDirectory("graft-cas-stress").resolve("artifact").toString
-    val prevTtl = graft.io.CasFs.LockStaleMs
-    graft.io.CasFs.LockStaleMs = 300L // every hold outlives the TTL
-    try {
-      val inCritical = new AtomicInteger
-      val overlaps = new AtomicInteger
-      val acquisitions = new AtomicInteger
-      val pool = Executors.newFixedThreadPool(8)
-      val tasks = (1 to 8).map { _ =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val fs = newCasFs()
-            (1 to 3).foreach { _ =>
-              fs.lock(base) {
-                acquisitions.incrementAndGet()
-                if (inCritical.incrementAndGet() > 1)
-                  overlaps.incrementAndGet()
-                Thread.sleep(450L) // 1.5× the TTL inside the lock
-                inCritical.decrementAndGet()
-              }
-            }
-          }
-        })
-      }
-      pool.shutdown()
-      assert(pool.awaitTermination(120, TimeUnit.SECONDS),
-        "stress run wedged — a lock was lost without recovery")
-      tasks.foreach(_.get())
-      assert(acquisitions.get() == 24, "every contender completed")
-      assert(overlaps.get() == 0,
-        s"${overlaps.get()} overlapping critical sections — CAS mutual " +
-          "exclusion broke under stale-TTL churn")
-    } finally graft.io.CasFs.LockStaleMs = prevTtl
-  }
-
-  test("manifest validation catches pruned and extra files through CAS reads") {
-    val base = freshBase()
-    def build(tag: String)(staging: String): Unit = {
-      writeData(staging, "part-0", s"$tag-0")
-      writeData(staging, "part-1", s"$tag-1")
-    }
-    assert(ArtifactStore.ensure(base, "fp-1")(build("v1")))
-    assert(!ArtifactStore.ensure(base, "fp-1")(build("BUG")))
-    Files.delete(Paths.get(local(base), "data", "part-1"))
-    assert(ArtifactStore.ensure(base, "fp-1")(build("v2")), "pruned → rebuild")
-    writeData(base, "part-stray", "stray")
-    assert(ArtifactStore.ensure(base, "fp-1")(build("v3")), "extra → rebuild")
-    assert(!Files.exists(Paths.get(local(base), "data", "part-stray")))
-  }
-
-  test("crashed rebuild/rewrite leaves the old artifact valid; publish crash rolls back through copy+delete") {
-    val base = freshBase()
-    assert(ArtifactStore.ensure(base, "fp-old")(writeData(_, "part-0", "v1")))
-    intercept[RuntimeException] {
-      ArtifactStore.ensure(base, "fp-new") { staging =>
-        writeData(staging, "part-0", "half")
-        throw new RuntimeException("executor lost mid-build")
-      }
-    }
-    assert(ArtifactStore.isCurrent(base, "fp-old"),
-      "old artifact must survive a crashed rebuild")
-    assert(readData(base, "part-0") == "v1")
-    intercept[RuntimeException] {
-      ArtifactStore.rewrite(base) { (_, staging) =>
-        writeData(staging, "part-0", "compacted")
-        throw new RuntimeException("executor lost mid-rewrite")
-      }
-    }
-    assert(ArtifactStore.isCurrent(base, "fp-old") &&
-      readData(base, "part-0") == "v1")
-
-    // crash INSIDE the publish window: marker + old child stranded in
-    // the aside, staging not yet moved in — restoreAside must bring
-    // back a complete VALID old generation via copy+delete renames
-    val basePath = Paths.get(local(base))
-    val aside = basePath.resolve(".tmp-old-crash1")
-    Files.createDirectories(aside)
-    Files.move(basePath.resolve("_FINGERPRINT"),
-      aside.resolve("_FINGERPRINT"))
-    Files.createDirectories(aside.resolve("data"))
-    Files.move(basePath.resolve("data").resolve("part-0"),
-      aside.resolve("data").resolve("part-0"))
-    Files.delete(basePath.resolve("data"))
-    writeData((Scheme + ":" + basePath.resolve(".tmp-crash1")).toString,
-      "part-0", "v2-unpublished")
-    assert(ArtifactStore.currentFingerprint(base).isEmpty)
-    assert(ArtifactStore.restoreAside(base), "restore must report work")
-    assert(readData(base, "part-0") == "v1")
-    assert(ArtifactStore.isCurrent(base, "fp-old"),
-      "roll-back must restore validity, marker included")
-    // a successful retry reaps the orphan staging
-    assert(ArtifactStore.ensure(base, "fp-new")(writeData(_, "part-0", "v2")))
-    assert(readData(base, "part-0") == "v2")
-    assert(GraftCasStore.client.list(base + "/").forall {
-      case (k, _, _) => !k.stripPrefix(base + "/").startsWith(".tmp-")
-    }, "crashed staging must be reaped on retry")
-  }
-
-  test("mutate appends over the exact fingerprint; a crashed append unmarks") {
-    val base = freshBase()
-    ArtifactStore.ensure(base, "fp-A")(writeData(_, "cell=0/part-0", "a0"))
-    assert(!ArtifactStore.mutate(base, "fp-STALE", "fp-B")(_ =>
-      fail("append must not run over a mismatched fingerprint")))
-    assert(ArtifactStore.mutate(base, "fp-A", "fp-AB") { live =>
-      writeData(live, "cell=1/part-0", "b0")
-    })
-    assert(readData(base, "cell=0/part-0") == "a0")
-    assert(readData(base, "cell=1/part-0") == "b0")
-    assert(!ArtifactStore.ensure(base, "fp-AB")(_ => fail("must reuse")))
-    intercept[RuntimeException] {
-      ArtifactStore.mutate(base, "fp-AB", "fp-ABC") { live =>
-        writeData(live, "cell=2/part-0", "half")
-        throw new RuntimeException("append died")
-      }
-    }
-    assert(!Files.exists(Paths.get(local(base), "_FINGERPRINT")),
-      "a crashed append must leave the artifact unmarked")
-    assert(ArtifactStore.ensure(base, "fp-ABC")(
-      writeData(_, "cell=0/part-0", "rebuilt")))
-  }
-
-  test("ensureIncremental and gc run through the CAS binding") {
-    GraftCasStore.registered
-    val root = Scheme + ":" +
-      Files.createTempDirectory("graft-cas-gc").toString
-    val base = root + "/ivf-index/corpus_a"
-    assert(ArtifactStore.ensureIncremental(base, "fp-A", "fp-AB")(
-      writeData(_, "base-0", "A"))(writeData(_, "batch-0", "B"))
-      == ((true, true)))
-    assert(ArtifactStore.isCurrent(base, "fp-AB"))
-    assert(ArtifactStore.ensureIncremental(base, "fp-A", "fp-AB")(
-      _ => fail("no build"))(_ => fail("no append")) == ((false, false)))
-    val oldTime = java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis() - 10_000_000L)
-    val walk = Files.walk(Paths.get(local(base)))
-    try walk.iterator().forEachRemaining(p =>
-      Files.setLastModifiedTime(p, oldTime))
-    finally walk.close()
-    val removed = ArtifactStore.gc(ttlMillis = 1_000_000L,
-      live = _ => false, root = root)
-    assert(removed == Seq(base), s"gc removed $removed")
-    assert(ArtifactStore.currentFingerprint(base).isEmpty)
-    assert(ArtifactStore.ensure(base, "fp-new")(
-      writeData(_, "base-0", "new")))
-    assert(readData(base, "base-0") == "new")
-  }
-
-  test("a displaced holder's publish is FENCED on the CAS binding too") {
-    val base = freshBase()
-    ArtifactStore.ensure(base, "fp-A")(writeData(_, "part-0", "v1"))
-    val lockKey = base + "/.lock"
-    val entered = new CountDownLatch(1)
-    val displaced = new CountDownLatch(1)
-    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val t = new Thread(() =>
-      try ArtifactStore.mutate(base, "fp-A", "fp-AB") { live =>
-        writeData(live, "part-append", "appended")
-        entered.countDown()
-        displaced.await(30, TimeUnit.SECONDS)
-        ()
-      } catch { case e: Throwable => failure.set(e) })
-    t.start()
-    assert(entered.await(30, TimeUnit.SECONDS))
-    // the takeover: an intruder overwrites the lock object
-    GraftCasStore.client.put(lockKey, "intruder-token".getBytes(UTF_8))
-    displaced.countDown()
-    t.join(30_000)
-    assert(failure.get() != null, "the displaced publish must fail")
-    assert(failure.get().isInstanceOf[graft.io.LockDisplacedException],
-      s"want LockDisplacedException, got ${failure.get()}")
-    assert(!Files.exists(Paths.get(local(base), "_FINGERPRINT")),
-      "a fenced publish must leave the base marker-less")
-    assert(GraftCasStore.client.get(lockKey)
-      .exists(b => new String(b.body, UTF_8) == "intruder-token"),
-      "release must not delete the intruder's mutex")
-    GraftCasStore.client.delete(lockKey)
-    assert(ArtifactStore.ensure(base, "fp-new")(
-      writeData(_, "part-0", "v2")))
-    assert(readData(base, "part-0") == "v2")
-  }
+  /** This suite's established names for the contract tests, kept so
+    * its test ids stay stable. Two of them name a merged pair: the
+    * name stays on the first half, and the publish-crash and gc halves
+    * run as the contract's restoreAside and gc tests. */
+  override protected def titles: Map[String, String] = Map(
+    "racing first-touchers: one build wins, the loser reuses it" ->
+      "racing first-touchers through CAS: one build wins",
+    "manifest validation: pruned, truncated and extra files all invalidate" ->
+      "manifest validation catches pruned and extra files through CAS reads",
+    "a crashed rebuild or rewrite leaves the PREVIOUS artifact intact and valid" ->
+      "crashed rebuild/rewrite leaves the old artifact valid; publish crash rolls back through copy+delete",
+    "mutate: in-place append over the exact expected fingerprint only" ->
+      "mutate appends over the exact fingerprint; a crashed append unmarks",
+    "ensureIncremental: one lock window, post-condition holds from any start" ->
+      "ensureIncremental and gc run through the CAS binding",
+    "the lock blocks while held and a stale abandoned lock is broken" ->
+      "a fresh foreign lock blocks; a stale one is taken over by CAS",
+    "a LIVE holder's lock is renewed past the stale TTL, never broken" ->
+      "a LIVE holder renews by CAS past the TTL and is never displaced",
+    "lock stress: N simulated processes, tiny TTL, mutual exclusion holds" ->
+      "lock stress: 8 processes, tiny TTL, CAS mutual exclusion holds",
+    "a displaced holder's publish is FENCED: rejected at the marker write" ->
+      "a displaced holder's publish is FENCED on the CAS binding too",
+    "lock-health counters: stale break, displacement, reclaim, fence rejection" ->
+      "CAS lock-health counters: stale takeover, displacement, fence")
 
   test("a putIfAbsent applied server-side with a LOST response is adopted") {
     // the S3 failure mode: the conditional PUT lands, the HTTP
     // response does not. The retried create then fails on our OWN
-    // lock — pre-fix the acquirer waited out its own 15-minute stale
-    // TTL; post-fix it reads the owner, recognizes its token and
-    // adopts (review-caught, pass 2).
-    GraftCasStore.registered
-    val flaky = new ObjectStoreClient {
-      val inner = GraftCasStore.client
-      val dropOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
-      def get(key: String) = inner.get(key)
-      override def stat(key: String) = inner.stat(key)
-      def list(p: String) = inner.list(p)
-      override def listSome(p: String, max: Int) = inner.listSome(p, max)
-      def put(key: String, b: Array[Byte]) = inner.put(key, b)
-      def putIfAbsent(key: String, b: Array[Byte]) = {
-        val r = inner.putIfAbsent(key, b) // APPLIES on the server...
-        if (key.endsWith("/.lock") && r.isDefined &&
-            dropOnce.compareAndSet(true, false))
-          throw new java.io.IOException("response lost") // ...then drops
-        r
-      }
-      def putIfMatch(key: String, b: Array[Byte], e: String) =
-        inner.putIfMatch(key, b, e)
-      def delete(key: String) = inner.delete(key)
-      def copy(s: String, d: String) = inner.copy(s, d)
-    }
-    val fs = new graft.io.CasFs(flaky)
-    val base = Scheme + ":" + Files
-      .createTempDirectory("graft-cas-adopt").resolve("artifact").toString
+    // lock — without adoption the acquirer would wait out its own
+    // 15-minute stale TTL; instead it reads the owner, recognizes its
+    // token and adopts.
+    val dropOnce = new AtomicBoolean(true)
+    val fs = new graft.io.CasFs(
+      new ForwardingObjectStore(GraftCasStore.client) {
+        override def putIfAbsent(key: String,
+            b: Array[Byte]): Option[String] = {
+          val r = super.putIfAbsent(key, b) // APPLIES on the server...
+          if (key.endsWith("/.lock") && r.isDefined &&
+              dropOnce.compareAndSet(true, false))
+            throw new java.io.IOException("response lost") // ...then drops
+          r
+        }
+      })
+    val base = binding.freshBase()
     val t0 = System.currentTimeMillis()
     val ran = fs.lock(base) { true } // default TTL is 15 min: adoption
     // must make this instant, not TTL-bound
     assert(ran && System.currentTimeMillis() - t0 < 30_000,
       "a lost create response must be adopted, not waited out")
-    assert(GraftCasStore.client.get(base + "/.lock").isEmpty,
+    assert(binding.readLock(base).isEmpty,
       "the adopted lock must release normally")
-  }
-
-  test("a transient failure during release never fails the committed body") {
-    // the release's confirm-read retries and, on persistent failure,
-    // logs a possible orphan — it must NEVER throw: the body's work
-    // (an already-committed publish) would be reported failed by its
-    // own lock release (review-caught, pass 2).
-    GraftCasStore.registered
-    val failGets = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val flaky = new ObjectStoreClient {
-      val inner = GraftCasStore.client
-      def get(key: String) =
-        if (failGets.get() && key.endsWith("/.lock"))
-          throw new java.io.IOException("throttled")
-        else inner.get(key)
-      override def stat(key: String) = inner.stat(key)
-      def list(p: String) = inner.list(p)
-      override def listSome(p: String, max: Int) = inner.listSome(p, max)
-      def put(key: String, b: Array[Byte]) = inner.put(key, b)
-      def putIfAbsent(key: String, b: Array[Byte]) = inner.putIfAbsent(key, b)
-      def putIfMatch(key: String, b: Array[Byte], e: String) =
-        inner.putIfMatch(key, b, e)
-      def delete(key: String) = inner.delete(key)
-      def copy(s: String, d: String) = inner.copy(s, d)
-    }
-    val fs = new graft.io.CasFs(flaky)
-    val base = Scheme + ":" + Files
-      .createTempDirectory("graft-cas-rel").resolve("artifact").toString
-    val out = fs.lock(base) { failGets.set(true); 42 }
-    assert(out == 42, "the committed body's result must survive a " +
-      "flaky release")
-    failGets.set(false)
-    // the possibly-orphaned lock is then broken by expiry as designed;
-    // here just confirm the next writer is not wedged forever
-    val prevTtl = graft.io.CasFs.LockStaleMs
-    graft.io.CasFs.LockStaleMs = 400L
-    try {
-      Files.setLastModifiedTime(
-        Paths.get(local(base), ".lock"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 60_000))
-      assert(fs.lock(base) { true }, "the orphan must expire normally")
-    } finally graft.io.CasFs.LockStaleMs = prevTtl
-  }
-
-  test("CAS lock-health counters: stale takeover, displacement, fence") {
-    GraftCasStore.registered
-    val fs = newCasFs()
-    val base = Scheme + ":" + Files
-      .createTempDirectory("graft-cas-stats").resolve("artifact").toString
-    val lockKey = base + "/.lock"
-    val prevTtl = graft.io.CasFs.LockStaleMs
-    graft.io.CasFs.LockStaleMs = 600L
-    try {
-      // stale takeover counted
-      GraftCasStore.client.put(lockKey, "dead-holder".getBytes(UTF_8))
-      Files.setLastModifiedTime(Paths.get(local(base), ".lock"),
-        java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 60_000))
-      fs.lock(base)(())
-      assert(fs.stats.staleBreaks.get() == 1,
-        s"stale takeover not counted: ${fs.stats.snapshot}")
-      // displacement: the renewal CAS loses after an intruder put
-      val sawDisplacement = fs.lock(base) {
-        GraftCasStore.client.put(lockKey, "intruder".getBytes(UTF_8))
-        val deadline = System.currentTimeMillis() + 10_000
-        while (fs.stats.displacements.get() == 0 &&
-            System.currentTimeMillis() < deadline) Thread.sleep(50)
-        intercept[graft.io.LockDisplacedException](fs.verifyHeld(base))
-        fs.stats.displacements.get() >= 1
-      }
-      assert(sawDisplacement, "renewal CAS loss must count a displacement")
-      assert(fs.stats.fenceRejections.get() >= 1,
-        s"fence rejection not counted: ${fs.stats.snapshot}")
-      GraftCasStore.client.delete(lockKey) // the intruder releases
-      // release vs in-flight heartbeat: after a short hold ends, no
-      // tick may resurrect the deleted lock (the released flag + the
-      // hold monitor close the race) — an orphan here would cost the
-      // next writer a full stale TTL
-      fs.lock(base)(())
-      Thread.sleep(500) // > two heartbeat periods
-      assert(GraftCasStore.client.get(lockKey).isEmpty,
-        "a heartbeat tick resurrected a released lock")
-    } finally {
-      graft.io.CasFs.LockStaleMs = prevTtl
-      GraftCasStore.client.delete(lockKey)
-    }
   }
 }

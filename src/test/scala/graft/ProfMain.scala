@@ -91,10 +91,7 @@ object ProfMain {
       (1 to 2).foreach { _ =>
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
+      Bench.releaseStorage(spark)
       spark.sparkContext.addSparkListener(listener)
       reset(); resetLongs()
       val t0 = System.nanoTime()

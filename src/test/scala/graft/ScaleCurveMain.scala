@@ -43,13 +43,6 @@ object ScaleCurveMain {
 
   private val IdOffset = 10_000_000L
 
-  private def releaseStorage(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    System.gc()
-  }
-
   private def scaledCopy(df: DataFrame, k: Int): DataFrame = {
     var out = df
     if (out.columns.contains("doc_id"))
@@ -113,7 +106,7 @@ object ScaleCurveMain {
       val rows = spark.read.parquet(s"$dir/embeddings.parquet").count()
       queries.foreach { q =>
         val timed = (1 to runs).map { _ =>
-          releaseStorage(spark)
+          Bench.releaseStorage(spark)
           val r0 = Checkpoints.rounds.get()
           val t0 = System.nanoTime()
           val ok = try {

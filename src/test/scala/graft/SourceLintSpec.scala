@@ -32,7 +32,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Similarity.quantized`. Iterative operators run through
   * [[Checkpoints.converge]], which releases their checkpoints: only
   * `Checkpoints` itself and the BPE trainer (a merge-budget loop, not a
-  * fixpoint) call `Checkpoints.release`. */
+  * fixpoint) call `Checkpoints.release`. The between-queries storage
+  * release (cached plans and every persisted RDD) is written once, as
+  * `Bench.dropStorage`. */
 class SourceLintSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[(Path, String)] = {
@@ -101,6 +103,16 @@ class SourceLintSpec extends AnyFunSuite {
     """\bCheckpoints\s*\.\s*release\s*\(""".r.findAllMatchIn(src).map { m =>
       (src.substring(0, m.start).count(_ == '\n') + 1,
         m.matched.replaceAll("\\s+", ""))
+    }.toSeq
+
+  /** Each sweep over every persisted RDD (`getPersistentRDDs.values`,
+    * across line breaks), with the `def` it sits in: (line, def). */
+  private[graft] def unpersistSweeps(src: String): Seq[(Int, String)] =
+    """\bgetPersistentRDDs\s*\.\s*values\b""".r.findAllMatchIn(src).map { m =>
+      val before = src.substring(0, m.start)
+      val owner = """\bdef\s+(\w+)""".r.findAllMatchIn(before)
+        .foldLeft("")((_, d) => d.group(1))
+      (before.count(_ == '\n') + 1, owner)
     }.toSeq
 
   /** Path literals naming the IVF artifact's layout children: (line,
@@ -330,5 +342,29 @@ class SourceLintSpec extends AnyFunSuite {
       }
     assert(offenders.isEmpty, s"${offenders.size} Checkpoints.release calls; " +
       "iterate through Checkpoints.converge:\n" + offenders.mkString("\n"))
+  }
+
+  test("the sweep detector flags persisted-RDD sweeps and only those, with their def") {
+    assert(unpersistSweeps(
+      "private[graft] def releaseStorage(spark: SparkSession): Unit = {\n" +
+      "  spark.sparkContext.getPersistentRDDs.values\n" +
+      "    .foreach(_.unpersist(blocking = false))\n" +
+      "def main(args: Array[String]): Unit =\n" +
+      "  sc.getPersistentRDDs\n    .values.foreach(_.unpersist())") ===
+      Seq((2, "releaseStorage"), (5, "main")))
+    Seq("val before = spark.sparkContext.getPersistentRDDs.keySet",
+      "Bench.releaseStorage(spark)", "lr.rdd.unpersist(blocking = false)")
+      .foreach(l => assert(unpersistSweeps(l).isEmpty, l))
+  }
+
+  test("the storage release is written once, in Bench.dropStorage") {
+    val sites = sources("src/main/scala").flatMap { case (f, src) =>
+      unpersistSweeps(src).map { case (line, owner) =>
+        (f.getFileName.toString, owner, s"$f:$line: in def '$owner'")
+      }
+    }
+    assert(sites.map(s => (s._1, s._2)) == Seq(("Bench.scala", "dropStorage")),
+      s"${sites.size} persisted-RDD sweeps; call Bench.dropStorage:\n" +
+        sites.map(_._3).mkString("\n"))
   }
 }
