@@ -26,6 +26,8 @@ class CasArtifactStoreSpec
       "mutate appends over the exact fingerprint; a crashed append unmarks",
     "ensureIncremental: one lock window, post-condition holds from any start" ->
       "ensureIncremental and gc run through the CAS binding",
+    "publish, reuse and release: the lock object is deleted on release" ->
+      "publish, reuse and release through conditional writes",
     "the lock blocks while held and a stale abandoned lock is broken" ->
       "a fresh foreign lock blocks; a stale one is taken over by CAS",
     "a LIVE holder's lock is renewed past the stale TTL, never broken" ->

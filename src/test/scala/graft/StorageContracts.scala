@@ -411,23 +411,28 @@ trait ArtifactPublishContract extends StorageContract {
 }
 
 /** The owner-token lock contract of the expiry-based bindings (Hadoop,
-  * CAS): a live lock blocks and only a dead holder's expires, a live
-  * holder renews past any TTL, mutual exclusion survives stale-TTL
-  * churn, a displaced holder's publish is fenced, the lock-health
-  * counters count, and a flaky release never fails a committed body.
+  * CAS): the lock object is deleted on release, a live lock blocks and
+  * only a dead holder's expires, a live holder renews past any TTL,
+  * mutual exclusion survives stale-TTL churn, a displaced holder's
+  * publish is fenced, the lock-health counters count, and a flaky
+  * release never fails a committed body.
   * POSIX's `FileChannel` lock has no TTL, token or fence. */
 trait TokenLockContract extends StorageContract {
   protected val binding: TokenBinding
   import binding._
 
-  contract("the lock blocks while held and a stale abandoned lock is broken") {
-    // publish, reuse and release: the lock object is deleted on release
+  contract("publish, reuse and release: the lock object is deleted on release") {
     val base = freshBase()
     assert(ArtifactStore.ensure(base, "fp-1")(writeData(_, "part-0", "v1")))
     assert(ArtifactStore.isCurrent(base, "fp-1"))
     assert(readData(base, "part-0") == "v1")
     assert(!ArtifactStore.ensure(base, "fp-1")(_ => fail("must reuse")))
     assert(readLock(base).isEmpty, "the lock must be deleted on release")
+  }
+
+  contract("the lock blocks while held and a stale abandoned lock is broken") {
+    val base = freshBase()
+    assert(ArtifactStore.ensure(base, "fp-1")(writeData(_, "part-0", "v1")))
     // a FRESH foreign lock (a live holder) blocks the next touch
     putLock(base, "foreign-holder")
     val done = new CountDownLatch(1)
