@@ -931,7 +931,7 @@ object Dedup {
     * (MinHash band postings, PARTITIONED BY band — 16 dirs). Shared
     * by the build-once artifact ([[dedupIndexBase]]), the incremental
     * bootstrap ([[d19IncrementalIndexAppend]]) and the streaming
-    * sink's bootstrap ([[graft.stream.IndexIngest.lshBootstrap]]). */
+    * bootstrap ([[IndexFamily.Lsh]]'s build). */
   private[graft] def writeDedupIndexInto(docs: DataFrame, staging: String): Unit = {
     digestRows(docs)
       .coalesce(4).write.mode("overwrite").parquet(s"$staging/digests")
@@ -941,7 +941,7 @@ object Dedup {
   }
 
   /** One digest row PER DOCUMENT — `(doc_id, h, h64)`, where `h64` is
-    * exactly the [[Retrieval.frameDocsFingerprintParts]] row hash. The
+    * exactly [[IndexFamily.Lsh]]'s fingerprint row hash. The
     * per-doc grain (rather than the old distinct-`h` set) is what the
     * DELETE verb
     * requires twice over: removing doc D must not remove a digest
@@ -952,10 +952,10 @@ object Dedup {
     * is a set-semantics semi-join on `h`. Readers remain compatible
     * with pre-upgrade artifacts (doc_id/h64 read as null through the
     * declared schema); DELETES on those fail loud in
-    * [[lshRemovalPlan]]. */
+    * [[IndexFamily.Lsh]]'s `stored`. */
   private[graft] def digestRows(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), md5(col("text")).as("h"),
-      xxhash64(col("doc_id"), col("text")).as("h64")).distinct()
+      IndexFamily.Lsh.rowHash.as("h64")).distinct()
 
   /** Append ONE batch's digests + band postings into the LIVE index —
     * touches only new files under the 16 existing band partition dirs
@@ -989,7 +989,7 @@ object Dedup {
     * (`doc_id % 3 != 0`), fingerprinted over that side's content. */
   private def dedupIndexBase(spark: SparkSession, dir: String): String = {
     lazy val old = standingDocs(spark, dir)
-    dedupIndex.ensure(dir)(Retrieval.frameDocsFingerprintParts(old))(
+    dedupIndex.ensure(dir)(IndexFamily.Lsh.parts(old))(
       writeDedupIndexInto(old, _))
   }
 
@@ -1106,7 +1106,7 @@ object Dedup {
     * once. */
   private def dedupIncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val docs = Tables(spark, dir, "documents")
-    lazy val Seq(base, batch) = Retrieval.frameDocsFingerprintPartsWhere(
+    lazy val Seq(base, batch) = IndexFamily.Lsh.partsWhere(
       docs, dedupIncBasePred, dedupIncBatchPred)
     dedupIncIndex.ensureIncremental(dir)(base, batch)(
       writeDedupIndexInto(docs.filter(dedupIncBasePred), _))(
@@ -1123,8 +1123,9 @@ object Dedup {
     * d10's SQL, the third time the same query text certifies an
     * artifact lifecycle (s17's segmented BM25 ≡ s10 precedent).
     * Compaction of the accumulated per-append band files is
-    * [[graft.stream.IndexIngest.compactLsh]]; the streaming twin of
-    * the append is [[graft.stream.IndexIngest.lshAppendSink]]. */
+    * [[graft.stream.IndexIngest.compact]] over [[IndexFamily.Lsh]]; the
+    * streaming twin of the append is that family's
+    * [[graft.stream.IndexIngest.appendSink]]. */
   def d19IncrementalIndexAppend(spark: SparkSession, dir: String): DataFrame =
     probeDedupIndex(spark, dir, dedupIncIndexBase(spark, dir))
 
@@ -1139,82 +1140,6 @@ object Dedup {
 
   private[graft] val dedupTomb = graft.io.Artifact("dedup-tomb")
 
-  /** [[IndexDelete.removalPlan]] for the LSH dedup index: victims
-    * resolved through the per-doc digest rows (id present, not already
-    * tombstoned), fingerprint parts from the stored `h64` row hashes —
-    * the corpus is never re-read. Fails loud on a pre-upgrade artifact
-    * whose digest rows carry no ids. */
-  /** Digest-table signatures that already passed the pre-upgrade
-    * row-completeness check, per base. The guard is an index-sized
-    * aggregate, and the streaming delete sink plans a removal per
-    * micro-batch — re-running it every batch is O(index)
-    * driver-blocking work on the hot path, at odds with the
-    * delete-is-O(deletes) posture (the Tokenizer.shippedMerges memo
-    * pattern; ADVICE r12). Completeness is a property of the DIGEST
-    * FILES, not the artifact fingerprint: a delete moves the
-    * fingerprint but only appends tombstones (digest dir untouched →
-    * memo hit, which is exactly the hot path), while an append or
-    * compaction changes the digest file set → signature miss →
-    * conservative re-check (a mixed pre/post-upgrade dir is precisely
-    * an append-shaped change). Correctness never depends on the memo,
-    * only the hot path's cost does. */
-  private val lshLayoutOk = new graft.io.BoundedMemo[String](1024)
-  private[graft] def lshLayoutForget(): Unit = lshLayoutOk.clear()
-
-  /** Cheap driver-side identity of a digest dir: sorted
-    * `name:length` of its part files. Mtimes are excluded on purpose —
-    * parquet files are immutable once closed; a same-name-same-length
-    * rewrite goes through a staging swap that changes names. */
-  private def digestDirSignature(base: String): String = {
-    val (fs, b) = graft.io.ArtifactStore.backend(base)
-    fs.filesUnder(fs.join(b, "digests"))
-      .collect { case (rel, sz, _) if rel.startsWith("part-") =>
-        s"$rel:$sz" }
-      .sorted.mkString(",")
-  }
-
-  private[graft] def lshRemovalPlan(spark: SparkSession, base: String,
-      ids: DataFrame): (DataFrame, (Long, Long)) = {
-    // pre-upgrade guard over EVERY stored row: md5-only digest rows
-    // read as null doc_id/h64 through the declared schema, so they
-    // would fall out of the semi-join and turn a legally-required
-    // takedown into a silent no-op (with the replay mark still
-    // advancing — the request consumed and lost). Checked UPSTREAM of
-    // the semi-join as a row-complete aggregate, not a file-footer
-    // peek: a mixed dir (pre-upgrade base rows + post-upgrade appended
-    // rows) has new-format footers but still carries id-less rows
-    // (review-caught, twice). Memoized per digest-dir signature — see
-    // [[lshLayoutOk]] — so a streaming delete lineage pays the
-    // index-sized count once per digest-table generation, not per
-    // batch (deletes never touch the digest files).
-    val raw = spark.read.schema(digestSchema).parquet(s"$base/digests")
-    val sig = digestDirSignature(base)
-    if (sig.isEmpty || !lshLayoutOk.get(base).contains(sig)) {
-      val chk = raw.agg(count(lit(1)).as("n"),
-        count(col("doc_id")).as("nid"), count(col("h64")).as("nh"))
-        .collect()(0)
-      require(chk.getLong(0) == chk.getLong(1) &&
-        chk.getLong(0) == chk.getLong(2),
-        s"dedup index at $base carries digest rows without doc identity " +
-          "(pre-upgrade layout; identity cannot be recovered from the " +
-          "index) — rebuild from the corpus before applying takedowns")
-      if (sig.nonEmpty) lshLayoutOk.put(base, sig)
-    }
-    val requested = ids.select(col("doc_id").cast(LongType)).distinct()
-    val victims = raw
-      .join(broadcast(requested), Seq("doc_id"), "left_semi")
-      .join(broadcast(IndexDelete.tombstonesAt(spark, base, "doc_id")),
-        Seq("doc_id"), "left_anti")
-    // one pass pins the ids AND derives the parts from the stored
-    // digest rows ([[IndexDelete.pinPlan]])
-    IndexDelete.pinPlan(victims, "doc_id", col("h64"))
-  }
-
-  /** Batch takedown on a persisted dedup index. */
-  def lshApplyDeletes(spark: SparkSession, base: String,
-      ids: DataFrame): Long =
-    IndexDelete.applyRemoval(base)(lshRemovalPlan(spark, base, ids))
-
   /** d20's index artifact: the standing-corpus LSH index built through
     * the staged-publish path, then the takedown applied as a real
     * fingerprint-checked mutation — the same two-state machine as the
@@ -1222,11 +1147,10 @@ object Dedup {
   private def dedupTombIndexBase(spark: SparkSession, dir: String): String = {
     val delPred = col("doc_id") % TakedownMod === TakedownRem
     lazy val old = standingDocs(spark, dir)
-    lazy val Seq(full, del) =
-      Retrieval.frameDocsFingerprintPartsWhere(old, lit(true), delPred)
-    dedupTomb.ensureDeleted(dir)(full, del)(writeDedupIndexInto(old, _))(
-      lshApplyDeletes(spark, _, Tables(spark, dir, "documents")
-        .filter(delPred).select(col("doc_id"))))
+    lazy val Seq(full, del) = IndexFamily.Lsh.partsWhere(old, lit(true), delPred)
+    dedupTomb.ensureDeleted(dir)(full, del)(IndexFamily.Lsh.build(old, _))(
+      IndexDelete.applyDeletes(IndexFamily.Lsh, spark, _,
+        Tables(spark, dir, "documents").filter(delPred).select(col("doc_id"))))
   }
 
   /** d20: the takedown verb on the dedup state — d18's incremental

@@ -78,29 +78,25 @@ object IndexDelete {
 
   /** `df` restricted to live members of `base`: the one live-filter
     * branch every consumer shares (vector lists, BM25 candidates,
-    * dedup digest/band arms, compaction reads). No tombstones → `df`
-    * unchanged, zero plan overhead. */
+    * dedup digest/band arms, compaction reads, the compressed serving
+    * pools). No tombstones → `df` unchanged, zero plan overhead.
+    *
+    * `storedCol` names the tombstones' column when `df` carries the
+    * member id under a CONSUMER-side name (the serving pools carry it
+    * as `neighbor_id`); only then is the broadcast side renamed, so a
+    * same-name filter plans the bare anti-join. That is the pre-pool
+    * cut of the compressed serving chains: tombstoned ids must not
+    * occupy [[Similarity.RerankPool]] slots (a heavily-deleted index
+    * would starve the refine below k — the s26 starvation class, on
+    * the delete path), so the anti-join runs at CANDIDATE scale before
+    * any rank window. */
   private[graft] def liveById(spark: SparkSession, base: String,
-      df: DataFrame, idCol: String): DataFrame =
-    if (!hasTombstones(base)) df
-    else df.join(broadcast(tombstonesAt(spark, base, idCol)),
-      Seq(idCol), "left_anti")
-
-  /** [[liveById]] with the member id under a CONSUMER-side column name
-    * (the serving pools carry it as `neighbor_id`); the stored
-    * tombstone column stays the family key and the rename happens on
-    * the broadcast side. This is the pre-pool cut of the compressed
-    * serving chains: tombstoned ids must not occupy [[Similarity.RerankPool]]
-    * slots (a heavily-deleted index would starve the refine below k —
-    * the s26 starvation class, on the delete path), so the anti-join
-    * runs at CANDIDATE scale before any rank window. Same driver-side
-    * branch: an undeleted index plans the bare scan. */
-  private[graft] def liveByMember(spark: SparkSession, base: String,
       df: DataFrame, idCol: String,
-      storedCol: String = "vec_id"): DataFrame =
+      storedCol: Option[String] = None): DataFrame =
     if (!hasTombstones(base)) df
-    else df.join(broadcast(tombstonesAt(spark, base, storedCol)
-      .withColumnRenamed(storedCol, idCol)), Seq(idCol), "left_anti")
+    else df.join(broadcast(storedCol.fold(tombstonesAt(spark, base, idCol))(
+      s => tombstonesAt(spark, base, s).withColumnRenamed(s, idCol))),
+      Seq(idCol), "left_anti")
 
   private[graft] def tombstonesAt(spark: SparkSession, base: String,
       idCol: String = "vec_id"): DataFrame = {
@@ -124,11 +120,16 @@ object IndexDelete {
     liveById(spark, base, Similarity.invertedListsAt(spark, base), "vec_id")
       .select(col("cell"), col("vec_id"), col("embedding"), col("norm"))
 
-  /** Pin a removal plan's ENTIRE read side in one job: collect the
-    * victims' `(id, rowHash)` pairs — O(deletes)-small by design, the
-    * same scale bound the broadcast anti-joins rely on — and derive
-    * both the driver-local id frame and the fingerprint parts
-    * (count, xor) from that one pass. Two invariants live here:
+  /** Read-side plan of one remove_ids call against the CURRENT
+    * artifact of family `f`: the ids actually being removed (stored,
+    * not already tombstoned — deduplicated) and their fingerprint
+    * parts from the stored row hashes ([[IndexFamily.stored]] — the
+    * corpus is never re-read), computed BEFORE any mutation; the
+    * caller's `mutate` re-validates the expected fingerprint under the
+    * lock, so a racing writer turns this into a clean retry, never a
+    * torn apply. The whole read side is pinned in ONE collect of the
+    * victims' `(id, hash)` pairs — O(deletes)-small by design, the same
+    * scale bound the broadcast anti-joins rely on:
     *
     *  - the returned frame is PINNED, never lazy: a lazy plan is
     *    re-executed inside the mutate body AFTER the marker is
@@ -141,38 +142,19 @@ object IndexDelete {
     *    not a plan (ADVICE r12);
     *  - ONE collect, not a parts-aggregate plus a separate id
     *    collect: each was an index-scan job, doubling the streaming
-    *    delete hot path's cost (review-caught).
-    *
-    * `hash` must be the family's row-hash expression — exactly what
-    * its fingerprint kernel xors, or the chained marker diverges. */
-  private[graft] def pinPlan(victims: DataFrame, idCol: String,
-      hash: org.apache.spark.sql.Column): (DataFrame, (Long, Long)) = {
-    val spark = victims.sparkSession
-    val rows = victims.select(col(idCol).cast(LongType), hash)
+    *    delete hot path's cost (review-caught). */
+  private[graft] def removalPlan(f: IndexFamily, spark: SparkSession,
+      base: String, ids: DataFrame): (DataFrame, (Long, Long)) = {
+    val id = f.idCol
+    val requested = ids.select(col(id).cast(LongType)).distinct()
+    val rows = f.stored(spark, base)
+      .join(broadcast(requested), Seq(id), "left_semi")
+      .join(broadcast(tombstonesAt(spark, base, id)), Seq(id), "left_anti")
+      .select(col(id).cast(LongType), f.storedHash)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val x = rows.foldLeft(0L)(_ ^ _._2)
     import spark.implicits._
-    (rows.map(_._1).sorted.toIndexedSeq.toDF(idCol),
-      (rows.length.toLong, x))
-  }
-
-  /** Read-side plan of one remove_ids call against the CURRENT
-    * artifact: the ids actually being removed (present in the lists,
-    * not already tombstoned — deduplicated) and their fingerprint
-    * parts, pinned in one pass ([[pinPlan]]) BEFORE any mutation; the
-    * caller's `mutate` re-validates the expected fingerprint under
-    * the lock, so a racing writer turns this into a clean retry,
-    * never a torn apply. */
-  private[graft] def removalPlan(spark: SparkSession, base: String,
-      ids: DataFrame): (DataFrame, (Long, Long)) = {
-    val requested = ids.select(col("vec_id").cast(LongType)).distinct()
-    val removed = Similarity.invertedListsAt(spark, base)
-      .join(broadcast(requested), Seq("vec_id"), "left_semi")
-      .join(broadcast(tombstonesAt(spark, base)), Seq("vec_id"), "left_anti")
-    // the hash is frameFingerprintParts' row kernel — the value the
-    // chained marker xors
-    pinPlan(removed, "vec_id",
-      xxhash64(to_json(struct(col("vec_id"), col("embedding")))))
+    (rows.map(_._1).sorted.toIndexedSeq.toDF(id), (rows.length.toLong, x))
   }
 
   /** Append the removal's tombstones into the LIVE base — the body a
@@ -184,14 +166,12 @@ object IndexDelete {
 
   /** The family-generic batch `remove_ids` protocol: take a removal
     * plan (the ids actually being removed + their fingerprint parts,
-    * computed against the current artifact by the family-specific
-    * planner — [[removalPlan]] for the vector index,
-    * [[Retrieval.bm25RemovalPlan]] for the lexical one), and apply it
-    * as one fingerprint-checked mutation. Returns the number of
+    * computed against the current artifact — [[removalPlan]]), and
+    * apply it as one fingerprint-checked mutation. Returns the number of
     * members removed BY THIS CALL — Faiss `n_removed` semantics: 0
     * when every id was absent or already tombstoned (the mark still
     * moves for streaming callers, see
-    * [[graft.stream.IndexIngest.ivfDeleteSink]]), and ALSO 0 when a
+    * [[graft.stream.IndexIngest.deleteSink]]), and ALSO 0 when a
     * concurrent applier won the mutate race and landed the same
     * removal first (the outcome is idempotent, but each removal is
     * reported exactly once — two racers summing `dn` each would
@@ -221,9 +201,10 @@ object IndexDelete {
     if (ok) dn else 0L
   }
 
-  /** Batch `remove_ids` on the persisted IVF index. */
-  def applyDeletes(spark: SparkSession, base: String, ids: DataFrame): Long =
-    applyRemoval(base)(removalPlan(spark, base, ids))
+  /** Batch `remove_ids` on a persisted index of family `f`. */
+  def applyDeletes(f: IndexFamily, spark: SparkSession, base: String,
+      ids: DataFrame): Long =
+    applyRemoval(base)(removalPlan(f, spark, base, ids))
 
   // -------------------------------------------------------------------
   // s32 — tombstone-aware serving on a persisted-and-mutated index
@@ -240,9 +221,10 @@ object IndexDelete {
     val delPred = pmod(col("vec_id"), lit(DeleteMod)) === DeleteRes
     lazy val v = Similarity.normed(spark, dir)
     lazy val Seq(full, del) =
-      Similarity.frameFingerprintPartsWhere(v, lit(true), delPred)
-    ivfTomb.ensureDeleted(dir)(full, del)(Similarity.ivfBuildFrom(v, _))(
-      applyDeletes(spark, _, v.filter(delPred).select(col("vec_id"))))
+      IndexFamily.Ivf.partsWhere(v, lit(true), delPred)
+    ivfTomb.ensureDeleted(dir)(full, del)(IndexFamily.Ivf.build(v, _))(
+      applyDeletes(IndexFamily.Ivf, spark, _,
+        v.filter(delPred).select(col("vec_id"))))
   }
 
   /** s32: the s15 serving contract on an index that has taken

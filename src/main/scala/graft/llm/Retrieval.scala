@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -105,7 +105,7 @@ object Retrieval {
 
   private[graft] def bm25IndexBase(spark: SparkSession, dir: String): String = {
     lazy val d = Tables(spark, dir, "documents")
-    bm25Index.ensure(dir)(frameDocsFingerprintParts(d))(
+    bm25Index.ensure(dir)(IndexFamily.Bm25.parts(d))(
       writeSegment(d, None, _))
   }
 
@@ -210,18 +210,6 @@ object Retrieval {
 
   private[graft] val bm25IncIndex = graft.io.Artifact("bm25-index-inc")
 
-  /** The same fingerprint over an arbitrary `(doc_id, text, …)` frame
-    * — what the streaming BM25 sink hashes each micro-batch with. */
-  private[graft] def frameDocsFingerprintParts(df: DataFrame): (Long, Long) =
-    frameDocsFingerprintPartsWhere(df, lit(true)).head
-
-  /** [[frameDocsFingerprintParts]] of `df.filter(p)` for each of
-    * `preds`, all from ONE scan ([[graft.io.ArtifactStore.partsWhere]]). */
-  private[graft] def frameDocsFingerprintPartsWhere(df: DataFrame,
-      preds: Column*): Seq[(Long, Long)] =
-    graft.io.ArtifactStore.partsWhere(df,
-      xxhash64(col("doc_id"), col("text")), preds)
-
   /** One SEGMENT of an index over `docs`: postings (tf + df **local
     * to the segment's docs**) and the segment's 1-row totals, each
     * tagged with `seg` when given (the single-segment `bm25-index`
@@ -289,7 +277,7 @@ object Retrieval {
   private def bm25IncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val d = Tables(spark, dir, "documents")
     lazy val Seq(base, batch) =
-      frameDocsFingerprintPartsWhere(d, !incDocPred, incDocPred)
+      IndexFamily.Bm25.partsWhere(d, !incDocPred, incDocPred)
     bm25IncIndex.ensureIncremental(dir)(base, batch)(
       writeSegment(d.filter(!incDocPred), Some("base"), _))(
       writeSegment(d.filter(incDocPred), Some("delta"), _, SaveMode.Append))
@@ -350,7 +338,7 @@ object Retrieval {
       .drop("df", "seg")
       .join(broadcast(dfTotal), "term")
     // pre-merge delete semantics on a tombstone-bearing index
-    // ([[graft.stream.IndexIngest.bm25DeleteSink]]): deleted docs are
+    // ([[graft.stream.IndexIngest.deleteSink]]): deleted docs are
     // cut from the CANDIDATES only — df/totals keep counting them
     // until the merge (the s33 Lucene contract); an undeleted index
     // keeps the bare plan
@@ -529,8 +517,7 @@ object Retrieval {
     * ingest time, the way Lucene's live-docs bitmap hangs off a
     * per-segment doc identity. Index-sized metadata: 24 bytes/doc. */
   private[graft] def docHashFrame(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      xxhash64(col("doc_id"), col("text")).as("h"),
+    docs.select(col("doc_id"), IndexFamily.Bm25.rowHash.as("h"),
       size(split(col("text"), " ")).cast(LongType).as("dl"))
 
   /** Write `docs`' [[docHashFrame]] as one sorted file under `into`. */
@@ -556,27 +543,6 @@ object Retrieval {
     spark.read.schema(docHashSchema).parquet(dir)
   }
 
-  /** [[IndexDelete.removalPlan]]'s lexical twin: the doc_ids actually
-    * being removed (indexed, not already tombstoned) and their
-    * fingerprint parts, resolved through the dochash sidecar — the
-    * corpus is never re-read. */
-  private[graft] def bm25RemovalPlan(spark: SparkSession, base: String,
-      ids: DataFrame): (DataFrame, (Long, Long)) = {
-    val requested = ids.select(col("doc_id").cast(LongType)).distinct()
-    val victims = docHashAt(spark, base)
-      .join(broadcast(requested), Seq("doc_id"), "left_semi")
-      .join(broadcast(IndexDelete.tombstonesAt(spark, base, "doc_id")),
-        Seq("doc_id"), "left_anti")
-    // one pass pins the ids AND derives the parts from the stored
-    // doc-hash rows ([[IndexDelete.pinPlan]])
-    IndexDelete.pinPlan(victims, "doc_id", col("h"))
-  }
-
-  /** Batch delete-by-doc-id on a persisted BM25 index. */
-  def bm25ApplyDeletes(spark: SparkSession, base: String,
-      ids: DataFrame): Long =
-    IndexDelete.applyRemoval(base)(bm25RemovalPlan(spark, base, ids))
-
   /** s33's index artifact: the full-corpus BM25 index (with the
     * dochash sidecar) built through the staged-publish path, then
     * `delete(doc_id % 13 == 5)` applied as a real fingerprint-checked
@@ -585,12 +551,10 @@ object Retrieval {
   private[graft] def bm25TombIndexBase(spark: SparkSession, dir: String): String = {
     val delPred = pmod(col("doc_id"), lit(DelMod)) === lit(DelRem)
     lazy val d = Tables(spark, dir, "documents")
-    lazy val Seq(full, del) =
-      frameDocsFingerprintPartsWhere(d, lit(true), delPred)
-    bm25Tomb.ensureDeleted(dir)(full, del) { staging =>
-      writeSegment(d, Some("base"), staging)
-      writeDocHash(d, staging)
-    }(bm25ApplyDeletes(spark, _, d.filter(delPred).select(col("doc_id"))))
+    lazy val Seq(full, del) = IndexFamily.Bm25.partsWhere(d, lit(true), delPred)
+    bm25Tomb.ensureDeleted(dir)(full, del)(IndexFamily.Bm25.build(d, _))(
+      IndexDelete.applyDeletes(IndexFamily.Bm25, spark, _,
+        d.filter(delPred).select(col("doc_id"))))
   }
 
   /** s33: BM25 search over an index that has taken deletions, in the

@@ -127,21 +127,7 @@ object Similarity {
     * retraining, and only ever compared against a marker the same
     * engine wrote. */
   private def corpusParts(spark: SparkSession, dir: String): (Long, Long) =
-    frameFingerprintParts(Tables(spark, dir, "embeddings"))
-
-  /** The same fingerprint over an arbitrary `(vec_id, embedding, …)`
-    * frame — what the streaming ingest sink
-    * ([[graft.stream.IndexIngest]]) hashes each micro-batch with
-    * before xor-combining into the artifact's running fingerprint. */
-  private[graft] def frameFingerprintParts(df: DataFrame): (Long, Long) =
-    frameFingerprintPartsWhere(df, lit(true)).head
-
-  /** [[frameFingerprintParts]] of `df.filter(p)` for each of `preds`,
-    * all from ONE scan of `df` ([[graft.io.ArtifactStore.partsWhere]]). */
-  private[graft] def frameFingerprintPartsWhere(df: DataFrame,
-      preds: Column*): Seq[(Long, Long)] =
-    graft.io.ArtifactStore.partsWhere(df,
-      xxhash64(to_json(struct(col("vec_id"), col("embedding")))), preds)
+    IndexFamily.Ivf.parts(Tables(spark, dir, "embeddings"))
 
   private[graft] val ivfIndex = graft.io.Artifact("ivf-index")
 
@@ -227,7 +213,7 @@ object Similarity {
     * (Faiss `add`, not `train`), appended under the batch's cell
     * partitions only. The one append body of the nightly job
     * ([[ivfIncIndexBase]]) and the streaming sink
-    * ([[graft.stream.IndexIngest.ivfAppendSink]]). */
+    * ([[graft.stream.IndexIngest.appendSink]] over [[IndexFamily.Ivf]]). */
   private[graft] def ivfAppendInto(v: DataFrame, live: String): Unit =
     writeLists(assignToCentroids(v, centroidsAt(v.sparkSession, live)),
       live, SaveMode.Append)
@@ -1039,7 +1025,7 @@ object Similarity {
     * residual serving paths (`stored` is the caller's so s27 can pass
     * its label-pruned scan). `liveBase` is the membership-authority
     * IVF base whose tombstones cut the candidates BEFORE the pool
-    * window ([[IndexDelete.liveByMember]]): tombstoned ids must not
+    * window ([[IndexDelete.liveById]]): tombstoned ids must not
     * occupy pool slots, or a heavily-deleted index starves the refine
     * below k. An undeleted base keeps the bare plan (driver-side
     * branch). */
@@ -1050,8 +1036,8 @@ object Similarity {
       .orderBy(t.order, col("neighbor_id").asc)
     val cand = probes.join(stored, "cell")
       .filter(col("query_id") =!= col("neighbor_id"))
-    val joined = IndexDelete.liveByMember(cand.sparkSession, liveBase, cand,
-        "neighbor_id")
+    val joined = IndexDelete.liveById(cand.sparkSession, liveBase, cand,
+        "neighbor_id", Some("vec_id"))
       .join(if (t.broadcastQuery) broadcast(query) else query, "query_id")
     val scored = correction match {
       case Some(qc) => joined
@@ -2317,7 +2303,7 @@ object Similarity {
   /** Fingerprint parts of the two sides of the split, base then batch,
     * from one scan of the embeddings table. */
   private def incParts(spark: SparkSession, dir: String): Seq[(Long, Long)] =
-    frameFingerprintPartsWhere(Tables(spark, dir, "embeddings"),
+    IndexFamily.Ivf.partsWhere(Tables(spark, dir, "embeddings"),
       !incBatchPred, incBatchPred)
 
   private[graft] val ivfIncIndex = graft.io.Artifact("ivf-index-inc")

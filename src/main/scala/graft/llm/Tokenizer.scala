@@ -265,7 +265,8 @@ object Tokenizer {
     * exact string/long round-trip keep every oracle (which replays
     * training in SQL) hash-identical. */
   private[graft] def bpeVocabBase(spark: SparkSession, dir: String): String =
-    bpeVocab.ensure(dir)(Retrieval.frameDocsFingerprintParts(
+    // keyed by the documents' row-hash fingerprint, the text families'
+    bpeVocab.ensure(dir)(IndexFamily.Bm25.parts(
         Tables(spark, dir, "documents"))) { staging =>
       val (merges, vocab) = bpeRounds(spark, dir)
       merges.coalesce(1).write.mode("overwrite")

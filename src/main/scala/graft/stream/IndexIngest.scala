@@ -4,18 +4,24 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.io.{ArtifactStore, Store}
-import graft.llm.{CodeTable, Dedup, Retrieval, Similarity}
+import graft.llm.{CodeTable, IndexDelete, IndexFamily, Similarity}
 
-/** Streaming maintenance of a persisted IVF index: the
-  * `readStream → foreachBatch` twin of the nightly append
-  * ([[graft.llm.Similarity.s16IncrementalIndexUpdate]]). A vector feed
-  * (a crawler's embedding stage, a CDC tail of the embeddings table)
-  * drives [[ivfAppendSink]], which folds each micro-batch into the
-  * artifact by assignment to the STORED centroids — no Lloyd round
-  * ever runs on the stream, the base corpus is never re-read, and the
-  * artifact stays continuously probe-able (marker-validated readers
-  * either see the pre-batch or the post-batch index, never a partial
-  * append — [[graft.io.ArtifactStore.mutate]]'s contract).
+/** Streaming maintenance of the persisted mutable indexes — one
+  * lifecycle written once over the [[IndexFamily]] (IVF lists, BM25
+  * segments, LSH bands) and once over the [[CodeTable]] kind (PQ, SQ8,
+  * BQ codes): the `readStream → foreachBatch` twin of the nightly
+  * appends ([[graft.llm.Similarity.s16IncrementalIndexUpdate]], s17,
+  * d19). A feed (a crawler's embedding stage, a CDC tail of the
+  * documents table) drives [[appendSink]], which folds each
+  * micro-batch into the artifact without re-reading the base corpus —
+  * IVF by assignment to the STORED centroids (no Lloyd round ever runs
+  * on the stream), BM25 as one delta segment, LSH as new band-posting
+  * files — and the artifact stays continuously probe-able
+  * (marker-validated readers either see the pre-batch or the
+  * post-batch index, never a partial append —
+  * [[graft.io.ArtifactStore.mutate]]'s contract). [[deleteSink]]
+  * removes members as tombstone appends; [[compact]] makes the
+  * removals physical.
   *
   * Exactly-once across micro-batch REPLAYS (a restarted streaming
   * query re-delivers its last uncommitted batch): the artifact itself
@@ -24,11 +30,11 @@ import graft.llm.{CodeTable, Dedup, Retrieval, Similarity}
   * a replayed batch id ≤ the mark is skipped wholesale, so a crash
   * between the append and the sink's checkpoint commit cannot
   * double-ingest. The fingerprint chains by xor-composition
-  * (`fp ∘ batch = (n + nb, x ^ xb)` — [[graft.llm.Similarity
-  * .frameFingerprintParts]]), so validation stays content-derived at
-  * every step without rescanning what's already indexed.
+  * (`fp ∘ batch = (n + nb, x ^ xb)` — [[graft.llm.IndexFamily.parts]]),
+  * so validation stays content-derived at every step without
+  * rescanning what's already indexed.
   *
-  * Caller contract: batches carry NEW vec_ids (the d10/d14-style
+  * Caller contract: batches carry NEW member ids (the d10/d14-style
   * incremental dedup gate runs upstream of the embedding stage;
   * re-ingesting an id would store both copies, exactly as Faiss `add`
   * would). Concurrent mutation by another writer surfaces as a thrown
@@ -36,12 +42,6 @@ import graft.llm.{CodeTable, Dedup, Retrieval, Similarity}
   * the safe outcome.
   */
 object IndexIngest {
-
-  private def withNorm(df: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    df.withColumn("norm", sqrt(expr("vec_dot(embedding, embedding)")))
-      .filter(col("norm") > 0)
-  }
 
   /** Every touch of artifact-internal files (replay marks, generation
     * pointers, fragmentation probes) goes through the store's backend
@@ -137,44 +137,41 @@ object IndexIngest {
     }
   }
 
-  /** One-time index bootstrap over the initial corpus (train + write
-    * through the atomic-publish path); a no-op when a valid artifact
-    * exists — see [[BootstrapStatus]] for the skip taxonomy.
-    *
-    * @param cells centroid provisioning for the trained index — the
-    *        fixture default stays 16 (oracle parity with the batch
-    *        queries); a production bootstrap over a large corpus
-    *        passes ⌈√n⌉ (PERF.md round-14: the lever that keeps probe
-    *        cost O(√n·nprobe)). Appends/probes/retrains downstream are
-    *        count-agnostic — they read the stored centroid frame. */
-  def bootstrap(base: String, vectors: DataFrame,
-      cells: Int = 16): BootstrapStatus = {
-    val v = withNorm(vectors)
-    bootstrapOnce(base, Similarity.frameFingerprintParts(v))(
-      Similarity.ivfBuildFrom(v, _, cells))
+  /** One-time bootstrap of a family's index over the initial corpus
+    * (the family's full build through the atomic-publish path: IVF
+    * trains and writes its lists, BM25 writes the `base` segment and
+    * the per-doc `dochash` identity sidecar the delete verb resolves
+    * through, LSH writes digests and band postings); a no-op when a
+    * valid artifact exists — see [[BootstrapStatus]] for the skip
+    * taxonomy. */
+  def bootstrap(f: IndexFamily, base: String,
+      rows: DataFrame): BootstrapStatus = {
+    val v = f.prepare(rows)
+    bootstrapOnce(base, f.parts(v))(f.build(v, _))
   }
 
-  /** Compact the inverted lists after a run of appends: every cell's
-    * accumulation of small per-batch files is rewritten into one
-    * sorted file per cell partition, under the same publish lock and
-    * with the SAME fingerprint — the maintenance job a streaming-
-    * maintained index schedules periodically, exactly as Lucene merges
-    * segments. Compaction is also where DELETES become physical
-    * (Lucene's merge dropping deleted docs): tombstoned rows
-    * ([[ivfDeleteSink]]) are omitted from the rewritten lists and the
-    * tombstone set is reset to empty. The fingerprint is still REUSED —
-    * the LOGICAL membership already moved at delete time (the sink
-    * xor-composed the removals out), so "stored rows minus tombstones"
-    * is what the current fingerprint has covered all along. Readers
-    * either see the pre- or post-compaction file set (marker-swap),
-    * and the probe plans are unchanged: cell-major, partition-
-    * prunable. Returns false when there is no valid artifact to
+  /** Compact a family's index after a run of appends: the accumulated
+    * small per-batch files are rewritten into one sorted file per
+    * partition ([[IndexFamily.compactInto]] — IVF cells, BM25 segments
+    * merged into one with df recounted, LSH bands and re-distinct
+    * digests), under the same publish lock and with the SAME
+    * fingerprint — the maintenance job a streaming-maintained index
+    * schedules periodically, exactly as Lucene merges segments.
+    * Compaction is also where DELETES become physical (Lucene's merge
+    * dropping deleted docs): tombstoned rows ([[deleteSink]]) are
+    * omitted from the rewritten tables and the tombstone set is reset
+    * to empty. The fingerprint is still REUSED — the LOGICAL membership
+    * already moved at delete time (the sink xor-composed the removals
+    * out), so "stored rows minus tombstones" is what the current
+    * fingerprint has covered all along. Readers either see the pre- or
+    * post-compaction file set (marker-swap), and the probe plans are
+    * unchanged. Streamed appends continue afterwards from the same
+    * high-water mark. Returns false when there is no valid artifact to
     * compact. */
-  def compactIvf(spark: org.apache.spark.sql.SparkSession,
+  def compact(f: IndexFamily, spark: org.apache.spark.sql.SparkSession,
       base: String): Boolean =
     ArtifactStore.rewrite(base) { (live, staging) =>
-      Similarity.writeLists(
-        graft.llm.IndexDelete.liveListsAt(spark, live), staging)
+      f.compactInto(spark, live, staging)
       clearTombstonesInto(live, staging)
     }
 
@@ -203,7 +200,7 @@ object IndexIngest {
     * artifact state, and the reversed order would let a racing
     * writer's plan validate against the post-race fingerprint
     * (the applyRemoval race class). One body holds the exactly-once
-    * reasoning for all ten sinks (review-caught duplication). */
+    * reasoning for every sink (review-caught duplication). */
   private def commitOnce(base: String, batchId: Long, markKey: String,
       parts: => (Long, Long))(body: String => Unit): Unit = {
     if (batchId <= readState(base).getOrElse(markKey, -1L))
@@ -266,34 +263,52 @@ object IndexIngest {
     }
   }
 
-  /** The `foreachBatch` sink: fold one micro-batch of
-    * `(vec_id, embedding)` into the index at `base`. Use as
-    * `stream.writeStream.foreachBatch(IndexIngest.ivfAppendSink(base) _)`. */
-  def ivfAppendSink(base: String, appId: String = DefaultApp)(
+  /** The `foreachBatch` append sink of family `f`: fold one
+    * micro-batch (`(vec_id, embedding)` for IVF, `(doc_id, text)` for
+    * BM25 and LSH) into the index at `base`. Use as
+    * `stream.writeStream.foreachBatch(IndexIngest.appendSink(f, base,
+    * appId) _)`; `appId` names the lineage ([[DefaultApp]] when the
+    * artifact has one writer). It has no default: Scala allows default
+    * arguments on only one overload, and the [[CodeTable]] sink keeps
+    * its own.
+    *
+    * Same replay contract for every family: the batch-id high-water
+    * mark lives INSIDE the artifact and commits in the same
+    * [[graft.io.ArtifactStore.mutate]] as the rows, so a restarted
+    * query re-delivering a committed batch is a wholesale no-op. A
+    * grown BM25 index answers IDENTICALLY to a from-scratch single
+    * index ([[graft.llm.Retrieval.segmentedBm25Ranked]] merges df and
+    * totals over segments that partition the docs). */
+  def appendSink(f: IndexFamily, base: String, appId: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val v = withNorm(batch)
-    appendOnce(base, batchId, Similarity.frameFingerprintParts(v), appId)(
-      Similarity.ivfAppendInto(v, _))
+    val v = f.prepare(batch)
+    appendOnce(base, batchId, f.parts(v), appId)(
+      f.append(v, _, batchId, appId))
   }
 
-  /** The EIGHTH exactly-once sink — streaming DELETES: fold one
-    * micro-batch of `(vec_id)` removal requests into the index at
-    * `base` as a tombstone append ([[graft.llm.IndexDelete]] — the
-    * Lucene deleted-docs / Delta deletion-vector posture: O(batch)
-    * work, no data file touched; [[compactIvf]] makes the removals
-    * physical later). Rides the same [[appendOnce]] machinery as every
+  /** The exactly-once streaming DELETE sink of family `f`: fold one
+    * micro-batch of member-id removal requests (`vec_id` / `doc_id`)
+    * into the index at `base` as a tombstone append
+    * ([[graft.llm.IndexDelete]] — the Lucene deleted-docs / Delta
+    * deletion-vector posture: O(batch) work, no data file touched;
+    * [[compact]] makes the removals physical later), resolved through
+    * the family's stored row hashes ([[IndexDelete.removalPlan]] — the
+    * corpus is never re-read). Rides the same commit machinery as every
     * other sink — per-lineage replay marks, fingerprint-checked mutate
     * — with the batch's fingerprint parts NEGATED: xor is its own
     * inverse, so the artifact's content fingerprint moves to the
     * post-delete membership exactly as appends move it forward, and a
     * gate retrain or self-heal recomputing the fingerprint from the
-    * live rows reproduces it. Requests for absent or already-
-    * tombstoned ids are ignored (Faiss `remove_ids` semantics); the
-    * mark still advances, so the batch never replays. */
-  def ivfDeleteSink(base: String, appId: String = DefaultApp)(
+    * live rows reproduces it. Serving excludes tombstoned members at
+    * once (BM25 keeps df/totals as stored until the merge — the Lucene
+    * contract; a tombstoned LSH doc stops suppressing arrivals).
+    * Requests for absent or already-tombstoned ids are ignored (Faiss
+    * `remove_ids` semantics); the mark still advances, so the batch
+    * never replays. */
+  def deleteSink(f: IndexFamily, base: String, appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit =
     removeOnce(base, batchId, appId)(
-      graft.llm.IndexDelete.removalPlan(batch.sparkSession, base, batch))
+      IndexDelete.removalPlan(f, batch.sparkSession, base, batch))
 
   /** Delete lineages mark under a NAMESPACED key (`del:<appId>`), so
     * the recall gates' append-skew comparisons can see exactly the
@@ -308,11 +323,8 @@ object IndexIngest {
     * in its stream_state. */
   private[graft] val DeleteMarkPrefix = "del:"
 
-  /** The append-lineage marks of `base` — the delete lineages
-    * stripped; what cross-artifact skew checks compare. */
-  private def appendMarks(base: String): Map[String, Long] =
-    readState(base).filterNot(_._1.startsWith(DeleteMarkPrefix))
-
+  /** The append-lineage marks — the delete lineages stripped; what
+    * cross-artifact skew checks compare. */
   private def appendMarksOf(state: Map[String, Long]): Map[String, Long] =
     state.filterNot(_._1.startsWith(DeleteMarkPrefix))
 
@@ -331,114 +343,10 @@ object IndexIngest {
       (-dn, dx)
     }) { live =>
       removed.foreach { case (ids, dn) =>
-        if (dn > 0) graft.llm.IndexDelete.writeTombstones(live, ids)
+        if (dn > 0) IndexDelete.writeTombstones(live, ids)
       }
     }
   }
-
-  /** One-time BM25 bootstrap: the initial corpus becomes the index's
-    * `base` segment (postings with segment-local df, term-hash
-    * bucketed, + its 1-row totals), plus the per-doc `dochash`
-    * identity sidecar the delete verb resolves through
-    * ([[bm25DeleteSink]] — a delete request carries only a doc_id;
-    * the stored hash moves the fingerprint, the stored dl rebuilds
-    * the totals at merge time). */
-  def bm25Bootstrap(base: String, docs: DataFrame): BootstrapStatus =
-    bootstrapOnce(base, Retrieval.frameDocsFingerprintParts(docs)) {
-      staging =>
-        Retrieval.writeSegment(docs, Some("base"), staging)
-        Retrieval.writeDocHash(docs, staging)
-    }
-
-  /** Merge the BM25 index's accumulated segments into one — the real
-    * Lucene merge, run WITHOUT re-reading any document text: postings
-    * rows `(doc_id, dl, term, tf)` are segment-independent facts, so
-    * the merged segment is their union with document frequency
-    * RECOUNTED over the index's own rows (one term-keyed pass over the
-    * index — index-sized, never corpus-sized) and the totals rows
-    * summed. The fingerprint survives: it identifies the INDEXED
-    * CORPUS (the doc-content chain the appends composed), which a
-    * segment merge does not change; the manifest re-covers the new
-    * file set. Streamed appends continue afterwards from the same
-    * high-water mark. */
-  def compactBm25(spark: org.apache.spark.sql.SparkSession,
-      base: String): Boolean =
-    ArtifactStore.rewrite(base) { (live, staging) =>
-      // the merge is also where lexical DELETES become physical
-      // (exactly Lucene: a merge drops deleted docs and the merged
-      // segment's stats no longer count them): tombstoned docs are
-      // omitted, df recounted over the surviving rows, totals rebuilt
-      // from the live dochash sidecar (postings cannot rebuild totals
-      // — a doc whose text has no terms has no posting row), and the
-      // tombstone set resets. The fingerprint is REUSED: the delete
-      // sink already moved the logical membership when it tombstoned.
-      val hasDochash = {
-        val (fs, b) = fsb(live)
-        fs.isDir(fs.join(b, "dochash"))
-      }
-      val p = graft.llm.IndexDelete.liveById(spark, live,
-        spark.read.schema(Retrieval.segPostingsSchema)
-          .parquet(s"$live/postings"), "doc_id")
-      val merged = p
-        .select(col("doc_id"), col("dl"), col("term"), col("tf"))
-        .withColumn("df", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("term"))))
-        .withColumn("seg", lit("base"))
-        .withColumn("tbucket",
-          pmod(xxhash64(col("term")), lit(Retrieval.PostingBuckets)))
-      graft.io.Store.writePartitionedParquet(
-        merged, s"$staging/postings", Seq("tbucket"),
-        Seq("term", "doc_id"))
-      if (hasDochash) {
-        val liveDocs = graft.llm.IndexDelete.liveById(spark, live,
-          Retrieval.docHashAt(spark, live), "doc_id")
-        // the sidecar is the totals' authority: one row per LIVE doc
-        liveDocs.agg(count(lit(1)).as("n_docs"),
-            coalesce(sum(col("dl")), lit(0L)).as("t_tokens"))
-          .withColumn("seg", lit("base"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/totals")
-        liveDocs.coalesce(1).sortWithinPartitions(col("doc_id"))
-          .write.mode("overwrite").parquet(s"$staging/dochash")
-      } else {
-        // pre-dochash artifact (no deletes possible): segment-sum path
-        graft.io.Load.parquet(spark, s"$live/totals")
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("t_tokens")).as("t_tokens"))
-          .withColumn("seg", lit("base"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/totals")
-      }
-      clearTombstonesInto(live, staging)
-    }
-
-  /** The lexical twin of [[ivfAppendSink]]: each micro-batch of
-    * `(doc_id, text)` becomes one delta SEGMENT (`seg = "b<batchId>"`)
-    * carrying segment-local df and totals — nothing already indexed is
-    * re-read or rewritten, and because segments partition the docs,
-    * [[graft.llm.Retrieval.segmentedBm25Ranked]] over the grown index
-    * answers IDENTICALLY to a from-scratch single index (the
-    * streaming spec pins equality with s10 after two streamed
-    * batches). */
-  def bm25AppendSink(base: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    appendOnce(base, batchId,
-      Retrieval.frameDocsFingerprintParts(batch), appId) { live =>
-      Retrieval.writeSegment(batch, Some(s"b$batchId"), live, SaveMode.Append)
-      Retrieval.writeDocHash(batch, live, SaveMode.Append)
-    }
-  }
-
-  /** [[ivfDeleteSink]]'s lexical twin — the NINTH exactly-once sink:
-    * fold one micro-batch of `(doc_id)` delete requests into the BM25
-    * index as a tombstone append, resolved through the dochash
-    * sidecar ([[graft.llm.Retrieval.bm25RemovalPlan]] — the corpus is
-    * never re-read). Pre-merge serving excludes tombstoned docs while
-    * df/totals stay as stored (the Lucene deleted-docs contract);
-    * [[compactBm25]] physicalizes and recounts. Absent or already-
-    * tombstoned ids are ignored; the mark still advances. */
-  def bm25DeleteSink(base: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit =
-    removeOnce(base, batchId, appId)(
-      Retrieval.bm25RemovalPlan(batch.sparkSession, base, batch))
 
   /** One-time code-table bootstrap for any [[CodeTable]] kind: train
     * the kind's model on the initial corpus (PQ's codebook, SQ8's
@@ -451,13 +359,13 @@ object IndexIngest {
     * already current for these vectors. */
   def bootstrap(t: CodeTable, base: String, ivfBase: String,
       vectors: DataFrame): BootstrapStatus = {
-    val v = withNorm(vectors)
-    bootstrapOnce(base, Similarity.frameFingerprintParts(v)) {
+    val v = IndexFamily.Ivf.prepare(vectors)
+    bootstrapOnce(base, IndexFamily.Ivf.parts(v)) {
       t.buildFromNv(CodeTable.assignedNv(v, ivfBase), _)
     }
   }
 
-  /** The compressed-index twin of [[ivfAppendSink]] — one exactly-once
+  /** The compressed-index twin of [[appendSink]] — one exactly-once
     * sink for every code-table kind (PQ, SQ8, BQ codes beside the IVF
     * vectors, BM25 segments and LSH postings): each micro-batch
     * encodes against the STORED frozen model ([[CodeTable.encode]] —
@@ -466,7 +374,7 @@ object IndexIngest {
     * 64 sign comparisons; never a retrain) and appends under its cells'
     * partition dirs. Cells come from assignment to the IVF artifact's
     * stored centroids — deterministic, so the code table stays aligned
-    * with what [[ivfAppendSink]] writes for the same feed regardless
+    * with what the IVF [[appendSink]] writes for the same feed regardless
     * of which sink commits a batch first. Same replay contract as the
     * siblings: the per-lineage high-water mark lives inside the
     * artifact and commits in the same mutate as the rows.
@@ -481,9 +389,8 @@ object IndexIngest {
   def appendSink(t: CodeTable, base: String, ivfBase: String,
       appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit = {
-    val v = withNorm(batch)
-    appendOnce(base, batchId,
-        Similarity.frameFingerprintParts(v), appId) { live =>
+    val v = IndexFamily.Ivf.prepare(batch)
+    appendOnce(base, batchId, IndexFamily.Ivf.parts(v), appId) { live =>
       Store.writePartitionedParquet(t.encode(v, ivfBase, live),
         s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
     }
@@ -493,7 +400,7 @@ object IndexIngest {
     * `codes/`-shaped table shares: re-sort each cell partition into one
     * file, leaving everything else under the base (PQ's codebook, SQ8's
     * params, stream_state) unstaged — so the publish swaps layout only
-    * and the fingerprint survives ([[compactIvf]]'s contract). */
+    * and the fingerprint survives ([[compact]]'s contract). */
   def compact(t: CodeTable, spark: org.apache.spark.sql.SparkSession,
       base: String): Boolean =
     ArtifactStore.rewrite(base) { (live, staging) =>
@@ -505,11 +412,11 @@ object IndexIngest {
 
   /** The streaming RECALL GATE — s24's audit→decide→retrain loop at
     * index-maintenance cadence, for a streaming-maintained IVF-PQ pair
-    * ([[ivfAppendSink]] + [[appendSink]] of [[CodeTable.Pq]]): every
+    * (the IVF [[appendSink]] + that of [[CodeTable.Pq]]): every
     * appended batch was
     * encoded against models that never saw it, so recall decays batch
     * by batch; the maintenance scheduler runs this gate (like
-    * [[compactIvf]], after a run of appends) and the index retrains
+    * [[compact]], after a run of appends) and the index retrains
     * itself only when the measured SLO is violated.
     *
     * Everything runs off the artifacts alone — there is no corpus
@@ -587,7 +494,7 @@ object IndexIngest {
     val ivfFp = healIvf(spark, ivfBase)
     // every code table is derivable from the IVF artifact — same heal
     members.foreach { case (t, b) => healMember(spark, ivfBase, b, ivfFp, t) }
-    def lists = invertedLists(spark, ivfBase)
+    def lists = IndexDelete.liveListsAt(spark, ivfBase)
     val (queries, truthRows, hits) =
       auditRecall(spark, ivfBase, pqBase, panelMod)
     val fired = Similarity.retrainDecision(truthRows, hits)
@@ -601,17 +508,17 @@ object IndexIngest {
     // the retrain itself reads the live lists, so removals are always
     // consistently reflected on every rebuilt table
     val retrained = fired && {
-      val ivfMarks = appendMarks(ivfBase)
-      members.forall { case (_, b) => appendMarks(b) == ivfMarks }
+      val ivfMarks = appendMarksOf(readState(ivfBase))
+      members.forall { case (_, b) => appendMarksOf(readState(b)) == ivfMarks }
     }
     if (retrained) {
       val ivfOk = ArtifactStore.rewrite(ivfBase) { (live, staging) =>
         // retrain from the LIVE members: tombstoned rows drop out of
         // the rewritten lists here (same physicalization as
-        // [[compactIvf]]) and the tombstone set resets — the preserved
+        // [[compact]]) and the tombstone set resets — the preserved
         // fingerprint already covers exactly this membership
         Similarity.ivfBuildFrom(
-          graft.llm.IndexDelete.liveListsAt(spark, live)
+          IndexDelete.liveListsAt(spark, live)
             .select(col("vec_id"), col("embedding"), col("norm")),
           staging)
         clearTombstonesInto(live, staging)
@@ -665,25 +572,13 @@ object IndexIngest {
         s"no valid IVF artifact at $ivfBase — bootstrap first"))
   }
 
-  /** The IVF artifact's LIVE members — stored lists minus tombstones
-    * ([[ivfDeleteSink]]). Every maintenance read (audit truth, gate
-    * retrains, derived-table rebuilds) goes through here, so deletes
-    * propagate to every member artifact at the next maintenance touch
-    * and a rebuilt/retrained artifact's content always matches the
-    * fingerprint the delete sink left behind. An index that never saw
-    * a delete has no tombstone dir and this IS the plain stored scan
-    * (plan-identical — the conditional is resolved driver-side). */
-  private def invertedLists(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String): DataFrame =
-    graft.llm.IndexDelete.liveListsAt(spark, ivfBase)
-
   /** The recall audit entirely off the artifacts (the s24 posture):
     * exact top-10 truth over the stored vectors vs what the compressed
     * pair actually serves for every `panelMod`-th vector. Returns
     * `(queries, truthRows, hits)`. */
   private def auditRecall(spark: org.apache.spark.sql.SparkSession,
       ivfBase: String, pqBase: String, panelMod: Long): (Int, Long, Long) = {
-    val lists = invertedLists(spark, ivfBase)
+    val lists = IndexDelete.liveListsAt(spark, ivfBase)
     val panel = lists.filter(col("vec_id") % panelMod === 0)
       .select(col("vec_id"), col("embedding"), col("norm"))
     val nvAll = lists.select(col("vec_id"),
@@ -794,7 +689,7 @@ object IndexIngest {
         // (a crash-recovered half-lifecycle) read as a clean repeat
         // run (ADVICE r11 #4 follow-through, VERDICT r12 #6)
         val s = BootstrapStatus.worst(
-          bootstrap(ivfBase, vectors),
+          bootstrap(IndexFamily.Ivf, ivfBase, vectors),
           bootstrap(CodeTable.Pq, pqBase, ivfBase, vectors))
         members(gen, ivfBase)
         s
@@ -808,7 +703,7 @@ object IndexIngest {
         // the existing g0 artifacts, which must surface as divergence,
         // not report Built over vectors it does not index)
         val inner = BootstrapStatus.worst(
-          bootstrap(ivfBase, vectors),
+          bootstrap(IndexFamily.Ivf, ivfBase, vectors),
           bootstrap(CodeTable.Pq, pqBase, ivfBase, vectors))
         members("g0", ivfBase)
         swapCurrent(pairBase, "g0")
@@ -851,7 +746,8 @@ object IndexIngest {
   def ivfAppendSinkPaired(pairBase: String, appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit =
     onCurrentGen(pairBase, batchId) { gen =>
-      ivfAppendSink(genPaths(pairBase, gen)._1, appId)(batch, batchId)
+      appendSink(IndexFamily.Ivf, genPaths(pairBase, gen)._1, appId)(
+        batch, batchId)
     }
 
   /** [[ivfAppendSinkPaired]]'s code-table twin: appends to the current
@@ -864,7 +760,7 @@ object IndexIngest {
         genPaths(pairBase, gen)._1, appId)(batch, batchId)
     }
 
-  /** [[ivfAppendSinkPaired]]'s DELETE twin ([[ivfDeleteSink]]):
+  /** [[ivfAppendSinkPaired]]'s DELETE twin ([[deleteSink]]):
     * tombstones land on the current generation's IVF base — the
     * pair's single membership truth. The compressed members' code
     * tables keep the deleted ids' codes until maintenance (the serve
@@ -875,7 +771,8 @@ object IndexIngest {
   def ivfDeleteSinkPaired(pairBase: String, appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit =
     onCurrentGen(pairBase, batchId) { gen =>
-      ivfDeleteSink(genPaths(pairBase, gen)._1, appId)(batch, batchId)
+      deleteSink(IndexFamily.Ivf, genPaths(pairBase, gen)._1, appId)(
+        batch, batchId)
     }
 
   /** The one generation guard every paired sink runs: resolve the
@@ -948,7 +845,8 @@ object IndexIngest {
     val marksBefore = readState(ivfBase)
     val appendsBefore = appendMarksOf(marksBefore)
     var retrained = fired &&
-      members.forall { case (_, p) => appendMarks(p) == appendsBefore }
+      members.forall { case (_, p) =>
+        appendMarksOf(readState(p)) == appendsBefore }
     if (retrained) {
       val next = s"g${gen.stripPrefix("g").toLong + 1}"
       val ivfNew = genPaths(pairBase, next)._1
@@ -959,7 +857,7 @@ object IndexIngest {
       // sees the fingerprint moved)
       ArtifactStore.ensure(ivfNew, ivfFp) { staging =>
         Similarity.ivfBuildFrom(
-          invertedLists(spark, ivfBase)
+          IndexDelete.liveListsAt(spark, ivfBase)
             .select(col("vec_id"), col("embedding"), col("norm")),
           staging)
         copyStateInto(ivfBase, staging)
@@ -967,7 +865,7 @@ object IndexIngest {
       midBuild() // the old mixed window: g<N> still serves, complete
       // vectors and cells from the NEW generation's lists, so each
       // code table shards identically to what it will serve beside
-      val newLists = invertedLists(spark, ivfNew)
+      val newLists = IndexDelete.liveListsAt(spark, ivfNew)
       members.foreach { case (t, p) =>
         ArtifactStore.ensure(memberGenPath(pairBase, next, t.member),
             ivfFp) { staging =>
@@ -983,7 +881,8 @@ object IndexIngest {
       // Together with the sinks' post-commit pointer re-check this
       // leaves no commit unaccounted for (review-caught r12).
       if (readState(ivfBase) != marksBefore ||
-          members.exists { case (_, p) => appendMarks(p) != appendsBefore }) {
+          members.exists { case (_, p) =>
+            appendMarksOf(readState(p)) != appendsBefore }) {
         retrained = false
       } else swapCurrent(pairBase, next)
       // retention (only after a real swap): keep the just-replaced
@@ -1041,9 +940,9 @@ object IndexIngest {
     // fingerprint. The rebuild physicalizes the deletes as a side
     // effect (ensure sweeps the stale tombstone dir with the other
     // old children).
-    val v = graft.llm.IndexDelete.liveListsAt(spark, ivfBase)
+    val v = IndexDelete.liveListsAt(spark, ivfBase)
       .select(col("vec_id"), col("embedding"), col("norm"))
-    val (n, x) = Similarity.frameFingerprintParts(v)
+    val (n, x) = IndexFamily.Ivf.parts(v)
     ArtifactStore.ensure(ivfBase, ArtifactStore.fingerprint(n, x)) { staging =>
       Similarity.ivfBuildFrom(v, staging)
       copyStateInto(ivfBase, staging)
@@ -1069,7 +968,7 @@ object IndexIngest {
       ArtifactStore.restoreAside(base) // same publish-crash roll-back
       if (ArtifactStore.currentFingerprint(base).isEmpty)
         ArtifactStore.ensure(base, ivfFp) { staging =>
-          buildMember(t, invertedLists(spark, ivfBase), staging)
+          buildMember(t, IndexDelete.liveListsAt(spark, ivfBase), staging)
           // the replay mark is STAGED with the data (a post-publish
           // copy would be an unmanifested extra file — the artifact
           // would fail its own manifest validation and read as absent)
@@ -1091,7 +990,7 @@ object IndexIngest {
     if (perDir.isEmpty) 0 else perDir.max
   }
 
-  /** Compaction POLICY — the scheduler knob the raw `compact*` calls
+  /** Compaction POLICY — the scheduler knob the raw `compact` calls
     * lack: merge a streaming-maintained table's layout only when the
     * hottest partition has accumulated at least `maxFilesPerCell`
     * part files. Compacting after every batch would rewrite the whole
@@ -1105,10 +1004,10 @@ object IndexIngest {
       base: String, maxFilesPerCell: Int = 4): Boolean =
     (fragmentation(base, "assignments") >= maxFilesPerCell ||
       tombstoneFiles(base) >= maxFilesPerCell) &&
-      compactIvf(spark, base)
+      compact(IndexFamily.Ivf, spark, base)
 
   /** Accumulated tombstone part-file count — [[maybeCompactIvf]]'s
-    * second trigger: each [[ivfDeleteSink]] batch appends one file, so
+    * second trigger: each [[deleteSink]] batch appends one file, so
     * this is "delete batches since the last compaction" (the cheap
     * driver-side proxy for Lucene's deleted-docs-ratio merge trigger;
     * an exact ratio would read parquet row counts per policy check). */
@@ -1122,72 +1021,4 @@ object IndexIngest {
       base: String, maxFilesPerCell: Int = 4): Boolean =
     fragmentation(base, "codes") >= maxFilesPerCell &&
       compact(t, spark, base)
-
-  /** One-time LSH dedup-index bootstrap over the initial standing
-    * corpus (digests + band postings through the atomic-publish path);
-    * a no-op when the artifact is already current for these docs. */
-  def lshBootstrap(base: String, docs: DataFrame): BootstrapStatus =
-    bootstrapOnce(base, Retrieval.frameDocsFingerprintParts(docs)) {
-      Dedup.writeDedupIndexInto(docs, _)
-    }
-
-  /** The dedup twin of [[ivfAppendSink]]/[[bm25AppendSink]] — the
-    * THIRD exactly-once index sink: each micro-batch of surviving
-    * `(doc_id, text)` docs (the upstream d10/p13-style adjudication
-    * decided they stay) folds into the standing LSH index as new
-    * digest rows + new band-posting files under the 16 existing band
-    * partition dirs. Same replay contract as the siblings: the
-    * batch-id high-water mark lives INSIDE the artifact and commits in
-    * the same [[graft.io.ArtifactStore.mutate]] as the rows, so a
-    * restarted query re-delivering a committed batch is a wholesale
-    * no-op, and the index a probe sees is always pre- or post-batch,
-    * never partial. */
-  def lshAppendSink(base: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit =
-    appendOnce(base, batchId, Retrieval.frameDocsFingerprintParts(batch), appId) {
-      Dedup.appendDedupIndexInto(batch, _)
-    }
-
-  /** Compact the LSH dedup index after a run of appends: each band
-    * partition's accumulation of per-batch posting files rewrites to
-    * one sorted file per band, and the digest rows (duplicated across
-    * appends when base and batch shared text) re-distinct into one
-    * file — same fingerprint (the indexed corpus is unchanged; the
-    * digest re-distinct only drops redundant rows the probe's
-    * set-semantics membership join never saw), same publish-lock
-    * marker swap as [[compactIvf]]/[[compactBm25]]. */
-  def compactLsh(spark: org.apache.spark.sql.SparkSession,
-      base: String): Boolean =
-    ArtifactStore.rewrite(base) { (live, staging) =>
-      // the compaction also physicalizes takedowns ([[lshDeleteSink]]):
-      // tombstoned docs' band postings and digest rows drop out of the
-      // rewritten tables, and the tombstone set resets — fingerprint
-      // unchanged (the delete sink already moved the logical
-      // membership when it tombstoned)
-      val bands = graft.llm.IndexDelete.liveById(spark, live,
-        spark.read.schema(Dedup.bandIdxSchema).parquet(s"$live/bands"),
-        "doc_id")
-      graft.io.Store.writePartitionedParquet(
-        bands.select(col("doc_id"), col("bucket"), col("band")),
-        s"$staging/bands", Seq("band"), Seq("bucket", "doc_id"))
-      graft.llm.IndexDelete.liveById(spark, live,
-          spark.read.schema(Dedup.digestSchema).parquet(s"$live/digests"),
-          "doc_id")
-        .distinct()
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/digests")
-      clearTombstonesInto(live, staging)
-    }
-
-  /** [[ivfDeleteSink]]'s dedup twin — the TENTH exactly-once sink:
-    * fold one micro-batch of `(doc_id)` takedown requests into the
-    * standing LSH index as a tombstone append, resolved through the
-    * per-doc digest rows ([[graft.llm.Dedup.lshRemovalPlan]]). A
-    * tombstoned doc immediately stops suppressing arrivals as
-    * duplicates (the probe cuts it from both arms); [[compactLsh]]
-    * physicalizes. Absent or already-tombstoned ids are ignored; the
-    * mark still advances. */
-  def lshDeleteSink(base: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit =
-    removeOnce(base, batchId, appId)(
-      graft.llm.Dedup.lshRemovalPlan(batch.sparkSession, base, batch))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.CodeTable.{Bq, Pq, Sq}
+import graft.llm.IndexFamily
 import graft.stream.IndexIngest
 import graft.stream.IndexIngest.BootstrapStatus._
 
@@ -43,7 +44,7 @@ class BootstrapStatusSpec extends AnyFunSuite {
     // everything downstream reads the stored centroid frame, so the
     // count is free to vary per artifact
     val base = tmp("prov")
-    assert(IndexIngest.bootstrap(base, vecs(7, 48), cells = 7)
+    assert(IndexIngest.bootstrap(IndexFamily.Ivf(7), base, vecs(7, 48))
       == graft.stream.IndexIngest.BootstrapStatus.Built)
     assert(spark.read.parquet(s"$base/centroids").count() == 7L)
   }
@@ -52,9 +53,9 @@ class BootstrapStatusSpec extends AnyFunSuite {
     val a = vecs(1, 48); val b = vecs(2, 48)
     val da = docs(1, 40); val db = docs(2, 40)
     val ivf = tmp("ivf")
-    assert(IndexIngest.bootstrap(ivf, a) == Built)
-    assert(IndexIngest.bootstrap(ivf, a) == Current)
-    assert(IndexIngest.bootstrap(ivf, b) == KeptDivergent,
+    assert(IndexIngest.bootstrap(IndexFamily.Ivf, ivf, a) == Built)
+    assert(IndexIngest.bootstrap(IndexFamily.Ivf, ivf, a) == Current)
+    assert(IndexIngest.bootstrap(IndexFamily.Ivf, ivf, b) == KeptDivergent,
       "a changed-corpus IVF re-bootstrap must be observable")
 
     val (pqB, sqB, bqB, bmB, lshB) =
@@ -64,8 +65,8 @@ class BootstrapStatusSpec extends AnyFunSuite {
       ("pq", IndexIngest.bootstrap(Pq, pqB, ivf, _), a, b),
       ("sq", IndexIngest.bootstrap(Sq, sqB, ivf, _), a, b),
       ("bq", IndexIngest.bootstrap(Bq, bqB, ivf, _), a, b),
-      ("bm25", IndexIngest.bm25Bootstrap(bmB, _), da, db),
-      ("lsh", IndexIngest.lshBootstrap(lshB, _), da, db))
+      ("bm25", IndexIngest.bootstrap(IndexFamily.Bm25, bmB, _), da, db),
+      ("lsh", IndexIngest.bootstrap(IndexFamily.Lsh, lshB, _), da, db))
     // each tuple's function is closed over ONE fresh base, so the
     // three calls exercise the full taxonomy on that surface
     surfaces.foreach { case (kind, boot, first, changed) =>

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ArtifactStore
-import graft.llm.{CodeTable, IndexDelete, Similarity}
+import graft.llm.{CodeTable, IndexDelete, IndexFamily, Similarity}
 import graft.llm.CodeTable.{Bq, Pq, Sq}
 import graft.stream.IndexIngest
 
@@ -51,7 +51,8 @@ class CodeTableSpec extends AnyFunSuite {
       val root = Files.createTempDirectory(s"graft-codetable-${t.member}")
       val ivfIdx = root.resolve("ivf").toString
       val idx = root.resolve(t.member).toString
-      IndexIngest.bootstrap(ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+      IndexIngest.bootstrap(IndexFamily.Ivf, ivfIdx,
+        baseVecs.toDF("vec_id", "embedding"))
       assert(IndexIngest.bootstrap(t, idx, ivfIdx,
         baseVecs.toDF("vec_id", "embedding")) == IndexIngest.BootstrapStatus.Built)
       def stored(): Set[Row] =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.{Dedup, IndexDelete, Retrieval, Similarity}
+import graft.llm.{Dedup, IndexDelete, IndexFamily, Retrieval, Similarity}
 import graft.llm.CodeTable.{Bq, Pq, Sq}
 
 /** Delete propagation as a GENERIC compliance property, not a
@@ -84,7 +84,7 @@ class DeleteSweepSpec extends AnyFunSuite {
     val sq = root.resolve("sq").toString
     val bq = root.resolve("bq").toString
     val df = all.toDF("vec_id", "embedding")
-    graft.stream.IndexIngest.bootstrap(ivf, df)
+    graft.stream.IndexIngest.bootstrap(IndexFamily.Ivf, ivf, df)
     graft.stream.IndexIngest.bootstrap(Pq, pq, ivf, df)
     graft.stream.IndexIngest.bootstrap(Sq, sq, ivf, df)
     graft.stream.IndexIngest.bootstrap(Bq, bq, ivf, df)
@@ -92,7 +92,8 @@ class DeleteSweepSpec extends AnyFunSuite {
     // 32-slot pool would starve if tombstones still occupied slots
     // (32 × 25% live ≈ 8 < k=10)
     val deleted = all.map(_._1).filter(_ % 4 != 0)
-    val n = IndexDelete.applyDeletes(spark, ivf, deleted.toDF("vec_id"))
+    val n = IndexDelete.applyDeletes(IndexFamily.Ivf, spark, ivf,
+      deleted.toDF("vec_id"))
     assert(n == deleted.size.toLong, s"expected ${deleted.size} removals, got $n")
     assert(IndexDelete.tombstonesAt(spark, ivf).count() == n)
     // the query panel, off the stored lists (the streaming posture —
@@ -144,7 +145,7 @@ class DeleteSweepSpec extends AnyFunSuite {
     val ivf = root.resolve("ivf").toString
     val pq = root.resolve("pq").toString
     val df = all.toDF("vec_id", "embedding")
-    graft.stream.IndexIngest.bootstrap(ivf, df)
+    graft.stream.IndexIngest.bootstrap(IndexFamily.Ivf, ivf, df)
     graft.stream.IndexIngest.bootstrap(Pq, pq, ivf, df)
     // the panel is captured BEFORE the wipe (a maintenance snapshot
     // whose queriers have all since been taken down — the most
@@ -153,7 +154,8 @@ class DeleteSweepSpec extends AnyFunSuite {
       .parquet(s"$ivf/assignments")
       .select(col("vec_id"), col("embedding"), col("norm"))
       .localCheckpoint(true)
-    val n = IndexDelete.applyDeletes(spark, ivf, all.map(_._1).toDF("vec_id"))
+    val n = IndexDelete.applyDeletes(IndexFamily.Ivf, spark, ivf,
+      all.map(_._1).toDF("vec_id"))
     assert(n == all.size.toLong)
     assert(Similarity.serveFrom(Pq, spark, panel, ivf, pq)
       .count() == 0L, "an emptied index must serve the empty answer")

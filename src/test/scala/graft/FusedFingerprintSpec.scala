@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ArtifactStore
-import graft.llm.{Authority, Dedup, IndexDelete, Retrieval, Similarity}
+import graft.llm.{Authority, Dedup, IndexDelete, IndexFamily, Retrieval,
+  Similarity}
 
 /** The fused fingerprint kernel (one scan for every predicate of an
   * artifact's pair) yields exactly the parts — and so the marker
@@ -71,8 +72,8 @@ class FusedFingerprintSpec extends AnyFunSuite {
 
   private def fused(df: DataFrame, preds: Seq[Column],
       vec: Boolean): Seq[(Long, Long)] =
-    if (vec) Similarity.frameFingerprintPartsWhere(df, preds: _*)
-    else Retrieval.frameDocsFingerprintPartsWhere(df, preds: _*)
+    if (vec) IndexFamily.Ivf.partsWhere(df, preds: _*)
+    else IndexFamily.Bm25.partsWhere(df, preds: _*)
 
   private def fp(parts: Seq[(Long, Long)]): Seq[String] =
     parts.map { case (n, x) => ArtifactStore.fingerprint(n, x) }
@@ -92,8 +93,8 @@ class FusedFingerprintSpec extends AnyFunSuite {
         // the single-frame kernels the streaming sinks call
         val emb = Tables(spark, dir(), "embeddings")
         val docs = Tables(spark, dir(), "documents")
-        assert(Similarity.frameFingerprintParts(emb) === vecParts(emb))
-        assert(Retrieval.frameDocsFingerprintParts(docs) === docParts(docs))
+        assert(IndexFamily.Ivf.parts(emb) === vecParts(emb))
+        assert(IndexFamily.Bm25.parts(docs) === docParts(docs))
       }
   }
 
@@ -140,7 +141,7 @@ class FusedFingerprintSpec extends AnyFunSuite {
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try {
-      Retrieval.frameDocsFingerprintPartsWhere(docs,
+      IndexFamily.Bm25.partsWhere(docs,
         !Retrieval.incDocPred, Retrieval.incDocPred)
       ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)

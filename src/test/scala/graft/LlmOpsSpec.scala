@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.{Dedup, IndexDelete, Multimodal, Similarity, TextStats}
+import graft.llm.{Dedup, IndexDelete, IndexFamily, Multimodal, Similarity, TextStats}
 
 class LlmOpsSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -1169,12 +1169,12 @@ class LlmOpsSpec extends AnyFunSuite {
     val base = IndexDelete.tombIndexBase(spark, sf)
     import SparkTestSession.spark.implicits._
     // already-tombstoned and absent ids remove nothing
-    assert(IndexDelete.applyDeletes(spark, base,
+    assert(IndexDelete.applyDeletes(IndexFamily.Ivf, spark, base,
       Seq(IndexDelete.DeleteRes, -1L).toDF("vec_id")) == 0L,
       "re-delete + absent id must be a no-op")
     // fingerprint == a fresh fingerprint of the live membership
     val v = Similarity.normed(spark, sf)
-    val (ln, lx) = Similarity.frameFingerprintParts(
+    val (ln, lx) = IndexFamily.Ivf.parts(
       v.filter(col("vec_id") % IndexDelete.DeleteMod
         =!= IndexDelete.DeleteRes))
     assert(graft.io.ArtifactStore.currentFingerprint(base)
@@ -1533,7 +1533,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // idempotency through the per-doc digest resolution
     val base = graft.io.ArtifactStore.artifactPath("dedup-tomb", sf)
     import SparkTestSession.spark.implicits._
-    assert(Dedup.lshApplyDeletes(spark, base,
+    assert(IndexDelete.applyDeletes(IndexFamily.Lsh, spark, base,
       Seq(2L, 13L, -1L).toDF("doc_id")) == 0L,
       "re-delete (2, 13 ∈ takedown set) + unknown id must remove nothing")
     // and the takedown really landed as index state

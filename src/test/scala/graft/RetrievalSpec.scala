@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.Retrieval
+import graft.llm.{IndexDelete, IndexFamily, Retrieval}
 
 /** s10 BM25: full differential re-derivation. A driver-side naive
   * implementation (plain Scala maps over the collected fixture — no
@@ -149,7 +149,7 @@ class RetrievalSpec extends AnyFunSuite {
     // batch deletes are idempotent through the dochash resolution
     val base = Retrieval.bm25TombIndexBase(spark, sf)
     import SparkTestSession.spark.implicits._
-    assert(Retrieval.bm25ApplyDeletes(spark, base,
+    assert(IndexDelete.applyDeletes(IndexFamily.Bm25, spark, base,
       Seq(Retrieval.DelRem, -5L).toDF("doc_id")) == 0L,
       "re-delete + unknown doc must remove nothing")
   }

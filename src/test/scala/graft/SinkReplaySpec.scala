@@ -9,14 +9,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.ArtifactStore
-import graft.llm.CodeTable
+import graft.llm.{CodeTable, IndexFamily}
 import graft.stream.IndexIngest
+import graft.stream.IndexIngest.DefaultApp
 
-/** Replaying a committed batch id through an append sink (what a
-  * restarted streaming query does with its last uncommitted batch) is
-  * a wholesale no-op that starts no Spark job: the replay check runs
-  * before the batch is fingerprinted, and the artifact's fingerprint
-  * and files are untouched. */
+/** Replaying a committed batch id through an append or delete sink
+  * (what a restarted streaming query does with its last uncommitted
+  * batch) is a wholesale no-op that starts no Spark job: the replay
+  * check runs before the batch is fingerprinted or its removal planned,
+  * and the artifact's fingerprint and files are untouched. */
 class SinkReplaySpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -45,17 +46,29 @@ class SinkReplaySpec extends AnyFunSuite {
     val (baseVecs, batchVecs) = (vectors(0 until 40), vectors(100 until 110))
     val (baseDocs, batchDocs) = (docs(1), docs(2))
 
-    IndexIngest.bootstrap(at("ivf"), baseVecs)
+    IndexIngest.bootstrap(IndexFamily.Ivf, at("ivf"), baseVecs)
     IndexIngest.bootstrap(CodeTable.Pq, at("pq"), at("ivf"), baseVecs)
-    IndexIngest.bm25Bootstrap(at("bm25"), baseDocs)
-    IndexIngest.lshBootstrap(at("lsh"), baseDocs)
-    val sinks: Seq[(String, Long => Unit)] = Seq(
-      "ivf" -> (IndexIngest.ivfAppendSink(at("ivf"))(batchVecs, _)),
-      "pq" -> (IndexIngest.appendSink(CodeTable.Pq, at("pq"), at("ivf"))(
+    IndexIngest.bootstrap(IndexFamily.Bm25, at("bm25"), baseDocs)
+    IndexIngest.bootstrap(IndexFamily.Lsh, at("lsh"), baseDocs)
+    // delete batches name ids the bootstraps indexed
+    val (vecIds, docIds) =
+      (Seq(0L, 1L, 2L).toDF("vec_id"), Seq(1L, 4L, 7L).toDF("doc_id"))
+    val sinks: Seq[(String, String, Long => Unit)] = Seq(
+      ("ivf", "ivf", IndexIngest.appendSink(IndexFamily.Ivf, at("ivf"),
+        DefaultApp)(batchVecs, _)),
+      ("pq", "pq", IndexIngest.appendSink(CodeTable.Pq, at("pq"), at("ivf"))(
         batchVecs, _)),
-      "bm25" -> (IndexIngest.bm25AppendSink(at("bm25"))(batchDocs, _)),
-      "lsh" -> (IndexIngest.lshAppendSink(at("lsh"))(batchDocs, _)))
-    sinks.foreach { case (name, sink) => withClue(s"$name: ") {
+      ("bm25", "bm25", IndexIngest.appendSink(IndexFamily.Bm25, at("bm25"),
+        DefaultApp)(batchDocs, _)),
+      ("lsh", "lsh", IndexIngest.appendSink(IndexFamily.Lsh, at("lsh"),
+        DefaultApp)(batchDocs, _)),
+      ("ivf delete", "ivf", IndexIngest.deleteSink(IndexFamily.Ivf, at("ivf"))(
+        vecIds, _)),
+      ("bm25 delete", "bm25", IndexIngest.deleteSink(IndexFamily.Bm25,
+        at("bm25"))(docIds, _)),
+      ("lsh delete", "lsh", IndexIngest.deleteSink(IndexFamily.Lsh,
+        at("lsh"))(docIds, _)))
+    sinks.foreach { case (label, name, sink) => withClue(s"$label: ") {
       sink(0L)
       val fp = ArtifactStore.currentFingerprint(at(name))
       val files = listing(at(name))

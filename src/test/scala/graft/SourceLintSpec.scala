@@ -23,6 +23,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[llm.CodeTable]] kind: `IndexIngest` and `Similarity` define no
   * per-kind copy of them.
   *
+  * The IVF, BM25 and LSH lifecycles are written once over the
+  * [[llm.IndexFamily]]: `IndexIngest` defines no per-family bootstrap,
+  * sink or compaction, `src/main` no per-family removal planner or
+  * `applyDeletes` wrapper, and the two row-hash fingerprint kernels
+  * (vectors and documents) are written only in `llm/IndexFamily.scala`.
+  *
   * The IVF coarse quantizer is written once in [[llm.Similarity]]: the
   * centroid ranking (the only `col("csim")` outside SQL text) lives in
   * `rankedAgainst`, and only that module names the artifact's
@@ -64,6 +70,32 @@ class SourceLintSpec extends AnyFunSuite {
         "compact(Pq|Sq|Bq)|maybeCompact(Pq|Sq|Bq)|resolve(Sq|Bq)"),
     "src/main/scala/graft/llm/Similarity.scala" ->
       "(sq|bq)(Pool|ServeFrom|BuildInto)")
+
+  /** By file (None: every file under `src/main/scala`), the names a
+    * hand-copied index-family lifecycle would define beside the
+    * [[llm.IndexFamily]]-generic ones. */
+  private val perFamilyEntries: Seq[(Option[String], String)] = Seq(
+    Some("src/main/scala/graft/stream/IndexIngest.scala") ->
+      "(ivf|bm25|lsh)(Bootstrap|AppendSink|DeleteSink)|compact(Ivf|Bm25|Lsh)",
+    None -> """\w+RemovalPlan|\w+ApplyDeletes""")
+
+  /** Each row-hash fingerprint expression in `src` — the vector kernel
+    * `xxhash64(to_json(struct(vec_id, embedding)))` or the document
+    * kernel `xxhash64(doc_id, text)`, with or without `col("…")`
+    * wrappers and across line breaks: (line, match). */
+  private[graft] def rowHashCopies(src: String): Seq[(Int, String)] = {
+    def id(n: String) = raw"""(?:col\(\s*"$n"\s*\)|$n)"""
+    (raw"""xxhash64\(\s*to_json\(\s*struct\(\s*${id("vec_id")}\s*,""" +
+      raw"""\s*${id("embedding")}\s*\)\s*\)\s*\)|""" +
+      raw"""xxhash64\(\s*${id("doc_id")}\s*,\s*${id("text")}\s*\)""")
+      .r.findAllMatchIn(src).map { m =>
+        (src.substring(0, m.start).count(_ == '\n') + 1,
+          m.matched.replaceAll("\\s+", ""))
+      }.toSeq
+  }
+
+  private def isIndexFamily(f: Path): Boolean =
+    f.endsWith(Paths.get("graft", "llm", "IndexFamily.scala"))
 
   /** Each `def` in `src` whose whole name matches `names`:
     * (line, name). */
@@ -262,6 +294,60 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"${offenders.size} per-kind code-table entries; write them once " +
         "over graft.llm.CodeTable:\n" + offenders.mkString("\n"))
+  }
+
+  test("the per-family detectors flag lifecycle copies and row-hash kernels and only those") {
+    val (ingest, anywhere) = (perFamilyEntries(0)._2, perFamilyEntries(1)._2)
+    val flagged = Seq(
+      ingest -> "def ivfAppendSink(base: String, appId: String = DefaultApp)(",
+      ingest -> "def bm25Bootstrap(base: String, docs: DataFrame)",
+      ingest -> "  def lshDeleteSink(base: String,",
+      ingest -> "def compactBm25(spark: SparkSession, base: String)",
+      anywhere -> "private[graft] def lshRemovalPlan(spark: SparkSession,",
+      anywhere -> "def bm25ApplyDeletes(spark: SparkSession, base: String,")
+    val clean = Seq(
+      ingest -> "def appendSink(f: IndexFamily, base: String, appId: String)(",
+      ingest -> "def ivfAppendSinkPaired(pairBase: String,",
+      ingest -> "def ivfDeleteSinkPaired(pairBase: String,",
+      ingest -> "def compact(f: IndexFamily, spark: SparkSession,",
+      ingest -> "def maybeCompactIvf(spark: SparkSession,",
+      ingest -> "IndexIngest.bm25AppendSink(idx)(b1, 0L)",
+      anywhere -> "private[graft] def removalPlan(f: IndexFamily,",
+      anywhere -> "def applyDeletes(f: IndexFamily, spark: SparkSession,")
+    flagged.foreach { case (names, l) =>
+      assert(perKindDefs(l, names).size === 1, l) }
+    clean.foreach { case (names, l) =>
+      assert(perKindDefs(l, names).isEmpty, l) }
+    Seq("xxhash64(to_json(struct(col(\"vec_id\"), col(\"embedding\"))))",
+      "xxhash64(to_json(struct(\n  col(\"vec_id\"),\n  col(\"embedding\"))))",
+      "xxhash64(col(\"doc_id\"), col(\"text\")).as(\"h64\")",
+      "expr(\"xxhash64(doc_id, text)\")")
+      .foreach(l => assert(rowHashCopies(l).size === 1, l))
+    Seq("xxhash64(to_json(struct(col(\"vec_id\"), col(\"embedding\"),\n" +
+        "  col(\"label\"))))",
+      "pmod(xxhash64(col(\"term\")), lit(PostingBuckets))",
+      "xxhash64(col(\"event_id\"), col(\"user_id\"), col(\"props\"))",
+      "IndexFamily.Lsh.rowHash.as(\"h64\")")
+      .foreach(l => assert(rowHashCopies(l).isEmpty, l))
+  }
+
+  test("the IVF, BM25 and LSH lifecycles and row-hash kernels are written once, over IndexFamily") {
+    val main = sources("src/main/scala")
+    val copies = perFamilyEntries.flatMap { case (file, names) =>
+      main.filter { case (f, _) => file.forall(p => f.endsWith(Paths.get(p))) }
+        .flatMap { case (f, src) =>
+          perKindDefs(src, names).map { case (line, name) =>
+            s"$f:$line: def $name" }
+        }
+    }
+    val kernels = main.filterNot(p => isIndexFamily(p._1)).flatMap {
+      case (f, src) =>
+        rowHashCopies(src).map { case (line, hit) => s"$f:$line: $hit" }
+    }
+    val offenders = copies ++ kernels
+    assert(offenders.isEmpty, s"${offenders.size} per-family lifecycle " +
+      "entries or row-hash kernels; write them once over " +
+      "graft.llm.IndexFamily:\n" + offenders.mkString("\n"))
   }
 
   test("the csim detector flags the column outside SQL text, with its def") {

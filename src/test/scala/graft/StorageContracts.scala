@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{ArtifactStore, LockDisplacedException}
 import graft.llm.CodeTable.Pq
+import graft.llm.IndexFamily
 import graft.stream.IndexIngest
+import graft.stream.IndexIngest.DefaultApp
 
 /** What every storage contract suite shares: the binding under test,
   * and the binding's own name for a contract test where its suite has
@@ -669,12 +671,14 @@ trait IndexLifecycleContract extends StorageContract {
     val b1 = (200L until 220L).map(i => (i, vec()))
     val ivf = freshBase("ivf")
     val pq = freshBase("pq")
-    assert(IndexIngest.bootstrap(ivf, base.toDF("vec_id", "embedding"))
+    assert(IndexIngest.bootstrap(IndexFamily.Ivf, ivf,
+        base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
     assert(IndexIngest.bootstrap(Pq, pq, ivf, base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
     // exactly-once appends with replay marks living on the binding
-    IndexIngest.ivfAppendSink(ivf)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSink(IndexFamily.Ivf, ivf, DefaultApp)(
+      b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSink(Pq, pq, ivf)(b1.toDF("vec_id", "embedding"), 0L)
     def listCount() = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
@@ -682,11 +686,12 @@ trait IndexLifecycleContract extends StorageContract {
     val grown = listCount()
     assert(grown == 140L, s"appends must land (got $grown)")
     // replay of the committed batch is a wholesale no-op
-    IndexIngest.ivfAppendSink(ivf)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSink(IndexFamily.Ivf, ivf, DefaultApp)(
+      b1.toDF("vec_id", "embedding"), 0L)
     assert(listCount() == grown, "replay must not double-ingest")
     // streamed DELETE: tombstone append, O(deletes)
     val deleted = Set(5L, 17L, 204L)
-    IndexIngest.ivfDeleteSink(ivf)(deleted.toSeq.toDF("vec_id"), 0L)
+    IndexIngest.deleteSink(IndexFamily.Ivf, ivf)(deleted.toSeq.toDF("vec_id"), 0L)
     assert(IndexIngest.tombstoneFiles(ivf) > 0,
       "the tombstone set must live on the binding")
     // serving excludes the deleted immediately (pre-pool cut + live
@@ -711,7 +716,7 @@ trait IndexLifecycleContract extends StorageContract {
       "tombstoned ids must not be served")
     // compaction physicalizes the deletes and resets the tombstones;
     // the served answer is unchanged (fingerprint-preserving rewrite)
-    assert(IndexIngest.compactIvf(spark, ivf))
+    assert(IndexIngest.compact(IndexFamily.Ivf, spark, ivf))
     assert(IndexIngest.tombstoneFiles(ivf) == 0,
       "compaction must clear the tombstone set")
     assert(listCount() == grown - deleted.size,

@@ -5,7 +5,9 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.CodeTable.{Bq, Pq, Sq}
+import graft.llm.IndexFamily
 import graft.stream.EventWindows
+import graft.stream.IndexIngest.DefaultApp
 
 /** Structured Streaming behavior: the batch window queries re-run as real
   * streaming queries against a file source + memory sink. */
@@ -1058,7 +1060,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming index ingest: micro-batches append to the artifact exactly once") {
     // the readStream twin of s16's nightly append: a vector feed drives
-    // IndexIngest.ivfAppendSink, each micro-batch assigned to the
+    // IndexIngest.appendSink over IndexFamily.Ivf, each micro-batch assigned to the
     // STORED centroids and appended under the artifact lock; the
     // batch-id high-water mark inside the artifact makes replays
     // no-ops, and the final stored assignment must equal a BATCH
@@ -1075,7 +1077,7 @@ class StreamingSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-stream-ivf")
       .resolve("idx").toString
     graft.stream.IndexIngest.bootstrap(
-      idx, baseVecs.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, idx, baseVecs.toDF("vec_id", "embedding"))
     def storedCells(): Map[Long, Long] = spark.read
       .parquet(s"$idx/assignments")
       .select(col("vec_id"), col("cell").cast("long"))
@@ -1084,7 +1086,8 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[(Long, Seq[Float])]
     val q = src.toDS().toDF("vec_id", "embedding")
       .writeStream
-      .foreachBatch(graft.stream.IndexIngest.ivfAppendSink(idx) _)
+      .foreachBatch(
+        graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp) _)
       .start()
     try {
       src.addData(b1); q.processAllAvailable()
@@ -1094,7 +1097,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     // exactly-once: replaying an already-committed batch id (what a
     // restarted query does with its last uncommitted batch) is a no-op
-    graft.stream.IndexIngest.ivfAppendSink(idx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp)(
       b2.toDF("vec_id", "embedding"), 1L)
     assert(storedCells().size == 60, "replay must not double-ingest")
     // the artifact is still marker-valid after the appends
@@ -1124,7 +1127,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(partFiles().values.exists(_ > 1),
       "appends should have left multi-file cells to make compaction real")
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(idx)
-    assert(graft.stream.IndexIngest.compactIvf(spark, idx))
+    assert(graft.stream.IndexIngest.compact(IndexFamily.Ivf, spark, idx))
     assert(partFiles().values.forall(_ == 1),
       s"compaction must leave one file per cell, got ${partFiles()}")
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpBefore,
@@ -1150,7 +1153,7 @@ class StreamingSpec extends AnyFunSuite {
     val ivfIdx = root.resolve("ivf").toString
     val pqIdx = root.resolve("pq").toString
     graft.stream.IndexIngest.bootstrap(
-      ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.bootstrap(Pq,
       pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     def storedCodes(): Map[Long, (Long, Seq[Int])] = spark.read
@@ -1232,7 +1235,7 @@ class StreamingSpec extends AnyFunSuite {
     val ivfIdx = root.resolve("ivf").toString
     val sqIdx = root.resolve("sq").toString
     graft.stream.IndexIngest.bootstrap(
-      ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.bootstrap(Sq,
       sqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     def storedCodes(): Map[Long, (Long, Seq[Int])] = spark.read
@@ -1321,7 +1324,8 @@ class StreamingSpec extends AnyFunSuite {
     val ivfIdx = root.resolve("ivf").toString
     val pqIdx = root.resolve("pq").toString
     val bqIdx = root.resolve("bq").toString
-    IndexIngest.bootstrap(ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(IndexFamily.Ivf, ivfIdx,
+      baseVecs.toDF("vec_id", "embedding"))
     IndexIngest.bootstrap(Pq, pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     IndexIngest.bootstrap(Bq, bqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     def bqRows(base: String) = spark.read
@@ -1331,7 +1335,8 @@ class StreamingSpec extends AnyFunSuite {
       .toMap
     assert(bqRows(bqIdx).size == 40)
     // aligned appends through all three sinks
-    IndexIngest.ivfAppendSink(ivfIdx)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
+      b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
@@ -1348,7 +1353,7 @@ class StreamingSpec extends AnyFunSuite {
       s"frozen-model appends should fire and retrain here (hits $h)")
     val cleanIvf = root.resolve("clean-ivf").toString
     val cleanBq = root.resolve("clean-bq").toString
-    IndexIngest.bootstrap(cleanIvf, all.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(IndexFamily.Ivf, cleanIvf, all.toDF("vec_id", "embedding"))
     IndexIngest.bootstrap(Bq, cleanBq, cleanIvf, all.toDF("vec_id", "embedding"))
     assert(bqRows(bqIdx) == bqRows(cleanBq),
       "retrained BQ codes must equal a from-scratch build on all vectors")
@@ -1405,7 +1410,7 @@ class StreamingSpec extends AnyFunSuite {
     val root2 = java.nio.file.Files.createTempDirectory("graft-pairbq-clean")
     val cleanIvf = root2.resolve("ivf").toString
     val cleanBq = root2.resolve("bq").toString
-    IndexIngest.bootstrap(cleanIvf,
+    IndexIngest.bootstrap(IndexFamily.Ivf, cleanIvf,
       (baseVecs ++ b1).toDF("vec_id", "embedding"))
     IndexIngest.bootstrap(Bq, cleanBq, cleanIvf,
       (baseVecs ++ b1).toDF("vec_id", "embedding"))
@@ -1441,13 +1446,13 @@ class StreamingSpec extends AnyFunSuite {
     val pqIdx = root.resolve("pq").toString
     val sqIdx = root.resolve("sq").toString
     graft.stream.IndexIngest.bootstrap(
-      ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.bootstrap(Pq,
       pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.bootstrap(Sq,
       sqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     for ((b, id) <- Seq((b1, 0L), (bSkew, 1L))) {
-      graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
+      graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
         b.toDF("vec_id", "embedding"), id)
       graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
         b.toDF("vec_id", "embedding"), id)
@@ -1481,7 +1486,7 @@ class StreamingSpec extends AnyFunSuite {
     val cleanIvf = root.resolve("clean-ivf").toString
     val cleanSq = root.resolve("clean-sq").toString
     graft.stream.IndexIngest.bootstrap(
-      cleanIvf, all.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, cleanIvf, all.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.bootstrap(Sq,
       cleanSq, cleanIvf, all.toDF("vec_id", "embedding"))
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
@@ -1538,10 +1543,10 @@ class StreamingSpec extends AnyFunSuite {
     val ivfIdx = root.resolve("ivf").toString
     val pqIdx = root.resolve("pq").toString
     graft.stream.IndexIngest.bootstrap(
-      ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.bootstrap(Pq,
       pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
     graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
@@ -1549,7 +1554,7 @@ class StreamingSpec extends AnyFunSuite {
     // — the marks disagree, so even a violated SLO must NOT retrain
     // (retraining would fold the PQ-uncommitted batch into the code
     // table under PQ's old mark, and its replay would double-ingest)
-    graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       bSkew.toDF("vec_id", "embedding"), 1L)
     val cbBefore = spark.read.parquet(s"$pqIdx/codebook").collect().toSet
     val (_, _, firedSkew, retrainedSkew) =
@@ -1570,7 +1575,7 @@ class StreamingSpec extends AnyFunSuite {
     // retrain must then physicalize the removal on every rebuilt
     // table. (Non-panel ids, so the audit panel stays 17.)
     val deleted = Set(102L, 303L)
-    graft.stream.IndexIngest.ivfDeleteSink(ivfIdx)(
+    graft.stream.IndexIngest.deleteSink(IndexFamily.Ivf, ivfIdx)(
       deleted.toSeq.toDF("vec_id"), 0L)
     val live = all.filterNot(v => deleted(v._1))
     val (q, h, fired, retrained) =
@@ -1588,7 +1593,7 @@ class StreamingSpec extends AnyFunSuite {
     val cleanIvf = root.resolve("clean-ivf").toString
     val cleanPq = root.resolve("clean-pq").toString
     graft.stream.IndexIngest.bootstrap(
-      cleanIvf, live.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, cleanIvf, live.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.bootstrap(Pq,
       cleanPq, cleanIvf, live.toDF("vec_id", "embedding"))
     def centroidRows(base: String) = spark.read
@@ -1618,7 +1623,7 @@ class StreamingSpec extends AnyFunSuite {
     // replay protection survived the retrain: the committed batch id
     // is still a wholesale no-op against the NEW generation
     val nBefore = listRows(ivfIdx).size
-    graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
     graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
@@ -1628,7 +1633,7 @@ class StreamingSpec extends AnyFunSuite {
       "replay after retrain must not change the code table")
     // and a LATER batch still appends against the new frozen models
     val b2 = (200L until 205L).map(i => (i, vec()))
-    graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       b2.toDF("vec_id", "embedding"), 2L)
     assert(listRows(ivfIdx).size == nBefore + 5,
       "the maintenance loop must keep accepting appends after a retrain")
@@ -1668,7 +1673,7 @@ class StreamingSpec extends AnyFunSuite {
       "the healed IVF artifact must recompute the exact chained fingerprint")
     // replay protection survived the heal too
     val nHealed = listRows(ivfIdx).size
-    graft.stream.IndexIngest.ivfAppendSink(ivfIdx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       b2.toDF("vec_id", "embedding"), 2L)
     assert(listRows(ivfIdx).size == nHealed,
       "replay after IVF self-heal must not double-ingest")
@@ -1681,10 +1686,11 @@ class StreamingSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-policy")
     val idx = root.resolve("ivf").toString
     graft.stream.IndexIngest.bootstrap(
-      idx, (0L until 30L).map(i => (i, vec())).toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.ivfAppendSink(idx)(
+      IndexFamily.Ivf, idx,
+      (0L until 30L).map(i => (i, vec())).toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp)(
       (100L until 140L).map(i => (i, vec())).toDF("vec_id", "embedding"), 0L)
-    graft.stream.IndexIngest.ivfAppendSink(idx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp)(
       (200L until 240L).map(i => (i, vec())).toDF("vec_id", "embedding"), 1L)
     val frag = graft.stream.IndexIngest.fragmentation(idx, "assignments")
     assert(frag >= 2, s"appends should fragment the hottest cell, got $frag")
@@ -1720,13 +1726,13 @@ class StreamingSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-reboot")
       .resolve("ivf").toString
     assert(graft.stream.IndexIngest.bootstrap(
-      idx, initial.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, idx, initial.toDF("vec_id", "embedding"))
       == graft.stream.IndexIngest.BootstrapStatus.Built)
     // an immediate repeat run is the observable Current no-op
     assert(graft.stream.IndexIngest.bootstrap(
-      idx, initial.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, idx, initial.toDF("vec_id", "embedding"))
       == graft.stream.IndexIngest.BootstrapStatus.Current)
-    graft.stream.IndexIngest.ivfAppendSink(idx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
     def stored() = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
@@ -1737,19 +1743,19 @@ class StreamingSpec extends AnyFunSuite {
     // but an OBSERVABLE one: the skip against a diverged fingerprint
     // (grown index — or a changed corpus) reports itself (ADVICE r11)
     assert(graft.stream.IndexIngest.bootstrap(
-      idx, initial.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, idx, initial.toDF("vec_id", "embedding"))
       == graft.stream.IndexIngest.BootstrapStatus.KeptDivergent)
     assert(stored() == 30, "re-bootstrap swept the appended rows")
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpGrown)
     // the replay mark survived too: the committed batch is still a no-op
-    graft.stream.IndexIngest.ivfAppendSink(idx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(stored() == 30, "re-bootstrap lost the replay mark")
   }
 
   test("a crashed compaction publish cannot cost a living index its appends: bootstrap rolls back") {
     // grow a BM25 index by a streamed append, simulate a death inside
-    // compactBm25's publish renames (marker + postings stranded in the
+    // the BM25 compact's publish renames (marker + postings stranded in the
     // .tmp-old-* aside — exactly what the aside protocol leaves), then
     // re-run the driver init path. The old flow fell through to
     // ensure, whose orphan reap destroyed the aside — the ONLY copy of
@@ -1766,9 +1772,9 @@ class StreamingSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("graft-bmcrash")
       .resolve("bm25").toString
-    assert(IndexIngest.bm25Bootstrap(idx, docs0)
+    assert(IndexIngest.bootstrap(IndexFamily.Bm25, idx, docs0)
       == IndexIngest.BootstrapStatus.Built)
-    IndexIngest.bm25AppendSink(idx)(b1, 0L)
+    IndexIngest.appendSink(IndexFamily.Bm25, idx, DefaultApp)(b1, 0L)
     val fpGrown = graft.io.ArtifactStore.currentFingerprint(idx)
     assert(fpGrown.isDefined)
     def postingRows() = spark.read
@@ -1791,7 +1797,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(graft.io.ArtifactStore.currentFingerprint(idx).isEmpty)
     // the driver restarts: bootstrap must roll the publish back and
     // KEEP the grown index — never rebuild over it
-    assert(IndexIngest.bm25Bootstrap(idx, docs0)
+    assert(IndexIngest.bootstrap(IndexFamily.Bm25, idx, docs0)
       == IndexIngest.BootstrapStatus.KeptDivergent,
       "bootstrap must observe the rolled-back grown index, not rebuild")
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpGrown,
@@ -1799,7 +1805,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(postingRows() == grownRows,
       "the appended segment must survive the crash + re-init")
     // the replay mark survived too
-    IndexIngest.bm25AppendSink(idx)(b1, 0L)
+    IndexIngest.appendSink(IndexFamily.Bm25, idx, DefaultApp)(b1, 0L)
     assert(postingRows() == grownRows, "replay must still be a no-op")
   }
 
@@ -1905,7 +1911,7 @@ class StreamingSpec extends AnyFunSuite {
     val root2 = java.nio.file.Files.createTempDirectory("graft-pairsq-clean")
     val cleanIvf = root2.resolve("ivf").toString
     val cleanSq = root2.resolve("sq").toString
-    IndexIngest.bootstrap(cleanIvf, all.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(IndexFamily.Ivf, cleanIvf, all.toDF("vec_id", "embedding"))
     IndexIngest.bootstrap(Sq, cleanSq, cleanIvf, all.toDF("vec_id", "embedding"))
     assert(sqRows(g1Sq) == sqRows(cleanSq),
       "the new generation's SQ table must equal a from-scratch build")
@@ -2009,25 +2015,25 @@ class StreamingSpec extends AnyFunSuite {
     val a1 = (110L until 114L).map(i => (i, vec()))
     val idx = java.nio.file.Files.createTempDirectory("graft-lineage")
       .resolve("ivf").toString
-    IndexIngest.bootstrap(idx, initial.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(IndexFamily.Ivf, idx, initial.toDF("vec_id", "embedding"))
     def stored() = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
       .parquet(s"$idx/assignments").count()
-    IndexIngest.ivfAppendSink(idx, "appA")(
+    IndexIngest.appendSink(IndexFamily.Ivf, idx, "appA")(
       a0.toDF("vec_id", "embedding"), 0L)
     assert(stored() == 25)
     // lineage B's batch 0 is NOT a replay of lineage A's batch 0
-    IndexIngest.ivfAppendSink(idx, "appB")(
+    IndexIngest.appendSink(IndexFamily.Ivf, idx, "appB")(
       b0.toDF("vec_id", "embedding"), 0L)
     assert(stored() == 31, "cross-lineage batch-id aliasing dropped a batch")
     // replays of EITHER lineage are wholesale no-ops
-    IndexIngest.ivfAppendSink(idx, "appA")(
+    IndexIngest.appendSink(IndexFamily.Ivf, idx, "appA")(
       a0.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.ivfAppendSink(idx, "appB")(
+    IndexIngest.appendSink(IndexFamily.Ivf, idx, "appB")(
       b0.toDF("vec_id", "embedding"), 0L)
     assert(stored() == 31, "replay within a lineage must be a no-op")
     // each lineage's next batch still appends
-    IndexIngest.ivfAppendSink(idx, "appA")(
+    IndexIngest.appendSink(IndexFamily.Ivf, idx, "appA")(
       a1.toDF("vec_id", "embedding"), 1L)
     assert(stored() == 35)
     // a legacy single-number mark file reads as the DEFAULT lineage's
@@ -2036,7 +2042,7 @@ class StreamingSpec extends AnyFunSuite {
     // sink must skip batch 9 against the bare "9" file
     java.nio.file.Files.write(
       java.nio.file.Paths.get(idx, "stream_state"), "9".getBytes("UTF-8"))
-    IndexIngest.ivfAppendSink(idx)(
+    IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp)(
       a0.toDF("vec_id", "embedding"), 9L)
     assert(stored() == 35, "legacy mark must gate the default lineage")
   }
@@ -2159,14 +2165,15 @@ class StreamingSpec extends AnyFunSuite {
       .resolve("idx").toString
     // bootstrap on one half of the standing corpus, stream the other
     // half in two micro-batches (standing corpus = doc_id % 3 != 0)
-    graft.stream.IndexIngest.lshBootstrap(
-      idx, docs.filter(col("doc_id") % 3 === 1))
+    graft.stream.IndexIngest.bootstrap(
+      IndexFamily.Lsh, idx, docs.filter(col("doc_id") % 3 === 1))
     val b0 = rowsOf(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0)
     val b1 = rowsOf(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 1)
     val src = MemoryStream[(Long, String)]
     val q = src.toDS().toDF("doc_id", "text")
       .writeStream
-      .foreachBatch(graft.stream.IndexIngest.lshAppendSink(idx) _)
+      .foreachBatch(
+        graft.stream.IndexIngest.appendSink(IndexFamily.Lsh, idx, DefaultApp) _)
       .start()
     try {
       src.addData(b0); q.processAllAvailable()
@@ -2177,7 +2184,7 @@ class StreamingSpec extends AnyFunSuite {
         .parquet(s"$idx/bands").count()
     val nAfterStream = postingCount()
     // a replayed committed batch id (restarted query) is a no-op
-    graft.stream.IndexIngest.lshAppendSink(idx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Lsh, idx, DefaultApp)(
       b1.toDF("doc_id", "text"), 1L)
     assert(postingCount() == nAfterStream, "replay must not double-ingest")
     assert(graft.io.ArtifactStore.currentFingerprint(idx).isDefined,
@@ -2205,7 +2212,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(bandFiles().values.exists(_ > 1),
       "appends should have left multi-file bands to make compaction real")
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(idx)
-    assert(graft.stream.IndexIngest.compactLsh(spark, idx))
+    assert(graft.stream.IndexIngest.compact(IndexFamily.Lsh, spark, idx))
     assert(bandFiles().values.forall(_ == 1),
       s"compaction must leave one file per band, got ${bandFiles()}")
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpBefore,
@@ -2223,7 +2230,7 @@ class StreamingSpec extends AnyFunSuite {
     val standing = docs.filter(col("doc_id") % 3 =!= 0)
     val idx = java.nio.file.Files.createTempDirectory("graft-stream-lshdel")
       .resolve("idx").toString
-    graft.stream.IndexIngest.lshBootstrap(idx,
+    graft.stream.IndexIngest.bootstrap(IndexFamily.Lsh, idx,
       standing.select(col("doc_id"), col("text")))
     val delPred = col("doc_id") % graft.llm.Dedup.TakedownMod ===
       graft.llm.Dedup.TakedownRem
@@ -2235,21 +2242,22 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[Long]
     val q = src.toDS().toDF("doc_id")
       .writeStream
-      .foreachBatch(graft.stream.IndexIngest.lshDeleteSink(idx) _)
+      .foreachBatch(graft.stream.IndexIngest.deleteSink(IndexFamily.Lsh, idx) _)
       .start()
     try {
       src.addData(half1: _*); q.processAllAvailable()
       src.addData(half2: _*); q.processAllAvailable()
     } finally q.stop()
     // fingerprint == a fresh fingerprint of the live standing docs
-    val (ln, lx) = graft.llm.Retrieval.frameDocsFingerprintParts(
+    val (ln, lx) = graft.llm.IndexFamily.Bm25.parts(
       standing.filter(!delPred))
     assert(graft.io.ArtifactStore.currentFingerprint(idx)
       .contains(graft.io.ArtifactStore.fingerprint(ln, lx)),
       "fingerprint must equal the live standing docs' fingerprint")
     val fpAfter = graft.io.ArtifactStore.currentFingerprint(idx)
     // replay of a committed delete batch is a no-op
-    graft.stream.IndexIngest.lshDeleteSink(idx)(half2.toDF("doc_id"), 1L)
+    graft.stream.IndexIngest.deleteSink(IndexFamily.Lsh, idx)(
+      half2.toDF("doc_id"), 1L)
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpAfter)
     // the tombstone-bearing streamed index must classify exactly like
     // d20's batch artifact (same standing corpus, same takedown set)
@@ -2262,7 +2270,7 @@ class StreamingSpec extends AnyFunSuite {
       "streamed takedowns must serve the d20 contract")
     // compaction physicalizes: digest rows and band postings of the
     // tombstoned docs drop, tombstones clear, fingerprint unchanged
-    assert(graft.stream.IndexIngest.compactLsh(spark, idx))
+    assert(graft.stream.IndexIngest.compact(IndexFamily.Lsh, spark, idx))
     assert(graft.stream.IndexIngest.tombstoneFiles(idx) == 0)
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpAfter)
     val storedIds = spark.read.schema(graft.llm.Dedup.digestSchema)
@@ -2291,18 +2299,19 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     val idx = java.nio.file.Files.createTempDirectory("graft-stream-bm25")
       .resolve("idx").toString
-    graft.stream.IndexIngest.bm25Bootstrap(idx, side(1))
+    graft.stream.IndexIngest.bootstrap(IndexFamily.Bm25, idx, side(1))
     val src = MemoryStream[(Long, String)]
     val q = src.toDS().toDF("doc_id", "text")
       .writeStream
-      .foreachBatch(graft.stream.IndexIngest.bm25AppendSink(idx) _)
+      .foreachBatch(
+        graft.stream.IndexIngest.appendSink(IndexFamily.Bm25, idx, DefaultApp) _)
       .start()
     try {
       src.addData(rowsOf(2)); q.processAllAvailable()
       src.addData(rowsOf(0)); q.processAllAvailable()
     } finally q.stop()
     // a replayed batch id is a no-op: still exactly 3 segments
-    graft.stream.IndexIngest.bm25AppendSink(idx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Bm25, idx, DefaultApp)(
       rowsOf(0).toDF("doc_id", "text"), 1L)
     val segs = spark.read.parquet(s"$idx/postings")
       .select(col("seg")).distinct().collect().map(_.getString(0)).toSet
@@ -2323,7 +2332,7 @@ class StreamingSpec extends AnyFunSuite {
     // own rows; the fingerprint survives (it names the indexed corpus,
     // not the layout), and the probe still answers exactly like s10
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(idx)
-    assert(graft.stream.IndexIngest.compactBm25(spark, idx))
+    assert(graft.stream.IndexIngest.compact(IndexFamily.Bm25, spark, idx))
     val segsAfter = spark.read.parquet(s"$idx/postings")
       .select(col("seg")).distinct().collect().map(_.getString(0)).toSet
     assert(segsAfter == Set("base"), s"merged segments: $segsAfter")
@@ -2335,6 +2344,39 @@ class StreamingSpec extends AnyFunSuite {
     assert(gotMerged == want, "the merged index must still equal s10")
   }
 
+  test("streaming BM25 ingest: two lineages' batch 0 keep distinct segments and equal s10") {
+    // two appIds (the multi-writer posture, or a query restarted under
+    // a new appId after a lost checkpoint) each commit batch 0, and
+    // both batches carry one term no other document has — local df 1
+    // in each segment. The merged probe sums df over the distinct
+    // (term, seg, df) rows, so a segment tag shared by the two batches
+    // would count the term once and drift the scores from s10
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-stream-bm25-lineage")
+    val dir = root.toString
+    val term = "zqxlineageterm"
+    Tables(spark, sf, "documents").select(col("doc_id"), col("text"))
+      .collect().map(r => (r.getLong(0), r.getString(1)))
+      .map { case (id, t) => (id, if (id == 107L || id == 207L) s"$t $term" else t) }
+      .toSeq.toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val docs = Tables(spark, dir, "documents")
+    def side(rem: Int) = docs.filter(col("doc_id") % 3 === rem)
+    val idx = root.resolve("idx").toString
+    graft.stream.IndexIngest.bootstrap(IndexFamily.Bm25, idx, side(1))
+    graft.stream.IndexIngest.appendSink(IndexFamily.Bm25, idx, "appA")(side(2), 0L)
+    graft.stream.IndexIngest.appendSink(IndexFamily.Bm25, idx, "appB")(side(0), 0L)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .orderBy(col("query_id"), col("rn")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+      .toSeq
+    val want = rows(graft.llm.Retrieval.s10Bm25TopK(spark, dir))
+    assert(want.exists(r => r._1 == 107L && r._3 == 207L),
+      "the shared term must put 207 in 107's served list")
+    assert(rows(graft.llm.Retrieval.segmentedBm25Ranked(spark, dir, idx)) == want,
+      "two lineages' batches must merge to the single-index scores")
+  }
+
   test("streaming BM25 deletes: tombstone sink exactly-once, pre-merge " +
       "Lucene stats, merge recounts to the live-corpus index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -2343,7 +2385,7 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Tables(spark, sf, "documents")
     val idx = java.nio.file.Files.createTempDirectory("graft-stream-bm25del")
       .resolve("idx").toString
-    graft.stream.IndexIngest.bm25Bootstrap(idx,
+    graft.stream.IndexIngest.bootstrap(IndexFamily.Bm25, idx,
       docs.select(col("doc_id"), col("text")))
     val delPred = col("doc_id") % graft.llm.Retrieval.DelMod ===
       graft.llm.Retrieval.DelRem
@@ -2356,7 +2398,7 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[Long]
     val q = src.toDS().toDF("doc_id")
       .writeStream
-      .foreachBatch(graft.stream.IndexIngest.bm25DeleteSink(idx) _)
+      .foreachBatch(graft.stream.IndexIngest.deleteSink(IndexFamily.Bm25, idx) _)
       .start()
     try {
       src.addData(half1 :+ 99999L: _*); q.processAllAvailable()
@@ -2364,11 +2406,12 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
     // exactly-once: replaying a committed delete batch is a no-op
     val fpAfter = graft.io.ArtifactStore.currentFingerprint(idx)
-    graft.stream.IndexIngest.bm25DeleteSink(idx)(half2.toDF("doc_id"), 1L)
+    graft.stream.IndexIngest.deleteSink(IndexFamily.Bm25, idx)(
+      half2.toDF("doc_id"), 1L)
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpAfter)
     // the fingerprint moved to the LIVE membership: equal to a fresh
     // fingerprint over the surviving documents
-    val (ln, lx) = graft.llm.Retrieval.frameDocsFingerprintParts(
+    val (ln, lx) = graft.llm.IndexFamily.Bm25.parts(
       docs.filter(!delPred))
     assert(fpAfter.contains(graft.io.ArtifactStore.fingerprint(ln, lx)),
       "fingerprint must equal the live documents' fingerprint")
@@ -2387,7 +2430,7 @@ class StreamingSpec extends AnyFunSuite {
       "streamed pre-merge serving must equal the s33 contract")
     // MERGE: deletes become physical, df/totals recount over the
     // live corpus, tombstones + dochash shrink; fingerprint unchanged
-    assert(graft.stream.IndexIngest.compactBm25(spark, idx))
+    assert(graft.stream.IndexIngest.compact(IndexFamily.Bm25, spark, idx))
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpAfter,
       "physicalizing logical deletes must not move the fingerprint")
     assert(graft.stream.IndexIngest.tombstoneFiles(idx) == 0,
@@ -2406,7 +2449,7 @@ class StreamingSpec extends AnyFunSuite {
     val idx2 = java.nio.file.Files
       .createTempDirectory("graft-stream-bm25del-clean")
       .resolve("idx").toString
-    graft.stream.IndexIngest.bm25Bootstrap(idx2,
+    graft.stream.IndexIngest.bootstrap(IndexFamily.Bm25, idx2,
       docs.filter(!delPred).select(col("doc_id"), col("text")))
     assert(rows(graft.llm.Retrieval.segmentedBm25Ranked(spark, sf, idx)) ==
       rows(graft.llm.Retrieval.segmentedBm25Ranked(spark, sf, idx2)),
@@ -2782,7 +2825,7 @@ class StreamingSpec extends AnyFunSuite {
     val idx = java.nio.file.Files.createTempDirectory("graft-stream-del")
       .resolve("idx").toString
     graft.stream.IndexIngest.bootstrap(
-      idx, baseVecs.toDF("vec_id", "embedding"))
+      IndexFamily.Ivf, idx, baseVecs.toDF("vec_id", "embedding"))
     def storedIds(): Set[Long] = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
       .parquet(s"$idx/assignments")
@@ -2794,7 +2837,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.io.ArtifactStore.currentFingerprint(idx).get
     // the membership fingerprint a fresh build over `ids` would carry
     def fpOf(ids: Set[Long]): String = {
-      val (n, x) = graft.llm.Similarity.frameFingerprintParts(
+      val (n, x) = graft.llm.IndexFamily.Ivf.parts(
         baseVecs.filter(v => ids(v._1)).toDF("vec_id", "embedding"))
       graft.io.ArtifactStore.fingerprint(n, x)
     }
@@ -2806,7 +2849,7 @@ class StreamingSpec extends AnyFunSuite {
     val src = MemoryStream[Long]
     val q = src.toDS().toDF("vec_id")
       .writeStream
-      .foreachBatch(graft.stream.IndexIngest.ivfDeleteSink(idx) _)
+      .foreachBatch(graft.stream.IndexIngest.deleteSink(IndexFamily.Ivf, idx) _)
       .start()
     try {
       src.addData(3L, 7L, 999L); q.processAllAvailable()
@@ -2826,13 +2869,13 @@ class StreamingSpec extends AnyFunSuite {
     val fpAfter = fp()
 
     // exactly-once: replaying a committed delete batch is a no-op
-    graft.stream.IndexIngest.ivfDeleteSink(idx)(
+    graft.stream.IndexIngest.deleteSink(IndexFamily.Ivf, idx)(
       Seq(3L, 11L).toDF("vec_id"), 1L)
     assert(fp() == fpAfter, "replay must not re-apply")
     assert(liveIds() == (0L until 40L).toSet -- Set(3L, 7L, 11L))
 
     // an all-absent batch still advances the mark (and nothing else)
-    graft.stream.IndexIngest.ivfDeleteSink(idx)(
+    graft.stream.IndexIngest.deleteSink(IndexFamily.Ivf, idx)(
       Seq(998L).toDF("vec_id"), 2L)
     assert(fp() == fpAfter)
 
@@ -2857,7 +2900,7 @@ class StreamingSpec extends AnyFunSuite {
       "artifact must stay marker-valid after the delete lifecycle")
 
     // a LATER append continues from the same chain (delete then add)
-    graft.stream.IndexIngest.ivfAppendSink(idx)(
+    graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, idx, DefaultApp)(
       Seq((100L, vec())).toDF("vec_id", "embedding"), 3L)
     assert(liveIds() == (0L until 40L).toSet -- Set(3L, 7L, 11L) + 100L)
   }
