@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -23,11 +23,14 @@ import org.apache.spark.sql.types.StructType
   *
   * Everything else is written once over the kind: the candidate pool
   * and the servers in [[Similarity]] (one coarse pool per kind feeding
-  * the shared exact refine), the bootstrap, append, compaction and
-  * paired-generation sinks and the gate's heal/retrain in
-  * [[graft.stream.IndexIngest]]. */
+  * the shared exact refine) and the gate's heal/retrain in
+  * [[graft.stream.IndexIngest]]. Bound to its IVF sibling ([[over]]) a
+  * kind is an [[IndexMember]] like the three index families, so the
+  * bootstrap, append sink, compaction and paired sink are the
+  * families' own. A code table takes no deletes: its rows are derived
+  * from the IVF lists, which carry the pair's tombstones. */
 sealed abstract class CodeTable(val member: String, val schema: StructType,
-    val rankCol: String) {
+    val rankCol: String) extends PairMember {
 
   /** Build the whole table (model dir + `codes/`) under `staging` from
     * unit vectors with their cell riding each row. */
@@ -54,6 +57,35 @@ sealed abstract class CodeTable(val member: String, val schema: StructType,
   def scoreCol: String
   def score: Column
   def order: Column
+
+  /** This table as the streaming index member beside the IVF
+    * artifact at `ivfBase`: it fingerprints and prepares rows as IVF
+    * does (the table indexes the same vector set), builds and encodes
+    * with cells by assignment to `ivfBase`'s stored centroids — so the
+    * codes shard identically to the lists from the first byte — and
+    * compacts by re-sorting each cell partition of `codes/` into one
+    * file. The model dir (PQ's codebook, SQ8's params) is never
+    * restaged by a compaction, so it survives the publish byte for
+    * byte; streamed batches encode against that FROZEN model (never a
+    * retrain — the recall gate is where a drifted model fires one). */
+  def over(ivfBase: String): IndexMember =
+    new IndexMember(IndexFamily.Ivf.rowHash) {
+      override def prepare(rows: DataFrame): DataFrame =
+        IndexFamily.Ivf.prepare(rows)
+      def build(v: DataFrame, staging: String): Unit =
+        buildFromNv(CodeTable.assignedNv(v, ivfBase), staging)
+      def append(v: DataFrame, live: String, batchId: Long,
+          appId: String): Unit =
+        graft.io.Store.writePartitionedParquet(encode(v, ivfBase, live),
+          s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
+      def compactInto(spark: SparkSession, live: String,
+          staging: String): Unit =
+        graft.io.Store.writePartitionedParquet(
+          spark.read.schema(schema).parquet(s"$live/codes")
+            .select(schema.fieldNames.toSeq.map(col): _*),
+          s"$staging/codes", Seq("cell"), Seq("vec_id"))
+      def layoutDir: String = "codes"
+    }
 }
 
 object CodeTable {

@@ -4,15 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** One mutable index family — the persisted node outputs downstream
-  * nodes reuse (`R/DataFrameOperationR.R:124-197`) that also take
-  * appends and deletes: IVF inverted lists, BM25 segments, LSH band
-  * postings. The three share one lifecycle (initialize-only bootstrap,
-  * exactly-once append and delete sinks, batch `remove_ids`, live-rows
-  * compaction), so a value here holds ONLY what differs between them:
+/** One streaming-maintained index — what the lifecycle verbs of
+  * [[graft.stream.IndexIngest]] need and nothing more: the six
+  * persisted node outputs downstream nodes reuse
+  * (`R/DataFrameOperationR.R:124-197`) that also take streamed
+  * appends. The three [[IndexFamily]] values (IVF lists, BM25
+  * segments, LSH bands) are members themselves; a [[CodeTable]] kind
+  * (PQ, SQ8, BQ codes) becomes one once bound to its IVF sibling
+  * ([[CodeTable.over]]). A value here holds only what differs between
+  * members:
   *
-  *  - the member id column ([[idCol]]) — also the stored tombstones'
-  *    column;
   *  - the row-hash fingerprint kernel ([[rowHash]], [[parts]],
   *    [[partsWhere]]): the chained marker is `(n, ⊕ rowHash)` over the
   *    live members, so appends compose `fp(A ∪ B) = (nA+nB, xA⊕xB)` and
@@ -20,14 +21,14 @@ import org.apache.spark.sql.functions._
   *    every writer hashes a row through this one kernel;
   *  - the batch preparation ([[prepare]]), the full [[build]] and the
   *    [[append]] body;
-  *  - the stored `(id, hash)` rows a removal resolves through
-  *    ([[stored]], [[storedHash]]) — a delete request carries only ids;
-  *  - the live-rows compaction body ([[compactInto]]).
+  *  - the live-rows compaction body ([[compactInto]]) and the
+  *    partitioned child whose file count drives the compaction policy
+  *    ([[layoutDir]]).
   *
-  * The protocol is written once over the family: the bootstrap, sinks
-  * and compaction in [[graft.stream.IndexIngest]], the removal plan and
-  * batch `applyDeletes` in [[IndexDelete]]. */
-sealed abstract class IndexFamily(val idCol: String, val rowHash: Column) {
+  * The protocol is written once over the member: the initialize-only
+  * bootstrap, the exactly-once append sink, compaction and its policy
+  * in [[graft.stream.IndexIngest]]. */
+abstract class IndexMember(val rowHash: Column) {
 
   /** Fingerprint parts `(count, xor of row hashes)` of `df`. */
   def parts(df: DataFrame): (Long, Long) = partsWhere(df, lit(true)).head
@@ -48,16 +49,47 @@ sealed abstract class IndexFamily(val idCol: String, val rowHash: Column) {
   def append(rows: DataFrame, live: String, batchId: Long,
       appId: String): Unit
 
+  /** The compaction body: `live`'s LIVE rows (tombstoned members
+    * dropped) rewritten into `staging` in one file per partition. */
+  def compactInto(spark: SparkSession, live: String, staging: String): Unit
+
+  /** The partitioned child each append adds files to — what the
+    * compaction policy counts per partition dir. */
+  def layoutDir: String
+}
+
+/** A member of a generation-pointer pair
+  * ([[graft.stream.IndexIngest.bootstrapPair]]): the IVF lists, or a
+  * [[CodeTable]] sharded by them. `member` names its dir inside a
+  * generation; [[over]] binds it to that generation's IVF base. */
+trait PairMember {
+  def member: String
+  def over(ivfBase: String): IndexMember
+}
+
+/** One mutable index family: IVF inverted lists, BM25 segments, LSH
+  * band postings. Beyond the [[IndexMember]] lifecycle the three also
+  * take deletes (exactly-once delete sink, batch `remove_ids`), so a
+  * family adds what a removal resolves through:
+  *
+  *  - the member id column ([[idCol]]) — also the stored tombstones'
+  *    column;
+  *  - the stored `(id, hash)` rows ([[stored]], [[storedHash]]) — a
+  *    delete request carries only ids.
+  *
+  * The delete verbs take an `IndexFamily`, so a delete against a code
+  * table does not compile: its codes are derived from the IVF
+  * sibling, which is the pair's one membership truth. The removal plan
+  * and batch `applyDeletes` live in [[IndexDelete]]. */
+sealed abstract class IndexFamily(val idCol: String, hash: Column)
+    extends IndexMember(hash) {
+
   /** The stored rows carrying every member's [[idCol]] and
     * [[storedHash]] — what a removal resolves its victims through. */
   def stored(spark: SparkSession, base: String): DataFrame
 
   /** The stored value of [[rowHash]] on a [[stored]] row. */
   def storedHash: Column
-
-  /** The compaction body: `live`'s LIVE rows (tombstoned members
-    * dropped) rewritten into `staging` in one file per partition. */
-  def compactInto(spark: SparkSession, live: String, staging: String): Unit
 }
 
 object IndexFamily {
@@ -66,11 +98,15 @@ object IndexFamily {
     * inverted lists. `cells` is the trained centroid count — the
     * fixture default stays 16 (oracle parity with the batch queries);
     * a production bootstrap over a large corpus passes ⌈√n⌉ (PERF.md
-    * round-14: the lever that keeps probe cost O(√n·nprobe)). Appends,
-    * probes and retrains are count-agnostic: they read the stored
-    * centroid frame. */
+    * round-14: the lever that keeps probe cost O(√n·nprobe)). Appends
+    * and probes read the stored centroid frame; heals and retrains
+    * retrain at the stored centroid count. */
   class Ivf private[IndexFamily] (val cells: Int) extends IndexFamily(
-      "vec_id", xxhash64(to_json(struct(col("vec_id"), col("embedding"))))) {
+      "vec_id", xxhash64(to_json(struct(col("vec_id"), col("embedding")))))
+      with PairMember {
+    def member: String = "ivf"
+    /** The lists are their own IVF sibling. */
+    def over(ivfBase: String): IndexMember = this
     /** Rows with their `norm`; zero vectors (cosine 0/0) dropped. */
     override def prepare(rows: DataFrame): DataFrame = {
       graft.functions.VectorExpressions.register(rows.sparkSession)
@@ -89,6 +125,7 @@ object IndexFamily {
       * cell partition, tombstoned rows omitted. */
     def compactInto(spark: SparkSession, live: String, staging: String): Unit =
       Similarity.writeLists(IndexDelete.liveListsAt(spark, live), staging)
+    def layoutDir: String = "assignments"
   }
 
   object Ivf extends Ivf(16) {
@@ -123,6 +160,7 @@ object IndexFamily {
     def stored(spark: SparkSession, base: String): DataFrame =
       Retrieval.docHashAt(spark, base)
     def storedHash: Column = col("h")
+    def layoutDir: String = "postings"
 
     /** The Lucene merge, run WITHOUT re-reading any document text:
       * postings rows `(doc_id, dl, term, tf)` are segment-independent
@@ -240,6 +278,7 @@ object IndexFamily {
       raw
     }
     def storedHash: Column = col("h64")
+    def layoutDir: String = "bands"
 
     /** Each band partition's per-batch posting files rewritten to one
       * sorted file per band, and the digest rows (duplicated across

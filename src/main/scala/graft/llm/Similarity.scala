@@ -154,7 +154,7 @@ object Similarity {
     * every probe query. */
   private[graft] def ivfIndexBase(spark: SparkSession, dir: String): String =
     ivfIndex.ensure(dir)(corpusParts(spark, dir))(
-      ivfBuildFrom(normed(spark, dir), _))
+      ivfBuildFrom(normed(spark, dir), _, 16))
 
   /** THE IVF build pipeline (train centroids → assign every vector →
     * cell-major write), parameterized on the vector SOURCE `(vec_id,
@@ -165,16 +165,18 @@ object Similarity {
     * or training change lands exactly once.
     *
     * `cells` is the provisioning lever the round-14 scale curves
-    * measured (PERF.md): the fixture sites pin 16 (oracle
-    * determinism); a production deployment passes ⌈√n⌉ so the
-    * per-probe candidate pool is O(√n·nprobe) instead of a constant
+    * measured (PERF.md), and every caller names it: the fixture sites
+    * pin 16 (oracle determinism), the streaming family passes its
+    * `cells`, and its heals and retrains pass the stored centroid
+    * count. A production deployment passes ⌈√n⌉ so the per-probe
+    * candidate pool is O(√n·nprobe) instead of a constant
     * fraction of the corpus — the difference between a flat probe
     * curve and a smaller-constant quadratic. Downstream consumers are
     * count-agnostic (probes read the stored centroid frame; layouts
     * are cell-major whatever the cell count), so the lever is safe to
     * set per artifact. */
   private[graft] def ivfBuildFrom(v: DataFrame, staging: String,
-      cells: Int = 16): Unit = {
+      cells: Int): Unit = {
     ivfTrainCentroids(v, cells).coalesce(1).write.mode("overwrite")
       .parquet(s"$staging/centroids")
     writeLists(assignToCentroids(v, centroidsAt(v.sparkSession, staging)),
@@ -1792,7 +1794,7 @@ object Similarity {
   private def rtIndexBases(spark: SparkSession, dir: String): (String, String) = {
     lazy val parts = corpusParts(spark, dir) // one scan for a cold pair
     val ivfBase =
-      rtIvfIndex.ensure(dir)(parts)(ivfBuildFrom(normed(spark, dir), _))
+      rtIvfIndex.ensure(dir)(parts)(ivfBuildFrom(normed(spark, dir), _, 16))
     (ivfBase, rtPqIndex.ensure(dir)(parts)(pqBuildInto(spark, dir, _, ivfBase)))
   }
 
@@ -2331,7 +2333,7 @@ object Similarity {
   private def ivfIncIndexBase(spark: SparkSession, dir: String): String = {
     lazy val Seq(base, batch) = incParts(spark, dir)
     ivfIncIndex.ensureIncremental(dir)(base, batch)(
-      ivfBuildFrom(normed(spark, dir).filter(!incBatchPred), _))(
+      ivfBuildFrom(normed(spark, dir).filter(!incBatchPred), _, 16))(
       ivfAppendInto(normed(spark, dir).filter(incBatchPred), _))
   }
 

@@ -1,27 +1,34 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.io.{ArtifactStore, Store}
-import graft.llm.{CodeTable, IndexDelete, IndexFamily, Similarity}
+import graft.io.ArtifactStore
+import graft.llm.{CodeTable, IndexDelete, IndexFamily, IndexMember,
+  PairMember, Similarity}
 
 /** Streaming maintenance of the persisted mutable indexes — one
-  * lifecycle written once over the [[IndexFamily]] (IVF lists, BM25
-  * segments, LSH bands) and once over the [[CodeTable]] kind (PQ, SQ8,
-  * BQ codes): the `readStream → foreachBatch` twin of the nightly
-  * appends ([[graft.llm.Similarity.s16IncrementalIndexUpdate]], s17,
-  * d19). A feed (a crawler's embedding stage, a CDC tail of the
-  * documents table) drives [[appendSink]], which folds each
-  * micro-batch into the artifact without re-reading the base corpus —
-  * IVF by assignment to the STORED centroids (no Lloyd round ever runs
-  * on the stream), BM25 as one delta segment, LSH as new band-posting
-  * files — and the artifact stays continuously probe-able
+  * lifecycle written once over the [[IndexMember]]: the three
+  * [[IndexFamily]] values (IVF lists, BM25 segments, LSH bands) and
+  * each [[CodeTable]] kind (PQ, SQ8, BQ codes) bound to its IVF
+  * sibling ([[CodeTable.over]]). It is the `readStream → foreachBatch`
+  * twin of the nightly appends
+  * ([[graft.llm.Similarity.s16IncrementalIndexUpdate]], s17, d19). A
+  * feed (a crawler's embedding stage, a CDC tail of the documents
+  * table) drives [[appendSink]], which folds each micro-batch into the
+  * artifact without re-reading the base corpus — IVF by assignment to
+  * the STORED centroids (no Lloyd round ever runs on the stream), BM25
+  * as one delta segment, LSH as new band-posting files, a code table
+  * as codes encoded against its frozen model — and the artifact stays
+  * continuously probe-able
   * (marker-validated readers either see the pre-batch or the
   * post-batch index, never a partial append —
   * [[graft.io.ArtifactStore.mutate]]'s contract). [[deleteSink]]
-  * removes members as tombstone appends; [[compact]] makes the
-  * removals physical.
+  * removes members of a family as tombstone appends; [[compact]] makes
+  * the removals physical. The IVF-PQ recall gate — in place
+  * ([[recallGateAndRetrain]]) or over a generation-pointer pair
+  * ([[recallGateAndRetrainPaired]]) — is one cycle that differs only
+  * in where the retrained generation publishes.
   *
   * Exactly-once across micro-batch REPLAYS (a restarted streaming
   * query re-delivers its last uncommitted batch): the artifact itself
@@ -137,26 +144,30 @@ object IndexIngest {
     }
   }
 
-  /** One-time bootstrap of a family's index over the initial corpus
-    * (the family's full build through the atomic-publish path: IVF
+  /** One-time bootstrap of member `m`'s index over the initial corpus
+    * (the member's full build through the atomic-publish path: IVF
     * trains and writes its lists, BM25 writes the `base` segment and
     * the per-doc `dochash` identity sidecar the delete verb resolves
-    * through, LSH writes digests and band postings); a no-op when a
+    * through, LSH writes digests and band postings; a code table trains
+    * its model — PQ's codebook, SQ8's per-dim ranges, nothing for BQ —
+    * and writes its codes cell-major by assignment to the
+    * already-bootstrapped IVF sibling's centroids); a no-op when a
     * valid artifact exists — see [[BootstrapStatus]] for the skip
     * taxonomy. */
-  def bootstrap(f: IndexFamily, base: String,
+  def bootstrap(m: IndexMember, base: String,
       rows: DataFrame): BootstrapStatus = {
-    val v = f.prepare(rows)
-    bootstrapOnce(base, f.parts(v))(f.build(v, _))
+    val v = m.prepare(rows)
+    bootstrapOnce(base, m.parts(v))(m.build(v, _))
   }
 
-  /** Compact a family's index after a run of appends: the accumulated
+  /** Compact member `m`'s index after a run of appends: the accumulated
     * small per-batch files are rewritten into one sorted file per
-    * partition ([[IndexFamily.compactInto]] — IVF cells, BM25 segments
+    * partition ([[IndexMember.compactInto]] — IVF cells, BM25 segments
     * merged into one with df recounted, LSH bands and re-distinct
-    * digests), under the same publish lock and with the SAME
-    * fingerprint — the maintenance job a streaming-maintained index
-    * schedules periodically, exactly as Lucene merges segments.
+    * digests, a code table's cells), under the same publish lock and
+    * with the SAME fingerprint — the maintenance job a
+    * streaming-maintained index schedules periodically, exactly as
+    * Lucene merges segments.
     * Compaction is also where DELETES become physical (Lucene's merge
     * dropping deleted docs): tombstoned rows ([[deleteSink]]) are
     * omitted from the rewritten tables and the tombstone set is reset
@@ -165,13 +176,15 @@ object IndexIngest {
     * out), so "stored rows minus tombstones" is what the current
     * fingerprint has covered all along. Readers either see the pre- or
     * post-compaction file set (marker-swap), and the probe plans are
-    * unchanged. Streamed appends continue afterwards from the same
+    * unchanged. Children the body does not stage (IVF centroids, a
+    * code table's model dir, `stream_state`) survive the publish byte
+    * for byte, and streamed appends continue afterwards from the same
     * high-water mark. Returns false when there is no valid artifact to
     * compact. */
-  def compact(f: IndexFamily, spark: org.apache.spark.sql.SparkSession,
+  def compact(m: IndexMember, spark: org.apache.spark.sql.SparkSession,
       base: String): Boolean =
     ArtifactStore.rewrite(base) { (live, staging) =>
-      f.compactInto(spark, live, staging)
+      m.compactInto(spark, live, staging)
       clearTombstonesInto(live, staging)
     }
 
@@ -222,16 +235,6 @@ object IndexIngest {
     require(!appId.exists(c => c == '\t' || c == '\n' || c == '\r'),
       s"appId must not contain tab/newline: '$appId'")
 
-  /** [[commitOnce]] keyed by the plain append lineage. `parts` stays
-    * by-name through to commitOnce, so a replayed batch id is skipped
-    * before the batch's fingerprint job would run. */
-  private def appendOnce(base: String, batchId: Long,
-      parts: => (Long, Long), appId: String = DefaultApp)(
-      append: String => Unit): Unit = {
-    requireAppId(appId)
-    commitOnce(base, batchId, appId, parts)(append)
-  }
-
   /** The lineage a sink belongs to when the caller does not name one.
     * Multiple streaming queries feeding ONE artifact must pass
     * distinct `appId`s (the stable id the caller owns — Delta's
@@ -263,27 +266,33 @@ object IndexIngest {
     }
   }
 
-  /** The `foreachBatch` append sink of family `f`: fold one
-    * micro-batch (`(vec_id, embedding)` for IVF, `(doc_id, text)` for
-    * BM25 and LSH) into the index at `base`. Use as
-    * `stream.writeStream.foreachBatch(IndexIngest.appendSink(f, base,
-    * appId) _)`; `appId` names the lineage ([[DefaultApp]] when the
-    * artifact has one writer). It has no default: Scala allows default
-    * arguments on only one overload, and the [[CodeTable]] sink keeps
-    * its own.
+  /** The `foreachBatch` append sink of member `m`: fold one
+    * micro-batch (`(vec_id, embedding)` for IVF and the code tables,
+    * `(doc_id, text)` for BM25 and LSH) into the index at `base`. Use
+    * as `stream.writeStream.foreachBatch(IndexIngest.appendSink(m,
+    * base) _)`; `appId` names the lineage when several queries feed one
+    * artifact.
     *
-    * Same replay contract for every family: the batch-id high-water
+    * Same replay contract for every member: the batch-id high-water
     * mark lives INSIDE the artifact and commits in the same
     * [[graft.io.ArtifactStore.mutate]] as the rows, so a restarted
-    * query re-delivering a committed batch is a wholesale no-op. A
-    * grown BM25 index answers IDENTICALLY to a from-scratch single
+    * query re-delivering a committed batch is a wholesale no-op — and
+    * the batch's fingerprint parts stay by-name through to
+    * [[commitOnce]], so a replay is skipped before that job would run.
+    * A grown BM25 index answers IDENTICALLY to a from-scratch single
     * index ([[graft.llm.Retrieval.segmentedBm25Ranked]] merges df and
-    * totals over segments that partition the docs). */
-  def appendSink(f: IndexFamily, base: String, appId: String)(
+    * totals over segments that partition the docs). A code table's
+    * cells come from assignment to the IVF sibling's stored centroids —
+    * deterministic, so it stays aligned with what the IVF sink writes
+    * for the same feed regardless of which sink commits a batch first.
+    * Streamed vectors outside the bootstrap corpus's per-dim envelope
+    * clamp to SQ8 code 0/255 (s22's frozen-model trade): the recall
+    * gate, not the sink, is where a drifted model fires a retrain. */
+  def appendSink(m: IndexMember, base: String, appId: String = DefaultApp)(
       batch: DataFrame, batchId: Long): Unit = {
-    val v = f.prepare(batch)
-    appendOnce(base, batchId, f.parts(v), appId)(
-      f.append(v, _, batchId, appId))
+    requireAppId(appId)
+    val v = m.prepare(batch)
+    commitOnce(base, batchId, appId, m.parts(v))(m.append(v, _, batchId, appId))
   }
 
   /** The exactly-once streaming DELETE sink of family `f`: fold one
@@ -348,72 +357,10 @@ object IndexIngest {
     }
   }
 
-  /** One-time code-table bootstrap for any [[CodeTable]] kind: train
-    * the kind's model on the initial corpus (PQ's codebook, SQ8's
-    * per-dim `(vmin, vdiff)` ranges — one min/max aggregate — or, for
-    * BQ, nothing at all: the whole build is one map-only encode),
-    * encode against the STAGED (stored) model, and write the code table
-    * cell-major — cells by assignment to the already-bootstrapped IVF
-    * artifact's centroids at `ivfBase`, so the code table and the
-    * vector lists shard identically from the first byte. A no-op when
-    * already current for these vectors. */
-  def bootstrap(t: CodeTable, base: String, ivfBase: String,
-      vectors: DataFrame): BootstrapStatus = {
-    val v = IndexFamily.Ivf.prepare(vectors)
-    bootstrapOnce(base, IndexFamily.Ivf.parts(v)) {
-      t.buildFromNv(CodeTable.assignedNv(v, ivfBase), _)
-    }
-  }
-
-  /** The compressed-index twin of [[appendSink]] — one exactly-once
-    * sink for every code-table kind (PQ, SQ8, BQ codes beside the IVF
-    * vectors, BM25 segments and LSH postings): each micro-batch
-    * encodes against the STORED frozen model ([[CodeTable.encode]] —
-    * `IndexIVFPQ::add` = `sa_encode` with trained codewords, SQ8's
-    * `ScalarQuantizer::compute_codes` against the frozen ranges, BQ's
-    * 64 sign comparisons; never a retrain) and appends under its cells'
-    * partition dirs. Cells come from assignment to the IVF artifact's
-    * stored centroids — deterministic, so the code table stays aligned
-    * with what the IVF [[appendSink]] writes for the same feed regardless
-    * of which sink commits a batch first. Same replay contract as the
-    * siblings: the per-lineage high-water mark lives inside the
-    * artifact and commits in the same mutate as the rows.
-    *
-    * Note the frozen-model trade inherited from the batch posture
-    * (s22's frozen codebook): streamed vectors OUTSIDE the bootstrap
-    * corpus's per-dim envelope clamp to SQ8 code 0/255 — the recall
-    * gate, not the sink, is where a drifted model fires a retrain. BQ
-    * has no frozen model to drift from; it never needs an encode-side
-    * retrain, only the cell re-layout when the gate retrains the IVF
-    * generation (which is why it registers in [[DerivedKinds]]). */
-  def appendSink(t: CodeTable, base: String, ivfBase: String,
-      appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val v = IndexFamily.Ivf.prepare(batch)
-    appendOnce(base, batchId, IndexFamily.Ivf.parts(v), appId) { live =>
-      Store.writePartitionedParquet(t.encode(v, ivfBase, live),
-        s"$live/codes", Seq("cell"), Seq("vec_id"), SaveMode.Append)
-    }
-  }
-
-  /** Compact a code table after a run of appends — the one body every
-    * `codes/`-shaped table shares: re-sort each cell partition into one
-    * file, leaving everything else under the base (PQ's codebook, SQ8's
-    * params, stream_state) unstaged — so the publish swaps layout only
-    * and the fingerprint survives ([[compact]]'s contract). */
-  def compact(t: CodeTable, spark: org.apache.spark.sql.SparkSession,
-      base: String): Boolean =
-    ArtifactStore.rewrite(base) { (live, staging) =>
-      graft.io.Store.writePartitionedParquet(
-        spark.read.schema(t.schema).parquet(s"$live/codes")
-          .select(t.schema.fieldNames.toSeq.map(col): _*),
-        s"$staging/codes", Seq("cell"), Seq("vec_id"))
-    }
-
   /** The streaming RECALL GATE — s24's audit→decide→retrain loop at
     * index-maintenance cadence, for a streaming-maintained IVF-PQ pair
-    * (the IVF [[appendSink]] + that of [[CodeTable.Pq]]): every
-    * appended batch was
+    * (the [[appendSink]] of [[IndexFamily.Ivf]] and of
+    * [[CodeTable.Pq]] bound over it): every appended batch was
     * encoded against models that never saw it, so recall decays batch
     * by batch; the maintenance scheduler runs this gate (like
     * [[compact]], after a run of appends) and the index retrains
@@ -434,9 +381,10 @@ object IndexIngest {
     * ([[compact]]'s codebook-survival contract), so batch replay
     * protection carries straight across a retrain, and later appends
     * encode against the NEW frozen models — the Faiss retrain-and-
-    * keep-adding lifecycle. Deterministic training makes the result
-    * row-identical to a from-scratch bootstrap over the same vectors
-    * (spec-pinned).
+    * keep-adding lifecycle. The IVF side retrains at its STORED
+    * centroid count ([[rebuildIvf]]), and deterministic training makes
+    * the result row-identical to a from-scratch bootstrap over the same
+    * vectors at that count (spec-pinned).
     *
     * Two protocol guards (both review-caught):
     *
@@ -455,12 +403,6 @@ object IndexIngest {
     *    entirely DERIVABLE from the IVF artifact, so the gate rebuilds
     *    it up front: fingerprint = the IVF artifact's (same vector
     *    set), replay mark copied from the IVF artifact's.
-    *
-    * `panelMod` bounds the audit's cost: the exact-truth pass is
-    * O(|panel| · n) — every `panelMod`-th vector is audited (the
-    * s23/%4 convention at fixture scale); a production index raises
-    * it with n so the panel stays fixed-size (~1e4 queries) and the
-    * audit never outgrows the retrain it gates.
     *
     * The mark-equality check is advisory, not atomic with the
     * rewrites: it closes the steady-state skew case, not a sink
@@ -487,40 +429,17 @@ object IndexIngest {
     * the SLO is violated but the rebuild was deferred to an aligned
     * cycle. */
   def recallGateAndRetrain(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String, pqBase: String, panelMod: Long = 4,
+      ivfBase: String, pqBase: String,
       derived: Seq[(CodeTable, String)] = Nil
-      ): (Int, Long, Boolean, Boolean) = {
-    val members = (CodeTable.Pq -> pqBase) +: derived
-    val ivfFp = healIvf(spark, ivfBase)
-    // every code table is derivable from the IVF artifact — same heal
-    members.foreach { case (t, b) => healMember(spark, ivfBase, b, ivfFp, t) }
-    def lists = IndexDelete.liveListsAt(spark, ivfBase)
-    val (queries, truthRows, hits) =
-      auditRecall(spark, ivfBase, pqBase, panelMod)
-    val fired = Similarity.retrainDecision(truthRows, hits)
-    // skew deferral covers every co-retrained table: an IVF retrain
-    // re-cells the derived codes too, so folding an uncommitted batch
-    // in (or dropping a committed one) has exactly the PQ failure mode.
-    // Compared on APPEND lineages only: a delete batch never reaches
-    // the code-table sinks, so its del:-namespaced mark lives on the
-    // IVF base alone by design — full-map equality would defer the
-    // retrain forever after the first streamed delete (review-caught);
-    // the retrain itself reads the live lists, so removals are always
-    // consistently reflected on every rebuilt table
-    val retrained = fired && {
-      val ivfMarks = appendMarksOf(readState(ivfBase))
-      members.forall { case (_, b) => appendMarksOf(readState(b)) == ivfMarks }
-    }
-    if (retrained) {
+      ): (Int, Long, Boolean, Boolean) =
+    gateCycle(spark, ivfBase, (CodeTable.Pq -> pqBase) +: derived) {
+        (_, members, _) =>
       val ivfOk = ArtifactStore.rewrite(ivfBase) { (live, staging) =>
         // retrain from the LIVE members: tombstoned rows drop out of
         // the rewritten lists here (same physicalization as
         // [[compact]]) and the tombstone set resets — the preserved
         // fingerprint already covers exactly this membership
-        Similarity.ivfBuildFrom(
-          IndexDelete.liveListsAt(spark, live)
-            .select(col("vec_id"), col("embedding"), col("norm")),
-          staging)
+        rebuildIvf(spark, live, staging)
         clearTombstonesInto(live, staging)
       }
       require(ivfOk, s"no valid IVF artifact to retrain at $ivfBase")
@@ -532,11 +451,46 @@ object IndexIngest {
       // rewrite would leave that probe path on the old cell layout
       members.foreach { case (t, b) =>
         val ok = ArtifactStore.rewrite(b) { (_, staging) =>
-          buildMember(t, lists, staging)
+          buildMember(t, IndexDelete.liveListsAt(spark, ivfBase), staging)
         }
         require(ok, s"no valid ${t.member} artifact to retrain at $b")
       }
+      true
     }
+
+  /** THE recall-gate cycle both postures run: heal the IVF artifact,
+    * then each code-table member (every one is derivable from the IVF
+    * artifact — same heal); audit the IVF-PQ pair's recall; decide; and
+    * retrain only when the SLO fired AND every member's append marks
+    * agree with the IVF base's. `members` lists the code tables, PQ
+    * first. `retrain(ivfFp, members, ivfMarks)` builds and publishes
+    * the next generation — in place, or beside the current one under a
+    * pointer — and returns whether it published; `ivfMarks` is the IVF
+    * base's full mark map as the alignment check saw it.
+    *
+    * The skew deferral covers every co-retrained table: an IVF retrain
+    * re-cells the derived codes too, so folding an uncommitted batch in
+    * (or dropping a committed one) has exactly the PQ failure mode.
+    * Marks are compared on APPEND lineages only: a delete batch never
+    * reaches the code-table sinks, so its del:-namespaced mark lives on
+    * the IVF base alone by design — full-map equality would defer the
+    * retrain forever after the first streamed delete (review-caught);
+    * the retrain itself reads the live lists, so removals are always
+    * consistently reflected on every rebuilt table. */
+  private def gateCycle(spark: org.apache.spark.sql.SparkSession,
+      ivfBase: String, members: Seq[(CodeTable, String)])(
+      retrain: (String, Seq[(CodeTable, String)], Map[String, Long]) =>
+        Boolean): (Int, Long, Boolean, Boolean) = {
+    val ivfFp = healIvf(spark, ivfBase)
+    members.foreach { case (t, b) => healMember(spark, ivfBase, b, ivfFp, t) }
+    val (queries, truthRows, hits) =
+      auditRecall(spark, ivfBase, members.head._2)
+    val fired = Similarity.retrainDecision(truthRows, hits)
+    val ivfMarks = readState(ivfBase)
+    val retrained = fired &&
+      members.forall { case (_, b) =>
+        appendMarksOf(readState(b)) == appendMarksOf(ivfMarks) } &&
+      retrain(ivfFp, members, ivfMarks)
     (queries, hits, fired, retrained)
   }
 
@@ -574,17 +528,18 @@ object IndexIngest {
 
   /** The recall audit entirely off the artifacts (the s24 posture):
     * exact top-10 truth over the stored vectors vs what the compressed
-    * pair actually serves for every `panelMod`-th vector. Returns
+    * pair actually serves for the `vec_id % 4 = 0` panel (the s23/s24
+    * convention). The exact-truth pass is O(|panel| · n). Returns
     * `(queries, truthRows, hits)`. */
   private def auditRecall(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String, pqBase: String, panelMod: Long): (Int, Long, Long) = {
+      ivfBase: String, pqBase: String): (Int, Long, Long) = {
+    val inPanel = col("vec_id") % 4 === 0
     val lists = IndexDelete.liveListsAt(spark, ivfBase)
-    val panel = lists.filter(col("vec_id") % panelMod === 0)
+    val panel = lists.filter(inPanel)
       .select(col("vec_id"), col("embedding"), col("norm"))
     val nvAll = lists.select(col("vec_id"),
       expr(Similarity.UnitNvExpr).as("nv"))
-    Similarity.recallCounts(
-      Similarity.exactTop10(nvAll, col("vec_id") % panelMod === 0),
+    Similarity.recallCounts(Similarity.exactTop10(nvAll, inPanel),
       Similarity.serveFrom(CodeTable.Pq, spark, panel, ivfBase, pqBase))
   }
 
@@ -603,7 +558,7 @@ object IndexIngest {
   private val CurrentName = "CURRENT"
 
   private def genPaths(pairBase: String, gen: String): (String, String) =
-    (memberGenPath(pairBase, gen, "ivf"),
+    (memberGenPath(pairBase, gen, IndexFamily.Ivf.member),
       memberGenPath(pairBase, gen, CodeTable.Pq.member))
 
   /** The derived generation members the pair machinery can carry
@@ -678,37 +633,31 @@ object IndexIngest {
     * initialize-only semantics. */
   def bootstrapPair(pairBase: String, vectors: DataFrame,
       derived: Seq[CodeTable] = Nil): BootstrapStatus = {
-    def members(gen: String, ivfBase: String): Unit =
-      derived.foreach(
-        adoptMember(vectors.sparkSession, pairBase, gen, ivfBase, _))
-    currentGen(pairBase) match {
-      case Some(gen) =>
-        val (ivfBase, pqBase) = genPaths(pairBase, gen)
-        // the pair-level status is the WORST member status: discarding
-        // the PQ call's result made "IVF current, PQ kept-divergent"
-        // (a crash-recovered half-lifecycle) read as a clean repeat
-        // run (ADVICE r11 #4 follow-through, VERDICT r12 #6)
-        val s = BootstrapStatus.worst(
-          bootstrap(IndexFamily.Ivf, ivfBase, vectors),
-          bootstrap(CodeTable.Pq, pqBase, ivfBase, vectors))
-        members(gen, ivfBase)
-        s
-      case None =>
-        val (ivfBase, pqBase) = genPaths(pairBase, "g0")
-        // pointer absent but g0 artifacts possibly alive (a crash
-        // between the member builds and the pointer write): the
-        // re-run's inner statuses distinguish the clean retry (same
-        // corpus → the pointer write completes the bootstrap → Built)
-        // from the operator error (CHANGED corpus → the pair adopts
-        // the existing g0 artifacts, which must surface as divergence,
-        // not report Built over vectors it does not index)
-        val inner = BootstrapStatus.worst(
-          bootstrap(IndexFamily.Ivf, ivfBase, vectors),
-          bootstrap(CodeTable.Pq, pqBase, ivfBase, vectors))
-        members("g0", ivfBase)
-        swapCurrent(pairBase, "g0")
-        if (inner == BootstrapStatus.KeptDivergent) inner
-        else BootstrapStatus.Built
+    val current = currentGen(pairBase)
+    val gen = current.getOrElse("g0")
+    val ivfBase = genPaths(pairBase, gen)._1
+    // the pair-level status is the WORST member status: discarding
+    // the PQ call's result made "IVF current, PQ kept-divergent" (a
+    // crash-recovered half-lifecycle) read as a clean repeat run
+    // (ADVICE r11 #4 follow-through, VERDICT r12 #6). IVF bootstraps
+    // first: PQ shards by its cells
+    val s = Seq[PairMember](IndexFamily.Ivf, CodeTable.Pq).map { m =>
+      bootstrap(m.over(ivfBase), memberGenPath(pairBase, gen, m.member),
+        vectors)
+    }.reduce(BootstrapStatus.worst)
+    derived.foreach(
+      adoptMember(vectors.sparkSession, pairBase, gen, ivfBase, _))
+    if (current.isDefined) s
+    else {
+      // pointer absent but g0 artifacts possibly alive (a crash
+      // between the member builds and the pointer write): the re-run's
+      // inner statuses distinguish the clean retry (same corpus → the
+      // pointer write completes the bootstrap → Built) from the
+      // operator error (CHANGED corpus → the pair adopts the existing
+      // g0 artifacts, which must surface as divergence, not report
+      // Built over vectors it does not index)
+      swapCurrent(pairBase, gen)
+      if (s == BootstrapStatus.KeptDivergent) s else BootstrapStatus.Built
     }
   }
 
@@ -731,10 +680,13 @@ object IndexIngest {
         throw new IllegalStateException(
           s"no valid IVF artifact at $ivfBase — bootstrap failed?")), t)
 
-  /** The paired-generation sinks: each micro-batch resolves the
-    * CURRENT generation once and appends to that pair. Same replay
-    * contract as the fixed-base sinks (the high-water mark lives in
-    * each generation's artifact and is carried across retrains) PLUS
+  /** The paired-generation append sink of member `m` (the IVF lists;
+    * PQ always present; SQ8/BQ when the generation was bootstrapped
+    * with them in `derived`): each micro-batch resolves the CURRENT
+    * generation once and appends to that generation's member, bound
+    * over that generation's IVF base. Same replay contract as the
+    * fixed-base sinks (the high-water mark lives in each generation's
+    * artifact and is carried across retrains) PLUS
     * the swap-race guard: if the pointer moved while the batch was
     * committing, the commit landed on a RETIRED generation whose rows
     * the new one does not contain — the sink then throws, the
@@ -743,24 +695,14 @@ object IndexIngest {
     * so the replay appends instead of skipping). Together with the
     * gate's pre-swap mark re-check this closes the silent-drop
     * windows around a concurrent retrain (review-caught r12). */
-  def ivfAppendSinkPaired(pairBase: String, appId: String = DefaultApp)(
-      batch: DataFrame, batchId: Long): Unit =
-    onCurrentGen(pairBase, batchId) { gen =>
-      appendSink(IndexFamily.Ivf, genPaths(pairBase, gen)._1, appId)(
-        batch, batchId)
-    }
-
-  /** [[ivfAppendSinkPaired]]'s code-table twin: appends to the current
-    * generation's member `t` (PQ always present; SQ8/BQ when the
-    * generation was bootstrapped with them in `derived`). */
-  def appendSinkPaired(t: CodeTable, pairBase: String,
+  def appendSinkPaired(m: PairMember, pairBase: String,
       appId: String = DefaultApp)(batch: DataFrame, batchId: Long): Unit =
     onCurrentGen(pairBase, batchId) { gen =>
-      appendSink(t, memberGenPath(pairBase, gen, t.member),
-        genPaths(pairBase, gen)._1, appId)(batch, batchId)
+      appendSink(m.over(genPaths(pairBase, gen)._1),
+        memberGenPath(pairBase, gen, m.member), appId)(batch, batchId)
     }
 
-  /** [[ivfAppendSinkPaired]]'s DELETE twin ([[deleteSink]]):
+  /** [[appendSinkPaired]]'s DELETE twin ([[deleteSink]]):
     * tombstones land on the current generation's IVF base — the
     * pair's single membership truth. The compressed members' code
     * tables keep the deleted ids' codes until maintenance (the serve
@@ -777,7 +719,7 @@ object IndexIngest {
 
   /** The one generation guard every paired sink runs: resolve the
     * CURRENT generation, commit the batch there, then fail the batch
-    * if the pointer moved meanwhile (see [[ivfAppendSinkPaired]]). */
+    * if the pointer moved meanwhile (see [[appendSinkPaired]]). */
   private def onCurrentGen(pairBase: String, batchId: Long)(
       sink: String => Unit): Unit = {
     val gen = requireGen(pairBase)
@@ -822,32 +764,18 @@ object IndexIngest {
     * `midBuild` is a test seam invoked between the two artifact
     * builds — the widest point of the old mixed window. */
   def recallGateAndRetrainPaired(spark: org.apache.spark.sql.SparkSession,
-      pairBase: String, panelMod: Long = 4,
+      pairBase: String,
       midBuild: () => Unit = () => ()): (Int, Long, Boolean, Boolean) = {
     val gen = requireGen(pairBase)
     val (ivfBase, pqBase) = genPaths(pairBase, gen)
-    val ivfFp = healIvf(spark, ivfBase)
     // derived generation members join the heal, the skew deferral, the
     // build and the swap-race re-check — presence is the gen dir, not
     // the marker, so a crashed member publish heals instead of silently
     // dropping the table from the next generation
-    val members = (CodeTable.Pq -> pqBase) +: DerivedKinds.flatMap(t =>
-      memberIfPresent(pairBase, gen, t.member).map(t -> _))
-    members.foreach { case (t, p) => healMember(spark, ivfBase, p, ivfFp, t) }
-    val (queries, truthRows, hits) =
-      auditRecall(spark, ivfBase, pqBase, panelMod)
-    val fired = Similarity.retrainDecision(truthRows, hits)
-    // full IVF state snapshot (delete marks included — the swap-race
-    // re-check must catch a delete racing the builds: the new
-    // generation was built from lists read BEFORE that delete, so
-    // swapping would silently UNDO it); cross-artifact skew compares
-    // append lineages only, as in the fixed-base gate
-    val marksBefore = readState(ivfBase)
-    val appendsBefore = appendMarksOf(marksBefore)
-    var retrained = fired &&
-      members.forall { case (_, p) =>
-        appendMarksOf(readState(p)) == appendsBefore }
-    if (retrained) {
+    gateCycle(spark, ivfBase, (CodeTable.Pq -> pqBase) +:
+        DerivedKinds.flatMap(t =>
+          memberIfPresent(pairBase, gen, t.member).map(t -> _))) {
+        (ivfFp, members, marksBefore) =>
       val next = s"g${gen.stripPrefix("g").toLong + 1}"
       val ivfNew = genPaths(pairBase, next)._1
       // same vector set → the new generation carries the SAME
@@ -856,10 +784,7 @@ object IndexIngest {
       // (no appends since — identical content) or rebuilds (ensure
       // sees the fingerprint moved)
       ArtifactStore.ensure(ivfNew, ivfFp) { staging =>
-        Similarity.ivfBuildFrom(
-          IndexDelete.liveListsAt(spark, ivfBase)
-            .select(col("vec_id"), col("embedding"), col("norm")),
-          staging)
+        rebuildIvf(spark, ivfBase, staging)
         copyStateInto(ivfBase, staging)
       }
       midBuild() // the old mixed window: g<N> still serves, complete
@@ -878,30 +803,32 @@ object IndexIngest {
       // swapping would silently drop them. Abandon the swap instead
       // (the next cycle retrains against the moved fingerprint; the
       // half-built generation is revalidated-or-rebuilt by ensure).
-      // Together with the sinks' post-commit pointer re-check this
-      // leaves no commit unaccounted for (review-caught r12).
-      if (readState(ivfBase) != marksBefore ||
-          members.exists { case (_, p) =>
-            appendMarksOf(readState(p)) != appendsBefore }) {
-        retrained = false
-      } else swapCurrent(pairBase, next)
-      // retention (only after a real swap): keep the just-replaced
-      // generation as the reader grace copy; everything older goes
-      if (retrained) {
+      // The IVF side compares the FULL mark map (delete marks included:
+      // the new generation was built from lists read BEFORE a racing
+      // delete, so swapping would silently UNDO it). Together with the
+      // sinks' post-commit pointer re-check this leaves no commit
+      // unaccounted for (review-caught r12).
+      val raced = readState(ivfBase) != marksBefore ||
+        members.exists { case (_, p) =>
+          appendMarksOf(readState(p)) != appendMarksOf(marksBefore) }
+      if (!raced) {
+        swapCurrent(pairBase, next)
+        // retention: keep the just-replaced generation as the reader
+        // grace copy; everything older goes — plus pointer-swap tmp
+        // orphans from crashed swapCurrent calls: nothing else reaps
+        // the pair ROOT (the .tmp-* reaper runs inside artifact bases
+        // only), and pair maintenance is single-maintainer by design,
+        // so a .tmp- file here is always a prior crash's remnant
+        // (review-caught)
         val (fs, root) = fsb(pairBase)
-        // gN retention, plus pointer-swap tmp orphans from crashed
-        // swapCurrent calls: nothing else reaps the pair ROOT (the
-        // .tmp-* reaper runs inside artifact bases only), and pair
-        // maintenance is single-maintainer by design, so a .tmp- file
-        // here is always a prior crash's remnant (review-caught)
         fs.childNames(root)
           .filter(n => (n.startsWith("g") && n != next && n != gen) ||
             n.startsWith(".tmp-"))
           .map(fs.join(root, _))
           .foreach(fs.delete)
       }
+      !raced
     }
-    (queries, hits, fired, retrained)
   }
 
   /** Stage the replay high-water mark from a live artifact into a
@@ -940,15 +867,32 @@ object IndexIngest {
     // fingerprint. The rebuild physicalizes the deletes as a side
     // effect (ensure sweeps the stale tombstone dir with the other
     // old children).
-    val v = IndexDelete.liveListsAt(spark, ivfBase)
-      .select(col("vec_id"), col("embedding"), col("norm"))
-    val (n, x) = IndexFamily.Ivf.parts(v)
+    val (n, x) = IndexFamily.Ivf.parts(liveVectors(spark, ivfBase))
     ArtifactStore.ensure(ivfBase, ArtifactStore.fingerprint(n, x)) { staging =>
-      Similarity.ivfBuildFrom(v, staging)
+      rebuildIvf(spark, ivfBase, staging)
       copyStateInto(ivfBase, staging)
     }
     ()
   }
+
+  /** THE IVF rebuild the self-heal and both gate retrains share:
+    * `from`'s live vectors retrained into `staging` at `from`'s STORED
+    * centroid count, so an index bootstrapped at ⌈√n⌉ cells keeps that
+    * count through every heal and retrain (the cell count is recorded
+    * nowhere else). Deterministic training makes the result
+    * row-identical to a from-scratch bootstrap of the same vectors at
+    * that count. */
+  private def rebuildIvf(spark: org.apache.spark.sql.SparkSession,
+      from: String, staging: String): Unit =
+    IndexFamily.Ivf(Similarity.centroidsAt(spark, from).count().toInt)
+      .build(liveVectors(spark, from), staging)
+
+  /** The live `(vec_id, embedding, norm)` rows of the IVF artifact at
+    * `base` — stored members minus tombstones. */
+  private def liveVectors(spark: org.apache.spark.sql.SparkSession,
+      base: String): DataFrame =
+    IndexDelete.liveListsAt(spark, base)
+      .select(col("vec_id"), col("embedding"), col("norm"))
 
   /** The code-table heal shared by both gate postures and
     * [[bootstrapPair]]'s adoption path: roll back a crashed publish
@@ -976,11 +920,12 @@ object IndexIngest {
         }
     }
 
-  /** Per-partition-dir fragmentation of a cell-major table: the
-    * MAXIMUM part-file count across the `cell=*` dirs under
-    * `base/$sub` — each append adds one file per touched cell, so this
-    * is "how many appends since the last compaction" for the hottest
-    * cell. 0 when the table does not exist yet. */
+  /** Per-partition-dir fragmentation of a partitioned table: the
+    * MAXIMUM part-file count across the partition dirs (`cell=*`,
+    * `tbucket=*`, `band=*`) under `base/$sub` — each append adds one
+    * file per touched partition, so this is "how many appends since the
+    * last compaction" for the hottest one. 0 when the table does not
+    * exist yet. */
   def fragmentation(base: String, sub: String): Int = {
     val (fs, b) = fsb(base)
     val root = fs.join(b, sub)
@@ -991,34 +936,30 @@ object IndexIngest {
   }
 
   /** Compaction POLICY — the scheduler knob the raw `compact` calls
-    * lack: merge a streaming-maintained table's layout only when the
-    * hottest partition has accumulated at least `maxFilesPerCell`
-    * part files. Compacting after every batch would rewrite the whole
-    * table per append (O(index) work for O(batch) input — the
+    * lack: merge a streaming-maintained member's layout only when the
+    * hottest partition of its [[IndexMember.layoutDir]] has accumulated
+    * at least `maxFilesPerCell` part files, or as many delete batches
+    * have tombstoned it. Compacting after every batch would rewrite the
+    * whole table per append (O(index) work for O(batch) input — the
     * write-amplification failure Lucene's tiered merge policy exists
     * to avoid); never compacting degrades every probe with per-file
     * open/footer costs. The threshold is the tier: appends are
     * amortized against a bounded number of files per cell. Returns
     * true iff a compaction actually ran. */
-  def maybeCompactIvf(spark: org.apache.spark.sql.SparkSession,
+  def maybeCompact(m: IndexMember, spark: org.apache.spark.sql.SparkSession,
       base: String, maxFilesPerCell: Int = 4): Boolean =
-    (fragmentation(base, "assignments") >= maxFilesPerCell ||
+    (fragmentation(base, m.layoutDir) >= maxFilesPerCell ||
       tombstoneFiles(base) >= maxFilesPerCell) &&
-      compact(IndexFamily.Ivf, spark, base)
+      compact(m, spark, base)
 
-  /** Accumulated tombstone part-file count — [[maybeCompactIvf]]'s
+  /** Accumulated tombstone part-file count — [[maybeCompact]]'s
     * second trigger: each [[deleteSink]] batch appends one file, so
     * this is "delete batches since the last compaction" (the cheap
     * driver-side proxy for Lucene's deleted-docs-ratio merge trigger;
-    * an exact ratio would read parquet row counts per policy check). */
+    * an exact ratio would read parquet row counts per policy check).
+    * Always 0 on a code table, which takes no deletes. */
   def tombstoneFiles(base: String): Int = {
     val (fs, b) = fsb(base)
     fs.childNames(fs.join(b, "tombstones")).count(_.startsWith("part-"))
   }
-
-  /** [[maybeCompactIvf]] for a code table of kind `t`. */
-  def maybeCompact(t: CodeTable, spark: org.apache.spark.sql.SparkSession,
-      base: String, maxFilesPerCell: Int = 4): Boolean =
-    fragmentation(base, "codes") >= maxFilesPerCell &&
-      compact(t, spark, base)
 }

@@ -49,6 +49,39 @@ class BootstrapStatusSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$base/centroids").count() == 7L)
   }
 
+  test("a 7-cell index keeps 7 centroids through a heal and a fired retrain") {
+    // heals and retrains retrain at the STORED centroid count — the
+    // provisioning lever survives the maintenance loop instead of
+    // falling back to the fixture's 16 cells
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def vecs(ids: Seq[Long]): DataFrame =
+      ids.map(i => (i, Seq.fill(64)(rnd.nextFloat() - 0.5f)))
+        .toDF("vec_id", "embedding")
+    val base = vecs(0L until 40L)
+    val b1 = vecs(100L until 120L)
+    val (ivf, pq) = (tmp("ivf7"), tmp("pq7"))
+    def centroids(): Long = spark.read.parquet(s"$ivf/centroids").count()
+    assert(IndexIngest.bootstrap(IndexFamily.Ivf(7), ivf, base) == Built)
+    IndexIngest.bootstrap(Pq.over(ivf), pq, base)
+    assert(centroids() == 7L)
+    // heal: the marker is gone and no publish aside exists, so the
+    // gate re-marks the IVF artifact from its own rows
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ivf, "_FINGERPRINT"))
+    IndexIngest.recallGateAndRetrain(spark, ivf, pq)
+    assert(graft.io.ArtifactStore.currentFingerprint(ivf).isDefined,
+      "the gate must heal the marker-less IVF artifact")
+    assert(centroids() == 7L, "a heal must keep the stored centroid count")
+    // retrain: appends encoded against frozen models fire the gate
+    IndexIngest.appendSink(IndexFamily.Ivf, ivf)(b1, 0L)
+    IndexIngest.appendSink(Pq.over(ivf), pq)(b1, 0L)
+    val (_, h, fired, retrained) =
+      IndexIngest.recallGateAndRetrain(spark, ivf, pq)
+    assert(fired && retrained, s"the gate must fire and retrain (hits $h)")
+    assert(centroids() == 7L,
+      "a retrain must keep the stored centroid count")
+  }
+
   test("every single-artifact bootstrap path reports Built / Current / KeptDivergent") {
     val a = vecs(1, 48); val b = vecs(2, 48)
     val da = docs(1, 40); val db = docs(2, 40)
@@ -62,9 +95,9 @@ class BootstrapStatusSpec extends AnyFunSuite {
       (tmp("pq"), tmp("sq"), tmp("bq"), tmp("bm25"), tmp("lsh"))
     val surfaces: Seq[(String,
         DataFrame => IndexIngest.BootstrapStatus, DataFrame, DataFrame)] = Seq(
-      ("pq", IndexIngest.bootstrap(Pq, pqB, ivf, _), a, b),
-      ("sq", IndexIngest.bootstrap(Sq, sqB, ivf, _), a, b),
-      ("bq", IndexIngest.bootstrap(Bq, bqB, ivf, _), a, b),
+      ("pq", IndexIngest.bootstrap(Pq.over(ivf), pqB, _), a, b),
+      ("sq", IndexIngest.bootstrap(Sq.over(ivf), sqB, _), a, b),
+      ("bq", IndexIngest.bootstrap(Bq.over(ivf), bqB, _), a, b),
       ("bm25", IndexIngest.bootstrap(IndexFamily.Bm25, bmB, _), da, db),
       ("lsh", IndexIngest.bootstrap(IndexFamily.Lsh, lshB, _), da, db))
     // each tuple's function is closed over ONE fresh base, so the

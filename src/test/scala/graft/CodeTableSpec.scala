@@ -53,7 +53,7 @@ class CodeTableSpec extends AnyFunSuite {
       val idx = root.resolve(t.member).toString
       IndexIngest.bootstrap(IndexFamily.Ivf, ivfIdx,
         baseVecs.toDF("vec_id", "embedding"))
-      assert(IndexIngest.bootstrap(t, idx, ivfIdx,
+      assert(IndexIngest.bootstrap(t.over(ivfIdx), idx,
         baseVecs.toDF("vec_id", "embedding")) == IndexIngest.BootstrapStatus.Built)
       def stored(): Set[Row] =
         spark.read.schema(t.schema).parquet(s"$idx/codes").collect().toSet
@@ -61,7 +61,7 @@ class CodeTableSpec extends AnyFunSuite {
 
       val src = MemoryStream[(Long, Seq[Float])]
       val q = src.toDS().toDF("vec_id", "embedding").writeStream
-        .foreachBatch(IndexIngest.appendSink(t, idx, ivfIdx) _)
+        .foreachBatch(IndexIngest.appendSink(t.over(ivfIdx), idx) _)
         .start()
       try {
         src.addData(b1); q.processAllAvailable()
@@ -74,7 +74,7 @@ class CodeTableSpec extends AnyFunSuite {
       val fp = ArtifactStore.currentFingerprint(idx)
       val rows = stored()
       val before = layout(idx)
-      IndexIngest.appendSink(t, idx, ivfIdx)(b2.toDF("vec_id", "embedding"), 1L)
+      IndexIngest.appendSink(t.over(ivfIdx), idx)(b2.toDF("vec_id", "embedding"), 1L)
       assert(stored() == rows, "a replay must not double-ingest")
       assert(layout(idx) == before, "a replay must write nothing")
       assert(ArtifactStore.currentFingerprint(idx) == fp)
@@ -83,10 +83,12 @@ class CodeTableSpec extends AnyFunSuite {
       val frag = IndexIngest.fragmentation(idx, "codes")
       assert(frag > 1,
         "the appends must leave multi-file cells to make compaction real")
-      assert(!IndexIngest.maybeCompact(t, spark, idx, maxFilesPerCell = frag + 1))
+      assert(!IndexIngest.maybeCompact(t.over(ivfIdx), spark, idx,
+        maxFilesPerCell = frag + 1))
       assert(layout(idx) == before, "a declined compaction must not rewrite")
       // at the threshold: one file per cell, same fingerprint and rows
-      assert(IndexIngest.maybeCompact(t, spark, idx, maxFilesPerCell = frag))
+      assert(IndexIngest.maybeCompact(t.over(ivfIdx), spark, idx,
+        maxFilesPerCell = frag))
       assert(filesPerCell(idx).values.forall(_ == 1),
         s"compaction must leave one file per cell, got ${filesPerCell(idx)}")
       assert(ArtifactStore.currentFingerprint(idx) == fp,
@@ -101,6 +103,17 @@ class CodeTableSpec extends AnyFunSuite {
       }
       assert(IndexIngest.fragmentation(idx, "codes") == 1)
     }
+  }
+
+  test("a delete on a code table does not compile: the delete verbs take an IndexFamily") {
+    assertCompiles("IndexIngest.deleteSink(IndexFamily.Ivf, \"ivf\") _")
+    assertCompiles(
+      "IndexDelete.applyDeletes(IndexFamily.Ivf, spark, \"ivf\", spark.emptyDataFrame)")
+    assertDoesNotCompile("IndexIngest.deleteSink(Pq.over(\"ivf\"), \"pq\") _")
+    assertDoesNotCompile(
+      "IndexDelete.applyDeletes(Sq.over(\"ivf\"), spark, \"sq\", spark.emptyDataFrame)")
+    assertDoesNotCompile(
+      "IndexDelete.removalPlan(Bq.over(\"ivf\"), spark, \"bq\", spark.emptyDataFrame)")
   }
 
   test("ivfDeleteSinkPaired tombstones the current generation's IVF base only") {
@@ -174,7 +187,7 @@ class CodeTableSpec extends AnyFunSuite {
       .withColumn("vec_id", moveOnRead(col("vec_id")))
     val sinks: Seq[(String, (org.apache.spark.sql.DataFrame, Long) => Unit,
         org.apache.spark.sql.DataFrame)] = Seq(
-      ("ivf", IndexIngest.ivfAppendSinkPaired(pair) _, vecs),
+      ("ivf", IndexIngest.appendSinkPaired(IndexFamily.Ivf, pair) _, vecs),
       ("pq", IndexIngest.appendSinkPaired(Pq, pair) _, vecs),
       ("sq", IndexIngest.appendSinkPaired(Sq, pair) _, vecs),
       ("bq", IndexIngest.appendSinkPaired(Bq, pair) _, vecs),

@@ -85,9 +85,9 @@ class DeleteSweepSpec extends AnyFunSuite {
     val bq = root.resolve("bq").toString
     val df = all.toDF("vec_id", "embedding")
     graft.stream.IndexIngest.bootstrap(IndexFamily.Ivf, ivf, df)
-    graft.stream.IndexIngest.bootstrap(Pq, pq, ivf, df)
-    graft.stream.IndexIngest.bootstrap(Sq, sq, ivf, df)
-    graft.stream.IndexIngest.bootstrap(Bq, bq, ivf, df)
+    graft.stream.IndexIngest.bootstrap(Pq.over(ivf), pq, df)
+    graft.stream.IndexIngest.bootstrap(Sq.over(ivf), sq, df)
+    graft.stream.IndexIngest.bootstrap(Bq.over(ivf), bq, df)
     // remove 75% of the membership — far past the point where the
     // 32-slot pool would starve if tombstones still occupied slots
     // (32 × 25% live ≈ 8 < k=10)
@@ -146,7 +146,7 @@ class DeleteSweepSpec extends AnyFunSuite {
     val pq = root.resolve("pq").toString
     val df = all.toDF("vec_id", "embedding")
     graft.stream.IndexIngest.bootstrap(IndexFamily.Ivf, ivf, df)
-    graft.stream.IndexIngest.bootstrap(Pq, pq, ivf, df)
+    graft.stream.IndexIngest.bootstrap(Pq.over(ivf), pq, df)
     // the panel is captured BEFORE the wipe (a maintenance snapshot
     // whose queriers have all since been taken down — the most
     // degenerate serving state a delete-bearing index reaches)

@@ -47,7 +47,7 @@ class SinkReplaySpec extends AnyFunSuite {
     val (baseDocs, batchDocs) = (docs(1), docs(2))
 
     IndexIngest.bootstrap(IndexFamily.Ivf, at("ivf"), baseVecs)
-    IndexIngest.bootstrap(CodeTable.Pq, at("pq"), at("ivf"), baseVecs)
+    IndexIngest.bootstrap(CodeTable.Pq.over(at("ivf")), at("pq"), baseVecs)
     IndexIngest.bootstrap(IndexFamily.Bm25, at("bm25"), baseDocs)
     IndexIngest.bootstrap(IndexFamily.Lsh, at("lsh"), baseDocs)
     // delete batches name ids the bootstraps indexed
@@ -56,7 +56,7 @@ class SinkReplaySpec extends AnyFunSuite {
     val sinks: Seq[(String, String, Long => Unit)] = Seq(
       ("ivf", "ivf", IndexIngest.appendSink(IndexFamily.Ivf, at("ivf"),
         DefaultApp)(batchVecs, _)),
-      ("pq", "pq", IndexIngest.appendSink(CodeTable.Pq, at("pq"), at("ivf"))(
+      ("pq", "pq", IndexIngest.appendSink(CodeTable.Pq.over(at("ivf")), at("pq"))(
         batchVecs, _)),
       ("bm25", "bm25", IndexIngest.appendSink(IndexFamily.Bm25, at("bm25"),
         DefaultApp)(batchDocs, _)),

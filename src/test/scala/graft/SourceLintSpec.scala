@@ -29,6 +29,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `applyDeletes` wrapper, and the two row-hash fingerprint kernels
   * (vectors and documents) are written only in `llm/IndexFamily.scala`.
   *
+  * The families and the code tables bound to their IVF sibling share
+  * one [[llm.IndexMember]] lifecycle: `IndexIngest` defines each of
+  * `bootstrap`, `appendSink`, `compact` and `maybeCompact` exactly once
+  * and keeps no IVF-only twin of a member verb. Every
+  * `Similarity.ivfBuildFrom` call names its cell count.
+  *
   * The IVF coarse quantizer is written once in [[llm.Similarity]]: the
   * centroid ranking (the only `col("csim")` outside SQL text) lives in
   * `rankedAgainst`, and only that module names the artifact's
@@ -93,6 +99,38 @@ class SourceLintSpec extends AnyFunSuite {
           m.matched.replaceAll("\\s+", ""))
       }.toSeq
   }
+
+  private val ingestFile = "src/main/scala/graft/stream/IndexIngest.scala"
+
+  /** The member verbs `IndexIngest` defines once, over
+    * [[llm.IndexMember]]. */
+  private val memberVerbs = Seq("bootstrap", "appendSink", "compact",
+    "maybeCompact")
+
+  /** The IVF-only twins that merged into the member verbs. */
+  private val retiredIvfTwins = "maybeCompactIvf|ivfAppendSinkPaired"
+
+  /** Each `ivfBuildFrom(` call with fewer than three arguments — one
+    * that leaves the cell count unnamed. The `def` is not a call:
+    * (line, call). */
+  private[graft] def unsizedIvfBuilds(src: String): Seq[(Int, String)] =
+    """(\bdef\s+)?\bivfBuildFrom\s*\(""".r.findAllMatchIn(src)
+      .filter(_.group(1) == null)
+      .flatMap { m =>
+        var (depth, commas, i) = (1, 0, m.end)
+        while (depth > 0 && i < src.length) {
+          src(i) match {
+            case '(' | '[' | '{' => depth += 1
+            case ')' | ']' | '}' => depth -= 1
+            case ',' if depth == 1 => commas += 1
+            case _ =>
+          }
+          i += 1
+        }
+        if (commas >= 2) None
+        else Some((src.substring(0, m.start).count(_ == '\n') + 1,
+          src.substring(m.start, i).replaceAll("\\s+", "")))
+      }.toSeq
 
   private def isIndexFamily(f: Path): Boolean =
     f.endsWith(Paths.get("graft", "llm", "IndexFamily.scala"))
@@ -348,6 +386,58 @@ class SourceLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"${offenders.size} per-family lifecycle " +
       "entries or row-hash kernels; write them once over " +
       "graft.llm.IndexFamily:\n" + offenders.mkString("\n"))
+  }
+
+  test("the member-verb detectors count whole verb names and unsized IVF builds") {
+    val verbs = memberVerbs.mkString("|")
+    Seq("def bootstrap(m: IndexMember, base: String,",
+      "  def appendSink(m: IndexMember, base: String, appId: String",
+      "def compact(m: IndexMember, spark: SparkSession,",
+      "def maybeCompact(m: IndexMember, spark: SparkSession,")
+      .foreach(l => assert(perKindDefs(l, verbs).size === 1, l))
+    Seq("def bootstrapPair(pairBase: String, vectors: DataFrame,",
+      "def appendSinkPaired(m: PairMember, pairBase: String,",
+      "private def bootstrapOnce(base: String, parts: => (Long, Long))(",
+      "IndexIngest.compact(IndexFamily.Ivf, spark, base)")
+      .foreach(l => assert(perKindDefs(l, verbs).isEmpty, l))
+    Seq("def maybeCompactIvf(spark: SparkSession,",
+      "def ivfAppendSinkPaired(pairBase: String, appId: String)(")
+      .foreach(l => assert(perKindDefs(l, retiredIvfTwins).size === 1, l))
+    Seq("Similarity.ivfBuildFrom(v, staging)",
+      "ivfBuildFrom(normed(spark, dir), _))",
+      "Similarity.ivfBuildFrom(\n  IndexDelete.liveListsAt(spark, live)\n" +
+        "    .select(col(\"vec_id\"), col(\"norm\")),\n  staging)")
+      .foreach(l => assert(unsizedIvfBuilds(l).size === 1, l))
+    Seq("ivfBuildFrom(normed(spark, dir), _, 16))",
+      "Similarity.ivfBuildFrom(v, staging, cells)",
+      "ivfBuildFrom(f(a, b), s, cells = 7)",
+      "private[graft] def ivfBuildFrom(v: DataFrame, staging: String)",
+      "[[ivfBuildFrom]] is the one IVF build")
+      .foreach(l => assert(unsizedIvfBuilds(l).isEmpty, l))
+  }
+
+  test("IndexIngest defines each member verb once and no IVF-only twin") {
+    val f = Paths.get(ingestFile)
+    assert(Files.isRegularFile(f), s"run from the repository root: $f")
+    val src = Files.readString(f)
+    val defs = perKindDefs(src, memberVerbs.mkString("|")).groupBy(_._2)
+    memberVerbs.foreach { v =>
+      assert(defs.get(v).map(_.size).contains(1),
+        s"IndexIngest must define $v exactly once, over IndexMember; " +
+          s"found at lines ${defs.getOrElse(v, Nil).map(_._1)}")
+    }
+    val twins = perKindDefs(src, retiredIvfTwins)
+    assert(twins.isEmpty, s"IVF-only twins of member verbs: $twins; " +
+      "call the member verb with IndexFamily.Ivf")
+  }
+
+  test("every ivfBuildFrom call in src/main names its cell count") {
+    val offenders = sources("src/main/scala").flatMap { case (f, src) =>
+      unsizedIvfBuilds(src).map { case (line, hit) => s"$f:$line: $hit" }
+    }
+    assert(offenders.isEmpty, s"${offenders.size} ivfBuildFrom calls " +
+      "without a cell count; pass 16 at fixture sites, the family's " +
+      "cells or the stored centroid count:\n" + offenders.mkString("\n"))
   }
 
   test("the csim detector flags the column outside SQL text, with its def") {

@@ -674,12 +674,12 @@ trait IndexLifecycleContract extends StorageContract {
     assert(IndexIngest.bootstrap(IndexFamily.Ivf, ivf,
         base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
-    assert(IndexIngest.bootstrap(Pq, pq, ivf, base.toDF("vec_id", "embedding"))
+    assert(IndexIngest.bootstrap(Pq.over(ivf), pq, base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.Built)
     // exactly-once appends with replay marks living on the binding
     IndexIngest.appendSink(IndexFamily.Ivf, ivf, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.appendSink(Pq, pq, ivf)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSink(Pq.over(ivf), pq)(b1.toDF("vec_id", "embedding"), 0L)
     def listCount() = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)
       .parquet(s"$ivf/assignments").count()
@@ -740,7 +740,8 @@ trait IndexLifecycleContract extends StorageContract {
     assert(ArtifactStore.currentFingerprint(iv).isDefined)
     // paired append lands on the current generation through the binding
     val b1 = (100L until 110L).map(i => (i, vec()))
-    IndexIngest.ivfAppendSinkPaired(pair)(b1.toDF("vec_id", "embedding"), 0L)
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pair)(
+      b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSinkPaired(Pq, pair)(b1.toDF("vec_id", "embedding"), 0L)
     val n = spark.read
       .schema(graft.llm.Similarity.invertedListSchema)

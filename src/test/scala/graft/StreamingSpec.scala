@@ -1154,8 +1154,8 @@ class StreamingSpec extends AnyFunSuite {
     val pqIdx = root.resolve("pq").toString
     graft.stream.IndexIngest.bootstrap(
       IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.bootstrap(Pq,
-      pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.bootstrap(Pq.over(ivfIdx),
+      pqIdx, baseVecs.toDF("vec_id", "embedding"))
     def storedCodes(): Map[Long, (Long, Seq[Int])] = spark.read
       .schema(graft.llm.Similarity.pqCodesSchema)
       .parquet(s"$pqIdx/codes")
@@ -1166,7 +1166,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = src.toDS().toDF("vec_id", "embedding")
       .writeStream
       .foreachBatch(
-        graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx) _)
+        graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx) _)
       .start()
     try {
       src.addData(b1); q.processAllAvailable()
@@ -1175,7 +1175,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(storedCodes().size == 60, "batch 2 codes must be appended")
     } finally q.stop()
     // exactly-once: a replayed committed batch id is a wholesale no-op
-    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
       b2.toDF("vec_id", "embedding"), 1L)
     assert(storedCodes().size == 60, "replay must not double-ingest")
     assert(graft.io.ArtifactStore.currentFingerprint(pqIdx).isDefined)
@@ -1206,7 +1206,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(partFiles().values.exists(_ > 1),
       "appends should have left multi-file cells to make compaction real")
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(pqIdx)
-    assert(graft.stream.IndexIngest.compact(Pq, spark, pqIdx))
+    assert(graft.stream.IndexIngest.compact(Pq.over(ivfIdx), spark, pqIdx))
     assert(partFiles().values.forall(_ == 1),
       s"compaction must leave one file per cell, got ${partFiles()}")
     assert(graft.io.ArtifactStore.currentFingerprint(pqIdx) == fpBefore,
@@ -1236,8 +1236,8 @@ class StreamingSpec extends AnyFunSuite {
     val sqIdx = root.resolve("sq").toString
     graft.stream.IndexIngest.bootstrap(
       IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.bootstrap(Sq,
-      sqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.bootstrap(Sq.over(ivfIdx),
+      sqIdx, baseVecs.toDF("vec_id", "embedding"))
     def storedCodes(): Map[Long, (Long, Seq[Int])] = spark.read
       .schema(graft.llm.Similarity.sqCodesSchema)
       .parquet(s"$sqIdx/codes")
@@ -1248,7 +1248,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = src.toDS().toDF("vec_id", "embedding")
       .writeStream
       .foreachBatch(
-        graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx) _)
+        graft.stream.IndexIngest.appendSink(Sq.over(ivfIdx), sqIdx) _)
       .start()
     try {
       src.addData(b1); q.processAllAvailable()
@@ -1257,7 +1257,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(storedCodes().size == 60, "batch 2 codes must be appended")
     } finally q.stop()
     // exactly-once: a replayed committed batch id is a wholesale no-op
-    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq.over(ivfIdx), sqIdx)(
       b2.toDF("vec_id", "embedding"), 1L)
     assert(storedCodes().size == 60, "replay must not double-ingest")
     assert(graft.io.ArtifactStore.currentFingerprint(sqIdx).isDefined)
@@ -1298,7 +1298,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(partFiles().values.exists(_ > 1),
       "appends should have left multi-file cells to make compaction real")
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(sqIdx)
-    assert(graft.stream.IndexIngest.maybeCompact(Sq, spark, sqIdx,
+    assert(graft.stream.IndexIngest.maybeCompact(Sq.over(ivfIdx), spark, sqIdx,
       maxFilesPerCell = 2))
     assert(partFiles().values.forall(_ == 1),
       s"compaction must leave one file per cell, got ${partFiles()}")
@@ -1326,8 +1326,8 @@ class StreamingSpec extends AnyFunSuite {
     val bqIdx = root.resolve("bq").toString
     IndexIngest.bootstrap(IndexFamily.Ivf, ivfIdx,
       baseVecs.toDF("vec_id", "embedding"))
-    IndexIngest.bootstrap(Pq, pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    IndexIngest.bootstrap(Bq, bqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Pq.over(ivfIdx), pqIdx, baseVecs.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Bq.over(ivfIdx), bqIdx, baseVecs.toDF("vec_id", "embedding"))
     def bqRows(base: String) = spark.read
       .schema(graft.llm.Similarity.bqCodesSchema)
       .parquet(s"$base/codes").collect()
@@ -1337,13 +1337,13 @@ class StreamingSpec extends AnyFunSuite {
     // aligned appends through all three sinks
     IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+    IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
-    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq.over(ivfIdx), bqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(bqRows(bqIdx).size == 60, "the batch's codes must be appended")
     // replay is a wholesale no-op
-    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq.over(ivfIdx), bqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(bqRows(bqIdx).size == 60, "replay must not double-ingest")
     // the gate co-retrains the BQ table through the derived machinery
@@ -1354,11 +1354,11 @@ class StreamingSpec extends AnyFunSuite {
     val cleanIvf = root.resolve("clean-ivf").toString
     val cleanBq = root.resolve("clean-bq").toString
     IndexIngest.bootstrap(IndexFamily.Ivf, cleanIvf, all.toDF("vec_id", "embedding"))
-    IndexIngest.bootstrap(Bq, cleanBq, cleanIvf, all.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Bq.over(cleanIvf), cleanBq, all.toDF("vec_id", "embedding"))
     assert(bqRows(bqIdx) == bqRows(cleanBq),
       "retrained BQ codes must equal a from-scratch build on all vectors")
     // marks survived the retrain
-    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq.over(ivfIdx), bqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(bqRows(bqIdx) == bqRows(cleanBq),
       "replay after the co-retrain must not double-ingest")
@@ -1374,10 +1374,11 @@ class StreamingSpec extends AnyFunSuite {
       "the healed BQ table must rebuild to the same rows")
     // compaction policy: layout-only, threshold-gated
     // (appends above left multi-file cells only pre-retrain; force one)
-    IndexIngest.appendSink(Bq, bqIdx, ivfIdx)(
+    IndexIngest.appendSink(Bq.over(ivfIdx), bqIdx)(
       (300L until 305L).map(i => (i, vec())).toDF("vec_id", "embedding"), 1L)
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(bqIdx)
-    assert(IndexIngest.maybeCompact(Bq, spark, bqIdx, maxFilesPerCell = 2))
+    assert(IndexIngest.maybeCompact(Bq.over(ivfIdx), spark, bqIdx,
+      maxFilesPerCell = 2))
     assert(graft.io.ArtifactStore.currentFingerprint(bqIdx) == fpBefore,
       "compaction is layout-only: the content fingerprint must not move")
   }
@@ -1396,7 +1397,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(IndexIngest.resolveMember(Sq, pairBase).isDefined
       && IndexIngest.resolveMember(Bq, pairBase).isDefined,
       "withSq + withBq must create BOTH derived members")
-    for (sink <- Seq(IndexIngest.ivfAppendSinkPaired(pairBase) _,
+    for (sink <- Seq(IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase) _,
         IndexIngest.appendSinkPaired(Pq, pairBase) _,
         IndexIngest.appendSinkPaired(Sq, pairBase) _,
         IndexIngest.appendSinkPaired(Bq, pairBase) _))
@@ -1412,7 +1413,7 @@ class StreamingSpec extends AnyFunSuite {
     val cleanBq = root2.resolve("bq").toString
     IndexIngest.bootstrap(IndexFamily.Ivf, cleanIvf,
       (baseVecs ++ b1).toDF("vec_id", "embedding"))
-    IndexIngest.bootstrap(Bq, cleanBq, cleanIvf,
+    IndexIngest.bootstrap(Bq.over(cleanIvf), cleanBq,
       (baseVecs ++ b1).toDF("vec_id", "embedding"))
     def bqRows(base: String) = spark.read
       .schema(graft.llm.Similarity.bqCodesSchema)
@@ -1447,19 +1448,19 @@ class StreamingSpec extends AnyFunSuite {
     val sqIdx = root.resolve("sq").toString
     graft.stream.IndexIngest.bootstrap(
       IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.bootstrap(Pq,
-      pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.bootstrap(Sq,
-      sqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.bootstrap(Pq.over(ivfIdx),
+      pqIdx, baseVecs.toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.bootstrap(Sq.over(ivfIdx),
+      sqIdx, baseVecs.toDF("vec_id", "embedding"))
     for ((b, id) <- Seq((b1, 0L), (bSkew, 1L))) {
       graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
         b.toDF("vec_id", "embedding"), id)
-      graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+      graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
         b.toDF("vec_id", "embedding"), id)
     }
     // the SQ sink is one batch BEHIND: ivf/pq marks agree with each
     // other, so only the sq-mark check can defer this cycle
-    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq.over(ivfIdx), sqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     def sqCodeRows(base: String) = spark.read
       .schema(graft.llm.Similarity.sqCodesSchema)
@@ -1474,7 +1475,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(sqCodeRows(sqIdx) == sqBefore,
       "a deferred cycle must not touch the SQ table")
     // drain the skew — the next cycle retrains ALL THREE
-    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq.over(ivfIdx), sqIdx)(
       bSkew.toDF("vec_id", "embedding"), 1L)
     val (_, _, fired, retrained) =
       graft.stream.IndexIngest.recallGateAndRetrain(
@@ -1487,8 +1488,8 @@ class StreamingSpec extends AnyFunSuite {
     val cleanSq = root.resolve("clean-sq").toString
     graft.stream.IndexIngest.bootstrap(
       IndexFamily.Ivf, cleanIvf, all.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.bootstrap(Sq,
-      cleanSq, cleanIvf, all.toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.bootstrap(Sq.over(cleanIvf),
+      cleanSq, all.toDF("vec_id", "embedding"))
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "retrained SQ codes must equal a from-scratch build on all vectors")
     def paramRows(base: String) = spark.read
@@ -1500,7 +1501,7 @@ class StreamingSpec extends AnyFunSuite {
       graft.io.ArtifactStore.currentFingerprint(cleanSq),
       "the rewrite must keep the chained fingerprint (same vector set)")
     // replay protection survived the co-retrain
-    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq.over(ivfIdx), sqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "replay after the co-retrain must not double-ingest")
@@ -1518,7 +1519,7 @@ class StreamingSpec extends AnyFunSuite {
       "the healed SQ artifact must carry the IVF artifact's fingerprint")
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "the healed SQ table must rebuild to the same rows")
-    graft.stream.IndexIngest.appendSink(Sq, sqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Sq.over(ivfIdx), sqIdx)(
       bSkew.toDF("vec_id", "embedding"), 1L)
     assert(sqCodeRows(sqIdx) == sqCodeRows(cleanSq),
       "the healed mark must still block replays of committed batches")
@@ -1544,11 +1545,11 @@ class StreamingSpec extends AnyFunSuite {
     val pqIdx = root.resolve("pq").toString
     graft.stream.IndexIngest.bootstrap(
       IndexFamily.Ivf, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.bootstrap(Pq,
-      pqIdx, ivfIdx, baseVecs.toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.bootstrap(Pq.over(ivfIdx),
+      pqIdx, baseVecs.toDF("vec_id", "embedding"))
     graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
-    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     // SKEW DEFERRAL first: append one more batch to the IVF side only
     // — the marks disagree, so even a violated SLO must NOT retrain
@@ -1564,7 +1565,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$pqIdx/codebook").collect().toSet
       == cbBefore, "a deferred cycle must not touch the artifacts")
     // drain the skew (PQ catches up) — the next cycle may retrain
-    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
       bSkew.toDF("vec_id", "embedding"), 1L)
     assert(graft.io.ArtifactStore.currentFingerprint(pqIdx).isDefined,
       "pq must be valid after the drain append")
@@ -1594,8 +1595,8 @@ class StreamingSpec extends AnyFunSuite {
     val cleanPq = root.resolve("clean-pq").toString
     graft.stream.IndexIngest.bootstrap(
       IndexFamily.Ivf, cleanIvf, live.toDF("vec_id", "embedding"))
-    graft.stream.IndexIngest.bootstrap(Pq,
-      cleanPq, cleanIvf, live.toDF("vec_id", "embedding"))
+    graft.stream.IndexIngest.bootstrap(Pq.over(cleanIvf),
+      cleanPq, live.toDF("vec_id", "embedding"))
     def centroidRows(base: String) = spark.read
       .parquet(s"$base/centroids").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
@@ -1625,7 +1626,7 @@ class StreamingSpec extends AnyFunSuite {
     val nBefore = listRows(ivfIdx).size
     graft.stream.IndexIngest.appendSink(IndexFamily.Ivf, ivfIdx, DefaultApp)(
       b1.toDF("vec_id", "embedding"), 0L)
-    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(listRows(ivfIdx).size == nBefore,
       "replay after retrain must not double-ingest")
@@ -1637,7 +1638,7 @@ class StreamingSpec extends AnyFunSuite {
       b2.toDF("vec_id", "embedding"), 2L)
     assert(listRows(ivfIdx).size == nBefore + 5,
       "the maintenance loop must keep accepting appends after a retrain")
-    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
       b2.toDF("vec_id", "embedding"), 2L)
     // SELF-HEAL: simulate a crash inside a PQ rewrite (marker gone,
     // data intact) — the sinks would throw; the next gate cycle must
@@ -1654,7 +1655,7 @@ class StreamingSpec extends AnyFunSuite {
       "the healed PQ artifact must carry the IVF artifact's fingerprint")
     // the healed mark still blocks replays of committed batches
     val codesHealed = codeRows(pqIdx)
-    graft.stream.IndexIngest.appendSink(Pq, pqIdx, ivfIdx)(
+    graft.stream.IndexIngest.appendSink(Pq.over(ivfIdx), pqIdx)(
       b2.toDF("vec_id", "embedding"), 2L)
     assert(codeRows(pqIdx) == codesHealed,
       "replay after self-heal must not double-ingest")
@@ -1696,19 +1697,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(frag >= 2, s"appends should fragment the hottest cell, got $frag")
     // under the threshold: the policy must NOT rewrite (compacting per
     // append is O(index) work for O(batch) input)
-    assert(!graft.stream.IndexIngest.maybeCompactIvf(
+    assert(!graft.stream.IndexIngest.maybeCompact(IndexFamily.Ivf,
       spark, idx, maxFilesPerCell = frag + 1))
     assert(graft.stream.IndexIngest.fragmentation(idx, "assignments")
       == frag, "a declined policy check must not touch the layout")
     // at the threshold: one file per cell, fingerprint unchanged
     // (layout-only), and the next check is a no-op again
     val fpBefore = graft.io.ArtifactStore.currentFingerprint(idx)
-    assert(graft.stream.IndexIngest.maybeCompactIvf(
+    assert(graft.stream.IndexIngest.maybeCompact(IndexFamily.Ivf,
       spark, idx, maxFilesPerCell = frag))
     assert(graft.stream.IndexIngest.fragmentation(idx, "assignments") == 1)
     assert(graft.io.ArtifactStore.currentFingerprint(idx) == fpBefore,
       "policy-triggered compaction is layout-only")
-    assert(!graft.stream.IndexIngest.maybeCompactIvf(
+    assert(!graft.stream.IndexIngest.maybeCompact(IndexFamily.Ivf,
       spark, idx, maxFilesPerCell = 2),
       "a freshly-compacted index must not re-compact")
   }
@@ -1825,7 +1826,7 @@ class StreamingSpec extends AnyFunSuite {
     val pairBase = java.nio.file.Files.createTempDirectory("graft-pairrace")
       .resolve("ivfpq").toString
     IndexIngest.bootstrapPair(pairBase, baseVecs.toDF("vec_id", "embedding"))
-    IndexIngest.ivfAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
@@ -1835,8 +1836,8 @@ class StreamingSpec extends AnyFunSuite {
       .count()
     // race: a batch lands between the two generation builds
     val (q1, h1, fired1, retrained1) =
-      IndexIngest.recallGateAndRetrainPaired(spark, pairBase, 4, () => {
-        IndexIngest.ivfAppendSinkPaired(pairBase)(
+      IndexIngest.recallGateAndRetrainPaired(spark, pairBase, () => {
+        IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
           b2.toDF("vec_id", "embedding"), 1L)
         IndexIngest.appendSinkPaired(Pq, pairBase)(
           b2.toDF("vec_id", "embedding"), 1L)
@@ -1853,7 +1854,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(IndexIngest.currentGen(pairBase).contains("g1"))
     assert(listRows() == 65, "the new generation carries the racing batch")
     // and its replay against the new generation is a no-op
-    IndexIngest.ivfAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
       b2.toDF("vec_id", "embedding"), 1L)
     assert(listRows() == 65)
   }
@@ -1879,7 +1880,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(IndexIngest.resolveMember(Sq, pairBase).isDefined,
       "a withSq bootstrap must expose the generation's SQ base")
     def appendAll(b: Seq[(Long, Seq[Float])], id: Long): Unit = {
-      IndexIngest.ivfAppendSinkPaired(pairBase)(
+      IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
         b.toDF("vec_id", "embedding"), id)
       IndexIngest.appendSinkPaired(Pq, pairBase)(
         b.toDF("vec_id", "embedding"), id)
@@ -1895,7 +1896,7 @@ class StreamingSpec extends AnyFunSuite {
     var midGen: Option[String] = None
     var midSqServes = false
     val (_, h1, fired1, retrained1) =
-      IndexIngest.recallGateAndRetrainPaired(spark, pairBase, 4, () => {
+      IndexIngest.recallGateAndRetrainPaired(spark, pairBase, () => {
         midGen = IndexIngest.currentGen(pairBase)
         midSqServes = IndexIngest.resolveMember(Sq, pairBase).exists(p =>
           graft.io.ArtifactStore.currentFingerprint(p).isDefined)
@@ -1912,7 +1913,7 @@ class StreamingSpec extends AnyFunSuite {
     val cleanIvf = root2.resolve("ivf").toString
     val cleanSq = root2.resolve("sq").toString
     IndexIngest.bootstrap(IndexFamily.Ivf, cleanIvf, all.toDF("vec_id", "embedding"))
-    IndexIngest.bootstrap(Sq, cleanSq, cleanIvf, all.toDF("vec_id", "embedding"))
+    IndexIngest.bootstrap(Sq.over(cleanIvf), cleanSq, all.toDF("vec_id", "embedding"))
     assert(sqRows(g1Sq) == sqRows(cleanSq),
       "the new generation's SQ table must equal a from-scratch build")
     // replay through the paired sink lands on g1's mark map — no-op
@@ -1924,7 +1925,7 @@ class StreamingSpec extends AnyFunSuite {
     // and mark — the gate must observe the moved SQ mark and defer
     appendAll(b2, 1L)
     val (_, h2, fired2, retrained2) =
-      IndexIngest.recallGateAndRetrainPaired(spark, pairBase, 4, () => {
+      IndexIngest.recallGateAndRetrainPaired(spark, pairBase, () => {
         IndexIngest.appendSinkPaired(Sq, pairBase)(
           b3.toDF("vec_id", "embedding"), 2L)
       })
@@ -1934,7 +1935,7 @@ class StreamingSpec extends AnyFunSuite {
       "the pointer must not move when the swap is deferred")
     // drain: the feed delivers b3 to the other sinks; the next aligned
     // cycle completes the swap with the racing batch carried
-    IndexIngest.ivfAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
       b3.toDF("vec_id", "embedding"), 2L)
     IndexIngest.appendSinkPaired(Pq, pairBase)(
       b3.toDF("vec_id", "embedding"), 2L)
@@ -1969,7 +1970,7 @@ class StreamingSpec extends AnyFunSuite {
     IndexIngest.bootstrapPair(pairBase, baseVecs.toDF("vec_id", "embedding"))
     assert(IndexIngest.resolveMember(Sq, pairBase).isEmpty,
       "withSq=false must not create an SQ member")
-    IndexIngest.ivfAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
@@ -2097,7 +2098,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     // grow through the paired sinks (degrading recall vs the frozen
     // g0 models), then snapshot what the old pair serves
-    IndexIngest.ivfAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
@@ -2105,7 +2106,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(servedBefore.nonEmpty)
     var midChecked = false
     val (q, h, fired, retrained) = IndexIngest.recallGateAndRetrainPaired(
-      spark, pairBase, 4, () => {
+      spark, pairBase, () => {
         // the widest point of the old mixed window: new IVF built,
         // PQ training not started — the pointer must still name g0
         // and the served answer must be EXACTLY the pre-retrain one
@@ -2130,14 +2131,14 @@ class StreamingSpec extends AnyFunSuite {
       "the previous generation is kept for in-flight readers")
     // replay marks survived the swap: the committed batch is a
     // wholesale no-op against the NEW generation…
-    IndexIngest.ivfAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     IndexIngest.appendSinkPaired(Pq, pairBase)(
       b1.toDF("vec_id", "embedding"), 0L)
     assert(listRows(iv1) == 60, "replay after swap must not double-ingest")
     // …and a LATER batch still appends to the new generation
     val b2 = (200L until 205L).map(i => (i, vec()))
-    IndexIngest.ivfAppendSinkPaired(pairBase)(
+    IndexIngest.appendSinkPaired(IndexFamily.Ivf, pairBase)(
       b2.toDF("vec_id", "embedding"), 1L)
     IndexIngest.appendSinkPaired(Pq, pairBase)(
       b2.toDF("vec_id", "embedding"), 1L)
@@ -2886,7 +2887,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // deletes alone trigger the compaction policy (tombstone files)
     assert(graft.stream.IndexIngest.tombstoneFiles(idx) >= 2)
-    assert(graft.stream.IndexIngest.maybeCompactIvf(spark, idx,
+    assert(graft.stream.IndexIngest.maybeCompact(IndexFamily.Ivf, spark, idx,
       maxFilesPerCell = 2), "tombstone accumulation must trigger")
     assert(storedIds() == (0L until 40L).toSet -- Set(3L, 7L, 11L),
       "compaction must physically drop tombstoned rows")
