@@ -426,9 +426,9 @@ private[graft] object PosixFs extends ArtifactFs {
   *        RawLocalFileSystem or most object-store adapters: no). When
   *        true the acquisition skips the [[HadoopFs.LockSettleMs]]
   *        settle pause (the read-back stays — it is free and catches
-  *        configuration lies loudly); `commitOnce` takes the lock at
-  *        least twice per micro-batch, so on HDFS the pause was pure
-  *        fixed driver latency on the streaming hot path (ADVICE
+  *        configuration lies loudly); every streamed micro-batch
+  *        commit takes the lock once, so on HDFS the pause would be
+  *        pure fixed driver latency on the streaming hot path (ADVICE
   *        r13). Defaults to false — paying 30 ms on an actually-
   *        atomic store is safe; skipping the settle on a weak-create
   *        store is not. */
@@ -668,8 +668,9 @@ private[graft] final class HadoopFs(
           // the settle pause exists to catch weak-create racers whose
           // overwrite lands after our write; an actually-atomic create
           // (HDFS namenode) cannot race, so only the free read-back
-          // remains there (ADVICE r13: 2+ acquisitions per micro-batch
-          // made this pure fixed latency on the streaming hot path)
+          // remains there (ADVICE r13: one acquisition per micro-batch
+          // commit makes the pause pure fixed latency on the streaming
+          // hot path)
           if (!atomicCreate) Thread.sleep(HadoopFs.LockSettleMs)
           held = lockOwner(lockPath).contains(token)
         }

@@ -106,16 +106,12 @@ object ArtifactStore {
       client: ObjectStoreClient): Unit =
     registerBackend(scheme, new CasFs(client))
 
-  private def registerBackend(scheme: String, fs: ArtifactFs): Unit = {
+  private[graft] def registerBackend(scheme: String, fs: ArtifactFs): Unit = {
     require(scheme != null && scheme.nonEmpty && scheme != "file",
       s"register a remote scheme, not '$scheme' — local bases already " +
         "run on the POSIX binding")
     remoteBackends.put(scheme, fs)
     ()
-  }
-
-  private[graft] def unregisterHadoopFs(scheme: String): Unit = {
-    remoteBackends.remove(scheme); ()
   }
 
   /** Resolve a base/root string to (backend, backend-native path) —
@@ -298,52 +294,72 @@ object ArtifactStore {
     * restored. */
   def restoreAside(base: String): Boolean = {
     val (fs, b) = backendFor(base)
-    fs.lock(b) {
-      if (validFingerprint(fs, b).isDefined) false
-      else {
-        val asides = fs.childNames(b).filter(_.startsWith(".tmp-old-"))
-        var restored = false
-        asides.foreach { name =>
-          val a = fs.join(b, name)
-          val children = fs.childNames(a)
-          val (marker, data) = children.partition(_ == MarkerName)
-          (data ++ marker).foreach { child =>
-            // FENCED per child: the restore deletes live children and
-            // finally renames an OLD VALID MARKER back — a displaced
-            // hold running this loop over another holder's in-flight
-            // publish could mark a mixed old/new file set
-            // (review-caught; same class as the publish fence)
-            fs.verifyHeld(b)
-            val target = fs.join(b, child)
-            fs.delete(target)
-            fs.rename(fs.join(a, child), target)
-            restored = true
-          }
-          fs.delete(a)
-        }
-        restored
+    fs.lock(b)(validFingerprint(fs, b).isEmpty && restoreAsides(fs, b))
+  }
+
+  /** [[restoreAside]]'s body: the caller holds the lock and found no
+    * valid marker. */
+  private def restoreAsides(fs: ArtifactFs, b: String): Boolean = {
+    var restored = false
+    fs.childNames(b).filter(_.startsWith(".tmp-old-")).foreach { name =>
+      val a = fs.join(b, name)
+      val (marker, data) = fs.childNames(a).partition(_ == MarkerName)
+      (data ++ marker).foreach { child =>
+        // FENCED per child: the restore deletes live children and
+        // finally renames an OLD VALID MARKER back — a displaced hold
+        // running this loop over another holder's in-flight publish
+        // could mark a mixed old/new file set (review-caught; same
+        // class as the publish fence)
+        fs.verifyHeld(b)
+        val target = fs.join(b, child)
+        fs.delete(target)
+        fs.rename(fs.join(a, child), target)
+        restored = true
       }
+      fs.delete(a)
+    }
+    restored
+  }
+
+  /** The heal-or-initialize transition, decided under the ONE lock it
+    * writes in: roll a crashed publish back ([[restoreAside]]), then
+    * KEEP the valid artifact whatever its fingerprint — or, when none
+    * validates, build one marked `fingerprint`. `fingerprint` is
+    * evaluated only on the build branch and under the lock, so a
+    * fingerprint computed from the base's own rows covers exactly the
+    * rows the build reads, and no writer can publish between the
+    * "nothing valid here" decision and the build that would sweep its
+    * files. Returns the kept artifact's fingerprint, None when this call
+    * built. What the initialize-only streaming bootstraps and the recall
+    * gate's self-heals share ([[graft.stream.IndexIngest]]). */
+  def keepOrBuild(base: String)(fingerprint: => String)(
+      build: String => Unit): Option[String] = {
+    val (fs, b) = backendFor(base)
+    fs.lock(b) {
+      val kept = validFingerprint(fs, b).orElse(
+        if (restoreAsides(fs, b)) validFingerprint(fs, b) else None)
+      if (kept.isEmpty) lockedBuild(fs, b, fingerprint)(build)
+      kept
     }
   }
 
-  /** Lock-free currency check for READ paths ([[graft.io
-    * .ValidatedPathCache]]'s fast path): same marker + manifest
-    * validation as [[isCurrent]] but without taking the publish lock,
-    * so a cached reader is never blocked behind a concurrent
-    * rebuild's entire training body — during which the OLD artifact
-    * is marked, intact and serving by design. Concurrent renames can
-    * only produce a FALSE NEGATIVE (the reader then re-runs its
-    * ensure round, which does lock); a torn positive is impossible —
-    * the marker swaps atomically and validation demands the on-disk
-    * set match its manifest exactly. */
-  def isCurrentUnlocked(base: String, fingerprint: String): Boolean = {
+  /** Lock-free [[currentFingerprint]] for READ paths
+    * ([[ValidatedPathCache]]): the same marker + manifest validation
+    * without the publish lock, so a cached reader is never blocked
+    * behind a concurrent rebuild's entire training body — during which
+    * the OLD artifact is marked, intact and serving by design.
+    * Concurrent renames can only produce a FALSE NEGATIVE (None: the
+    * reader then re-runs its ensure round, which does lock); a torn
+    * positive is impossible — the marker swaps atomically and
+    * validation demands the on-disk set match its manifest exactly. */
+  def currentFingerprintUnlocked(base: String): Option[String] = {
     val (fs, b) = backendFor(base)
-    try validFingerprint(fs, b).contains(fingerprint)
+    try validFingerprint(fs, b)
     catch {
       // a file deleted between the walk and its stat (mid-publish
       // rename sweep) reads as "not current", never as an error
       case _: java.io.IOException | _: java.io.UncheckedIOException =>
-        false
+        None
     }
   }
 
@@ -361,9 +377,9 @@ object ArtifactStore {
     currentFingerprint(base).contains(fingerprint)
 
   /** The fingerprint the artifact currently carries — None when absent,
-    * partially published, or failing manifest validation. What a
-    * streaming appender reads to chain the next batch's fingerprint
-    * onto ([[graft.stream.IndexIngest]]). */
+    * partially published, or failing manifest validation. A read for
+    * callers that act on nothing under this base; a transition decides
+    * under the lock it writes in ([[mutate]], [[keepOrBuild]]). */
   def currentFingerprint(base: String): Option[String] = {
     val (fs, b) = backendFor(base)
     fs.lock(b)(validFingerprint(fs, b))
@@ -415,8 +431,8 @@ object ArtifactStore {
     publishStaged(fs, base, staging, fingerprint, aside)
   }
 
-  /** The append branch of [[mutate]], caller holds the lock and has
-    * already validated the expected fingerprint. */
+  /** The append branch of [[mutate]] and [[ensureIncremental]]: the
+    * caller holds the lock and has decided the new fingerprint. */
   private def lockedMutate(fs: ArtifactFs, base: String,
       newFingerprint: String)(append: String => Unit): Unit = {
     // fence BEFORE invalidating: a hold already known displaced must
@@ -513,21 +529,28 @@ object ArtifactStore {
     }
   }
 
-  /** In-place incremental update: when the artifact currently carries
-    * `expectFingerprint`, run `append` (which writes into the LIVE base
-    * — e.g. Spark append-mode into existing partition dirs), then
-    * re-manifest and re-mark as `newFingerprint`. Returns false — and
-    * does nothing — when the current artifact is absent, invalid, or
-    * carries any other fingerprint: the caller then falls back to a
-    * full [[ensure]] build. The marker is deleted before `append`
-    * touches anything, so a crash mid-append leaves an unmarked (=
-    * rebuild-on-next-touch) artifact, never a marked partial one. */
-  def mutate(base: String, expectFingerprint: String, newFingerprint: String)(
+  /** In-place incremental update, decided under the lock it writes
+    * in: `next` sees the fingerprint the current, fully valid artifact
+    * carries and returns the one to re-mark as — or None to decline (a
+    * replayed batch, a removal with nothing left to remove), touching
+    * nothing. Only then does `append` write into the LIVE base (e.g.
+    * Spark append-mode into existing partition dirs), and the base is
+    * re-manifested and re-marked. Whatever `next` reads of the artifact
+    * (replay marks, stored row hashes) it reads under the same lock, so
+    * no writer can move the artifact between the decision and the
+    * write. Throws IllegalStateException when no valid artifact exists:
+    * an append needs a built base. The marker is deleted before
+    * `append` touches anything, so a crash mid-append leaves an
+    * unmarked (= rebuild-on-next-touch) artifact, never a marked partial
+    * one. Returns whether `append` ran. */
+  def mutate(base: String)(next: String => Option[String])(
       append: String => Unit): Boolean = {
     val (fs, b) = backendFor(base)
     fs.lock(b) {
-      if (!validFingerprint(fs, b).contains(expectFingerprint)) false
-      else { lockedMutate(fs, b, newFingerprint)(append); true }
+      val cur = validFingerprint(fs, b).getOrElse(
+        throw new IllegalStateException(
+          s"no valid artifact at $base — build or bootstrap it first"))
+      next(cur).exists { fp => lockedMutate(fs, b, fp)(append); true }
     }
   }
 

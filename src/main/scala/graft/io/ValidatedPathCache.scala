@@ -12,8 +12,8 @@ package graft.io
   *
   * This cache therefore stores the `(base, fingerprint)` pair AS
   * VALIDATED and re-checks the marker on every read
-  * ([[ArtifactStore.isCurrentUnlocked]] — a LOCK-FREE manifest walk,
-  * file ops only, no Spark job, no corpus scan: taking the publish
+  * ([[ArtifactStore.currentFingerprintUnlocked]] — a LOCK-FREE manifest
+  * walk, file ops only, no Spark job, no corpus scan: taking the publish
   * lock here would block every cached reader behind a concurrent
   * rebuild's whole training body, during which the old artifact is
   * valid and serving by design; a racing rename can only produce a
@@ -47,13 +47,16 @@ final class ValidatedPathCache(maxEntries: Int = 1024) {
     * below serializes any actual build); last-put wins, and both get a
     * correct value. A refresh whose artifact does not validate
     * afterwards (e.g. a concurrent writer mid-flight) is returned but
-    * NOT cached — the next read retries. */
+    * NOT cached — the next read retries. The refresh's own ensure round
+    * is the only lock window a cold resolve takes: the post-refresh
+    * read is the same lock-free validation as the fast path. */
   def get(key: String)(refresh: => String): String = {
     m.get(key) match {
-      case Some((b, fp)) if ArtifactStore.isCurrentUnlocked(b, fp) => b
+      case Some((b, fp))
+          if ArtifactStore.currentFingerprintUnlocked(b).contains(fp) => b
       case _ =>
         val b = refresh
-        ArtifactStore.currentFingerprint(b) match {
+        ArtifactStore.currentFingerprintUnlocked(b) match {
           case Some(fp) => m.put(key, (b, fp))
           case None => m.remove(key)
         }

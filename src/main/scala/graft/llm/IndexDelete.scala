@@ -54,9 +54,6 @@ object IndexDelete {
   val DeleteMod = 17L
   val DeleteRes = 3L
 
-  private[graft] val tombstoneSchema =
-    StructType(Seq(StructField("vec_id", LongType)))
-
   /** Whether `base` carries any LIVE tombstones — the driver-side
     * branch every serving/maintenance read takes. Tests for part
     * FILES, not bare directory existence: compaction stages an EMPTY
@@ -124,22 +121,20 @@ object IndexDelete {
     * artifact of family `f`: the ids actually being removed (stored,
     * not already tombstoned — deduplicated) and their fingerprint
     * parts from the stored row hashes ([[IndexFamily.stored]] — the
-    * corpus is never re-read), computed BEFORE any mutation; the
-    * caller's `mutate` re-validates the expected fingerprint under the
-    * lock, so a racing writer turns this into a clean retry, never a
-    * torn apply. The whole read side is pinned in ONE collect of the
-    * victims' `(id, hash)` pairs — O(deletes)-small by design, the same
-    * scale bound the broadcast anti-joins rely on:
+    * corpus is never re-read). Callers evaluate it inside
+    * [[graft.io.ArtifactStore.mutate]]'s decision, under the lock its
+    * tombstones are written in, so the plan and the fingerprint it
+    * composes onto are one state of the artifact. The whole read side
+    * is pinned in ONE collect of the victims' `(id, hash)` pairs —
+    * O(deletes)-small by design, the same scale bound the broadcast
+    * anti-joins rely on:
     *
-    *  - the returned frame is PINNED, never lazy: a lazy plan is
-    *    re-executed inside the mutate body AFTER the marker is
-    *    dropped, and a concurrent same-fingerprint rewrite (compaction
-    *    swaps the underlying part files without moving the
-    *    fingerprint) between plan evaluation and mutate makes the
-    *    stale file listing fail mid-write — leaving the artifact
-    *    marker-less until the next heal. A local relation carries no
-    *    file references at all, so the commit window writes a value,
-    *    not a plan (ADVICE r12);
+    *  - the returned frame is PINNED, never lazy: a lazy plan would be
+    *    re-executed inside the mutate body AFTER the marker is dropped,
+    *    re-reading the stored rows and the tombstone dir the body
+    *    appends to. A local relation carries no file references at
+    *    all, so the commit window writes a value, not a plan (ADVICE
+    *    r12);
     *  - ONE collect, not a parts-aggregate plus a separate id
     *    collect: each was an index-scan job, doubling the streaming
     *    delete hot path's cost (review-caught). */
@@ -164,47 +159,29 @@ object IndexDelete {
       .coalesce(1).sortWithinPartitions(col(removedIds.columns.head))
       .write.mode("append").parquet(s"$live/tombstones")
 
-  /** The family-generic batch `remove_ids` protocol: take a removal
-    * plan (the ids actually being removed + their fingerprint parts,
-    * computed against the current artifact — [[removalPlan]]), and
-    * apply it as one fingerprint-checked mutation. Returns the number of
-    * members removed BY THIS CALL — Faiss `n_removed` semantics: 0
-    * when every id was absent or already tombstoned (the mark still
-    * moves for streaming callers, see
-    * [[graft.stream.IndexIngest.deleteSink]]), and ALSO 0 when a
-    * concurrent applier won the mutate race and landed the same
-    * removal first (the outcome is idempotent, but each removal is
-    * reported exactly once — two racers summing `dn` each would
-    * double-count, ADVICE r12). */
-  private[graft] def applyRemoval(base: String)(
-      plan: => (DataFrame, (Long, Long))): Long = {
-    // the expected fingerprint is captured BEFORE the plan reads any
-    // artifact state: a writer landing after this point flips the
-    // mutate below to false (clean retry). The reversed order would
-    // let a racing remover's plan validate against the POST-race
-    // fingerprint and xor an already-removed row's hash back in —
-    // silently corrupting the membership fingerprint (review-caught).
-    val cur = graft.io.ArtifactStore.currentFingerprint(base).getOrElse(
-      throw new IllegalStateException(
-        s"no valid index artifact at $base — build first"))
-    val (removedIds, (dn, dx)) = plan
-    if (dn == 0) return 0L
-    val next = graft.io.ArtifactStore.composed(cur, -dn, dx)
-    val ok = graft.io.ArtifactStore.mutate(base, cur, next)(
-      writeTombstones(_, removedIds))
-    // tolerate exactly one race: a concurrent applier landed the SAME
-    // removal from the same starting fingerprint (idempotent outcome —
-    // but the WINNER reported those removals; this call removed none)
-    if (!ok && !graft.io.ArtifactStore.currentFingerprint(base).contains(next))
-      throw new IllegalStateException(
-        s"index at $base changed under remove_ids — retry")
-    if (ok) dn else 0L
-  }
-
-  /** Batch `remove_ids` on a persisted index of family `f`. */
+  /** Batch `remove_ids` on a persisted index of family `f`: one
+    * [[graft.io.ArtifactStore.mutate]] whose decision evaluates the
+    * removal plan ([[removalPlan]]) under the lock, composes its parts
+    * out of the fingerprint it reads there, and declines when nothing
+    * is left to remove. Returns the number of members removed BY THIS
+    * CALL — Faiss `n_removed` semantics: 0 when every id was absent or
+    * already tombstoned — which includes a concurrent applier having
+    * landed the same removal first: its tombstones are what this
+    * call's plan reads, so each removal is reported exactly once (two
+    * racers summing `dn` each would double-count, ADVICE r12) and no
+    * hash is ever xor'd back in. */
   def applyDeletes(f: IndexFamily, spark: SparkSession, base: String,
-      ids: DataFrame): Long =
-    applyRemoval(base)(removalPlan(f, spark, base, ids))
+      ids: DataFrame): Long = {
+    var removedIds: DataFrame = null
+    var n = 0L
+    graft.io.ArtifactStore.mutate(base) { cur =>
+      val (planned, (dn, dx)) = removalPlan(f, spark, base, ids)
+      removedIds = planned
+      n = dn
+      Option.when(dn > 0)(graft.io.ArtifactStore.composed(cur, -dn, dx))
+    }(writeTombstones(_, removedIds))
+    n
+  }
 
   // -------------------------------------------------------------------
   // s32 — tombstone-aware serving on a persisted-and-mutated index

@@ -44,9 +44,9 @@ import graft.llm.{CodeTable, IndexDelete, IndexFamily, IndexMember,
   * Caller contract: batches carry NEW member ids (the d10/d14-style
   * incremental dedup gate runs upstream of the embedding stage;
   * re-ingesting an id would store both copies, exactly as Faiss `add`
-  * would). Concurrent mutation by another writer surfaces as a thrown
-  * error → the streaming query fails and replays the batch, which is
-  * the safe outcome.
+  * would). Concurrent writers serialize on the artifact's lock: each
+  * batch decides, composes and commits inside one lock window, onto
+  * whatever fingerprint it finds there.
   */
 object IndexIngest {
 
@@ -111,29 +111,24 @@ object IndexIngest {
     }
   }
 
-  /** The initialize-only state machine every bootstrap shares.
-    * `parts` fingerprints the OFFERED corpus (evaluated on both
-    * branches: the build needs it to mark, the skip needs it to tell
-    * Current from KeptDivergent — one cheap aggregate scan, and
-    * bootstraps run once per deployment, not per batch). */
+  /** The initialize-only state machine every bootstrap shares, one
+    * [[graft.io.ArtifactStore.keepOrBuild]]: a marker-less base may be
+    * a crashed PUBLISH (compaction, retrain) of a LIVING index whose
+    * appended rows exist nowhere else, so it is rolled back to the
+    * valid old generation first — marker included — and kept; a plain
+    * build would reap the aside copy as a staging orphan and lose every
+    * streamed append and the replay marks (review-caught r12). The
+    * keep-or-build decision is taken under the lock the build writes
+    * in, so a writer publishing between the check and the build cannot
+    * have its files swept. `parts` fingerprints the OFFERED corpus
+    * (evaluated on both branches: the build needs it to mark, the skip
+    * needs it to tell Current from KeptDivergent — one cheap aggregate
+    * scan, and bootstraps run once per deployment, not per batch). */
   private def bootstrapOnce(base: String, parts: => (Long, Long))(
       build: String => Unit): BootstrapStatus = {
-    // a marker-less base may be a crashed PUBLISH (compaction,
-    // retrain) of a LIVING index whose appended rows exist nowhere
-    // else: roll it back to the valid old generation FIRST — marker
-    // included, so the initialize-only check below sees it. Blindly
-    // falling through to ensure would reap the aside copy as a
-    // staging orphan and silently rebuild from the initial corpus,
-    // losing every streamed append and the replay marks
-    // (review-caught r12).
-    if (ArtifactStore.currentFingerprint(base).isEmpty)
-      ArtifactStore.restoreAside(base)
-    val (n, x) = parts
-    val offered = ArtifactStore.fingerprint(n, x)
-    ArtifactStore.currentFingerprint(base) match {
-      case None =>
-        ArtifactStore.ensure(base, offered)(build)
-        BootstrapStatus.Built
+    lazy val offered = { val (n, x) = parts; ArtifactStore.fingerprint(n, x) }
+    ArtifactStore.keepOrBuild(base)(offered)(build) match {
+      case None => BootstrapStatus.Built
       case Some(cur) if cur == offered => BootstrapStatus.Current
       case Some(cur) =>
         System.err.println(s"[graft] bootstrap kept the existing index " +
@@ -202,33 +197,34 @@ object IndexIngest {
   }
 
   /** THE exactly-once commit core every streaming sink (append AND
-    * delete) rides: skip a batch id at or below this lineage's
-    * high-water mark, chain the batch's SIGNED fingerprint parts onto
-    * the current fingerprint by xor-composition (appends pass +count,
-    * removals −count — xor is its own inverse), and run `body` + the
-    * mark write inside ONE [[graft.io.ArtifactStore.mutate]] so a
-    * crash between them can never leave a marked-but-double-
-    * ingestable state. `parts` is BY-NAME and evaluated only after
-    * the expected fingerprint is captured: a removal plan reads
-    * artifact state, and the reversed order would let a racing
-    * writer's plan validate against the post-race fingerprint
-    * (the applyRemoval race class). One body holds the exactly-once
-    * reasoning for every sink (review-caught duplication). */
+    * delete) rides, one [[graft.io.ArtifactStore.mutate]]: under its
+    * lock, skip a batch id at or below this lineage's high-water mark,
+    * else chain the batch's SIGNED fingerprint parts onto the current
+    * fingerprint by xor-composition (appends pass +count, removals
+    * −count — xor is its own inverse), and run `body` + the mark write
+    * in the same window, so a crash between them can never leave a
+    * marked-but-double-ingestable state. A replay is also skipped
+    * before the lock — no window, no manifest walk, and a legacy mark
+    * still gates its lineage on an artifact that no longer validates:
+    * marks only move forward, so a batch once seen committed stays
+    * committed. `parts` is BY-NAME: a replay starts no Spark job, and
+    * a removal plan, which reads artifact state, reads it under the
+    * lock its tombstones are written in — no writer can land between
+    * the plan and the fingerprint it composes onto. One body holds the
+    * exactly-once reasoning for every sink (review-caught
+    * duplication). */
   private def commitOnce(base: String, batchId: Long, markKey: String,
       parts: => (Long, Long))(body: String => Unit): Unit = {
-    if (batchId <= readState(base).getOrElse(markKey, -1L))
-      return // replay of a committed batch OF THIS LINEAGE
-    val cur = ArtifactStore.currentFingerprint(base).getOrElse(
-      throw new IllegalStateException(
-        s"no valid index artifact at $base — bootstrap first"))
-    val (pn, px) = parts
-    val next = ArtifactStore.composed(cur, pn, px)
-    val ok = ArtifactStore.mutate(base, cur, next) { live =>
+    def replayed = batchId <= readState(base).getOrElse(markKey, -1L)
+    if (!replayed) ArtifactStore.mutate(base) { cur =>
+      Option.unless(replayed) {
+        val (pn, px) = parts
+        ArtifactStore.composed(cur, pn, px)
+      }
+    } { live =>
       body(live)
       writeStateAtomic(base, readState(base) + (markKey -> batchId))
     }
-    if (!ok) throw new IllegalStateException(
-      s"index at $base changed under batch $batchId — replay")
   }
 
   private def requireAppId(appId: String): Unit =
@@ -303,8 +299,8 @@ object IndexIngest {
     * [[compact]] makes the removals physical later), resolved through
     * the family's stored row hashes ([[IndexDelete.removalPlan]] — the
     * corpus is never re-read). Rides the same commit machinery as every
-    * other sink — per-lineage replay marks, fingerprint-checked mutate
-    * — with the batch's fingerprint parts NEGATED: xor is its own
+    * other sink — per-lineage replay marks, one mutate window — with
+    * the batch's fingerprint parts NEGATED: xor is its own
     * inverse, so the artifact's content fingerprint moves to the
     * post-delete membership exactly as appends move it forward, and a
     * gate retrain or self-heal recomputing the fingerprint from the
@@ -339,9 +335,9 @@ object IndexIngest {
 
   /** [[commitOnce]] keyed by the delete-namespaced lineage, parts
     * negated, tombstones written when anything was actually removed.
-    * The removal plan evaluates inside commitOnce's by-name `parts`
-    * (after the expected fingerprint is captured); the ids it yields
-    * ride to the body through the local stash. */
+    * The removal plan evaluates inside commitOnce's by-name `parts`,
+    * under the commit's lock; the ids it yields ride to the body
+    * through the local stash. */
   private def removeOnce(base: String, batchId: Long, appId: String)(
       plan: => (DataFrame, (Long, Long))): Unit = {
     requireAppId(appId)
@@ -502,28 +498,46 @@ object IndexIngest {
       staging: String): Unit =
     t.buildFromNv(CodeTable.cellNv(lists), staging)
 
-  /** The gate's IVF heal preamble, shared by both retrain postures:
-    * roll back a crashed publish first (old generation split between
-    * the base and a `.tmp-old-*` aside — the restore brings back the
-    * old MARKER too, so the artifact usually revalidates outright, and
-    * it must run before any ensure/rewrite's orphan reap could destroy
-    * the aside copy). The self-heals then cover only the residual
-    * marker-less-with-data class (aside-less marker loss): IVF re-marks
-    * itself from its own rows here, each code table rebuilds from its
-    * sibling ([[healMember]]). Returns the healed IVF fingerprint. */
+  /** The gate's IVF heal preamble, shared by both retrain postures,
+    * one [[graft.io.ArtifactStore.keepOrBuild]]: roll back a crashed
+    * publish first (old generation split between the base and a
+    * `.tmp-old-*` aside — the restore brings back the old MARKER too,
+    * so the artifact usually revalidates outright, and it must run
+    * before any rebuild's orphan reap could destroy the aside copy).
+    * The self-heal then covers only the residual marker-less-with-data
+    * class (aside-less marker loss, the only marker-less window of the
+    * gate's stage-first rewrite being its publish). The vectors ARE the
+    * store in the streaming posture, so the artifact re-marks ITSELF:
+    * the fingerprint is recomputed from the stored LIVE rows (xor-
+    * composed row hashes — identical to the value the chained marker
+    * carried; live, because the delete sink xor'd removals out as it
+    * tombstoned them), the models retrain from the same rows at the
+    * stored centroid count ([[rebuildIvf]]), and the replay mark is
+    * staged across. Fingerprint and rebuild both read the rows under
+    * the lock the heal publishes in, so a sink commit can never land
+    * between them and be re-marked with an older fingerprint. The
+    * rebuild physicalizes the deletes as a side effect (the build
+    * sweeps the stale tombstone dir with the other old children). If a
+    * VALID PQ table still shards by the pre-heal cells, the next audit
+    * sees the mixed generation as low recall and the normal
+    * fired→retrain path restores consistency — the loop is its own
+    * repair. Each code table heals from its sibling ([[healMember]]).
+    * Returns the healed IVF fingerprint. */
   private def healIvf(spark: org.apache.spark.sql.SparkSession,
       ivfBase: String): String = {
     graft.functions.VectorExpressions.register(spark)
-    if (ArtifactStore.currentFingerprint(ivfBase).isEmpty)
-      ArtifactStore.restoreAside(ivfBase)
-    if (ArtifactStore.currentFingerprint(ivfBase).isEmpty && {
-        val (fs, b) = fsb(ivfBase)
-        fs.isDir(fs.join(b, "assignments"))
-      })
-      rebuildIvfFromSelf(spark, ivfBase)
-    ArtifactStore.currentFingerprint(ivfBase).getOrElse(
-      throw new IllegalStateException(
-        s"no valid IVF artifact at $ivfBase — bootstrap first"))
+    lazy val selfFp = {
+      val (fs, b) = fsb(ivfBase)
+      if (!fs.isDir(fs.join(b, "assignments")))
+        throw new IllegalStateException(
+          s"no valid IVF artifact at $ivfBase — bootstrap first")
+      val (n, x) = IndexFamily.Ivf.parts(liveVectors(spark, ivfBase))
+      ArtifactStore.fingerprint(n, x)
+    }
+    ArtifactStore.keepOrBuild(ivfBase)(selfFp) { staging =>
+      rebuildIvf(spark, ivfBase, staging)
+      copyStateInto(ivfBase, staging)
+    }.getOrElse(selfFp)
   }
 
   /** The recall audit entirely off the artifacts (the s24 posture):
@@ -841,40 +855,6 @@ object IndexIngest {
       fs.writeAtomic(fs.join(staging, "stream_state"), fs.read(st))
   }
 
-  /** Self-heal for a marker-less IVF artifact. Since the stage-first
-    * hardening, the only marker-less window of the gate's IVF rewrite
-    * is the publish itself (marker delete → child renames → re-mark;
-    * the training body runs against a still-marked artifact). A death
-    * there leaves the old generation's files split between the base
-    * and the publish's `.tmp-old-*` aside dir — the CALLER first
-    * rolls that back ([[graft.io.ArtifactStore.restoreAside]]), after
-    * which the complete old file set sits unmarked in the base. The
-    * vectors ARE the store in the streaming posture, so the artifact
-    * then re-marks ITSELF: the fingerprint is recomputed from the
-    * stored rows (xor-composed row hashes — identical to the value
-    * the chained marker carried), models retrain from the same rows,
-    * and the replay mark is staged across. If a VALID PQ table still
-    * shards by the pre-heal cells, the next audit sees the mixed
-    * generation as low recall and the normal fired→retrain path
-    * restores consistency — the loop is its own repair.
-    * (Review-caught: the PQ side had a heal, the IVF side did not.) */
-  private def rebuildIvfFromSelf(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String): Unit = {
-    // LIVE rows only: the chained marker this heal reproduces always
-    // covered "stored rows minus tombstones" (the delete sink xor'd
-    // removals out as it tombstoned them), so re-marking from the raw
-    // rows would resurrect deleted members under a diverged
-    // fingerprint. The rebuild physicalizes the deletes as a side
-    // effect (ensure sweeps the stale tombstone dir with the other
-    // old children).
-    val (n, x) = IndexFamily.Ivf.parts(liveVectors(spark, ivfBase))
-    ArtifactStore.ensure(ivfBase, ArtifactStore.fingerprint(n, x)) { staging =>
-      rebuildIvf(spark, ivfBase, staging)
-      copyStateInto(ivfBase, staging)
-    }
-    ()
-  }
-
   /** THE IVF rebuild the self-heal and both gate retrains share:
     * `from`'s live vectors retrained into `staging` at `from`'s STORED
     * centroid count, so an index bootstrapped at ⌈√n⌉ cells keeps that
@@ -895,30 +875,29 @@ object IndexIngest {
       .select(col("vec_id"), col("embedding"), col("norm"))
 
   /** The code-table heal shared by both gate postures and
-    * [[bootstrapPair]]'s adoption path: roll back a crashed publish
-    * first, then rebuild a still-invalid (or absent) member entirely
-    * from the IVF artifact — the self-heal path for a marker-less base
-    * (crash inside a prior rewrite) and the one place a code table's
-    * fingerprint is SET rather than chained: the rebuilt content is
-    * exactly the IVF lists' vector set (the models are vector-set-pure
-    * and reproduce bit-identically — or do not exist; the cells come
-    * from the lists), so it carries the IVF artifact's fingerprint and
-    * the replay mark is copied from the IVF artifact's `stream_state`
-    * (the rebuild's ensure sweeps the old one with the other stale
+    * [[bootstrapPair]]'s adoption path, one
+    * [[graft.io.ArtifactStore.keepOrBuild]]: roll back a crashed
+    * publish first, then rebuild a still-invalid (or absent) member
+    * entirely from the IVF artifact — the self-heal path for a
+    * marker-less base (crash inside a prior rewrite) and the one place
+    * a code table's fingerprint is SET rather than chained: the rebuilt
+    * content is exactly the IVF lists' vector set (the models are
+    * vector-set-pure and reproduce bit-identically — or do not exist;
+    * the cells come from the lists), so it carries the IVF artifact's
+    * fingerprint and the replay mark is copied from the IVF artifact's
+    * `stream_state` (the build sweeps the old one with the other stale
     * children). A valid member is untouched. */
   private def healMember(spark: org.apache.spark.sql.SparkSession,
-      ivfBase: String, base: String, ivfFp: String, t: CodeTable): Unit =
-    if (ArtifactStore.currentFingerprint(base).isEmpty) {
-      ArtifactStore.restoreAside(base) // same publish-crash roll-back
-      if (ArtifactStore.currentFingerprint(base).isEmpty)
-        ArtifactStore.ensure(base, ivfFp) { staging =>
-          buildMember(t, IndexDelete.liveListsAt(spark, ivfBase), staging)
-          // the replay mark is STAGED with the data (a post-publish
-          // copy would be an unmanifested extra file — the artifact
-          // would fail its own manifest validation and read as absent)
-          copyStateInto(ivfBase, staging)
-        }
+      ivfBase: String, base: String, ivfFp: String, t: CodeTable): Unit = {
+    ArtifactStore.keepOrBuild(base)(ivfFp) { staging =>
+      buildMember(t, IndexDelete.liveListsAt(spark, ivfBase), staging)
+      // the replay mark is STAGED with the data (a post-publish copy
+      // would be an unmanifested extra file — the artifact would fail
+      // its own manifest validation and read as absent)
+      copyStateInto(ivfBase, staging)
     }
+    ()
+  }
 
   /** Per-partition-dir fragmentation of a partitioned table: the
     * MAXIMUM part-file count across the partition dirs (`cell=*`,

@@ -62,7 +62,8 @@ class ArtifactSpec extends AnyFunSuite {
     var deletes = 0
     def applyDel(b: String): Long = {
       deletes += 1
-      assert(ArtifactStore.mutate(b, fp(full), fp(live))(write(_, "tombs")))
+      assert(ArtifactStore.mutate(b)(OverExactly(fp(full), fp(live)))(
+        write(_, "tombs")))
       2L
     }
     def resolve(): String =

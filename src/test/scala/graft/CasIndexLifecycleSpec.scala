@@ -1,9 +1,11 @@
 package graft
 
-/** [[IndexLifecycleContract]] through the object-store binding:
-  * conditional-put coordination, rename degraded to copy+delete. */
-class CasIndexLifecycleSpec extends IndexLifecycleContract {
-  protected val binding: StorageBinding = CasBinding
+/** [[IndexLifecycleContract]] and [[LockWindowContract]] through the
+  * object-store binding: conditional-put coordination, rename degraded
+  * to copy+delete. */
+class CasIndexLifecycleSpec
+    extends IndexLifecycleContract with LockWindowContract {
+  protected val binding: TokenBinding = CasBinding
 
   override protected def titles: Map[String, String] = Map(
     "bootstrap, append, delete, serve, compact — all through the binding" ->

@@ -1,8 +1,10 @@
 package graft
 
-/** [[IndexLifecycleContract]] through the Hadoop FileSystem binding. */
-class HadoopIndexLifecycleSpec extends IndexLifecycleContract {
-  protected val binding: StorageBinding = HadoopBinding
+/** [[IndexLifecycleContract]] and [[LockWindowContract]] through the
+  * Hadoop FileSystem binding. */
+class HadoopIndexLifecycleSpec
+    extends IndexLifecycleContract with LockWindowContract {
+  protected val binding: TokenBinding = HadoopBinding
 
   override protected def titles: Map[String, String] = Map(
     "bootstrap, append, delete, serve, compact — all through the binding" ->

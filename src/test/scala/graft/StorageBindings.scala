@@ -2,10 +2,99 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import graft.io.{ArtifactFs, ArtifactStore, CasFs, HadoopFs, LockStats,
   ObjectBlob, ObjectStoreClient}
+
+/** An [[ArtifactFs]] that forwards every call to `inner` and counts, per
+  * base, the lock windows taken and the whole-base `filesUnder` walks
+  * made, and notes the window each marker write lands in. A test can
+  * also run a competing writer just before a given window on a base.
+  * The Hadoop and CAS test schemes are registered through one, so every
+  * test on them runs over it; each test works on fresh bases, so the
+  * per-base counters of parallel suites never mix. */
+final class CountingFs(inner: ArtifactFs) extends ArtifactFs {
+  private val windows = new ConcurrentHashMap[String, AtomicInteger]()
+  private val walks = new ConcurrentHashMap[String, AtomicInteger]()
+  private val firstMark = new ConcurrentHashMap[String, Integer]()
+  private val pending = new ConcurrentHashMap[String, (Int, () => Unit)]()
+
+  private def count(m: ConcurrentHashMap[String, AtomicInteger],
+      base: String): AtomicInteger =
+    m.computeIfAbsent(base, _ => new AtomicInteger)
+
+  /** `(lock windows, whole-base walks)` that `transition` takes on
+    * `base`. */
+  def cost(base: String)(transition: => Any): (Int, Int) = {
+    val (w0, k0) = (count(windows, base).get, count(walks, base).get)
+    transition
+    (count(windows, base).get - w0, count(walks, base).get - k0)
+  }
+
+  /** Which of `transition`'s lock windows on `base` (1-based) first
+    * writes the marker; None when none does. */
+  def markerWindow(base: String)(transition: => Any): Option[Int] = {
+    val w0 = count(windows, base).get
+    firstMark.remove(base)
+    transition
+    Option(firstMark.get(base)).map(_ - w0)
+  }
+
+  /** Run `competitor` just before the `n`-th lock window on `base` from
+    * now is entered, on the thread that enters it. */
+  def beforeWindow(base: String, n: Int)(competitor: => Unit): Unit = {
+    pending.put(base, (count(windows, base).get + n, () => competitor))
+    ()
+  }
+
+  private def marked(p: String): Unit =
+    if (nameOf(p) == "_FINGERPRINT") {
+      val base = p.stripSuffix("/_FINGERPRINT")
+      firstMark.putIfAbsent(base, count(windows, base).get)
+      ()
+    }
+
+  def lock[A](base: String)(body: => A): A = {
+    Option(pending.get(base))
+      .filter(_._1 == count(windows, base).get + 1)
+      .foreach { case (_, competitor) =>
+        pending.remove(base)
+        competitor()
+      }
+    count(windows, base).incrementAndGet()
+    inner.lock(base)(body)
+  }
+
+  def filesUnder(p: String): Seq[(String, Long, Long)] = {
+    count(walks, p).incrementAndGet()
+    inner.filesUnder(p)
+  }
+
+  def writeAtomic(p: String, body: String): Unit = {
+    inner.writeAtomic(p, body)
+    marked(p)
+  }
+
+  def rename(src: String, dst: String): Unit = {
+    inner.rename(src, dst)
+    marked(dst)
+  }
+
+  def join(p: String, child: String): String = inner.join(p, child)
+  def mkdirs(p: String): Unit = inner.mkdirs(p)
+  def exists(p: String): Boolean = inner.exists(p)
+  def isFile(p: String): Boolean = inner.isFile(p)
+  def isDir(p: String): Boolean = inner.isDir(p)
+  def childNames(p: String): Seq[String] = inner.childNames(p)
+  def read(p: String): String = inner.read(p)
+  def writeAtomicReplace(p: String, body: String): Unit =
+    inner.writeAtomicReplace(p, body)
+  override def replaceIsAtomic: Boolean = inner.replaceIsAtomic
+  def delete(p: String): Unit = inner.delete(p)
+  override def verifyHeld(base: String): Unit = inner.verifyHeld(base)
+}
 
 /** A RawLocalFileSystem under a non-`file` scheme: the standard Hadoop
   * trick for exercising `org.apache.hadoop.fs.FileSystem` semantics
@@ -40,17 +129,18 @@ class GraftTestAbstractFs(uri: java.net.URI,
   * wins, and a suite registered without the AbstractFileSystem
   * binding would silently flip writeAtomicReplace onto its fallback
   * mid-run for the other suite. The single shared instance carries
-  * the full configuration. */
+  * the full configuration, and is registered through a [[CountingFs]]. */
 object GraftTestFs {
   val Scheme = "graftfs"
-  lazy val registered: Unit = {
+  lazy val counting: CountingFs = {
     val conf = new org.apache.hadoop.conf.Configuration()
     conf.set(s"fs.AbstractFileSystem.$Scheme.impl",
       classOf[GraftTestAbstractFs].getName)
     val fs = new GraftTestHadoopFs()
     fs.initialize(java.net.URI.create(s"$Scheme:///"), conf)
-    ArtifactStore.registerHadoopFs(Scheme, fs)
+    new CountingFs(new HadoopFs(fs))
   }
+  lazy val registered: Unit = ArtifactStore.registerBackend(Scheme, counting)
 }
 
 /** A disk-backed [[ObjectStoreClient]] modeling exactly the S3-class
@@ -170,12 +260,12 @@ class ForwardingObjectStore(inner: ObjectStoreClient)
 
 /** ONE registration for every suite touching the CAS test scheme
   * (suites run in parallel in one JVM — same reasoning as
-  * [[GraftTestFs]]). */
+  * [[GraftTestFs]]), through a [[CountingFs]]. */
 object GraftCasStore {
   val Scheme = "casfs"
   val client = new DiskObjectStore(Scheme + ":")
-  lazy val registered: Unit =
-    ArtifactStore.registerObjectStore(Scheme, client)
+  lazy val counting: CountingFs = new CountingFs(new CasFs(client))
+  lazy val registered: Unit = ArtifactStore.registerBackend(Scheme, counting)
 }
 
 /** The `casfs:` data plane for Spark: parquet bytes ride a scheme-
@@ -268,6 +358,9 @@ sealed abstract class TokenBinding(scheme: String)
     extends StorageBinding(Some(scheme)) {
   def newBinding(): LockProcess
 
+  /** The counting binding the scheme is registered through. */
+  def counting: CountingFs
+
   /** The lock TTL in force (the binding's global). */
   def lockStaleMs: Long
   protected def lockStaleMs_=(ms: Long): Unit
@@ -307,6 +400,7 @@ object PosixBinding extends StorageBinding(None)
 object HadoopBinding extends TokenBinding(GraftTestFs.Scheme) {
   override protected def register(): Unit = GraftTestFs.registered
   override protected def dataFs = Some(classOf[GraftTestHadoopFs])
+  def counting: CountingFs = GraftTestFs.counting
   def lockStaleMs: Long = HadoopFs.LockStaleMs
   protected def lockStaleMs_=(ms: Long): Unit = HadoopFs.LockStaleMs = ms
 
@@ -323,6 +417,7 @@ object HadoopBinding extends TokenBinding(GraftTestFs.Scheme) {
 object CasBinding extends TokenBinding(GraftCasStore.Scheme) {
   override protected def register(): Unit = GraftCasStore.registered
   override protected def dataFs = Some(classOf[GraftCasDataFs])
+  def counting: CountingFs = GraftCasStore.counting
   def lockStaleMs: Long = CasFs.LockStaleMs
   protected def lockStaleMs_=(ms: Long): Unit = CasFs.LockStaleMs = ms
 

@@ -10,9 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{ArtifactStore, LockDisplacedException}
 import graft.llm.CodeTable.Pq
-import graft.llm.IndexFamily
+import graft.llm.{IndexDelete, IndexFamily}
 import graft.stream.IndexIngest
 import graft.stream.IndexIngest.DefaultApp
+
+/** An [[graft.io.ArtifactStore.mutate]] decision that appends only
+  * over the exact fingerprint `expect` and re-marks as `next`. */
+object OverExactly {
+  def apply(expect: String, next: String): String => Option[String] =
+    cur => Option.when(cur == expect)(next)
+}
 
 /** What every storage contract suite shares: the binding under test,
   * and the binding's own name for a contract test where its suite has
@@ -216,7 +223,7 @@ trait ArtifactPublishContract extends StorageContract {
     ArtifactStore.ensure(base, "fp-1")(writeData(_, "part-0", "v1"))
     // simulate the sink: state written in-place next to the data,
     // covered by a mutate so the manifest stays valid
-    ArtifactStore.mutate(base, "fp-1", "fp-1b") { live =>
+    ArtifactStore.mutate(base)(OverExactly("fp-1", "fp-1b")) { live =>
       Files.write(Paths.get(local(live), "stream_state"), "7".getBytes(UTF_8))
     }
     assert(exists(base, "stream_state"))
@@ -343,11 +350,11 @@ trait ArtifactPublishContract extends StorageContract {
       writeData(staging, "cell=0/part-0", "a0")
     }
     // wrong expectation → refused, caller falls back to full build
-    assert(!ArtifactStore.mutate(base, "fp-STALE", "fp-B") { _ =>
+    assert(!ArtifactStore.mutate(base)(OverExactly("fp-STALE", "fp-B")) { _ =>
       fail("append must not run over a mismatched fingerprint")
     })
     // matching expectation → append lands, marker re-covers the union
-    assert(ArtifactStore.mutate(base, "fp-A", "fp-AB") { live =>
+    assert(ArtifactStore.mutate(base)(OverExactly("fp-A", "fp-AB")) { live =>
       writeData(live, "cell=1/part-0", "b0")
     })
     assert(readData(base, "cell=0/part-0") == "a0")
@@ -355,10 +362,11 @@ trait ArtifactPublishContract extends StorageContract {
     // the new marker validates: a reuse under the union fingerprint
     // does not rebuild, and the pre-append fingerprint is gone for good
     assert(!ArtifactStore.ensure(base, "fp-AB") { _ => fail("must reuse") })
-    assert(!ArtifactStore.mutate(base, "fp-A", "fp-X")(_ => fail("stale")))
+    assert(!ArtifactStore.mutate(base)(OverExactly("fp-A", "fp-X"))(
+      _ => fail("stale")))
     // a crash mid-append leaves the artifact unmarked → full rebuild
     intercept[RuntimeException] {
-      ArtifactStore.mutate(base, "fp-AB", "fp-ABC") { live =>
+      ArtifactStore.mutate(base)(OverExactly("fp-AB", "fp-ABC")) { live =>
         writeData(live, "cell=2/part-0", "half")
         throw new RuntimeException("append died")
       }
@@ -542,7 +550,7 @@ trait TokenLockContract extends StorageContract {
     val displaced = new CountDownLatch(1)
     val failure = new AtomicReference[Throwable]
     val t = new Thread(() =>
-      try ArtifactStore.mutate(base, "fp-A", "fp-AB") { live =>
+      try ArtifactStore.mutate(base)(OverExactly("fp-A", "fp-AB")) { live =>
         writeData(live, "part-append", "appended")
         entered.countDown()
         displaced.await(30, TimeUnit.SECONDS)
@@ -753,5 +761,134 @@ trait IndexLifecycleContract extends StorageContract {
     assert(IndexIngest.bootstrapPair(pair, base.toDF("vec_id", "embedding"))
       == IndexIngest.BootstrapStatus.KeptDivergent,
       "the grown generation differs from the offered corpus — observable")
+  }
+}
+
+/** One lock window per artifact transition, pinned through the
+  * counting binding ([[CountingFs]]) the token schemes are registered
+  * through: each transition reads the valid fingerprint, decides and
+  * writes under one `fs.lock`, so a writer landing just before that
+  * window is kept — never swept by a build decided earlier, never
+  * re-marked with a fingerprint of older rows. */
+trait LockWindowContract extends StorageContract {
+  protected val binding: TokenBinding
+  import SparkTestSession._
+  import binding.{counting, freshBase, local}
+
+  private def vectors(seed: Int, ids: Range) = {
+    import spark.implicits._
+    binding.registerDataPlane(spark)
+    val rnd = new scala.util.Random(seed)
+    ids.map(i => (i.toLong, Seq.fill(64)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+  }
+
+  contract("each artifact transition takes one lock window, counted through the binding") {
+    import spark.implicits._
+    val ivf = freshBase("ivf")
+    val pq = freshBase("pq")
+    val resolved = freshBase("resolved")
+    val corpus = vectors(57, 0 until 80)
+    // (lock windows, whole-base walks) each transition takes on its base
+    def cost(base: String)(transition: => Any) =
+      counting.cost(base)(transition)
+    val built = cost(ivf)(IndexIngest.bootstrap(IndexFamily.Ivf, ivf, corpus))
+    IndexIngest.bootstrap(Pq.over(ivf), pq, corpus)
+    val seen = Seq(
+      "bootstrap of an empty base" -> built,
+      "bootstrap over a valid artifact" -> cost(ivf)(
+        IndexIngest.bootstrap(IndexFamily.Ivf, ivf, corpus)),
+      "streamed append commit" -> cost(ivf)(
+        IndexIngest.appendSink(IndexFamily.Ivf, ivf)(
+          vectors(58, 100 until 110), 0L)),
+      "replayed append batch" -> cost(ivf)(
+        IndexIngest.appendSink(IndexFamily.Ivf, ivf)(
+          vectors(58, 100 until 110), 0L)),
+      "streamed delete commit" -> cost(ivf)(
+        IndexIngest.deleteSink(IndexFamily.Ivf, ivf)(
+          Seq(3L, 104L).toDF("vec_id"), 0L)),
+      "batch remove_ids" -> cost(ivf)(IndexDelete.applyDeletes(
+        IndexFamily.Ivf, spark, ivf, Seq(5L, 106L).toDF("vec_id"))),
+      // the IVF base holds a batch the PQ table does not, so the gate
+      // defers any retrain: its heal is the gate's one IVF-base window
+      "gate heal over a valid IVF base" -> cost(ivf)(
+        IndexIngest.recallGateAndRetrain(spark, ivf, pq)),
+      "cold validated-path resolve" -> cost(resolved)(
+        new graft.io.ValidatedPathCache().get("corpus") {
+          ArtifactStore.ensure(resolved, "fp-1")(
+            binding.writeData(_, "part-0", "x"))
+          resolved
+        }))
+    assert(seen == Seq(
+      "bootstrap of an empty base" -> ((1, 1)),
+      "bootstrap over a valid artifact" -> ((1, 1)),
+      "streamed append commit" -> ((1, 2)),
+      "replayed append batch" -> ((0, 0)),
+      "streamed delete commit" -> ((1, 2)),
+      "batch remove_ids" -> ((1, 2)),
+      "gate heal over a valid IVF base" -> ((1, 1)),
+      "cold validated-path resolve" -> ((1, 2))))
+  }
+
+  contract("a publish landing just before a bootstrap's window is kept, never swept") {
+    val corpus = vectors(59, 0 until 60)
+    // which of a bootstrap's lock windows builds: a dry run on a twin
+    val twin = freshBase("twin")
+    val w = counting.markerWindow(twin)(
+      IndexIngest.bootstrap(IndexFamily.Ivf, twin, corpus))
+      .getOrElse(fail("a bootstrap of an empty base must build"))
+    // another writer publishes fingerprint A, with a replay mark, just
+    // before that window
+    val ivf = freshBase("ivf")
+    counting.beforeWindow(ivf, w) {
+      ArtifactStore.ensure(ivf, "fp-A") { staging =>
+        binding.writeData(staging, "part-A", "A")
+        Files.write(Paths.get(local(staging), "stream_state"),
+          s"$DefaultApp\t7".getBytes(UTF_8))
+      }
+    }
+    assert(IndexIngest.bootstrap(IndexFamily.Ivf, ivf, corpus) ==
+      IndexIngest.BootstrapStatus.KeptDivergent,
+      "an initialize-only bootstrap must keep the artifact it finds")
+    assert(ArtifactStore.currentFingerprint(ivf).contains("fp-A"))
+    assert(binding.readData(ivf, "part-A") == "A" &&
+      binding.exists(ivf, "stream_state"),
+      "the other writer's files and replay mark must survive")
+  }
+
+  contract("a sink commit landing just before the gate's IVF heal is kept under a marker of its rows") {
+    val corpus = vectors(60, 0 until 60)
+    // an IVF-PQ pair whose IVF marker was lost (no aside to restore):
+    // the data intact, nothing valid
+    def markerLost(): (String, String, java.nio.file.Path) = {
+      val (ivf, pq) = (freshBase("ivf"), freshBase("pq"))
+      IndexIngest.bootstrap(IndexFamily.Ivf, ivf, corpus)
+      IndexIngest.bootstrap(Pq.over(ivf), pq, corpus)
+      val lost = Files.createTempFile("graft-lost-marker", "")
+      Files.move(Paths.get(local(ivf), "_FINGERPRINT"), lost,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      (ivf, pq, lost)
+    }
+    // which of the gate's lock windows on the IVF base heals it: a dry
+    // run on a twin pair
+    val (twinIvf, twinPq, _) = markerLost()
+    val w = counting.markerWindow(twinIvf)(
+      IndexIngest.recallGateAndRetrain(spark, twinIvf, twinPq))
+      .getOrElse(fail("the gate must heal a marker-less IVF base"))
+    // a concurrent healer re-marks the base and a sink commits batch 0
+    // onto it, just before that window
+    val (ivf, pq, lost) = markerLost()
+    counting.beforeWindow(ivf, w) {
+      Files.move(lost, Paths.get(local(ivf), "_FINGERPRINT"))
+      IndexIngest.appendSink(IndexFamily.Ivf, ivf)(
+        vectors(61, 100 until 110), 0L)
+    }
+    IndexIngest.recallGateAndRetrain(spark, ivf, pq)
+    val (n, x) = IndexFamily.Ivf.parts(IndexDelete.liveListsAt(spark, ivf)
+      .select(col("vec_id"), col("embedding"), col("norm")))
+    assert(n == 70L, s"the committed batch must be kept (got $n rows)")
+    assert(ArtifactStore.currentFingerprint(ivf)
+      .contains(ArtifactStore.fingerprint(n, x)),
+      "the marker must carry the fingerprint of the rows it marks")
   }
 }
