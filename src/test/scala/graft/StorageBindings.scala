@@ -49,13 +49,6 @@ final class CountingFs(inner: ArtifactFs) extends ArtifactFs {
     ()
   }
 
-  private def marked(p: String): Unit =
-    if (nameOf(p) == "_FINGERPRINT") {
-      val base = p.stripSuffix("/_FINGERPRINT")
-      firstMark.putIfAbsent(base, count(windows, base).get)
-      ()
-    }
-
   def lock[A](base: String)(body: => A): A = {
     Option(pending.get(base))
       .filter(_._1 == count(windows, base).get + 1)
@@ -74,12 +67,11 @@ final class CountingFs(inner: ArtifactFs) extends ArtifactFs {
 
   def writeAtomic(p: String, body: String): Unit = {
     inner.writeAtomic(p, body)
-    marked(p)
-  }
-
-  def rename(src: String, dst: String): Unit = {
-    inner.rename(src, dst)
-    marked(dst)
+    if (nameOf(p) == "_FINGERPRINT") {
+      val base = p.stripSuffix("/_FINGERPRINT")
+      firstMark.putIfAbsent(base, count(windows, base).get)
+    }
+    ()
   }
 
   def join(p: String, child: String): String = inner.join(p, child)
@@ -89,6 +81,7 @@ final class CountingFs(inner: ArtifactFs) extends ArtifactFs {
   def isDir(p: String): Boolean = inner.isDir(p)
   def childNames(p: String): Seq[String] = inner.childNames(p)
   def read(p: String): String = inner.read(p)
+  def rename(src: String, dst: String): Unit = inner.rename(src, dst)
   def writeAtomicReplace(p: String, body: String): Unit =
     inner.writeAtomicReplace(p, body)
   override def replaceIsAtomic: Boolean = inner.replaceIsAtomic
